@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{array_max, array_min, call_function, filter, isnan}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BooleanType, DataType, DoubleType}
 
 /** Spatial point-in-polygon support (SURVEY.md §2.3 J1; reference
@@ -18,10 +18,13 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BooleanType, Dat
   * loop inline — no UDF boxing, no serialization). The join itself is a
   * BroadcastNestedLoopJoin against the (tiny, broadcast) polygon table:
   * `points.join(broadcast(polys), stContains(xs, ys, x, y), "left")` —
-  * exactly the shape the reference's 9-ocean sjoin wants. For polygon
-  * tables too large to broadcast, prefix the condition with a bbox
-  * conjunct (Catalyst pushes it into the BNLJ loop) or grid-index both
-  * sides to turn it into an equi-join on cell id.
+  * exactly the shape the reference's 9-ocean sjoin wants. A bbox conjunct
+  * in front of the ray cast only pays when the box is precomputed once per
+  * polygon row ([[finiteBounds]] on the broadcast side, as
+  * `WhalePipeline.enrichWaterBody` does); recomputed per (point, polygon)
+  * pair it scans every vertex, like the ray cast it guards. For polygon
+  * tables too large to broadcast, grid-index both sides to turn the join
+  * into an equi-join on cell id ([[gridSpatialJoin]]).
   */
 object Geo {
 
@@ -77,6 +80,15 @@ object Geo {
   def rayCastInclusive(xs: Array[Double], ys: Array[Double], x: Double, y: Double): Boolean =
     onBoundary(xs, ys, x, y) || rayCast(xs, ys, x, y)
 
+  /** (min, max) over a vertex array's finite entries. Wkt's NaN ring
+    * separators sort as the largest double, so a bare `array_max` would be
+    * NaN. Both are null when no vertex is finite (a zero-ring polygon).
+    */
+  def finiteBounds(c: Column): (Column, Column) = {
+    val finite = filter(c, v => !isnan(v))
+    (array_min(finite), array_max(finite))
+  }
+
   /** Register `st_contains` (half-open) and `st_intersects`
     * (boundary-inclusive) in an existing session (idempotent).
     */
@@ -121,10 +133,12 @@ object Geo {
     import org.apache.spark.sql.functions._
     register(points.sparkSession)
     def cellOf(c: Column): Column = floor(c / cellSize).cast("long")
-    // bbox over finite vertices only: Wkt's NaN ring separators sort as
-    // the largest double, so a bare array_max would be NaN (and its cast
-    // to a cell id rejected under ANSI mode)
-    def finite(c: Column): Column = filter(c, v => !isnan(v))
+    // over finite vertices only: a NaN bound's cast to a cell id is
+    // rejected under ANSI mode
+    def cells(vertices: Column): Column = {
+      val (lo, hi) = finiteBounds(vertices)
+      explode(sequence(cellOf(lo), cellOf(hi)))
+    }
     // internal columns carry a __grid_ prefix so a caller's own cellx/
     // celly/pt_id columns are never silently overwritten then dropped;
     // the polys contract columns (name, xs, ys) must not collide with
@@ -135,10 +149,8 @@ object Geo {
         s"gridSpatialJoin: points must not carry a '$reserved' column " +
           "(it is the polygon side's contract column)")
     val polyCells = polys
-      .withColumn("__grid_cellx", explode(sequence(
-        cellOf(array_min(finite(col("xs")))), cellOf(array_max(finite(col("xs")))))))
-      .withColumn("__grid_celly", explode(sequence(
-        cellOf(array_min(finite(col("ys")))), cellOf(array_max(finite(col("ys")))))))
+      .withColumn("__grid_cellx", cells(col("xs")))
+      .withColumn("__grid_celly", cells(col("ys")))
     // a synthetic point id keys the miss path: matches reduce to
     // (_pt_id, name) and LEFT-join back, so unmatched points surface with
     // a null name in ONE join — an all-columns left_anti here would cost

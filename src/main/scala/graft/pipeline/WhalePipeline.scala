@@ -77,16 +77,42 @@ object WhalePipeline {
 
   /** J1: spatial enrichment — waterBody overwritten by the containing
     * polygon's name, NULL when outside all (`cleaner.py:194-212`). The
-    * polygon table `(name, xs, ys)` broadcasts into a BNLJ.
+    * polygon table `(name, xs, ys)` broadcasts into a BNLJ, each row
+    * carrying its bounding box, computed once per polygon: a point outside
+    * the box skips the ray cast.
+    *
+    * The box never drops a row the bare `st_contains` join keeps. The ray
+    * cast compares y against vertex ys only, so the y bounds are exact. It
+    * does compute each edge crossing's x, and rounding has put that x
+    * beyond the edge's end points by up to 3 machine epsilons of their
+    * largest |x|, so a point an ulp right of every vertex can test inside.
+    * The x bounds are therefore widened by a relative 1e-12: far beyond
+    * that rounding, far below any real coordinate's precision. Rings must
+    * be closed, as WKT and shapefiles require.
     */
   def enrichWaterBody(df: DataFrame, polygons: DataFrame): DataFrame = {
     Geo.register(df.sparkSession)
+    val (minX, maxX) = Geo.finiteBounds(col("xs"))
+    val (minY, maxY) = Geo.finiteBounds(col("ys"))
+    val pad = greatest(abs(minX), abs(maxX)) * 1e-12
+    // bounds are never null (a polygon with no finite vertex gets the empty
+    // box [+inf, -inf]): a nullable bound makes the join imply an
+    // isnotnull filter on the polygon side, which Catalyst pushes below
+    // the loader's projection, re-running its WKT parse per reference
+    def bound(c: Column, empty: Double) = coalesce(c, lit(empty))
+    val boxed = polygons.select(col("name"), col("xs"), col("ys"),
+      struct(bound(minX - pad, Double.PositiveInfinity).as("minx"),
+        bound(maxX + pad, Double.NegativeInfinity).as("maxx"),
+        bound(minY, Double.PositiveInfinity).as("miny"),
+        bound(maxY, Double.NegativeInfinity).as("maxy")).as("__bbox"))
+    val (x, y) = (col("decimalLongitude"), col("decimalLatitude"))
     df.drop("waterBody")
-      .join(broadcast(polygons),
-        Geo.stContains(col("xs"), col("ys"),
-          col("decimalLongitude"), col("decimalLatitude")), "left")
+      .join(broadcast(boxed),
+        x.between(col("__bbox.minx"), col("__bbox.maxx")) &&
+          y.between(col("__bbox.miny"), col("__bbox.maxy")) &&
+          Geo.stContains(col("xs"), col("ys"), x, y), "left")
       .withColumnRenamed("name", "waterBody")
-      .drop("xs", "ys")
+      .drop("xs", "ys", "__bbox")
   }
 
   /** A2: pipeline date bounds over strictly-valid dates
@@ -110,7 +136,9 @@ object WhalePipeline {
     val deduped = dedupKeepFirst(merged,
       Seq("eventDate", "decimalLatitude", "decimalLongitude"), col(orderCol))
     val filled = fillVernacular(fillOccurrenceIds(deduped, col(orderCol)), whale)
-    val enriched = enrichWaterBody(filled, polygons)
+    // the spatial join runs once: the locations dimension and the FK join
+    // both read the checkpoint instead of re-running it and its upstream
+    val enriched = graft.Materialize.checkpoint(enrichWaterBody(filled, polygons))
     val locations = Dimensions.getOrCreate(
       existing = enriched.sparkSession.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),

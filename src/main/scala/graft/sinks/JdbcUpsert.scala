@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.sql.DriverManager
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -24,19 +25,22 @@ object JdbcUpsert {
   /** ANSI/Derby MERGE upsert. Derby's MERGE source must be a base table,
     * so the single-row idiom merges against SYSIBM.SYSDUMMY1 with typed
     * parameter CASTs; bind order is [[paramOrder]] (keys, then non-keys,
-    * then all insert columns).
+    * then all insert columns). `alias` is the target's correlation name:
+    * [[upsert]] gives each partition its own, so each compiles its own
+    * plan (see there).
     */
-  def mergeSql(table: String, schema: StructType, keys: Seq[String]): String = {
+  def mergeSql(table: String, schema: StructType, keys: Seq[String],
+      alias: String = "t"): String = {
     val cols = schema.fields.map(_.name)
     val nonKeys = cols.filterNot(keys.contains)
     def cast(c: String): String =
       s"CAST(? AS ${sqlType(schema(c).dataType)})"
-    val on = keys.map(k => s"t.$k = ${cast(k)}").mkString(" AND ")
-    val setList = nonKeys.map(c => s"t.$c = ${cast(c)}").mkString(", ")
+    val on = keys.map(k => s"$alias.$k = ${cast(k)}").mkString(" AND ")
+    val setList = nonKeys.map(c => s"$alias.$c = ${cast(c)}").mkString(", ")
     val update =
       if (nonKeys.isEmpty) "" else s" WHEN MATCHED THEN UPDATE SET $setList"
     val insVals = cols.map(cast).mkString(", ")
-    s"MERGE INTO $table t USING SYSIBM.SYSDUMMY1 ON $on$update" +
+    s"MERGE INTO $table $alias USING SYSIBM.SYSDUMMY1 ON $on$update" +
       s" WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")}) VALUES ($insVals)"
   }
 
@@ -99,12 +103,18 @@ object JdbcUpsert {
       batchSize: Int = 500): Unit = {
     val schema = df.schema
     val mysql = url.startsWith("jdbc:mysql") || url.startsWith("jdbc:mariadb")
-    val sql =
-      if (mysql) mysqlUpsertSql(table, schema, keys)
-      else mergeSql(table, schema, keys)
     val order = paramOrder(schema, keys, mysql)
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
+        // Derby shares one compiled plan among all executions of the same
+        // statement text, and its MERGE action keeps per-execution state
+        // on that plan (`MatchingClauseConstantAction._rowMakingMethod`,
+        // nulled by one execution's cleanUp while another reads it: an
+        // NPE when partitions MERGE at once). A per-partition correlation
+        // name gives each partition its own text, hence its own plan.
+        val sql =
+          if (mysql) mysqlUpsertSql(table, schema, keys)
+          else mergeSql(table, schema, keys, s"t${TaskContext.getPartitionId()}")
         val conn = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)

@@ -69,4 +69,68 @@ class WhalePipelineSpec extends AnyFunSuite with SparkSpec {
     // A2 date bounds over strictly-valid rows
     assert(WhalePipeline.dateBounds(out) == ("2001-05-10", "2003-07-02"))
   }
+
+  test("process runs the spatial join once: no BNLJ left below the checkpoint") {
+    def plan(out: org.apache.spark.sql.DataFrame) = out.queryExecution.executedPlan.toString
+    val (out, _) = WhalePipeline.process(
+      fixtureValid, fixtureErrors, "beluga_whale", polygons, "ord")
+    assert(!plan(out).contains("BroadcastNestedLoopJoin"), plan(out))
+    // the audit view still sees the join the checkpoint hides
+    val (audited, _) = Materialize.withTransparent(WhalePipeline.process(
+      fixtureValid, fixtureErrors, "beluga_whale", polygons, "ord"))
+    assert(plan(audited).contains("BroadcastNestedLoopJoin"), plan(audited))
+  }
+
+  test("enrichWaterBody's bbox prefilter keeps exactly the bare st_contains join's rows") {
+    val wkt = graft.geo.Wkt.toVertexArrays _
+    // a triangle the ray cast's rounding reaches past: (nextUp(maxx), y1)
+    // lies right of every vertex yet tests inside (an unpadded box drops it)
+    val (tx, ty) = (Array(-8.933189865730432, 8.476387503328546, 0.0),
+      Array(0.0021721533539587356, -0.9798621796196083, 5.0))
+    assert(graft.geo.Geo.rayCast(tx, ty, math.nextUp(tx(1)), ty(1)))
+    val polys = Seq(
+      // two parts, the first with a hole: NaN separators inside the arrays
+      "holey" -> wkt("MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), " +
+        "(3 3, 7 3, 7 7, 3 7, 3 3)), ((20 0, 30 0, 25 8, 20 0)))"),
+      "overlap" -> wkt("POLYGON ((5 5, 15 5, 15 15, 5 15, 5 5))"),
+      "empty" -> (Array.empty[Double], Array.empty[Double]),
+      "sliver" -> (tx, ty))
+      .map { case (n, (xs, ys)) => (n, xs, ys) }.toDF("name", "xs", "ys")
+
+    val rnd = new scala.util.Random(7)
+    val random = Seq.fill(2000)((rnd.nextDouble() * 40 - 5, rnd.nextDouble() * 25 - 5))
+    val vertices = polys.as[(String, Array[Double], Array[Double])].collect()
+      .flatMap { case (_, xs, ys) => xs.zip(ys).filterNot(_._1.isNaN) }
+    // every vertex, its ulp neighbours, and the bbox edges through it
+    val edges = vertices.flatMap { case (x, y) =>
+      for (dx <- Seq(math.nextDown(x), x, math.nextUp(x));
+        dy <- Seq(math.nextDown(y), y, math.nextUp(y))) yield (dx, dy)
+    } ++ Seq((0.0, 5.0), (10.0, 5.0), (5.0, 0.0), (5.0, 10.0), (30.0, 4.0), (25.0, 8.0))
+    val pts = (random ++ edges).zipWithIndex
+      .map { case ((x, y), i) => (i, Option(x), Option(y), "stale") } ++
+      Seq((-1, None, Some(5.0), "stale"), (-2, Some(5.0), None, "stale"), (-3, None, None, null))
+    val df = pts.toDF("k", "decimalLongitude", "decimalLatitude", "waterBody")
+
+    graft.geo.Geo.register(spark)
+    val bare = df.drop("waterBody")
+      .join(broadcast(polys), graft.geo.Geo.stContains(col("xs"), col("ys"),
+        col("decimalLongitude"), col("decimalLatitude")), "left")
+      .withColumnRenamed("name", "waterBody").drop("xs", "ys")
+    val got = WhalePipeline.enrichWaterBody(df, polys)
+    assert(got.schema == bare.schema)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq)
+      .groupBy(identity).view.mapValues(_.length).toMap
+    val (expected, actual) = (rows(bare), rows(got))
+    val differ = (expected.keySet ++ actual.keySet)
+      .filter(r => expected.get(r) != actual.get(r))
+    assert(differ.isEmpty, s"rows (expected, got): ${differ.take(5)
+      .map(r => r -> (expected.get(r), actual.get(r)))}")
+    // the cases the spec exists for all occur
+    val names = expected.keys.groupBy(_.head).view.mapValues(_.map(_(3)).toSet)
+    assert(names.values.exists(_ == Set("holey", "overlap")), "a point in two polygons")
+    val (ux, uy) = (math.nextUp(tx(1)), ty(1))
+    val uk = pts.indexWhere(p => p._2.contains(ux) && p._3.contains(uy))
+    assert(expected.contains(Seq(uk, ux, uy, "sliver")), "the rounding point matched")
+    assert(Seq(-1, -2, -3).forall(k => names(k) == Set(null)))
+  }
 }
