@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -185,9 +185,10 @@ object Cli {
       .json(files: _*)
       .withColumn("_src", input_file_name())
       .persist()
-    val broken = raw.filter(col("results").isNull)
-      .select("_src").distinct().limit(5)
-      .collect().map(_.getString(0))
+    // the first action over `raw`, ahead of every write; a bare filter,
+    // so no shuffle (a broken file is one null row)
+    val broken = raw.filter(col("results").isNull).select("_src")
+      .collect().map(_.getString(0)).distinct.take(5)
     require(broken.isEmpty,
       s"Staged file(s) are not parseable OBIS responses: ${broken.mkString(", ")}")
     val staged = raw
@@ -200,6 +201,10 @@ object Cli {
     // cleaning chain all read this — without it each action re-runs the
     // JSON scan + validation
     val annotated = Validation.annotate(staged, validationRules).persist()
+    val nErrors = size(col("errors"))
+    val channels = annotated
+      .agg(count_if(nErrors === 0), count_if(nErrors > 0)).head()
+    val (nv, ne) = (channels.getLong(0), channels.getLong(1))
     // valid channel gets pydantic's normalizations: eventDate as the
     // parsed ISO date (model_dump(mode='json')), individualCount default 1
     val valid = Validation.valid(annotated)
@@ -219,23 +224,30 @@ object Cli {
           StructField("xs", ArrayType(DoubleType)),
           StructField("ys", ArrayType(DoubleType)))))
 
-    val (cleaned, unrepairable0) =
+    val (cleaned, unrepairable) =
       WhalePipeline.process(valid, errors, cfg.whale, polys, "ord")
-    val unrepairable = unrepairable0.persist()
 
     val out = java.nio.file.Paths.get(cfg.dataDir, cfg.whale).toString
-    cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
+    val nc = writeCounted(cleaned, "parquet", s"$out/cleaned")
     // failed repairs keep their offending rows, reference error_data.json
-    unrepairable.write.mode("overwrite").json(s"$out/errors")
-
-    val (nv, ne) = (valid.count(), errors.count())
-    val nu = unrepairable.count()
-    val nc = spark.read.parquet(s"$out/cleaned").count()
+    val nu = writeCounted(unrepairable, "json", s"$out/errors")
     raw.unpersist()
     annotated.unpersist()
-    unrepairable.unpersist()
     Tallies(validated = nv, errorRows = ne, repaired = ne - nu,
       unrepairable = nu, cleaned = nc)
+  }
+
+  /** Overwrites `path` with `df` in `format` and returns the number of
+    * rows written, observed by the write job itself (no second action).
+    * The observation arrives through the listener bus; the wait is bounded
+    * so one that never fires fails loud instead of hanging.
+    */
+  private def writeCounted(df: DataFrame, format: String, path: String): Long = {
+    val rows = new Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode("overwrite").format(format).save(path)
+    scala.concurrent.Await.result(rows.future,
+      scala.concurrent.duration.Duration(5, "min")).getLong(0)
   }
 
   // ---- load ----------------------------------------------------------------

@@ -37,8 +37,9 @@ object Dimensions {
     */
   def getOrCreate(existing: DataFrame, incoming: DataFrame): DataFrame = {
     val maxId = existing.agg(coalesce(max(col("id")), lit(-1L))).head().getLong(0)
+    val known = existing.select(col("name").as("__known"))
     val fresh = incoming.select("name").distinct()
-      .join(existing.select("name"), Seq("name"), "left_anti")
+      .join(known, col("name") <=> col("__known"), "left_anti")
       .withColumn("id",
         lit(maxId) + row_number().over(Window.orderBy("name")).cast("long"))
       .select("id", "name")

@@ -171,12 +171,6 @@ object Exact {
     org.apache.spark.sql.functions.udf((toks: Seq[String], dim: Int) =>
       Option(toks).map(hashEmbedJvm(_, dim)))
 
-  /** Seeded re-hash of a base hash: `(a*h + b) mod P` — the classic
-    * universal-hash family used for minhash permutations.
-    */
-  def seededHash(h: Column, a: Long, b: Long): Column =
-    pmod(h * a + b, lit(HashP))
-
   /** JVM twin of [[foldDot]]: the same sequential left-fold of
     * element products from 0.0 — identical IEEE op sequence, so
     * bit-identical doubles — without per-pair array churn.

@@ -88,8 +88,10 @@ object Wkt {
       val (xs, ys) = toVertexArrays(wkt)
       (xs, ys)
     }
-    spark.read.option("sep", "\t").csv(path)
-      .toDF("name", "wkt")
+    // a declared schema: inferring the column count would read the first
+    // line in a job of its own; a line without a tab still reads as a
+    // null wkt and fails the require above
+    spark.read.schema("name STRING, wkt STRING").option("sep", "\t").csv(path)
       .select(col("name"), parse(col("name"), col("wkt")).as("p"))
       .select(col("name"), col("p._1").as("xs"), col("p._2").as("ys"))
   }

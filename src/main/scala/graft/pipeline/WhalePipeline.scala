@@ -14,9 +14,11 @@ import graft.geo.Geo
   *
   * Order of operations preserved from the reference (dedup BEFORE the
   * spatial join — Catalyst won't reorder agg vs join, §4): repair errors →
-  * union channels → date_is_valid flag → keep-first dedup → fill synthetic
-  * ids / vernacular → spatial waterBody overwrite → dimension build + FK
-  * resolution.
+  * union channels → date_is_valid flag → keep-first dedup → fill
+  * vernacular → spatial waterBody overwrite → fill synthetic ids →
+  * dimension build + FK resolution. The ids are filled after the spatial
+  * join, on its checkpoint, and number the same rows as the reference's
+  * fill before its sjoin (see [[fillOccurrenceIds]]).
   *
   * Order-dependent reference semantics ("first" duplicate, i-th null id)
   * require an explicit stable ordering column in Spark (pandas row order
@@ -28,11 +30,19 @@ object WhalePipeline {
   /** W1/F15: null occurrence ids become "-1","-2",… in `orderCol` order
     * (`cleaner.py:66-69`). The global numbering window runs only over the
     * (tiny) null slice, mirroring the reference's in-order scan.
+    *
+    * Rows with equal `orderCol` share one id (`dense_rank`): after the
+    * spatial join, a point inside two overlapping polygons is two rows of
+    * one record, and keeps one id in both, as in the reference, which
+    * fills ids before its sjoin. So `orderCol` must be unique per record.
+    *
+    * `df` is read twice (the null and the non-null slice): pass a
+    * materialized frame, or everything upstream runs twice.
     */
   def fillOccurrenceIds(df: DataFrame, orderCol: Column): DataFrame = {
     val nulls = df.filter(col("occurrenceID").isNull)
       .withColumn("occurrenceID",
-        (-row_number().over(Window.orderBy(orderCol))).cast("string"))
+        (-dense_rank().over(Window.orderBy(orderCol))).cast("string"))
     df.filter(col("occurrenceID").isNotNull).unionByName(nulls)
   }
 
@@ -128,6 +138,7 @@ object WhalePipeline {
     * cleaned occurrences with surrogate `waterBodyId` resolved from a
     * get-or-create locations dimension (S11 *intended* semantics — see
     * [[graft.dims.Dimensions]] for the documented proc-bug deviation).
+    * `orderCol` must be unique per input row.
     */
   def process(valid: DataFrame, errors: DataFrame, whale: String,
       polygons: DataFrame, orderCol: String): (DataFrame, DataFrame) = {
@@ -135,10 +146,12 @@ object WhalePipeline {
     val merged = mergeChannels(valid, repaired)
     val deduped = dedupKeepFirst(merged,
       Seq("eventDate", "decimalLatitude", "decimalLongitude"), col(orderCol))
-    val filled = fillVernacular(fillOccurrenceIds(deduped, col(orderCol)), whale)
-    // the spatial join runs once: the locations dimension and the FK join
-    // both read the checkpoint instead of re-running it and its upstream
-    val enriched = graft.Materialize.checkpoint(enrichWaterBody(filled, polygons))
+    // the dedup window and the spatial join run once: the id fill's two
+    // slices, the locations dimension and the FK join all read the
+    // checkpoint instead of re-running it and its upstream
+    val enriched = graft.Materialize.checkpoint(
+      enrichWaterBody(fillVernacular(deduped, whale), polygons))
+    val filled = fillOccurrenceIds(enriched, col(orderCol))
     val locations = Dimensions.getOrCreate(
       existing = enriched.sparkSession.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -148,7 +161,7 @@ object WhalePipeline {
           org.apache.spark.sql.types.StructField("name",
             org.apache.spark.sql.types.StringType)))),
       incoming = enriched.select(col("waterBody").as("name")))
-    val withFk = Dimensions.resolveFk(enriched, locations, "waterBody", "waterBodyId")
+    val withFk = Dimensions.resolveFk(filled, locations, "waterBody", "waterBodyId")
     (withFk, unrepairable)
   }
 }

@@ -32,10 +32,4 @@ object QueryDef {
     val h = Integer.toHexString(sfDir.hashCode)
     s"${sys.props("java.io.tmpdir")}/graft_io/$h/$tag"
   }
-
-  /** Operator whose semantics DuckDB can't express — driver records a
-    * weaker rows-only check.
-    */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, None)(run)
 }

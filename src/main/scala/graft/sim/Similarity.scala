@@ -339,27 +339,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Near-duplicate pairs by embedding cosine within a blocking key (e.g.
-    * a label or LSH bucket) — never a full cross join, but per-block pair
-    * counts grow O(n²) with block membership: use [[bandedNearDupPairs]]
-    * unless the block key is known to stay high-cardinality.
-    * Output: (d1, d2, sim).
-    */
-  def nearDupPairs(vectors: DataFrame, blockCol: String, threshold: Double): DataFrame = {
-    VectorFold.register(vectors.sparkSession)
-    val a = vectors.select(col(blockCol).as("blk"),
-      col("vec_id").as("d1"), col("embedding").as("v1"),
-      Exact.foldNorm(col("embedding")).as("n1"))
-    val b = vectors.select(col(blockCol).as("blk"),
-      col("vec_id").as("d2"), col("embedding").as("v2"),
-      Exact.foldNorm(col("embedding")).as("n2"))
-    a.join(b, Seq("blk"))
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        (Exact.foldDot(col("v1"), col("v2")) / (col("n1") * col("n2"))).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
-
   /** Embedding-space benchmark decontamination — the ANN ANTI-JOIN shape:
     * find every TRAIN vector whose cosine against ANY benchmark vector
     * reaches `threshold`, so the caller can drop them (the embedding

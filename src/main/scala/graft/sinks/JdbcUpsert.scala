@@ -98,6 +98,12 @@ object JdbcUpsert {
     * guarantee. Aggregate or [[graft.dims.Scd2.latestPerKey]]-style
     * collapse the batch first (every caller here writes post-aggregate
     * or post-dedup frames, which are key-unique by construction).
+    *
+    * Derby limit: the MERGE text is unique per partition id, not per
+    * call, so two `upsert` calls running at once into one Derby database
+    * still share a text (hence a compiled plan) between their partitions
+    * of equal id, and can hit the shared-plan NPE noted in the body. Run
+    * concurrent upserts into one Derby database one after another.
     */
   def upsert(df: DataFrame, url: String, table: String, keys: Seq[String],
       batchSize: Int = 500): Unit = {

@@ -24,19 +24,6 @@ private[graft] object FsListing {
     p.toString
   }
 
-  /** True when ANY path segment strictly under `rootUri` is
-    * underscore/dot-prefixed — `_manifest`, `_SUCCESS`, `.crc`, torn
-    * temp dirs — i.e. metadata, not data.
-    */
-  def hiddenUnder(rootUri: String, p: Path): Boolean = {
-    var cur = p
-    while (cur != null && cur.toString != rootUri) {
-      if (cur.getName.startsWith("_") || cur.getName.startsWith(".")) return true
-      cur = cur.getParent
-    }
-    false
-  }
-
   /** Every data file under `root`, RECURSIVELY (staging trees are
     * partitioned — a top-level listing sees no files at all), hidden
     * paths excluded, each path [[norm]]-canonical, sorted. Safe to hand

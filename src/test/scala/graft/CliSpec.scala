@@ -130,6 +130,49 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains(".json")) // the offending file is named
   }
 
+  test("a warm process pass runs at most 16 Spark jobs") {
+    val dataDir = Files.createTempDirectory("cli_jobs").toString
+    val polyFile = Files.createTempDirectory("cli_jobs_polys")
+    Files.write(polyFile.resolve("p.tsv"), Seq(
+      "box_a\tPOLYGON ((0 0, 30 0, 30 30, 0 30, 0 0))",
+      "box_b\tPOLYGON ((50 40, 90 40, 90 80, 50 80, 50 40))")
+      .mkString("\n").getBytes("UTF-8"))
+    val cfg = Cli.Config("fetch", "killer_whale", dataDir = dataDir,
+      polygons = polyFile.toString)
+    Cli.run(cfg, new FakeHttp, spark)
+    val process = cfg.copy(command = "process")
+    Cli.run(process, new FakeHttp, spark) // warm-up
+
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // the listener bus delivers in order: every job started between the
+    // two mark jobs belongs to the counted pass
+    def mark(): Unit = {
+      sc.setJobGroup("mark", "mark")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val jobs = try {
+      mark()
+      val t = Cli.run(process, new FakeHttp, spark)
+      assert(t.cleaned == 5 && t.unrepairable == 1)
+      mark()
+      var (marks, n) = (0, 0)
+      while (marks < 2) {
+        val g = groups.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(g != null, s"no second mark after $n jobs")
+        if (g == "mark") marks += 1 else if (marks == 1) n += 1
+      }
+      n
+    } finally sc.removeSparkListener(listener)
+    assert(jobs <= 16, s"a warm Cli.process ran $jobs Spark jobs")
+  }
+
   test("pipeline command chains fetch, process, and load in one run") {
     val dataDir = Files.createTempDirectory("cli_pipe").toString
     val cfg = Cli.Config("pipeline", "killer_whale", dataDir = dataDir,

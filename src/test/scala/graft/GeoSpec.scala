@@ -211,6 +211,18 @@ class GeoSpec extends AnyFunSuite with SparkSpec {
     assert(got.map(r => (r._1, r._4)) == bnlj)
   }
 
+  test("WKT on-ramp: a line without a tab fails naming the row") {
+    val dir = java.nio.file.Files.createTempDirectory("wkt_bad")
+    java.nio.file.Files.write(dir.resolve("polys.tsv"), Seq(
+      "box\tPOLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", "no_tab_here")
+      .mkString("\n").getBytes("UTF-8"))
+    val e = intercept[Exception](graft.geo.Wkt.loadPolygons(spark, dir.toString).collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("malformed polygon line (name=no_tab_here)")),
+      messages(e))
+  }
+
   test("WKT on-ramp: holes and multipolygon parts match BNLJ expectations") {
     import graft.geo.Wkt
     val dir = java.nio.file.Files.createTempDirectory("wkt_fix")

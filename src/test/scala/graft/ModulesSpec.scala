@@ -80,6 +80,19 @@ class ModulesSpec extends AnyFunSuite with SparkSpec {
     assert(dim == Seq((0L, "Arafura Sea"), (1L, "Coral Sea")))
   }
 
+  test("Dimensions.getOrCreate: a NULL name already in the dimension is not added again") {
+    val existing = Seq((0L, null: String), (1L, "Arctic Ocean")).toDF("id", "name")
+    val incoming = Seq(null: String, "Arctic Ocean", "Coral Sea").toDF("name")
+    val dim = Dimensions.getOrCreate(existing, incoming)
+    assert(dim.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((0L, null), (1L, "Arctic Ocean"), (2L, "Coral Sea")))
+    // one fact row per fact, the NULL one resolved to the NULL dim row
+    val fact = Seq(("x", "Arctic Ocean"), ("y", null: String)).toDF("k", "waterBody")
+    val got = Dimensions.resolveFk(fact, dim, "waterBody", "wbId")
+      .select("k", "wbId").as[(String, Long)].collect().toSeq.sorted
+    assert(got == Seq("x" -> 1L, "y" -> 0L))
+  }
+
   test("Dimensions.resolveFk is null-safe (NULL name → NULL dim row)") {
     val dim = Seq((0L, null: String), (1L, "Arctic Ocean")).toDF("id", "name")
     val fact = Seq(("x", "Arctic Ocean"), ("y", null: String)).toDF("k", "waterBody")

@@ -81,6 +81,62 @@ class WhalePipelineSpec extends AnyFunSuite with SparkSpec {
     assert(plan(audited).contains("BroadcastNestedLoopJoin"), plan(audited))
   }
 
+  test("a null-id point inside two overlapping polygons keeps one id in both rows") {
+    val valid = Seq(
+      (1, null: String, "2001-05-10", 10.0, 10.0, null: String, null: String),
+      (2, null: String, "2002-06-01", 60.0, 70.0, null: String, null: String))
+      .toDF("ord", "occurrenceID", "eventDate", "decimalLatitude",
+        "decimalLongitude", "waterBody", "vernacularName")
+    // (10,10) lies in box_a and in "overlap"; (70,60) in box_b only
+    val polys = polygons.unionByName(Seq(("overlap",
+      Array(5.0, 15.0, 15.0, 5.0), Array(5.0, 5.0, 15.0, 15.0)))
+      .toDF("name", "xs", "ys"))
+    val (out, _) = WhalePipeline.process(valid, fixtureErrors, "beluga_whale", polys, "ord")
+    val rows = out.select("ord", "occurrenceID", "waterBody")
+      .as[(Int, String, String)].collect().toSeq
+    assert(rows.filter(_._1 == 1).map(r => (r._2, r._3)).sorted ==
+      Seq(("-1", "box_a"), ("-1", "overlap")))
+    assert(rows.filter(_._1 == 2).map(r => (r._2, r._3)) == Seq(("-2", "box_b")))
+  }
+
+  test("process runs the keep-first dedup window once, inside the checkpoint") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val plans = new java.util.concurrent.LinkedBlockingQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add((if (qe.analyzed.output.exists(_.name == "__mark")) "mark" else f) ->
+          qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener bus delivers in order: what arrives between the two
+    // marks is this process run and its collect, nothing older
+    def mark(): Unit = spark.range(1).toDF("__mark").collect()
+    spark.listenerManager.register(listener)
+    val seen = try {
+      mark()
+      val (out, _) = WhalePipeline.process(
+        fixtureValid, fixtureErrors, "beluga_whale", polygons, "ord")
+      out.collect()
+      mark()
+      val got = scala.collection.mutable.ListBuffer[(String, SparkPlan)]()
+      var marks = 0
+      while (marks < 2) {
+        val p = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(p != null, s"no second mark after ${got.map(_._1)}")
+        if (p._1 == "mark") marks += 1 else if (marks == 1) got += p
+      }
+      got.toList
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def dedupWindows(p: SparkPlan) = helper.collect(p) {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "eventDate")) => w
+    }.size
+    assert(seen.map(_._1).count(_ == "localCheckpoint") == 1, seen.map(_._1))
+    assert(seen.map { case (f, p) => f -> dedupWindows(p) }.filter(_._2 > 0) ==
+      Seq("localCheckpoint" -> 1))
+  }
+
   test("enrichWaterBody's bbox prefilter keeps exactly the bare st_contains join's rows") {
     val wkt = graft.geo.Wkt.toVertexArrays _
     // a triangle the ray cast's rounding reaches past: (nextUp(maxx), y1)
