@@ -309,7 +309,6 @@ object Cli {
       col("start_year"), col("start_month"), col("start_day"),
       col("end_year"), col("end_month"), col("end_day"),
       col("date_is_valid"))
-    JdbcUpsert.upsert(facts, cfg.jdbcUrl, "occurrences", Seq("id"))
-    Tallies(loaded = facts.count())
+    Tallies(loaded = JdbcUpsert.upsert(facts, cfg.jdbcUrl, "occurrences", Seq("id")))
   }
 }

@@ -46,7 +46,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         classOf[graft.functions.SortedIntersectCount].getName,
         "sorted_intersect_count"),
       exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectOptimizerRule(_ => graft.plans.SpatialBboxRule)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinBoundRule)
   }
 }

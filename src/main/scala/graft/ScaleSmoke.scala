@@ -815,7 +815,7 @@ object ScaleSmoke {
 
   /** UNCAPPED KEYED ERASE at production shape: a 64-partition tree and
     * an erase batch of 10⁶ QUERY-SELECTED keys (10× past the collect
-    * cap) through deleteKeysDVFramePartitioned — aggregate-only guards,
+    * cap) through deleteKeysDV with a frame batch — aggregate-only guards,
     * global-bounds candidates, exact key-JOIN matchers, zero
     * driver-resident key state. Every file matches ~1/8 of its rows
     * (under maxDvFraction), so the commit is DV-only: the timing
@@ -846,7 +846,7 @@ object ScaleSmoke {
     val doomed = spark.range(rows).select(col("id").as("k"))
       .filter(col("k") % 512 < 64)
     t0 = System.nanoTime()
-    val (dv, rw, car) = FileManifest.deleteKeysDVFramePartitioned(
+    val (dv, rw, car) = FileManifest.deleteKeysDV(
       spark, dir, "k", doomed, Seq("k"), bloomCols = Seq("k"))
     val delDt = (System.nanoTime() - t0) / 1e9
     println(f"bigkeys erase keys=${rows / 8} dv=$dv rw=$rw carried=$car $delDt%8.2f s")

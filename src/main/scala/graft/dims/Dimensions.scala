@@ -36,7 +36,12 @@ object Dimensions {
     * `existing` must have `(id, name)`.
     */
   def getOrCreate(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val maxId = existing.agg(coalesce(max(col("id")), lit(-1L))).head().getLong(0)
+    // a collect, not an agg(max): a LOCAL dimension (the pipeline's
+    // empty one) collects on the driver with no Spark job, and a
+    // dimension is small enough to bring back whole
+    val maxId = existing.select(col("id").cast("long")).collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+      .maxOption.getOrElse(-1L)
     val known = existing.select(col("name").as("__known"))
     val fresh = incoming.select("name").distinct()
       .join(known, col("name") <=> col("__known"), "left_anti")

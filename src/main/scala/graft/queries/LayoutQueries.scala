@@ -1817,7 +1817,7 @@ object LayoutQueries {
         .filter(col("o_orderkey") % 4999 === 0 && col("o_orderkey") =!= 0L)
         .select("ok").collect().map(_.getString(0)).toSeq
       if (delKeys.nonEmpty)
-        graft.sources.FileManifest.deleteKeysDVString(
+        graft.sources.FileManifest.deleteKeysDV(
           s, dir, "ok", delKeys, Seq("ok"), bloomCols = Seq("ok"))
       graft.sources.ManifestFileIndex.read(s, dir)
         .groupBy("o_custkey")
@@ -2003,13 +2003,13 @@ object LayoutQueries {
         .select(col("ok"), lit(-5L).as("o_custkey"), col("p"))
         .unionByName(Seq(("z_new_0", -100L, 1L), ("z_new_1", -101L, 2L))
           .toDF("ok", "o_custkey", "p"))
-      graft.sources.FileManifest.mergeKeysDVPartitioned(
+      graft.sources.FileManifest.mergeKeysDV(
         s, dir, updates, "ok", Seq("ok"), bloomCols = Seq("ok")) // v2
       val delKeys = o
         .filter(col("o_orderkey") % 4999 === 0 && col("o_orderkey") =!= 0L)
         .select("ok").collect().map(_.getString(0)).toSeq
       if (delKeys.nonEmpty)
-        graft.sources.FileManifest.deleteKeysDVStringPartitioned(
+        graft.sources.FileManifest.deleteKeysDV(
           s, dir, "ok", delKeys, Seq("ok"), bloomCols = Seq("ok")) // v3
       graft.sources.ManifestFileIndex.read(s, dir)
         .groupBy(col("p").cast("long").as("p"))
@@ -2025,7 +2025,7 @@ object LayoutQueries {
     // keys), the NULL/dup guards run as aggregates, and matched
     // positions / rewrite survivors run as exact key JOINS instead of
     // InSet predicates; the erase batch arrives as a DATAFRAME
-    // (deleteKeysDVFramePartitioned — the query-selected GDPR sweep,
+    // (deleteKeysDV with a frame batch — the query-selected GDPR sweep,
     // millions of keys at 100 TB). Same one-commit-per-verb atomicity
     // and directory-only partition encoding as q186
     // (PartitionedKeyedSpec pins parity with the capped path). The
@@ -2069,11 +2069,11 @@ object LayoutQueries {
         .select(col("k"), lit(-7L).as("c"), col("p"))
         .unionByName(Seq((900000000L, -100L, 0L), (900000001L, -101L, 1L),
           (900000002L, -102L, 2L)).toDF("k", "c", "p"))
-      graft.sources.FileManifest.mergeKeysDVPartitioned(
+      graft.sources.FileManifest.mergeKeysDV(
         s, dir, updates, "k", Seq("k"), bloomCols = Seq("k"),
         maxCollectedKeys = 50)
       // v3: QUERY-SELECTED erase batch as a DataFrame, also past the cap
-      graft.sources.FileManifest.deleteKeysDVFramePartitioned(
+      graft.sources.FileManifest.deleteKeysDV(
         s, dir, "k", o.filter(col("k") % 131 === 0).select("k"),
         Seq("k"), bloomCols = Seq("k"), maxCollectedKeys = 50)
       graft.sources.ManifestFileIndex.read(s, dir)

@@ -104,12 +104,17 @@ object JdbcUpsert {
     * still share a text (hence a compiled plan) between their partitions
     * of equal id, and can hit the shared-plan NPE noted in the body. Run
     * concurrent upserts into one Derby database one after another.
+    *
+    * Returns the number of rows written, counted by the committed
+    * partitions themselves (an accumulator in an action counts each
+    * task once), so a caller needs no second scan to report it.
     */
   def upsert(df: DataFrame, url: String, table: String, keys: Seq[String],
-      batchSize: Int = 500): Unit = {
+      batchSize: Int = 500): Long = {
     val schema = df.schema
     val mysql = url.startsWith("jdbc:mysql") || url.startsWith("jdbc:mariadb")
     val order = paramOrder(schema, keys, mysql)
+    val written = df.sparkSession.sparkContext.longAccumulator(s"upsert $table")
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         // Derby shares one compiled plan among all executions of the same
@@ -127,15 +132,18 @@ object JdbcUpsert {
           try {
             val ps = conn.prepareStatement(sql)
             var pending = 0
+            var n = 0L
             rows.foreach { r =>
               var i = 0
               while (i < order.length) { ps.setObject(i + 1, r.get(order(i))); i += 1 }
               ps.addBatch()
               pending += 1
+              n += 1
               if (pending >= batchSize) { ps.executeBatch(); pending = 0 }
             }
             if (pending > 0) ps.executeBatch()
             conn.commit()
+            written.add(n)
           } catch {
             // roll back BEFORE close: closing with an active transaction
             // makes Derby throw from the finally and mask the real batch
@@ -147,5 +155,6 @@ object JdbcUpsert {
         } finally conn.close()
       }
     }
+    written.value
   }
 }

@@ -2103,6 +2103,11 @@ object FileManifest {
     }
   }
 
+  /** The manifest columns [[fileStats]] writes for `cols`/`bloomCols`. */
+  private def statsColumns(cols: Seq[String], bloomCols: Seq[String]): Seq[String] =
+    Seq("file", "n_rows") ++ cols.flatMap(c => Seq(s"min_$c", s"max_$c")) ++
+      bloomCols.map(c => s"bloom_$c")
+
   /** Align fresh per-file stats to an existing manifest's column set:
     * a just-written file carries no deletion vector (`dv` NULL,
     * `n_del` 0). Shared by every surgery that unions carried manifest
@@ -2160,6 +2165,9 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01, maxDvFraction: Double = 0.5): (Int, Int, Int) = {
+    val root = new org.apache.hadoop.fs.Path(dataDir)
+    requireFlatTable(root.getFileSystem(spark.sessionState.newHadoopConf()),
+      root, "deleteRangeDV")
     val m = manifestFrame(spark, dataDir)
     require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
       s"deleteRangeDV needs tracked bounds for $c under $dataDir")
@@ -2183,231 +2191,95 @@ object FileManifest {
     * (binary-searched key slices per file), so a spread key batch
     * against a huge table opens only the files that might hold a key.
     * Hybrid threshold, merge-across-calls, idempotence, and read-side
-    * application are all [[deleteRangeDV]]'s. Keys must be integral
-    * (same cast-to-long soundness rule as mergeKeys); duplicates are
-    * collapsed; a key present nowhere deletes nothing. Returns
-    * (files DV-marked, files rewritten, files untouched).
+    * application are all [[deleteRangeDV]]'s.
+    *
+    * The batch is a `Seq[Long]`, a `Seq[String]` or a DataFrame with a
+    * `key` column ([[KeyBatch]]); its key type must probe the table's
+    * (integral with integral, string with string — see
+    * [[requireKeyTypes]]). Duplicates are collapsed, a NULL key fails
+    * loud (it matches no row), a key present nowhere deletes nothing. A
+    * batch of at most `maxCollectedKeys` distinct keys takes the precise
+    * per-key bounds + bloom candidate path on the driver (a frame
+    * collects once, cap+1 rows decide the path AND below the cap already
+    * ARE the key set). A larger batch never lands on the driver — the
+    * NULL guard runs as an aggregate, candidates fall back to global-
+    * bounds overlap (a batch past the cap is dense over its range, and
+    * zero-match candidates are carried untouched by the count pass), and
+    * matched positions / rewrite survivors become exact key JOINS.
+    *
+    * On a HIVE-PARTITIONED tree (read from the manifest paths) the DV
+    * marks stay metadata-only and over-threshold rewrites stage as ONE
+    * dynamic-partition job into their own partition dirs, publishing
+    * under ONE manifest swap (same contract as [[optimizePartitioned]]);
+    * erasing BY the partition column fails loud toward the
+    * directory-drop path. Returns (files DV-marked, files rewritten,
+    * files untouched).
     */
   def deleteKeysDV(spark: SparkSession, dataDir: String, key: String,
-      keys: Seq[Long], cols: Seq[String],
+      keys: KeyBatch, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxKeys, partitioned = false)
-
-  /** [[deleteKeysDV]] for a HIVE-PARTITIONED manifest table — the
-    * right-to-be-forgotten erase batch in its production layout (a
-    * date-partitioned fact tree): candidates are bounds/bloom-pruned
-    * per FILE exactly as on a flat table (sidecars are partition-
-    * agnostic), DV marks stay metadata-only, and any over-threshold
-    * rewrites stage as ONE dynamic-partition job into their own
-    * partition dirs — the partition column never flattens into file
-    * data — publishing under ONE manifest swap (single-version
-    * atomicity tree-wide, same contract as [[optimizePartitioned]]).
-    * The key must be a physical column; erasing BY the partition
-    * column fails loud toward the directory-drop path.
-    */
-  def deleteKeysDVPartitioned(spark: SparkSession, dataDir: String,
-      key: String, keys: Seq[Long], cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxKeys, partitioned = true)
-
-  private def deleteKeysDVImpl(spark: SparkSession, dataDir: String,
-      key: String, keys: Seq[Long], cols: Seq[String],
-      bloomCols: Seq[String], expectedPerFile: Long,
-      fpp: Double, maxDvFraction: Double, maxKeys: Int,
-      partitioned: Boolean): (Int, Int, Int) = {
-    require(keys.nonEmpty, "deleteKeysDV with no keys")
-    require(keys.size <= maxKeys,
-      s"deleteKeysDV batch of ${keys.size} keys exceeds maxKeys=$maxKeys " +
-        "— the key set rides the plan (InSet) and the candidate probes; " +
-        "split the erasure into batches or use deleteRangeDV for ranges")
-    val m = manifestFrame(spark, dataDir)
-    val dt = resolveColumnType(spark, dataDir, key,
-      if (partitioned) "deleteKeysDVPartitioned" else "deleteKeysDV")
-    require(FsListing.isIntegral(dt),
-      s"deleteKeysDV key '$key' is $dt — only integral key columns " +
-        "(cast-to-long must be value- and order-preserving)")
-    val keyArr = keys.distinct.sorted.toArray
-    deleteDvCore(spark, dataDir, m, keyCandidate(m, key, keyArr),
-      scanCols = Seq(key),
-      matchRows = _.filter(col(key).isin(keyArr: _*)),
-      keepRows = _.filter(col(key).isNull || !col(key).isin(keyArr: _*)),
-      cols, bloomCols, expectedPerFile, fpp, maxDvFraction,
-      partitioned = partitioned)
-  }
-
-  /** [[deleteKeysDV]] for STRING keys — the UUID/document-id erasure
-    * batch in its native type (real right-to-be-forgotten payloads key
-    * on string ids, not surrogate longs). Candidate planning runs
-    * through [[keyCandidateStr]]: bounds compare as Catalyst string
-    * literals, the per-file slice binary-searches in UTF-8 order, and
-    * the bloom probe hashes the same UTF-8 bytes the build side stored
-    * — no cast anywhere, so the skipping stack stays exactly as sound
-    * as the long-key path. Separate name (not an overload): Seq[Long]
-    * and Seq[String] erase to the same JVM signature.
-    */
-  def deleteKeysDVString(spark: SparkSession, dataDir: String, key: String,
-      keys: Seq[String], cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVStringImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxKeys, partitioned = false)
-
-  /** [[deleteKeysDVString]] on a HIVE-PARTITIONED tree — the GDPR
-    * erase batch in both its production dimensions at once: string
-    * (UUID/document-id) keys AND a date-partitioned table. Planning and
-    * atomicity as [[deleteKeysDVPartitioned]]; encoding/ordering as the
-    * flat string verb (UTF-8 end to end).
-    */
-  def deleteKeysDVStringPartitioned(spark: SparkSession, dataDir: String,
-      key: String, keys: Seq[String], cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVStringImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxKeys, partitioned = true)
-
-  private def deleteKeysDVStringImpl(spark: SparkSession, dataDir: String,
-      key: String, keys: Seq[String], cols: Seq[String],
-      bloomCols: Seq[String], expectedPerFile: Long,
-      fpp: Double, maxDvFraction: Double, maxKeys: Int,
-      partitioned: Boolean): (Int, Int, Int) = {
-    require(keys.nonEmpty, "deleteKeysDVString with no keys")
-    require(keys.size <= maxKeys,
-      s"deleteKeysDVString batch of ${keys.size} keys exceeds " +
-        s"maxKeys=$maxKeys — the key set rides the plan (InSet) and the " +
-        "candidate probes; split the erasure into batches")
-    require(!keys.contains(null),
-      "deleteKeysDVString: NULL key in batch — a NULL key matches no row")
-    val m = manifestFrame(spark, dataDir)
-    val dt = resolveColumnType(spark, dataDir, key,
-      if (partitioned) "deleteKeysDVStringPartitioned" else "deleteKeysDVString")
-    require(dt == StringType,
-      s"deleteKeysDVString key '$key' is $dt — use deleteKeysDV for " +
-        "integral keys")
-    val keyArr = keys.distinct.sorted(utf8Ordering).toArray
-    deleteDvCore(spark, dataDir, m, keyCandidateStr(m, key, keyArr),
-      scanCols = Seq(key),
-      matchRows = _.filter(col(key).isin(keyArr.toIndexedSeq: _*)),
-      keepRows =
-        _.filter(col(key).isNull || !col(key).isin(keyArr.toIndexedSeq: _*)),
-      cols, bloomCols, expectedPerFile, fpp, maxDvFraction,
-      partitioned = partitioned)
-  }
-
-  /** Keyed DELETE with the erase batch as a DataFrame COLUMN instead of
-    * a driver Seq — and therefore UNCAPPED: the production GDPR sweep
-    * ships millions of ids selected by a query, not a hand-held list.
-    * A batch of at most `maxCollectedKeys` DISTINCT keys collects once
-    * and takes the precise per-key bounds+bloom candidate path of
-    * [[deleteKeysDV]]/[[deleteKeysDVString]] (long vs string dispatched
-    * on the column's type); a larger batch never lands on the driver —
-    * NULL guards run as aggregates, candidates fall back to global-
-    * bounds overlap (a batch past the cap is dense over its range, and
-    * zero-match candidates are carried untouched by the count pass),
-    * and matched positions / rewrite survivors become exact key JOINS.
-    * Duplicates in the batch are collapsed (erasure is idempotent per
-    * key); NULL keys fail loud (they match no row). Returns
-    * (files DV-marked, files rewritten, files untouched).
-    */
-  def deleteKeysDVFrame(spark: SparkSession, dataDir: String, key: String,
-      keys: DataFrame, cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxCollectedKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVFrameImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxCollectedKeys,
-      partitioned = false)
-
-  /** [[deleteKeysDVFrame]] on a HIVE-PARTITIONED tree — the uncapped
-    * right-to-be-forgotten verb in both production dimensions at once:
-    * query-selected keys of any cardinality AND a partitioned fact
-    * tree, one dynamic-partition staging job, one-swap atomicity
-    * (same contract as [[deleteKeysDVPartitioned]]).
-    */
-  def deleteKeysDVFramePartitioned(spark: SparkSession, dataDir: String,
-      key: String, keys: DataFrame, cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, maxDvFraction: Double = 0.5,
-      maxCollectedKeys: Int = 100000): (Int, Int, Int) =
-    deleteKeysDVFrameImpl(spark, dataDir, key, keys, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxCollectedKeys,
-      partitioned = true)
-
-  private def deleteKeysDVFrameImpl(spark: SparkSession, dataDir: String,
-      key: String, keys: DataFrame, cols: Seq[String],
-      bloomCols: Seq[String], expectedPerFile: Long,
-      fpp: Double, maxDvFraction: Double, maxCollectedKeys: Int,
-      partitioned: Boolean): (Int, Int, Int) = {
-    val verb =
-      if (partitioned) "deleteKeysDVFramePartitioned" else "deleteKeysDVFrame"
-    require(keys.columns.contains(key),
-      s"$verb: key frame has no column '$key' (has: " +
-        s"${keys.columns.mkString(", ")})")
-    val keyDt = keys.schema(key).dataType
-    val strKey = keyDt == StringType
-    require(FsListing.isIntegral(keyDt) || strKey,
-      s"$verb key '$key' is $keyDt — only integral (cast-to-long must " +
-        "be value- and order-preserving) or string key columns erase")
-    val tableDt = resolveColumnType(spark, dataDir, key, verb)
-    require(if (strKey) tableDt == StringType else FsListing.isIntegral(tableDt),
-      s"$verb: batch key type $keyDt does not probe table key type " +
-        s"$tableDt under $dataDir — bloom/bounds encodings must match")
-    val nullMsg = s"$verb: NULL key in batch — a NULL key matches no row"
-    // PERSISTED for the whole verb: the probe, the guards, and the
-    // matcher joins must all see ONE evaluation of the caller's key
-    // query — a re-evaluated non-deterministic query (or one racing a
-    // concurrent append to its source) would erase file A's positions
-    // against a different key set than file B's survivors, a silent
-    // partial right-to-be-forgotten erase (see keyJoinMatchers)
-    val kDistinct = keys
-      .select((if (strKey) col(key) else col(key).cast("long")).as("k"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // measured-size decision, one job in the common case (mergeKeys'
-      // cap-probe pattern): cap+1 rows decide the path AND, below the
-      // cap, already ARE the complete key set
-      val capped = kDistinct.limit(maxCollectedKeys + 1).collect()
-      require(capped.nonEmpty, s"$verb with no keys")
-      if (capped.length <= maxCollectedKeys) {
-        require(!capped.exists(_.isNullAt(0)), nullMsg)
-        return (
-          if (strKey)
-            deleteKeysDVStringImpl(spark, dataDir, key,
-              capped.toIndexedSeq.map(_.getString(0)), cols, bloomCols,
-              expectedPerFile, fpp, maxDvFraction,
-              maxKeys = capped.length, partitioned = partitioned)
-          else
-            deleteKeysDVImpl(spark, dataDir, key,
-              capped.toIndexedSeq.map(_.getLong(0)), cols, bloomCols,
-              expectedPerFile, fpp, maxDvFraction,
-              maxKeys = capped.length, partitioned = partitioned))
-      }
-      // UNCAPPED path: aggregate-only guards + global key bounds from
-      // one job (which also materializes the persisted key set in full)
-      // — zero driver-resident key state however large the batch
-      val st = kDistinct.agg(
-        sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
-        min("k").as("kmin"), max("k").as("kmax")).head()
-      require(st.getLong(0) == 0L, nullMsg)
-      val m = manifestFrame(spark, dataDir)
-      val kcol = kDistinct.filter(col("k").isNotNull).select(col("k").as(key))
-      val (matchRows, keepRows) = keyJoinMatchers(kcol, key)
-      deleteDvCore(spark, dataDir, m,
-        globalBoundsCandidate(m, key, strKey, st.get(1), st.get(2)),
+      maxCollectedKeys: Int = 100000): (Int, Int, Int) = {
+    val verb = "deleteKeysDV"
+    def erase(m: DataFrame, plan: KeyPlan): (Int, Int, Int) =
+      deleteDvCore(spark, dataDir, m, plan.candidate,
         scanCols = Seq(key),
-        matchRows = matchRows,
-        keepRows = keepRows,
-        cols, bloomCols, expectedPerFile, fpp, maxDvFraction,
-        partitioned = partitioned)
-    } finally kDistinct.unpersist(false)
+        matchRows = plan.matchRows,
+        keepRows = plan.keepRows,
+        cols, bloomCols, expectedPerFile, fpp, maxDvFraction)
+    keys match {
+      case lits: LiteralKeys if lits.values.size <= maxCollectedKeys =>
+        requireLiterals(verb, lits)
+        val m = manifestFrame(spark, dataDir)
+        requireKeyTypes(verb, key, lits.dataType,
+          resolveColumnType(spark, dataDir, key, verb), dataDir)
+        erase(m, literalPlan(m, key, lits))
+      case _ =>
+        val frame = keys match {
+          case KeyBatch.Frame(df) => df
+          case lits: LiteralKeys => lits.toFrame(spark, key)
+        }
+        require(frame.columns.contains(key),
+          s"$verb: key frame has no column '$key' (has: " +
+            s"${frame.columns.mkString(", ")})")
+        val keyDt = frame.schema(key).dataType
+        requireKeyTypes(verb, key, keyDt,
+          resolveColumnType(spark, dataDir, key, verb), dataDir)
+        val strKey = keyDt == StringType
+        val nullMsg = s"$verb: NULL key in batch — a NULL key matches no row"
+        // PERSISTED for the whole verb: the probe, the guards, and the
+        // matcher joins must all see ONE evaluation of the caller's key
+        // query — a re-evaluated non-deterministic query (or one racing a
+        // concurrent append to its source) would erase file A's positions
+        // against a different key set than file B's survivors, a silent
+        // partial right-to-be-forgotten erase (see uncappedPlan)
+        val kDistinct = frame
+          .select((if (strKey) col(key) else col(key).cast("long")).as("k"))
+          .distinct()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // measured-size decision, one job in the common case (mergeKeys'
+          // cap-probe pattern)
+          val capped = kDistinct.limit(maxCollectedKeys + 1).collect()
+          require(capped.nonEmpty, s"$verb with no keys")
+          require(!capped.exists(_.isNullAt(0)), nullMsg)
+          if (capped.length <= maxCollectedKeys)
+            deleteKeysDV(spark, dataDir, key, literalsOf(capped, strKey), cols,
+              bloomCols, expectedPerFile, fpp, maxDvFraction, maxCollectedKeys)
+          else {
+            // UNCAPPED: aggregate-only guard + global key bounds from one
+            // job (which also materializes the persisted key set in full)
+            // — zero driver-resident key state however large the batch
+            val st = kDistinct.agg(
+              sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
+              min("k").as("kmin"), max("k").as("kmax")).head()
+            require(st.getLong(0) == 0L, nullMsg)
+            val m = manifestFrame(spark, dataDir)
+            erase(m, uncappedPlan(m, key, strKey,
+              kDistinct.select(col("k").as(key)), st.get(1), st.get(2)))
+          }
+        } finally kDistinct.unpersist(false)
+    }
   }
 
   /** The shared DV-delete engine behind [[deleteRangeDV]] and
@@ -2432,21 +2304,11 @@ object FileManifest {
       bloomCols: Seq[String], expectedPerFile: Long, fpp: Double,
       maxDvFraction: Double,
       appendDf: Option[DataFrame] = None,
-      op: String = "dv-delete",
-      partitioned: Boolean = false): (Int, Int, Int) = {
+      op: String = "dv-delete"): (Int, Int, Int) = {
     require(maxDvFraction > 0 && maxDvFraction <= 1,
       s"maxDvFraction must be in (0, 1], got $maxDvFraction")
     val root = new org.apache.hadoop.fs.Path(dataDir)
     val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // PARTITIONED mode (the *Partitioned keyed verbs): candidate
-    // planning, the matched-position passes, and the DV/manifest shapes
-    // are all partition-agnostic already (bounds/bloom sidecars are
-    // per-FILE, DV writes are metadata); only the REWRITE/APPEND staging
-    // must keep the partition encoding directory-only, which the
-    // dynamic-partition staged write below does. Flat mode keeps the
-    // loud guard — a root-level rewrite on a partitioned tree would
-    // flatten the partition column into file data.
-    if (!partitioned) requireFlatTable(hfs, root, op)
     val plannedV = currentVersion(hfs, dataDir)
     val hasDvCols = m.columns.contains(DvCol)
     // ONE metadata job for plan + tally: candidate flag evaluated in the
@@ -2465,15 +2327,21 @@ object FileManifest {
     }.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3)))
     // partition layout (names of the hive `k=v` dir levels) from the
-    // already-collected manifest paths — zero extra I/O. The key/scan
-    // columns must be PHYSICAL: erasing BY the partition column is a
-    // directory drop, not a row surgery (same guard as
-    // deleteRangePartitioned), and a partition-column matchPred would
-    // rewrite every file of the matched dirs for nothing.
+    // already-collected manifest paths — zero extra I/O; Nil is a flat
+    // table. Candidate planning, the matched-position passes and the
+    // DV/manifest shapes are partition-agnostic (bounds/bloom sidecars
+    // are per-FILE, DV writes are metadata); only the REWRITE/APPEND
+    // staging must keep the partition encoding directory-only, which
+    // the dynamic-partition staged write below does. An EMPTY manifest
+    // shows no layout, so only then the root listing decides: a tree
+    // must not take root-level files. The key/scan columns must be
+    // PHYSICAL: erasing BY the partition column is a directory drop, not
+    // a row surgery (same guard as deleteRangePartitioned), and a
+    // partition-column matchPred would rewrite every file of the matched
+    // dirs for nothing.
     val partCols: Seq[String] =
-      if (!partitioned) Nil
+      if (allMeta.isEmpty) { requireFlatTable(hfs, root, op); Nil }
       else {
-        require(allMeta.nonEmpty, s"$op on empty table $dataDir")
         val rootQ = FsListing.norm(root.makeQualified(
           hfs.getUri, hfs.getWorkingDirectory).toString)
         val pc = partitionColsOf(rootQ, allMeta.map(_._1).toSeq, op)
@@ -2601,6 +2469,18 @@ object FileManifest {
           else df.write.parquet(stg.toString)
         }
       }
+      // fresh files get stats for `cols`/`bloomCols` only, aligned to the
+      // manifest's columns inside the lock after the move into the table:
+      // a tracked column the caller left out must fail while the files
+      // are still staged (the finally below drops them)
+      val fresh = statsColumns(cols, bloomCols).toSet
+      val untracked = m.columns.filterNot(c =>
+        c == DvCol || c == DvDelCol || fresh.contains(c))
+      require(untracked.isEmpty || !hfs.exists(stg) ||
+        FsListing.listDataFiles(hfs, stg).isEmpty,
+        s"$op: the manifest under $dataDir tracks ${untracked.mkString(", ")}" +
+          " but cols/bloomCols leave them out — the files this call writes " +
+          "would have no stats for them; pass the table's tracked columns")
       beforeCommitHook()
       CommitLock.withLock(hfs,
         new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
@@ -2609,7 +2489,7 @@ object FileManifest {
           if (staged.isEmpty) Seq.empty[String]
           else {
             val mv =
-              if (partitioned) movePartitionTree(hfs, stg, root)
+              if (partCols.nonEmpty) movePartitionTree(hfs, stg, root)
               else hfs.listStatus(stg).iterator
                 .filterNot { s =>
                   val n = s.getPath.getName
@@ -2843,58 +2723,35 @@ object FileManifest {
     * new row, inserts appear once — because every read path
     * anti-filters the DVs.
     *
-    * Same preconditions as mergeKeys (integral key, no NULL/duplicate
-    * keys in the batch, schema equality via unionByName). A batch
-    * larger than `maxCollectedKeys` falls back to [[mergeKeys]]'s
-    * bounds-only copy-on-write path — the DV position pass needs the
-    * key set on the executors, and a batch that dense rewrites most
-    * candidates anyway. Returns (files DV-marked, files rewritten,
-    * files untouched); the appended batch files ride in whichever
-    * version commits.
+    * Same preconditions as mergeKeys (integral or string key, no
+    * NULL/duplicate keys in the batch, schema equality via
+    * unionByName), and the batch key's type must probe the table's
+    * (see [[requireKeyTypes]]). The table's layout comes from the
+    * manifest-anchored file the schema check already reads. On a
+    * HIVE-PARTITIONED tree the
+    * batch must carry the partition column(s) as data columns — the
+    * staged append re-encodes them directory-side via a dynamic-partition
+    * write, so each upserted row lands in its key's partition dir and the
+    * partition column never flattens into file data. A matched key whose
+    * update row carries a DIFFERENT partition value than the old row
+    * MOVES partitions — the old row dies in its old dir, the new row
+    * lands in the new dir, in one commit, so readers never see the row
+    * doubled or missing.
+    *
+    * A batch larger than `maxCollectedKeys`: on a flat table it falls
+    * back to [[mergeKeys]]'s bounds-only copy-on-write path (a batch that
+    * dense rewrites most candidates anyway); on a tree (no flat CoW
+    * there) it stays UNCAPPED — the guards run as aggregates, candidates
+    * fall back to global-bounds overlap, and matched positions / rewrite
+    * survivors become exact key JOINS, zero driver-resident key state.
+    * Returns (files DV-marked, files rewritten, files untouched); the
+    * appended batch files ride in whichever version commits.
     */
   def mergeKeysDV(spark: SparkSession, dataDir: String, updates: DataFrame,
       key: String, cols: Seq[String], bloomCols: Seq[String] = Nil,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01,
       maxDvFraction: Double = 0.5,
-      maxCollectedKeys: Int = 100000): (Int, Int, Int) =
-    mergeKeysDVImpl(spark, dataDir, updates, key, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxCollectedKeys,
-      partitioned = false)
-
-  /** [[mergeKeysDV]] for a HIVE-PARTITIONED manifest table: a
-    * cross-partition keyed upsert (long or string keys) as ONE atomic
-    * commit. The update batch must carry the partition column(s) as
-    * data columns — the staged append re-encodes them directory-side
-    * via a dynamic-partition write, so each upserted row lands in its
-    * key's partition dir and the partition column never flattens into
-    * file data. Matched old rows retire by DV (metadata) wherever the
-    * dead fraction allows, exactly as on a flat table; candidates are
-    * bounds/bloom-pruned per file. NOTE a matched key whose update row
-    * carries a DIFFERENT partition value than the old row MOVES
-    * partitions — the old row dies in its old dir (DV), the new row
-    * lands in the new dir; both are one commit, so readers never see
-    * the row doubled or missing. A batch larger than `maxCollectedKeys`
-    * stays UNCAPPED here (no flat-CoW fallback is possible on a tree):
-    * the guards run as aggregates, candidates fall back to global-
-    * bounds overlap, and matched positions / rewrite survivors become
-    * exact key JOINS — zero driver-resident key state however many
-    * millions of keys the batch carries (the 100 TB GDPR sweep's shape).
-    */
-  def mergeKeysDVPartitioned(spark: SparkSession, dataDir: String,
-      updates: DataFrame, key: String, cols: Seq[String],
-      bloomCols: Seq[String] = Nil,
-      expectedPerFile: Long = 65536L, fpp: Double = 0.01,
-      maxDvFraction: Double = 0.5,
-      maxCollectedKeys: Int = 100000): (Int, Int, Int) =
-    mergeKeysDVImpl(spark, dataDir, updates, key, cols, bloomCols,
-      expectedPerFile, fpp, maxDvFraction, maxCollectedKeys,
-      partitioned = true)
-
-  private def mergeKeysDVImpl(spark: SparkSession, dataDir: String,
-      updates: DataFrame, key: String, cols: Seq[String],
-      bloomCols: Seq[String], expectedPerFile: Long, fpp: Double,
-      maxDvFraction: Double, maxCollectedKeys: Int,
-      partitioned: Boolean): (Int, Int, Int) = {
+      maxCollectedKeys: Int = 100000): (Int, Int, Int) = {
     val keyDt = updates.schema(key).dataType
     val strKey = keyDt == StringType
     require(FsListing.isIntegral(keyDt) || strKey,
@@ -2929,10 +2786,31 @@ object FileManifest {
         if (seen.size > maxCollectedKeys) None else Some(raw)
       }
     val bigBatch = keysOpt.isEmpty
-    if (bigBatch && !partitioned) {
-      // flat fallback unchanged: the CoW verb has its own uncapped
-      // bounds-only path, and a batch this dense rewrites most
-      // candidates anyway
+    // the table's physical schema and layout from ONE manifest-anchored
+    // file — a driver-side probe, no Spark job per commit. A merged row
+    // must cover the anchor's columns plus, on a partitioned tree, the
+    // directory-encoded partition columns (an update batch missing those
+    // couldn't be routed to a partition dir at all)
+    val (anchorSchema, partCols) = withSwapRetry {
+      firstManifestFilePath(spark, dataDir).map { a =>
+        val root = new org.apache.hadoop.fs.Path(dataDir)
+        val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
+        val rootQ = FsListing.norm(root.makeQualified(
+          hfs.getUri, hfs.getWorkingDirectory).toString)
+        (spark.read.parquet(a).schema,
+          partitionColsOf(rootQ, Seq(a), "mergeKeysDV"))
+      }.getOrElse((new StructType(), Nil))
+    }
+    val anchorCols = anchorSchema.fieldNames.toSet
+    // the same anchor types the table key: a batch key in the other
+    // encoding would probe the bloom sidecar with the wrong hashes and
+    // miss the file holding a matched key (a key that is a partition
+    // column is not in the file; deleteDvCore refuses it)
+    anchorSchema.find(_.name == key).foreach { f =>
+      requireKeyTypes("mergeKeysDV", key, keyDt, f.dataType, dataDir) }
+    if (bigBatch && partCols.isEmpty) {
+      // flat fallback: the CoW verb has its own uncapped bounds-only
+      // path, and a batch this dense rewrites most candidates anyway
       val (rw, car) = mergeKeys(spark, dataDir, updates, key, cols,
         bloomCols, expectedPerFile, fpp, maxCollectedKeys)
       return (0, rw, car)
@@ -2940,14 +2818,9 @@ object FileManifest {
     // UNCAPPED partitioned batch (the GDPR/CDC sweep at 100 TB carries
     // millions of keys): guards run as AGGREGATES and the global key
     // bounds come back from the same job — ZERO driver-resident key
-    // state, mirroring mergeKeys' measured-count fallback. Candidate
-    // precision drops from per-key bloom slices to global-bounds
-    // overlap (a batch past the cap is dense over its range, so per-key
-    // precision would rescue few files — and zero-match candidates are
-    // carried untouched by the count pass anyway); matched positions
-    // and rewrite survivors become EXACT key joins instead of InSet
-    // predicates. (The small/complete path's null+dup guards already ran
-    // driver-side on the raw take above.)
+    // state, mirroring mergeKeys' measured-count fallback. (The
+    // small/complete path's null+dup guards already ran driver-side on
+    // the raw take above.)
     val bigBounds: Option[(Any, Any)] =
       if (!bigBatch) None
       else {
@@ -2966,68 +2839,30 @@ object FileManifest {
     // explicitly: a batch MISSING table columns would land rows whose
     // missing fields read as NULL — silent corruption where the CoW twin
     // fails loud. Extra batch columns are allowed (schema evolution).
-    locally {
-      val missing = withSwapRetry {
-        // driver-side single-entry probe — no Spark job per commit
-        val anchor = firstManifestFilePath(spark, dataDir)
-        anchor.map { a =>
-          // the table schema a merged row must cover is the PHYSICAL
-          // anchor schema plus, on a partitioned tree, the directory-
-          // encoded partition columns — an update batch missing those
-          // couldn't be routed to a partition dir at all
-          val partNames =
-            if (!partitioned) Set.empty[String]
-            else {
-              val root = new org.apache.hadoop.fs.Path(dataDir)
-              val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-              val rootQ = FsListing.norm(root.makeQualified(
-                hfs.getUri, hfs.getWorkingDirectory).toString)
-              partitionColsOf(rootQ, Seq(a), "mergeKeysDVPartitioned").toSet
-            }
-          (spark.read.parquet(a).schema.fieldNames.toSet ++ partNames)
-            .diff(updates.columns.toSet)
-        }.getOrElse(Set.empty[String])
-      }
-      require(missing.isEmpty,
-        s"mergeKeysDV: update batch lacks table column(s) " +
-          s"${missing.mkString(", ")} — merged keys would silently read " +
-          "NULL for them; align the batch schema (unionByName semantics)")
-    }
-    val (cand, matchRows, keepRows, persistedKeys) = bigBounds match {
+    val missing = (anchorCols ++ partCols).diff(updates.columns.toSet)
+    require(missing.isEmpty,
+      s"mergeKeysDV: update batch lacks table column(s) " +
+        s"${missing.mkString(", ")} — merged keys would silently read " +
+        "NULL for them; align the batch schema (unionByName semantics)")
+    val (plan, persistedKeys) = bigBounds match {
       case Some((kmin, kmax)) =>
         // key column PERSISTED and materialized ONCE — the matcher pair
         // runs on several independent scans and must see one key set
         // even when `updates` is an expensive or non-deterministic query
-        // (see keyJoinMatchers). `updates` itself stays lazy for the
+        // (see uncappedPlan). `updates` itself stays lazy for the
         // append, same determinism contract as mergeKeys' CoW survivors.
         val kcol = updates.select(col(key)).persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         kcol.count()
-        val (mr, kr) = keyJoinMatchers(kcol, key)
-        (globalBoundsCandidate(m, key, strKey, kmin, kmax), mr, kr,
-          Some(kcol))
-      case None if strKey =>
-        val keyArr = keysOpt.get.map(_.getString(0)).sorted(utf8Ordering)
-        (keyCandidateStr(m, key, keyArr),
-          (df: DataFrame) => df.filter(col(key).isin(keyArr.toIndexedSeq: _*)),
-          (df: DataFrame) => df.filter(
-            col(key).isNull || !col(key).isin(keyArr.toIndexedSeq: _*)),
-          None)
-      case None =>
-        val keyArr = keysOpt.get.map(_.getLong(0)).sorted
-        (keyCandidate(m, key, keyArr),
-          (df: DataFrame) => df.filter(col(key).isin(keyArr.toIndexedSeq: _*)),
-          (df: DataFrame) => df.filter(
-            col(key).isNull || !col(key).isin(keyArr.toIndexedSeq: _*)),
-          None)
+        (uncappedPlan(m, key, strKey, kcol, kmin, kmax), Some(kcol))
+      case None => (literalPlan(m, key, literalsOf(keysOpt.get, strKey)), None)
     }
-    try deleteDvCore(spark, dataDir, m, cand,
+    try deleteDvCore(spark, dataDir, m, plan.candidate,
       scanCols = Seq(key),
-      matchRows = matchRows,
-      keepRows = keepRows,
+      matchRows = plan.matchRows,
+      keepRows = plan.keepRows,
       cols, bloomCols, expectedPerFile, fpp, maxDvFraction,
-      appendDf = Some(updates), op = "merge-dv",
-      partitioned = partitioned)
+      appendDf = Some(updates), op = "merge-dv")
     finally persistedKeys.foreach(_.unpersist(false))
   }
 
@@ -3044,8 +2879,8 @@ object FileManifest {
     *
     * A column absent from the anchor's PHYSICAL schema that names one of
     * its hive partition dir levels fails with the directory-drop
-    * guidance instead of "missing column": the partitioned keyed verbs
-    * route "erase BY the partition column" here with zero extra I/O
+    * guidance instead of "missing column": a keyed verb on a partitioned
+    * tree routes "erase BY the partition column" here with zero extra I/O
     * (the anchor path is already in hand). A partition column whose
     * bounds ARE tracked resolves a type here and is caught by
     * [[deleteDvCore]]'s scanCols-vs-partCols guard instead — loud either
@@ -3227,40 +3062,97 @@ object FileManifest {
     else lit(true)
   }
 
-  /** Global-bounds candidate for the UNCAPPED keyed verbs: a file is a
-    * candidate unless its tracked [min,max] provably excludes the whole
-    * batch range [kmin,kmax] — compared in the key's NATIVE type (the
-    * agg min/max arrive as Catalyst values and compare as literals; one
-    * ordering end to end for longs and strings alike). NULL bounds
-    * prove nothing → candidate, the sound direction. ONE definition
-    * shared by the uncapped merge and the frame erase so a bounds-type
-    * edge fix can never land in one and miss the other.
+  /** Where a keyed DV verb looks and what it matches there: a
+    * candidate predicate over MANIFEST rows, `matchRows` keeping exactly
+    * the batch's rows and `keepRows` their exact complement (NULL-key
+    * rows survive) — the pair [[deleteDvCore]] requires.
     */
-  private def globalBoundsCandidate(m: DataFrame, key: String,
-      strKey: Boolean, kmin: Any, kmax: Any): Column =
-    if (!m.columns.contains(s"min_$key")) lit(true)
-    else if (strKey)
-      coalesce(!(col(s"max_$key") < lit(kmin.asInstanceOf[String]) ||
-        col(s"min_$key") > lit(kmax.asInstanceOf[String])), lit(true))
-    else
-      coalesce(!(col(s"max_$key").cast("long") < kmin.asInstanceOf[Long] ||
-        col(s"min_$key").cast("long") > kmax.asInstanceOf[Long]), lit(true))
+  private final case class KeyPlan(candidate: Column,
+      matchRows: DataFrame => DataFrame, keepRows: DataFrame => DataFrame)
 
-  /** The exact matched/survivor pair for the uncapped keyed verbs: a
-    * key semi-join (matched rows) and its anti-join complement
-    * (survivors — anti keeps NULL-key rows, the `isNull || !isin`
-    * rule of the capped path). `kcol` MUST be a one-column frame named
-    * `key`, PERSISTED AND MATERIALIZED by the caller before use: the
-    * pair is applied to several independent scans (count pass, DV
+  /** The plan for a driver-held batch: per-key bounds + bloom probes
+    * ([[keyCandidate]] / [[keyCandidateStr]], each in its key space's
+    * order) and InSet matchers.
+    */
+  private def literalPlan(m: DataFrame, key: String,
+      keys: LiteralKeys): KeyPlan = {
+    val (candidate, inSet) = keys match {
+      case KeyBatch.Longs(ks) =>
+        val arr = ks.distinct.sorted.toArray
+        (keyCandidate(m, key, arr), arr.toIndexedSeq)
+      case KeyBatch.Strings(ks) =>
+        val arr = ks.distinct.sorted(utf8Ordering).toArray
+        (keyCandidateStr(m, key, arr), arr.toIndexedSeq)
+    }
+    KeyPlan(candidate, _.filter(col(key).isin(inSet: _*)),
+      _.filter(col(key).isNull || !col(key).isin(inSet: _*)))
+  }
+
+  /** The plan for a batch past the collect cap. Candidates: a file is
+    * one unless its tracked [min,max] provably excludes the whole batch
+    * range [kmin,kmax], compared in the key's NATIVE type (the agg
+    * min/max arrive as Catalyst values and compare as literals; NULL
+    * bounds prove nothing → candidate, the sound direction). Matchers: a
+    * key semi-join and its anti-join complement (anti keeps NULL-key
+    * rows, the `isNull || !isin` rule of the literal plan). `kcol` MUST
+    * be a one-column frame named `key`, PERSISTED AND MATERIALIZED by the
+    * caller: the pair runs on several independent scans (count pass, DV
     * position pass, rewrite staging), and an unpersisted
     * non-deterministic key query would re-evaluate per pass — marking
-    * file A's dead positions with a different key set than the one
-    * file B's survivors were kept against, a silent partial erase.
+    * file A's dead positions with a different key set than the one file
+    * B's survivors were kept against, a silent partial erase.
     */
-  private def keyJoinMatchers(kcol: DataFrame, key: String)
-      : (DataFrame => DataFrame, DataFrame => DataFrame) =
-    ((df: DataFrame) => df.join(kcol, Seq(key), "left_semi"),
-      (df: DataFrame) => df.join(kcol, Seq(key), "left_anti"))
+  private def uncappedPlan(m: DataFrame, key: String, strKey: Boolean,
+      kcol: DataFrame, kmin: Any, kmax: Any): KeyPlan = {
+    val candidate =
+      if (!m.columns.contains(s"min_$key")) lit(true)
+      else if (strKey)
+        coalesce(!(col(s"max_$key") < lit(kmin.asInstanceOf[String]) ||
+          col(s"min_$key") > lit(kmax.asInstanceOf[String])), lit(true))
+      else
+        coalesce(!(col(s"max_$key").cast("long") < kmin.asInstanceOf[Long] ||
+          col(s"min_$key").cast("long") > kmax.asInstanceOf[Long]), lit(true))
+    KeyPlan(candidate, _.join(kcol, Seq(key), "left_semi"),
+      _.join(kcol, Seq(key), "left_anti"))
+  }
+
+  /** A driver-held batch must be non-empty and NULL-free (a NULL key
+    * matches no row).
+    */
+  private def requireLiterals(verb: String, keys: LiteralKeys): Unit = {
+    require(keys.values.nonEmpty, s"$verb with no keys")
+    require(!keys.values.contains(null),
+      s"$verb: NULL key in batch — a NULL key matches no row")
+  }
+
+  /** The batch's key type must probe the table key's encoding: integral
+    * keys as cast-to-long (value- and order-preserving) against an
+    * integral column, string keys against a string column. A probe in
+    * the other encoding (putLong vs putString bloom hashes, long vs
+    * UTF-8 bounds) would silently false-negative files out of the
+    * candidate set, so any other pairing fails loud.
+    */
+  private def requireKeyTypes(verb: String, key: String, batchDt: DataType,
+      tableDt: DataType, dataDir: String): Unit = {
+    require(FsListing.isIntegral(batchDt) || batchDt == StringType,
+      s"$verb key '$key' is $batchDt — only integral (cast-to-long must " +
+        "be value- and order-preserving) or string keys probe")
+    val takes =
+      if (tableDt == StringType) "pass string keys"
+      else if (FsListing.isIntegral(tableDt)) "pass long keys"
+      else "only integral or string columns take keys"
+    require(
+      if (batchDt == StringType) tableDt == StringType
+      else FsListing.isIntegral(tableDt),
+      s"$verb: batch key type $batchDt does not probe table key type " +
+        s"$tableDt of '$key' under $dataDir — bloom/bounds encodings " +
+        s"must match; $takes")
+  }
+
+  /** Collected one-column key rows as a driver-held batch. */
+  private def literalsOf(rows: Array[Row], strKey: Boolean): LiteralKeys =
+    if (strKey) KeyBatch.Strings(rows.toIndexedSeq.map(_.getString(0)))
+    else KeyBatch.Longs(rows.toIndexedSeq.map(_.getLong(0)))
 
   /** Catalyst's string order (UTF-8 binary) as a driver-side Ordering —
     * the sort every string key array MUST use before binary-searching
@@ -3415,7 +3307,7 @@ object FileManifest {
         // of twice. NULL-keyed live rows survive, exactly as the anti
         // join kept them (a NULL key matches no update). The uncapped
         // fallback keeps the exact semi-structure join — zero driver key
-        // state, same rule as the DV twin's keyJoinMatchers.
+        // state, same rule as the DV twin's uncappedPlan.
         val pruned = keysOpt match {
           case Some(keyRows) if strKey =>
             val ks = keyRows.map(_.getString(0)).toIndexedSeq
@@ -4055,9 +3947,7 @@ object FileManifest {
       fpp: Double, versionFloor: Long = 0L): Unit = {
     val hfs = hfs0
     val mPath = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    val wantCols = (Seq("file", "n_rows") ++
-      cols.flatMap(c => Seq(s"min_$c", s"max_$c")) ++
-      bloomCols.map(c => s"bloom_$c")).sorted
+    val wantCols = statsColumns(cols, bloomCols).sorted
     if (!hfs.exists(mPath))
       return buildWithBloom(spark, dataDir, cols, bloomCols, expectedPerFile,
         fpp, versionFloor)
@@ -4256,70 +4146,35 @@ object FileManifest {
 
   /** POINT lookup planned through the Bloom sidecar: open only the files
     * whose filter might contain at least one probe key (a missing/null
-    * sidecar cell keeps the file — unknown is never skipped). The probe
-    * runs driver-side over the tiny manifest — |files| filter
-    * deserializations, the same metadata-scale work as the bounds test —
-    * and the exact `IN` filter behind it removes false positives, so the
-    * result is identical to the full scan's.
+    * sidecar cell keeps the file — unknown is never skipped). The
+    * membership probes run as a Spark job over the manifest — each
+    * executor task deserializes only its partition's sidecars and tests
+    * the (driver-sized, closure-captured) key set; the driver sees
+    * surviving path strings, never filter binaries (O(kept) driver
+    * state; ManifestFileIndexSpec pins the byte bound). The exact `IN`
+    * filter behind it removes false positives, so the result is
+    * identical to the full scan's. Long keys probe an integral column,
+    * string keys a string column; any other pairing fails loud.
     */
   def readPointLookup(spark: SparkSession, dataDir: String, c: String,
-      keys: Seq[Long]): (DataFrame, Int, Int) = {
-    require(keys.nonEmpty, "readPointLookup with no keys")
+      keys: LiteralKeys): (DataFrame, Int, Int) = {
+    requireLiterals("readPointLookup", keys)
     // ENCODING GUARD: the sidecar was built with putLong for integral
-    // columns and putString for string columns (fileStats) — probing a
-    // string-built filter with mightContainLong silently false-negatives
-    // files out of the kept set (rows vanish). Resolve the column's
-    // tracked type and fail loud toward [[readPointLookupString]].
-    val dt = resolveColumnType(spark, dataDir, c, "readPointLookup")
-    require(FsListing.isIntegral(dt),
-      s"readPointLookup column '$c' is $dt — its bloom sidecar hashes " +
-        "the native encoding; use readPointLookupString for string keys")
-    val keyArr = keys.toArray
+    // columns and putString for string columns (fileStats) — a probe in
+    // the other encoding silently false-negatives files out of the kept
+    // set (rows vanish)
+    requireKeyTypes("readPointLookup", c, keys.dataType,
+      resolveColumnType(spark, dataDir, c, "readPointLookup"), dataDir)
+    // mightContain dispatches on the boxed key: mightContainLong for a
+    // Long, mightContainString (UTF-8 bytes) for a String
+    val keyArr = keys.values.map(_.asInstanceOf[AnyRef]).toArray
     val probe = udf { (bytes: Array[Byte]) =>
       bytes == null || {
         val bf = org.apache.spark.util.sketch.BloomFilter
           .readFrom(new java.io.ByteArrayInputStream(bytes))
-        keyArr.exists(bf.mightContainLong)
+        keyArr.exists(bf.mightContain)
       }
     }
-    pointLookupCore(spark, dataDir, c, probe, col(c).isin(keys: _*))
-  }
-
-  /** [[readPointLookup]] for STRING key columns — probes with the same
-    * UTF-8 encoding the build side stored ([[fileStats]]' putString),
-    * so the no-false-negative contract holds in the string key space.
-    */
-  def readPointLookupString(spark: SparkSession, dataDir: String,
-      c: String, keys: Seq[String]): (DataFrame, Int, Int) = {
-    require(keys.nonEmpty, "readPointLookupString with no keys")
-    require(!keys.contains(null),
-      "readPointLookupString: NULL key in batch — matches no row")
-    val dt = resolveColumnType(spark, dataDir, c, "readPointLookupString")
-    require(dt == StringType,
-      s"readPointLookupString column '$c' is $dt — use readPointLookup " +
-        "for integral keys")
-    val keyArr = keys.toArray
-    val probe = udf { (bytes: Array[Byte]) =>
-      bytes == null || {
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        keyArr.exists(bf.mightContainString)
-      }
-    }
-    pointLookupCore(spark, dataDir, c, probe,
-      col(c).isin(keys.toIndexedSeq: _*))
-  }
-
-  /** Shared engine of the two point-lookup verbs: membership probes run
-    * as a Spark job over the manifest — each executor task deserializes
-    * only its partition's sidecars and tests the (driver-sized,
-    * closure-captured) key set; the driver sees surviving path strings,
-    * never filter binaries. O(kept) driver state; ManifestFileIndexSpec
-    * pins the byte bound.
-    */
-  private def pointLookupCore(spark: SparkSession, dataDir: String,
-      c: String, probe: org.apache.spark.sql.expressions.UserDefinedFunction,
-      exact: Column): (DataFrame, Int, Int) = {
     val (_, total) = loadCovering(spark, dataDir) // staleness guard
     // one pinned version for the bloom probe and the dv resolution
     val v0 = currentVersionOf(spark, dataDir)
@@ -4332,7 +4187,8 @@ object FileManifest {
         .select(ManifestFileIndex.normPath(col("file")))
         .collect().map(_.getString(0)).toSeq
     }
-    val df = readKeptDv(spark, dataDir, kept, v0).filter(exact)
+    val df = readKeptDv(spark, dataDir, kept, v0)
+      .filter(col(c).isin(keys.values: _*))
     (df, kept.size, total)
   }
 

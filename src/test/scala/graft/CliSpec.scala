@@ -143,33 +143,8 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     val process = cfg.copy(command = "process")
     Cli.run(process, new FakeHttp, spark) // warm-up
 
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    // the listener bus delivers in order: every job started between the
-    // two mark jobs belongs to the counted pass
-    def mark(): Unit = {
-      sc.setJobGroup("mark", "mark")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    val jobs = try {
-      mark()
-      val t = Cli.run(process, new FakeHttp, spark)
-      assert(t.cleaned == 5 && t.unrepairable == 1)
-      mark()
-      var (marks, n) = (0, 0)
-      while (marks < 2) {
-        val g = groups.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(g != null, s"no second mark after $n jobs")
-        if (g == "mark") marks += 1 else if (marks == 1) n += 1
-      }
-      n
-    } finally sc.removeSparkListener(listener)
+    val (t, jobs) = JobCount(spark)(Cli.run(process, new FakeHttp, spark))
+    assert(t.cleaned == 5 && t.unrepairable == 1)
     assert(jobs <= 16, s"a warm Cli.process ran $jobs Spark jobs")
   }
 

@@ -393,10 +393,15 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       FileManifest.deleteRangeDV(spark, pdir, "k", lit(0L), lit(10L), Seq("k"))
     }
-    intercept[IllegalArgumentException] {
-      FileManifest.mergeKeysDV(spark, pdir, Seq((1L, 1L, 0L)).toDF("k", "v", "p"),
-        "k", Seq("k"))
-    }
+    // a keyed DV verb reads the layout from the manifest and takes the
+    // partitioned path on this tree: key 1 moves from p=1 to p=0
+    FileManifest.mergeKeysDV(spark, pdir, Seq((1L, 1L, 0L)).toDF("k", "v", "p"),
+      "k", Seq("k"))
+    val moved = ManifestFileIndex.read(spark, pdir).filter(col("k") === 1L)
+      .select(col("v"), col("p").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(moved.toSeq === Seq((1L, 0L)))
+    assert(ManifestFileIndex.read(spark, pdir).count() === 2000L)
   }
 
   // ---- interop with the other surgeries --------------------------------------

@@ -157,19 +157,19 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
       expectedPerFile = 1024, fpp = 0.01)
     // the long probe on a string-built sidecar would hash different bytes
     // than the build side stored — a silent false-negative machine. It
-    // must fail loud toward the string twin instead.
+    // must fail loud, naming the key type the column takes.
     val e = intercept[IllegalArgumentException] {
       FileManifest.readPointLookup(spark, dir, "doc_id", Seq(7L))
     }
-    assert(e.getMessage.contains("readPointLookupString"))
-    // the string twin probes the build encoding: real skipping, no false
+    assert(e.getMessage.contains("pass string keys"))
+    // string keys probe the build encoding: real skipping, no false
     // negatives, exact rows
-    val (df, kept, total) = FileManifest.readPointLookupString(
+    val (df, kept, total) = FileManifest.readPointLookup(
       spark, dir, "doc_id", Seq("doc_id_absent", "doc_000007", "doc_001201"))
     assert(total == 16 && kept <= 6, s"string bloom pruned nothing: $kept/$total")
     assert(df.select("v").collect().map(_.getLong(0)).toSet == Set(7L, 1201L))
     Seq(0, 1, 255, 1599).foreach { i =>
-      val (one, _, _) = FileManifest.readPointLookupString(
+      val (one, _, _) = FileManifest.readPointLookup(
         spark, dir, "doc_id", Seq(f"doc_$i%06d"))
       assert(one.count() == 1, s"string bloom lost doc_$i")
     }
@@ -178,9 +178,9 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     Seq((1L, "a")).toDF("id", "p").coalesce(1).write.mode("append").parquet(dirL)
     FileManifest.buildWithBloom(spark, dirL, Seq("id"), Seq("id"))
     val e2 = intercept[IllegalArgumentException] {
-      FileManifest.readPointLookupString(spark, dirL, "id", Seq("1"))
+      FileManifest.readPointLookup(spark, dirL, "id", Seq("1"))
     }
-    assert(e2.getMessage.contains("readPointLookup"))
+    assert(e2.getMessage.contains("pass long keys"))
   }
 
   test("publishVia rejects the reserved reorg opNames (CDC invariance is asserted, not free)") {

@@ -79,28 +79,19 @@ class GeoSpec extends AnyFunSuite with SparkSpec {
       assert(Geo.rayCast(sqX, sqY, x, y) == in, s"rayCast at ($x, $y)")
     }
     // the same ten points through BOTH physical plans (codegen BNLJ and
-    // grid equi-join), with the bbox rule active so its inclusive
-    // prefilter is also proven not to drop in-boundary points
+    // grid equi-join)
     Geo.register(spark)
     val pts = expected.map { case ((x, y), _) => (x, y) }.toDF("x", "y")
     val polys = Seq(("sq", sqX, sqY)).toDF("name", "xs", "ys")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.SpatialBboxRule
-    try {
-      def classify(df: org.apache.spark.sql.DataFrame): Set[((Double, Double), Boolean)] =
-        df.select(col("x"), col("y"), col("name").isNotNull.as("in"))
-          .collect()
-          .map(r => ((r.getDouble(0), r.getDouble(1)), r.getBoolean(2))).toSet
-      val bnlj = classify(pts.join(broadcast(polys),
-        Geo.stContains(col("xs"), col("ys"), col("x"), col("y")), "left"))
-      val grid = classify(Geo.gridSpatialJoin(pts, polys, cellSize = 4.0))
-      assert(bnlj == expected.toSet, "BNLJ plan")
-      assert(grid == expected.toSet, "grid plan (cell edges ON the boundary)")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.SpatialBboxRule)
-    }
+    def classify(df: org.apache.spark.sql.DataFrame): Set[((Double, Double), Boolean)] =
+      df.select(col("x"), col("y"), col("name").isNotNull.as("in"))
+        .collect()
+        .map(r => ((r.getDouble(0), r.getDouble(1)), r.getBoolean(2))).toSet
+    val bnlj = classify(pts.join(broadcast(polys),
+      Geo.stContains(col("xs"), col("ys"), col("x"), col("y")), "left"))
+    val grid = classify(Geo.gridSpatialJoin(pts, polys, cellSize = 4.0))
+    assert(bnlj == expected.toSet, "BNLJ plan")
+    assert(grid == expected.toSet, "grid plan (cell edges ON the boundary)")
   }
 
   test("boundary-inclusive mode (st_intersects): shapely parity, codegen = JVM") {
@@ -161,29 +152,6 @@ class GeoSpec extends AnyFunSuite with SparkSpec {
     assert(Geo.rayCastInclusive(hx, hy, 0.0, 5.0), "on the outer boundary")
     assert(!Geo.onBoundary(hx, hy, 2.0, 2.2),
       "annulus interior point is not boundary via any phantom segment")
-  }
-
-  test("SpatialBboxRule prepends a short-circuit bbox conjunct to spatial joins") {
-    Geo.register(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.SpatialBboxRule
-    try {
-      val pts = Seq((0.5, 0.5), (50.0, 50.0)).toDF("x", "y")
-      val polys = Seq(("t", triX, triY)).toDF("name", "xs", "ys")
-      val joined = pts.join(polys,
-        Geo.stContains(col("xs"), col("ys"), col("x"), col("y")), "left")
-      val optimized = joined.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("array_min") && optimized.contains("array_max"),
-        s"bbox conjunct missing:\n$optimized")
-      // and the rewrite preserves results
-      val got = joined.select(col("x"), col("name"))
-        .as[(Double, Option[String])].collect().toSet
-      assert(got == Set((0.5, Some("t")), (50.0, None)))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.SpatialBboxRule)
-    }
   }
 
   test("gridSpatialJoin: left semantics with fully-duplicate point rows") {
@@ -274,32 +242,6 @@ class GeoSpec extends AnyFunSuite with SparkSpec {
     assert(sx.count(_.isNaN) == 0 && sx.length == 3)
     intercept[IllegalArgumentException] {
       Wkt.parseRings("POINT (1 2)")
-    }
-  }
-
-  test("SpatialBboxRule stays correct on NaN-separated multi-ring polygons") {
-    // the rule's bbox conjunct computes array_max over vertex arrays that
-    // contain NaN ring separators — Spark orders NaN as the largest
-    // double, so `x <= NaN` is TRUE and the upper bounds degrade to
-    // always-pass (a sound superset) while the lower bounds keep cutting
-    Geo.register(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.SpatialBboxRule
-    try {
-      val (xs, ys) = graft.geo.Wkt.toVertexArrays(
-        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0)), ((20 0, 30 0, 30 10, 20 10, 20 0)))")
-      val polys = Seq(("p", xs, ys)).toDF("name", "xs", "ys")
-      val pts = Seq((1L, 5.0, 5.0), (2L, 25.0, 5.0), (3L, 50.0, 5.0))
-        .toDF("k", "x", "y")
-      val got = pts.join(broadcast(polys),
-        Geo.stContains(col("xs"), col("ys"), col("x"), col("y")), "left")
-        .select(col("k"), col("name")).collect()
-        .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
-      assert(got == Seq((1L, Some("p")), (2L, Some("p")), (3L, None)))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.SpatialBboxRule)
     }
   }
 

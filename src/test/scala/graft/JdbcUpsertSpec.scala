@@ -47,6 +47,18 @@ class JdbcUpsertSpec extends AnyFunSuite with SparkSpec {
       (3, "Megaptera novaeangliae", "Humpback Whale")))
   }
 
+  test("upsert returns the rows its partitions wrote, empty partitions included") {
+    import spark.implicits._
+    val conn = DriverManager.getConnection(url)
+    conn.createStatement().execute(
+      "CREATE TABLE counted (id BIGINT PRIMARY KEY, v VARCHAR(10))")
+    conn.close()
+    val rows = (1L to 7L).map(i => (i, s"v$i")).toDF("id", "v").repartition(5)
+    assert(JdbcUpsert.upsert(rows, url, "counted", Seq("id"), batchSize = 2) == 7L)
+    assert(JdbcUpsert.upsert(rows.filter($"id" > 100L), url, "counted",
+      Seq("id")) == 0L)
+  }
+
   test("composite key with keys out of schema order binds values to the right columns") {
     import spark.implicits._
     val conn = DriverManager.getConnection(url)

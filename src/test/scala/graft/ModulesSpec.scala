@@ -80,6 +80,28 @@ class ModulesSpec extends AnyFunSuite with SparkSpec {
     assert(dim == Seq((0L, "Arafura Sea"), (1L, "Coral Sea")))
   }
 
+  test("Dimensions.getOrCreate: a local empty dimension costs no Spark job") {
+    // the pipeline's shape: an empty dimension built on the driver
+    val existing = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("name",
+          org.apache.spark.sql.types.StringType))))
+    val incoming = Seq("Coral Sea", "Arafura Sea").toDF("name")
+    val (dim, jobs) = JobCount(spark)(Dimensions.getOrCreate(existing, incoming))
+    assert(jobs == 0, s"getOrCreate ran $jobs Spark jobs before any action")
+    assert(dim.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((0L, "Arafura Sea"), (1L, "Coral Sea")))
+    // a local dimension with rows still numbers past its max
+    val (dim2, jobs2) = JobCount(spark)(Dimensions.getOrCreate(
+      Seq((-5L, "Arctic Ocean"), (-3L, null: String)).toDF("id", "name"), incoming))
+    assert(jobs2 == 0, s"getOrCreate ran $jobs2 Spark jobs before any action")
+    assert(dim2.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((-5L, "Arctic Ocean"), (-3L, null), (-2L, "Arafura Sea"), (-1L, "Coral Sea")))
+  }
+
   test("Dimensions.getOrCreate: a NULL name already in the dimension is not added again") {
     val existing = Seq((0L, null: String), (1L, "Arctic Ocean")).toDF("id", "name")
     val incoming = Seq(null: String, "Arctic Ocean", "Coral Sea").toDF("name")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.FileManifest
 
 /** String-keyed surgery verbs (mergeKeys / mergeKeysDV /
-  * deleteKeysDVString): parity with the long-key paths, candidate
+  * deleteKeysDV): parity with the long-key paths, candidate
   * skipping through string bounds + string bloom sidecars, and the
   * UTF-8-vs-UTF-16 ordering trap (supplementary-plane keys sort
   * differently in Java strings and Catalyst/parquet bounds — the
@@ -64,7 +64,7 @@ class StringKeySpec extends AnyFunSuite with SparkSpec {
       "id", Seq("id"), bloomCols = Seq("id"))
     assert(dv === 1 && rw === 0 && untouched === 3,
       s"expected one DV-marked file, got ($dv, $rw, $untouched)")
-    val (dv2, rw2, _) = FileManifest.deleteKeysDVString(
+    val (dv2, rw2, _) = FileManifest.deleteKeysDV(
       spark, dir, "id", Seq("a001", "a002", "nope"), Seq("id"),
       bloomCols = Seq("id"))
     assert(dv2 === 1 && rw2 === 0)
@@ -116,7 +116,7 @@ class StringKeySpec extends AnyFunSuite with SparkSpec {
     }
     assert(nul.getMessage.contains("NULL"))
     val typ = intercept[IllegalArgumentException] {
-      FileManifest.deleteKeysDVString(spark, dir, "v", Seq("1"), Seq("id"))
+      FileManifest.deleteKeysDV(spark, dir, "v", Seq("1"), Seq("id"))
     }
     assert(typ.getMessage.contains("deleteKeysDV"))
   }
