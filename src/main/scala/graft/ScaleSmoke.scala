@@ -544,7 +544,7 @@ object ScaleSmoke {
       // DELETION VECTORS first (v2): the same narrow-delete shape as a
       // DV write must stay flat AND beat the rewrite form — the cost is
       // one column-pruned scan of the 1-2 intersecting files plus a
-      // manifest swap, with NO data-file write at all
+      // manifest commit, with NO data-file write at all
       var t0 = System.nanoTime()
       val (dvN, dvRw, dvCar) = FileManifest.deleteRangeDV(
         spark, dir, "k", lit(45000L), lit(46000L), Seq("k"))
@@ -787,7 +787,8 @@ object ScaleSmoke {
       mode = "overwrite")
     val buildDt = (System.nanoTime() - t0) / 1e9
     def manifestShape(): (Int, Long) = {
-      val parts = hfs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifest"))
+      val parts = hfs.listStatus(new org.apache.hadoop.fs.Path(
+          FileManifest.versionDir(dir, FileManifest.versions(spark, dir).last)))
         .filter(_.getPath.getName.startsWith("part-"))
       (parts.length, parts.map(_.getLen).sum)
     }

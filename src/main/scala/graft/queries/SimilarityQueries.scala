@@ -575,7 +575,7 @@ object SimilarityQueries {
       val served = indexOf(existing).unionByName(indexOf(delta))
         .join(tombstones, Seq("n_id"), "left_anti")
       val compacted = Similarity.compactIndex(served,
-        QueryDef.scratch(d, "ann_compact_idx"))
+        QueryDef.scratch(d, "ann_compact_mvcc"))
       val probes = Similarity.ivfProbes(
         e.filter(col("vec_id") % 100 === 0), cents, 2)
       Similarity.ivfPqSearch(compacted, probes, cb, e, 8, 64, 3)

@@ -888,7 +888,7 @@ object Similarity {
     * file holds a contiguous cell range and the write-through manifest's
     * [min_cell, max_cell] bounds give a cell-probing serve path
     * file-level pruning for free ([[graft.sources.ManifestFileIndex]]
-    * composes over the same `_manifest`). CompactAnnSpec pins the
+    * composes over the same manifest). CompactAnnSpec pins the
     * physical claims (row-set equality with the served stream, no
     * tombstoned id survives); the q146 gate pins that search answers
     * are bit-identical to q109's serve — compaction must never change
@@ -909,7 +909,7 @@ object Similarity {
     // call compacts the base index IN PLACE, i.e. `served` READS `dir` —
     // an overwrite would clear the tree before the lazy plan scans it,
     // destroying the input it is compacting. publishVia materializes into
-    // a sibling staging dir first and version-swaps the manifest under
+    // a sibling staging dir first and commits the next manifest version under
     // the writer lock; the pre-compaction snapshot's files stay on disk
     // (readable via FileManifest.readAsOf) until vacuum retention. The
     // returned frame plans through the manifest — membership is the

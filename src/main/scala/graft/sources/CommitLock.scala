@@ -81,9 +81,10 @@ private[graft] object CommitLock {
     * waiters retains a µs-scale window (steal → restore-fails) where
     * two waiters overlap; the token guard stops it propagating, and
     * the commit protocols above this lock (idempotent batch markers,
-    * versioned ledger dirs, manifest swap-by-rename) are themselves
-    * last-writer-wins safe, so the exposure is wasted work, not torn
-    * state.
+    * versioned ledger dirs, put-if-absent manifest versions) are
+    * themselves safe against a second holder — last-writer-wins, or a
+    * loud ConcurrentWriteException — so the exposure is wasted work,
+    * not torn state.
     */
   def withLock[T](fs: FileSystem, path: Path,
       waitMs: Long = 60000L, staleMs: Long = 600000L)(body: => T): T = {

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,9 +9,10 @@ import org.apache.spark.sql.types._
   * table-format-lite skipping layer (Iceberg/Delta keep the same
   * per-file column bounds in their metadata): one small parquet of
   * `(file, n_rows, min_c, max_c, ...)` per tracked column, stored
-  * UNDER the data directory as `_manifest` (the underscore prefix makes
-  * every Spark/parquet reader skip it as metadata, so the data dir
-  * stays directly readable).
+  * UNDER the data directory, one dir per committed version in
+  * `_versions/<N>` (the underscore prefix makes every Spark/parquet
+  * reader skip it as metadata, so the data dir stays directly
+  * readable).
   *
   * Why it matters at 100 TB: parquet row-group statistics prune WITHIN
   * a file, but the scan still opens every footer, and the LISTING alone
@@ -49,201 +51,120 @@ object FileManifest {
     try body finally sc.setJobDescription(prev)
   }
 
-  private def manifestPath(dataDir: String) = s"$dataDir/_manifest"
-  private def histPath(dataDir: String, v: Long) = s"$dataDir/_manifest_v$v"
-
-  /** Version stamped inside a manifest dir as an empty `_v{N}` marker
-    * file — underscore-prefixed, so every parquet/Spark reader ignores
-    * it, and it RIDES THE RENAME when a manifest becomes history.
-    * Manifests written before versioning carry no marker and read as
-    * version 1.
+  /** Every commit publishes version N as its own dir `_versions/<N>` —
+    * the manifest parquet parts plus an `_op_<verb>` marker naming the
+    * verb that produced it — and never touches that dir again: Delta's
+    * log protocol, where each version is written once and writers
+    * exclude each other by a put-if-absent of entry N
+    * ([[commitVersion]]). `_versions` also holds the table's
+    * `_table_<uuid>` INCARNATION marker, created with the first version.
+    * Nothing a reader can list is ever renamed or rewritten, so readers
+    * take no lock and need no retry: a listing of `_versions` names only
+    * complete versions.
     */
-  private def versionOf(hfs: org.apache.hadoop.fs.FileSystem,
-      mdir: org.apache.hadoop.fs.Path): Long = {
-    // Hadoop's local listStatus is NOT atomic: it lists child NAMES,
-    // then stats each child BY PATH, silently DROPPING children whose
-    // stat races a concurrent swap-rename (the per-child FNFE is
-    // swallowed) — so a listing taken mid-swap can come back EMPTY or
-    // PARTIAL instead of throwing (measured ~1% of tight polls against
-    // a rename-churn loop). A FOUND `_v{N}` marker is always
-    // trustworthy: listings never fabricate entries, and both dirs a
-    // racing path can resolve to are legitimate versions of this table
-    // (returning the just-renamed-away version is linearizable — it WAS
-    // current an instant ago). A MISSING marker is ambiguous — legacy
-    // pre-versioning manifest (legitimately reads as 1) vs torn view —
-    // so it is re-probed until stable; only a marker-less answer that
-    // survives the backoff is accepted as legacy. Documented trade-off:
-    // a genuinely LEGACY (pre-versioning) manifest pays the full ~30 ms
-    // backoff on EVERY probe — acceptable because every manifest this
-    // library has ever written carries a marker; cache the legacy
-    // determination per path if foreign marker-less tables ever matter.
-    var attempt = 0
-    while (true) {
-      val found = hfs.listStatus(mdir).iterator.map(_.getPath.getName)
-        .collectFirst {
-          case n if n.startsWith("_v") && n.length > 2 &&
-            n.drop(2).forall(_.isDigit) => n.drop(2).toLong
-        }
-      found match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt > 3) return 1L
-          Thread.sleep(5L * attempt)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  private def versionsDir(dataDir: String) = s"$dataDir/_versions"
+  private[graft] def versionDir(dataDir: String, v: Long) = s"$dataDir/_versions/$v"
+
+  /** A table's committed versions (ascending) and its incarnation token,
+    * from ONE listing of `_versions` — never of the table root, which on
+    * a flat table holds every data file. The current version is the
+    * highest committed one (0: none yet). The token is the uuid of the
+    * `_table_<uuid>` marker: a delete-and-rebuild at the same path
+    * recycles version numbers but never the token, so a memo keyed
+    * (table, token, version) can serve its entry forever.
+    */
+  private final case class Versions(token: String, all: Seq[Long]) {
+    def current: Long = all.lastOption.getOrElse(0L)
   }
 
-  /** True when `t` (or any link of its cause chain) has the shape a
-    * concurrent manifest swap-rename leaves behind on a lock-free
-    * reader: the directory vanished between the reader's exists/open
-    * probe and its listing. HDFS and the object-store connectors throw
-    * FileNotFoundException there, but Hadoop's RawLocalFileSystem
-    * (local disk, NFS — exactly what CI and dev boxes run on) throws a
-    * BARE `IOException("Invalid directory or I/O error occurred for
-    * dir: …")` when `java.io.File.list()` returns null inside its own
-    * exists→list gap — and, third flavor (SwapRaceSpec's churn stress
-    * caught it), `java.nio.file.AccessDeniedException("Permission
-    * denied")` from Hadoop's `FileUtil.list`, which re-probes
-    * `exists()` after a null `list()` and, when the dir has already
-    * been renamed BACK IN by the swap's second rename, misdiagnoses
-    * the transient as a permission problem. Every swap-tolerance site
-    * must treat all three as "not found"; matching only the FNFE shape
-    * leaves lock-free readers (change-feed polls, DESCRIBE HISTORY,
-    * version probes) a small per-commit crash window on local
-    * filesystems — the exact failure ChangeFeedTailSpec caught
-    * intermittently. Trade-off, documented: a GENUINELY
-    * permission-broken manifest dir now resolves like a half-swap
-    * (bounded retries, then history fallback / loud downstream
-    * retention errors) instead of surfacing AccessDenied from a
-    * read-only probe — acceptable because every writer path still
-    * fails loud on its own create/rename syscalls.
-    */
-  private[sources] def isVanishedDir(t: Throwable): Boolean = {
-    var c = t
-    while (c != null) {
-      c match {
-        case _: java.io.FileNotFoundException => return true
-        case _: java.nio.file.AccessDeniedException => return true
-        case e: java.io.IOException
-            if e.getMessage != null && e.getMessage.contains(
-              "Invalid directory or I/O error occurred") => return true
-        case _ =>
-      }
-      c = c.getCause
-    }
-    false
+  private def listVersions(hfs: FileSystem, dataDir: String): Versions = {
+    val names =
+      try hfs.listStatus(new Path(versionsDir(dataDir))).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+    Versions(
+      names.collectFirst { case n if n.startsWith("_table_") =>
+        n.stripPrefix("_table_") }.getOrElse(""),
+      names.filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+        .sorted.toSeq)
   }
 
-  /** Union of every retained history manifest's file paths (normed,
-    * one column `h_file`) — None when the table has no history. The
-    * set of files that are PRIOR-SNAPSHOT members rather than current
-    * data or fresh appends; refresh, coverage, and vacuum all consult
-    * it so MVCC leftovers are never re-manifested, never flagged
-    * uncovered, and never reaped while their version is retained.
+  /** The version a manifest row was read from, in a multi-version read:
+    * recovered from its source dir `_versions/<N>/`.
     */
-  private def historyFiles(spark: SparkSession, dataDir: String,
-      hfs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[DataFrame] = {
-    val hs = historyVersions(hfs, root)
-    if (hs.isEmpty) None
-    // ONE multi-path read, not one read per version: each spark.read
-    // pays driver-side schema inference and plan analysis, so a deep
-    // history made every coverage check O(versions) in fixed overhead.
-    // Only `file` is selected — present in every manifest whatever
-    // tracked-column drift the versions carry — and the schema is
-    // passed EXPLICITLY, so the read both skips footer inference
-    // entirely and is immune to min_/max_ type drift across versions.
-    else Some(spark.read
-      .schema(StructType(Seq(StructField("file", StringType))))
-      .parquet(hs.map(histPath(dataDir, _)): _*)
-      .select(ManifestFileIndex.normPath(col("file")).as("h_file"))
-      .distinct())
-  }
+  private def versionOfFile: Column =
+    regexp_extract(input_file_name(), "_versions/(\\d+)/[^/]*$", 1).cast("long")
 
-  /** Retained HISTORY versions under `dataDir` (ascending) — the
-    * manifests a [[readAsOf]] can still plan from, current excluded.
+  /** Read schema of manifest reads that need only the `file` column —
+    * present in every version whatever its tracked columns, so the read
+    * skips footer inference and ignores min_/max_ type drift.
     */
-  private def historyVersions(hfs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    historyDirs(hfs, root).keysIterator.toSeq.sorted
+  private val FileOnly = StructType(Seq(StructField("file", StringType)))
 
-  /** ONE root listing → every `_manifest_v{N}` history entry, version →
-    * FileStatus. The single enumeration both [[versions]] and
-    * [[opsOfVersions]] derive from — CDC callers thread this map
-    * through so a poll pays one root listStatus, not two (on a large
-    * FLAT table the data files live in the root, so each listing is
-    * O(files) driver RPCs). Name match is LITERAL, never a glob: a
-    * dataDir containing glob metacharacters like `[1]` must not
-    * pattern-match a SIBLING table's history.
+  private def fsOf(spark: SparkSession, dataDir: String): FileSystem =
+    new Path(dataDir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The table root in the canonical qualified form manifest entries use. */
+  private def rootQOf(hfs: FileSystem, dataDir: String): String =
+    FsListing.norm(new Path(dataDir)
+      .makeQualified(hfs.getUri, hfs.getWorkingDirectory).toString)
+
+  private def versionsOf(spark: SparkSession, dataDir: String): Versions =
+    listVersions(fsOf(spark, dataDir), dataDir)
+
+  /** Schema memo for version dirs, keyed (table, incarnation token,
+    * version). Every `spark.read.parquet(manifest)` used to pay
+    * driver-side footer schema inference (~30 ms) — the single largest
+    * sampled driver cost across the MVCC lanes (JProf r21: 0.5-0.7
+    * s/lane in ParquetUtils.inferSchema), multiplied by the several
+    * manifest resolutions each commit/CDC-poll performs. A version dir
+    * is written once, so its schema is served forever; cap-and-clear
+    * bounds a long session over many tables.
     */
-  private def historyDirs(hfs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path)
-      : Map[Long, org.apache.hadoop.fs.FileStatus] =
-    hfs.listStatus(root).iterator.flatMap { st =>
-      val n = st.getPath.getName
-      val d = n.stripPrefix("_manifest_v")
-      if (n.startsWith("_manifest_v") && d.nonEmpty && d.forall(_.isDigit))
-        Some(d.toLong -> st)
-      else None
-    }.toMap
+  private val manifestSchemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), StructType]()
 
-  /** The `_manifest` parquet as a (lazy, distributed) DataFrame — the
-    * ONE way planning code touches manifest CONTENT. Bounds and bloom
+  /** Version `v`'s manifest as a (lazy, distributed) DataFrame — the ONE
+    * way planning code touches manifest CONTENT. Bounds and bloom
     * binaries stay in scan partitions; callers filter/join this frame
     * with Spark jobs and collect only what is per-query driver-sized
-    * (surviving paths, counts).
+    * (surviving paths, counts). A `v` with no dir — 0 on a table that
+    * never committed — fails with Spark's PATH_NOT_FOUND.
     */
-  private[sources] def manifestFrame(spark: SparkSession, dataDir: String): DataFrame = {
-    // the refresh swap is rename(dst, hist) → rename(tmp, dst): readers
-    // take no lock, so planning that lands in that gap sees a healthy
-    // table with a momentarily-absent `_manifest`. Tolerate-and-retry
-    // bridges the window (metadata-rename-sized, not job-sized) — but
-    // ONLY when the directory actually carries manifest machinery (a
-    // history version, the writer lock, or an in-flight tmp): a read of
-    // a dir with none of those is a REAL absence — an unmanifested or
-    // nonexistent table — and must fail immediately rather than pay the
-    // full backoff on every such probe. A manifest that stays missing
-    // through the backoff still fails loud on the last attempt.
-    def swapMaybeInFlight(): Boolean = {
-      val root = new org.apache.hadoop.fs.Path(dataDir)
-      val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      hfs.exists(root) && hfs.listStatus(root).exists { s =>
-        val n = s.getPath.getName
-        // "_manifest" itself: the swap COMPLETED in the gap between the
-        // failed read and this probe — on a table whose very first build
-        // leaves no lock/history/tmp sibling visible (direct
-        // buildWithBloom), the machinery test alone would misread the
-        // transient as a real absence and propagate it un-retried
-        n == "_manifest" || n == "_manifest.lock" ||
-          n.startsWith("_manifest_v") || n.startsWith("_manifest_tmp_")
-      }
+  private def readVersion(spark: SparkSession, dataDir: String,
+      vs: Versions, v: Long): DataFrame = {
+    val path = versionDir(dataDir, v)
+    val key = (FsListing.norm(dataDir), vs.token, v)
+    var sch = manifestSchemaMemo.get(key)
+    if (sch == null) {
+      sch = spark.read.parquet(path).schema
+      if (manifestSchemaMemo.size >= 4096) manifestSchemaMemo.clear()
+      manifestSchemaMemo.put(key, sch)
     }
-    var attempt = 0
-    while (attempt < 5) {
-      try return readManifestDir(spark, manifestPath(dataDir))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if (e.getErrorClass == "PATH_NOT_FOUND" ||
-              e.getMessage.contains("Path does not exist") ||
-              // a TORN local listing (names listed from the renamed-away
-              // dir, per-child stats silently dropped) can resolve to
-              // ZERO parquet files instead of an absent path — Spark
-              // then fails schema inference, not path resolution
-              e.getErrorClass == "UNABLE_TO_INFER_SCHEMA") &&
-              swapMaybeInFlight() =>
-          attempt += 1
-          Thread.sleep(20L << attempt)
-        // local-FS flavor of the same gap: the dir vanished between
-        // Spark's own exists probe and its listing (isVanishedDir)
-        case t: java.io.IOException
-            if isVanishedDir(t) && swapMaybeInFlight() =>
-          attempt += 1
-          Thread.sleep(20L << attempt)
-      }
-    }
-    readManifestDir(spark, manifestPath(dataDir))
+    spark.read.schema(sch).parquet(path)
+  }
+
+  /** The current manifest and its version, from one listing — a
+    * surgery plans from the frame and validates the version at commit,
+    * so the two must be the same snapshot.
+    */
+  private def currentManifest(spark: SparkSession,
+      dataDir: String): (DataFrame, Long) = {
+    val vs = versionsOf(spark, dataDir)
+    (readVersion(spark, dataDir, vs, vs.current), vs.current)
+  }
+
+  private[sources] def manifestFrame(spark: SparkSession, dataDir: String): DataFrame =
+    currentManifest(spark, dataDir)._1
+
+  /** The manifest of a specific RETAINED version. Fails loud with the
+    * retained range when the version was vacuumed or never existed.
+    */
+  private[sources] def manifestFrameAt(spark: SparkSession, dataDir: String,
+      version: Long): DataFrame = {
+    val vs = versionsOf(spark, dataDir)
+    require(vs.all.contains(version), s"version $version not retained " +
+      s"under $dataDir (readable: ${vs.all.mkString(", ")})")
+    readVersion(spark, dataDir, vs, version)
   }
 
   /** ONE manifest entry's `file` path, read DRIVER-side (parquet-hadoop
@@ -256,19 +177,17 @@ object FileManifest {
     * one part file; zero-row parts (a repartitioned shard can be empty)
     * fall through to the next. Returns the [[FsListing.norm]] canonical
     * form, exactly like the normPath-projected collect it replaces.
-    * Callers wrap in [[withSwapRetry]]: a swap mid-read surfaces as the
-    * same vanished-path shapes the retry already handles.
     */
   private def firstManifestFilePath(spark: SparkSession,
       dataDir: String): Option[String] =
     firstFileInManifestDir(spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(manifestPath(dataDir)))
+      new Path(versionDir(dataDir, versionsOf(spark, dataDir).current)))
 
   /** The per-directory core of [[firstManifestFilePath]] — also probes a
-    * specific immutable `_manifest_v{N}` dir (the CDC empty-span anchor).
+    * specific version's dir (the CDC empty-span anchor).
     */
   private def firstFileInManifestDir(conf: org.apache.hadoop.conf.Configuration,
-      md: org.apache.hadoop.fs.Path): Option[String] = {
+      md: Path): Option[String] = {
     val hfs = md.getFileSystem(conf)
     val parts = hfs.listStatus(md).iterator
       .filter { s =>
@@ -310,209 +229,12 @@ object FileManifest {
     None
   }
 
-  /** CONTENT STAMP of a manifest dir: first data part's name and length
-    * plus the part count, from ONE `listStatus`. Part names carry
-    * Spark's job-unique UUIDs, so two INCARNATIONS of the same logical
-    * version — a delete-and-rebuild recycling the version number, even
-    * inside one coarse-filesystem mtime tick — can never share a stamp.
-    * This is the memo key both the schema memo below and
-    * [[historyFileSets]] key their immutable-dir caches on (the r20
-    * mtime stamp narrowed but did not close the same-tick aliasing
-    * window; the part-name stamp closes it). None when the dir has no
-    * data part (torn listing mid-swap, or genuinely empty) — callers
-    * must then take their uncached path, whose failure shapes the swap
-    * retries already understand.
+  /** Version of the CURRENT manifest — 0 when the table has no manifest
+    * yet. The optimistic-concurrency token every write-surgery verb
+    * validates under the commit lock before publishing.
     */
-  private def manifestDirStamp(hfs: org.apache.hadoop.fs.FileSystem,
-      mdir: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val parts = hfs.listStatus(mdir).iterator.filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq
-      if (parts.isEmpty) None
-      else {
-        val f = parts.minBy(_.getPath.getName)
-        Some(s"${f.getPath.getName}:${f.getLen}:${parts.size}")
-      }
-    } catch { case t: java.io.IOException if isVanishedDir(t) => None }
-
-  /** Schema memo for manifest dirs, keyed (normed dir, content stamp).
-    * Every `spark.read.parquet(manifest)` used to pay driver-side footer
-    * schema inference (~30 ms) — the single largest sampled driver cost
-    * across the MVCC lanes (JProf r21: 0.5-0.7 s/lane in
-    * ParquetUtils.inferSchema), multiplied by the several manifest
-    * resolutions each commit/CDC-poll performs. A manifest dir's
-    * contents are immutable per incarnation (swaps rename whole dirs),
-    * so the stamp-keyed schema can be served forever; cap-and-clear
-    * bounds a long session over many tables.
-    */
-  private val manifestSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
-
-  /** Read a manifest dir with the memoized schema when its content
-    * stamp is resolvable — one listStatus replaces footer inference —
-    * and VERIFY after construction that the read's own (independently
-    * listed) file set still carries the stamped part: a swap landing in
-    * the stamp→construction window would otherwise pair the OLD
-    * incarnation's schema with the NEW incarnation's files, a silent
-    * misread where today's uncached path at worst crashes and retries.
-    * On any mismatch or unstampable dir, fall back to the plain
-    * inference read — byte-identical behavior (and failure shapes) to
-    * the pre-memo code.
-    */
-  private def readManifestDir(spark: SparkSession, mdirStr: String): DataFrame = {
-    val mdir = new org.apache.hadoop.fs.Path(mdirStr)
-    val stampOpt =
-      try manifestDirStamp(
-        mdir.getFileSystem(spark.sessionState.newHadoopConf()), mdir)
-      catch { case _: java.io.IOException => None }
-    stampOpt match {
-      case Some(stamp) =>
-        val key = (FsListing.norm(mdirStr), stamp)
-        var sch = manifestSchemaMemo.get(key)
-        if (sch == null) {
-          sch = spark.read.parquet(mdirStr).schema
-          if (manifestSchemaMemo.size >= 4096) manifestSchemaMemo.clear()
-          manifestSchemaMemo.put(key, sch)
-        }
-        val df = spark.read.schema(sch).parquet(mdirStr)
-        val stampName = stamp.takeWhile(_ != ':')
-        if (df.inputFiles.exists(_.endsWith("/" + stampName))) df
-        else spark.read.parquet(mdirStr) // incarnation moved mid-resolve
-      case None => spark.read.parquet(mdirStr)
-    }
-  }
-
-  /** The manifest frame of a specific RETAINED version — history-first
-    * resolution (a history manifest is immutable once renamed, so the
-    * read can never tear), falling back to the current manifest when it
-    * carries the requested version. A version that moved current→history
-    * between the probe and the read (a rival surgery committed) is
-    * re-resolved once — the rename window is metadata-sized. Fails loud
-    * with the retained range when the version was vacuumed.
-    */
-  private[sources] def manifestFrameAt(spark: SparkSession, dataDir: String,
-      version: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def notRetained() = new IllegalArgumentException(
-      s"requirement failed: version $version not retained under " +
-        s"$dataDir (readable: ${versions(spark, dataDir).mkString(", ")})")
-    var attempt = 0
-    while (true) {
-      val h = new org.apache.hadoop.fs.Path(histPath(dataDir, version))
-      if (hfs.exists(h)) return readManifestDir(spark, h.toString)
-      val cur = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-      // the CURRENT manifest is mutable (a swap renames it away), so
-      // every probe of it can race: versionOf's listStatus and the read
-      // itself tolerate a concurrent rename by falling through to a
-      // fresh re-probe rather than crashing the consumer
-      val curV: Option[Long] =
-        try { if (hfs.exists(cur)) Some(versionOf(hfs, cur)) else None }
-        catch { case t: java.io.IOException if isVanishedDir(t) => None }
-      curV match {
-        case Some(v) if v == version =>
-          try return readManifestDir(spark, cur.toString)
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getErrorClass == "PATH_NOT_FOUND" ||
-                  e.getMessage.contains("Path does not exist") ||
-                  e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" =>
-              // renamed to history in the gap (or the listing tore to
-              // zero files) — next loop probes hist
-            case t: java.io.IOException if isVanishedDir(t) =>
-              // same gap, local-FS flavor: dir vanished mid-listing
-          }
-        case Some(_) =>
-          // cur holds a DIFFERENT version: the target, if it exists at
-          // all, is an immutable history dir — ONE fresh hist re-probe
-          // decides (it may have just been renamed in after our first
-          // miss). No backoff: a genuinely vacuumed/never-created
-          // version must fail fast, not after 280 ms of sleeps.
-          if (!hfs.exists(h)) throw notRetained()
-          // else loop re-reads hist immediately
-        case None =>
-          // no current manifest visible: mid-swap rename window (wait it
-          // out) or a manifest-less dir (the attempt cap makes it loud)
-          attempt += 1
-          if (attempt > 4) throw notRetained()
-          Thread.sleep(20L << attempt)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Run an ACTION over a frame resolved from a manifest dir, retrying
-    * once when the underlying manifest was swap-renamed between
-    * resolution and execution — the frame is lazy, so a rename landing
-    * after `manifestFrameAt` returned surfaces as a task-level
-    * FileNotFound (or a lazily-analyzed PATH_NOT_FOUND) at collect
-    * time. `body` must RE-RESOLVE internally (build its frame again),
-    * so the retry reads the renamed — now immutable — history dir. Any
-    * failure that isn't rename-shaped propagates untouched, and a
-    * second rename-shaped failure does too (loud, never a spin).
-    */
-  private[sources] def withSwapRetry[T](body: => T): T = {
-    def swapRaced(t: Throwable): Boolean = {
-      if (isVanishedDir(t)) return true // FNFE + RawLocalFS null-list IOE
-      var c = t
-      while (c != null) {
-        val m = c.getMessage
-        if (m != null && (m.contains("PATH_NOT_FOUND") ||
-          m.contains("Path does not exist") || m.contains("FileNotFound") ||
-          // a torn local listing can resolve a swap-racing manifest to
-          // zero files — surfacing as failed schema inference rather
-          // than an absent path; a genuinely empty dir fails the retry
-          m.contains("UNABLE_TO_INFER_SCHEMA")))
-          return true
-        c = c.getCause
-      }
-      false
-    }
-    try body
-    catch { case t: Throwable if swapRaced(t) => body }
-  }
-
-  /** Version stamped on the CURRENT manifest — 0 when the table has no
-    * manifest yet. The optimistic-concurrency token every write-surgery
-    * verb validates under the commit lock before publishing.
-    *
-    * Writers call this under the commit lock, where no swap can race
-    * them and the first probe always decides. Lock-free READERS
-    * (change-feed head probes, as-of pinning) can land inside the swap
-    * window — rename(`_manifest`→`_manifest_vN`) then
-    * rename(tmp→`_manifest`) — where the dir is briefly absent or
-    * vanishes between the exists probe and `versionOf`'s listing. The
-    * bare exists→listStatus here used to be a TOCTOU crash on exactly
-    * that window; now both race shapes ([[isVanishedDir]]) retry with
-    * backoff. Disambiguation from REAL absence is by history: a table
-    * with no `_manifest` and no `_manifest_v*` dirs is genuinely
-    * unversioned → 0 immediately, no backoff. History present but the
-    * current manifest still absent after the backoff means a writer
-    * died between its two renames — the newest history dir holds the
-    * last state that was ever current, so its version is the
-    * linearizable answer (and what this probe returned moments before
-    * that half-swap).
-    */
-  private def currentVersion(hfs: org.apache.hadoop.fs.FileSystem,
-      dataDir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val cur = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    def hist(): Seq[Long] =
-      try historyVersions(hfs, root)
-      catch { case t: java.io.IOException if isVanishedDir(t) => Seq.empty }
-    var attempt = 0
-    while (attempt <= 5) {
-      try {
-        if (hfs.exists(cur)) return versionOf(hfs, cur)
-        if (hist().isEmpty) return 0L // real absence: fail-fast, no backoff
-      } catch { case t: java.io.IOException if isVanishedDir(t) => }
-      attempt += 1
-      if (attempt <= 5) Thread.sleep(10L << attempt) // ≤ ~630 ms total
-    }
-    hist().lastOption.getOrElse(0L)
-  }
+  private def currentVersion(hfs: FileSystem, dataDir: String): Long =
+    listVersions(hfs, dataDir).current
 
   /** TEST SEAM: invoked once per write-surgery call (deleteRange /
     * mergeKeys / publishVia) after staging completes and right before
@@ -522,30 +244,129 @@ object FileManifest {
     */
   private[graft] var beforeCommitHook: () => Unit = () => ()
 
-  /** Validate the optimistic token under the commit lock: the surgery's
-    * plan read manifest version `plannedV`; a different current version
-    * means a rival committed in between and the staged output was built
-    * from a stale snapshot — publishing it would silently discard the
-    * rival's committed work (lost update). Fail loud; the caller re-runs
-    * the surgery against the new version (Delta's conflict-and-retry
-    * protocol). `stg` is this writer's private staging dir, cleaned up
-    * before the throw.
+  private def uuid8(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** A fresh manifest staging dir beside the table's versions. */
+  private def tmpManifest(dataDir: String): Path =
+    new Path(s"$dataDir/_manifest_tmp_${uuid8()}")
+
+  /** Publish the manifest written at `tmp` as version `v`: stamp its
+    * `_op_<op>` marker, then rename it to `_versions/<v>` PUT-IF-ABSENT —
+    * a no-overwrite rename, because Hadoop's plain rename onto an
+    * existing dir nests the source inside it and returns true. Writers
+    * hold the commit lock, so `v` is normally free; a rival that already
+    * committed `v` (one that got past a stale-broken lock) makes this
+    * fail loud with [[ConcurrentWriteException]] instead, `tmp` removed.
+    * HDFS checks and renames in one atomic step; the local filesystem
+    * checks, then renames. The table's first version also creates
+    * `_versions` with the incarnation marker.
     */
-  private def requireUnchanged(hfs: org.apache.hadoop.fs.FileSystem,
-      dataDir: String, plannedV: Long,
-      stg: org.apache.hadoop.fs.Path): Unit = {
-    val cur = currentVersion(hfs, dataDir)
-    if (cur != plannedV) {
-      hfs.delete(stg, true)
+  private[sources] def commitVersion(hfs: FileSystem, dataDir: String,
+      tmp: Path, op: String, v: Long): Unit = {
+    hfs.create(new Path(tmp, s"_op_$op"), true).close()
+    val vdir = new Path(versionsDir(dataDir))
+    if (!hfs.exists(vdir))
+      hfs.create(new Path(vdir, s"_table_${java.util.UUID.randomUUID()}"),
+        false).close()
+    if (!renameIfAbsent(hfs, tmp, new Path(versionDir(dataDir, v)))) {
+      hfs.delete(tmp, true)
       throw new ConcurrentWriteException(
-        s"table $dataDir moved v$plannedV -> v$cur while this surgery " +
-          "was planned/staged — a rival writer committed; re-run the " +
-          "surgery against the current version")
+        s"version $v of $dataDir is already committed — a rival writer " +
+          "published it; re-run against the current version")
     }
   }
 
+  /** Rename `src` to `dst` unless `dst` exists; false when it does. */
+  private def renameIfAbsent(hfs: FileSystem, src: Path, dst: Path): Boolean =
+    try {
+      org.apache.hadoop.fs.FileContext.getFileContext(hfs.getUri, hfs.getConf)
+        .rename(src, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+      true
+    } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+
+  /** Every staged surgery's commit. `stage` writes the surgery's new
+    * data files under a WRITER-PRIVATE staging dir `<stgBase>_<uuid>`
+    * (two concurrent surgeries must never clobber each other's
+    * in-progress staging) outside the table, while the table is
+    * untouched. Then, under the commit lock, it checks that the table is
+    * still at `plannedV`: a rival commit in between means the staged
+    * output came from a stale snapshot, and publishing it would silently
+    * discard the rival's work, so it fails loud and the caller re-plans
+    * (Delta's conflict-and-retry protocol). Then it moves the staged
+    * data files into the table (partition dirs kept), writes
+    * `manifestOf(moved)` and commits it as version plannedV + 1. If the
+    * manifest or its commit fails, the moved files are deleted again —
+    * no version references them — and the table stays as it was at
+    * plannedV. The staging dir is gone on every exit. Returns the moved
+    * files.
+    */
+  private def commitStaged(spark: SparkSession, dataDir: String,
+      plannedV: Long, op: String, carriedEntries: Long, stgBase: String)(
+      stage: Path => Unit)(
+      manifestOf: Seq[String] => DataFrame): Seq[String] = {
+    val root = new Path(dataDir)
+    val hfs = fsOf(spark, dataDir)
+    val stg = new Path(s"${stgBase}_${uuid8()}")
+    try {
+      stage(stg)
+      beforeCommitHook()
+      CommitLock.withLock(hfs, new Path(root, "_manifest.lock")) {
+        val cur = currentVersion(hfs, dataDir)
+        if (cur != plannedV) throw new ConcurrentWriteException(
+          s"table $dataDir moved v$plannedV -> v$cur while this surgery " +
+            "was planned/staged — a rival writer committed; re-run the " +
+            "surgery against the current version")
+        val moved =
+          if (hfs.exists(stg)) movePartitionTree(hfs, stg, root) else Nil
+        val tmp = tmpManifest(dataDir)
+        try {
+          writeManifest(manifestOf(moved), tmp, carriedEntries + moved.size)
+          commitVersion(hfs, dataDir, tmp, op, plannedV + 1)
+        } catch {
+          case t: Throwable =>
+            moved.foreach(p => hfs.delete(new Path(p), false))
+            hfs.delete(tmp, true)
+            throw t
+        }
+        spark.catalog.refreshByPath(dataDir)
+        moved
+      }
+    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+  }
+
+  /** A surgery's fresh files get stats for `cols`/`bloomCols` only; when
+    * the manifest (`tracked` columns) tracks more, the call must fail
+    * while its files are still staged under `stg` — a `stage` step of
+    * [[commitStaged]] — and not inside the commit, after the files moved
+    * into the table. A call that staged no data file (a pure DV mark)
+    * writes no stats and passes.
+    */
+  private def requireTracked(spark: SparkSession, op: String,
+      dataDir: String, tracked: Seq[String], cols: Seq[String],
+      bloomCols: Seq[String], stg: Path): Unit = {
+    val hfs = fsOf(spark, dataDir)
+    val fresh = statsColumns(cols, bloomCols).toSet
+    val untracked = tracked.filterNot(c =>
+      c == DvCol || c == DvDelCol || fresh.contains(c))
+    require(untracked.isEmpty || !hfs.exists(stg) ||
+      FsListing.listDataFiles(hfs, stg).isEmpty,
+      s"$op: the manifest under $dataDir tracks ${untracked.mkString(", ")}" +
+        " but cols/bloomCols leave them out — the files this call writes " +
+        "would have no stats for them; pass the table's tracked columns")
+  }
+
+  /** `carried` manifest entries plus fresh stats for the `moved` files,
+    * aligned to `carried`'s columns.
+    */
+  private def withFresh(spark: SparkSession, dataDir: String,
+      carried: DataFrame, moved: Seq[String], cols: Seq[String],
+      bloomCols: Seq[String], expectedPerFile: Long, fpp: Double): DataFrame =
+    if (moved.isEmpty) carried
+    else carried.unionByName(alignStats(statsForFiles(spark, dataDir, moved,
+      cols, bloomCols, expectedPerFile, fpp), carried.columns.toIndexedSeq))
+
   /** One pass over the directory: per-file row count + min/max of each
-    * tracked column, written as the `_manifest` parquet (overwrite).
+    * tracked column, committed as the table's next version.
     */
   def build(spark: SparkSession, dataDir: String, cols: Seq[String]): Unit =
     buildWithBloom(spark, dataDir, cols, Nil)
@@ -560,14 +381,14 @@ object FileManifest {
     * Delta's bloom-filter index / Iceberg puffin blobs are the same
     * idea; here the serialized filter (Spark's `util.sketch.BloomFilter`,
     * `expectedPerFile`/`fpp`-sized) rides as a binary column in the one
-    * `_manifest` parquet. No false negatives ever — Bloom semantics —
+    * manifest parquet. No false negatives ever — Bloom semantics —
     * so pruning stays SOUND; a false positive only costs one extra file
     * read under the exact row filter.
     */
   def buildWithBloom(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String], expectedPerFile: Long = 65536L,
       fpp: Double = 0.01, versionFloor: Long = 0L): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val root = new Path(dataDir)
     val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // a from-scratch rebuild re-stats the RAW files: live deletion
     // vectors would be dropped and every DV-deleted row silently
@@ -582,30 +403,17 @@ object FileManifest {
           expectedPerFile, fpp)
       else statsForFiles(spark, dataDir, paths, cols, bloomCols,
         expectedPerFile, fpp)
-    // land beside, then swap — NOT an in-place overwrite: (a) the version
-    // token must stay MONOTONIC even across a from-scratch rebuild (a
-    // marker-less overwrite would read as v1 again, and a surgery that
-    // planned at v1 could then false-pass its commit check and publish
-    // stale staging over the rebuild — the OCC ABA hole), and (b) the
-    // reader-facing gap shrinks from a whole stats job (Spark overwrite
-    // deletes the dir first) to one delete→rename window that leaves a
-    // `_manifest_tmp_` sibling visible, which is exactly what
-    // manifestFrame's retry gate looks for.
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = tmpManifest(dataDir)
     writeManifest(stats, tmp, math.max(1, paths.size).toLong)
-    val dst = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    // versionFloor carries monotonicity ACROSS a rebuild that destroyed
-    // the previous manifest (writeThrough overwrite records the version
-    // before clearing the tree): without it the fresh manifest would
-    // stamp v1 again and a surgery planned at v1 could false-pass its
-    // commit check — the OCC ABA hole
-    hfs.create(new org.apache.hadoop.fs.Path(tmp,
-      s"_v${math.max(currentVersion(hfs, dataDir), versionFloor) + 1}"),
-      true).close()
-    hfs.create(new org.apache.hadoop.fs.Path(tmp, "_op_build"), true).close()
-    if (hfs.exists(dst)) hfs.delete(dst, true) // reset: no history rename
-    require(hfs.rename(tmp, dst), s"manifest swap rename failed under $dataDir")
+    // the version token stays MONOTONIC across a rebuild: the next
+    // number, never a reused one — and versionFloor carries it across a
+    // rebuild that destroyed the previous versions (writeThrough
+    // overwrite records the version before clearing the tree). A reused
+    // number would let a surgery planned at it false-pass its commit
+    // check and publish stale staging over the rebuild (the OCC ABA
+    // hole).
+    commitVersion(hfs, dataDir, tmp, "build",
+      math.max(currentVersion(hfs, dataDir), versionFloor) + 1)
   }
 
   /** Spark types whose parquet footer statistics are BOTH trustworthy
@@ -683,7 +491,7 @@ object FileManifest {
           // scheme-QUALIFY before storing: callers hand over bare
           // "/tmp/..." rename targets, but manifest entries must compare
           // against the qualified ("file:/...") live listing
-          val p0 = new org.apache.hadoop.fs.Path(p)
+          val p0 = new Path(p)
           val tfs = p0.getFileSystem(conf)
           val qualified = p0.makeQualified(tfs.getUri, tfs.getWorkingDirectory)
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -841,7 +649,7 @@ object FileManifest {
       // input_file_name's qualified form and the qualified live listing
       val conf = spark.sessionState.newHadoopConf()
       def qualified(p: String): String = {
-        val pp = new org.apache.hadoop.fs.Path(p)
+        val pp = new Path(p)
         val pfs = pp.getFileSystem(conf)
         FsListing.norm(
           pp.makeQualified(pfs.getUri, pfs.getWorkingDirectory).toString)
@@ -866,7 +674,7 @@ object FileManifest {
     */
   private def physicalFields(spark: SparkSession, path: String): Set[String] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
+      new Path(path),
       spark.sessionState.newHadoopConf())
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
@@ -951,7 +759,7 @@ object FileManifest {
       extends BloomAggBase[String](expected, fpp, _ putString _)
 
   /** Write-through sink: land `df` under `dataDir` AND refresh the
-    * `_manifest` (+ bloom sidecars) in the same call — the writer-owns-
+    * manifest (+ bloom sidecars) in the same call — the writer-owns-
     * the-manifest discipline table formats enforce (data and metadata
     * commit together), so readers never hit the stale-manifest guard
     * after a routine append. The refresh is INCREMENTAL via [[refresh]]:
@@ -962,7 +770,7 @@ object FileManifest {
     * one directory race each other's `_temporary/0` staging (the
     * default FileOutputCommitter keys staging by an appID-local job id,
     * not a global one), so the data append itself must serialize with
-    * rival writeThrough calls, not just the manifest swap. Each locked
+    * rival writeThrough calls, not just the manifest commit. Each locked
     * refresh re-lists the live tree, so whichever writer commits last
     * leaves a manifest covering every rival's files — MultiWriterSpec
     * races two writers and pins coverage + readability.
@@ -971,10 +779,10 @@ object FileManifest {
       bloomCols: Seq[String] = Nil, mode: String = "append",
       partitionCols: Seq[String] = Nil,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val root = new Path(dataDir)
     val hfs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     CommitLock.withLock(hfs,
-      new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
+      new Path(root, "_manifest.lock")) {
       // overwrite must NOT go through Spark's Overwrite mode: that
       // recursively deletes the root — including the _manifest.lock
       // file THIS writer is holding — so a rival would re-create the
@@ -1011,7 +819,7 @@ object FileManifest {
     * untouched target freely even when it READS `dataDir` — then, under
     * the target's writer lock, the staged part-files MOVE in (renames,
     * job-unique names, no data copy), a manifest covering EXACTLY the
-    * published file set is stamped and version-swapped, and the
+    * published file set is committed as the next version, and the
     * outgoing snapshot's files are left on disk: still readable through
     * [[readAsOf]] until [[vacuum]]'s `keepVersions` retention reaps
     * them. Readers are snapshot-isolated — [[ManifestFileIndex]] plans
@@ -1051,29 +859,23 @@ object FileManifest {
       opName: String = "publish",
       expectedVersion: Option[Long] = None): Unit = {
     val spark = df.sparkSession
-    // WRITER-PRIVATE staging: `stagingDir` names the caller's staging
-    // LOCATION (its filesystem/volume), but the dir actually written is
-    // suffixed per-call — two concurrent publishes sharing the
-    // conventional fixed name must never delete each other's in-progress
-    // staging (the clobber the version token alone can't see; same rule
-    // as deleteRange/mergeKeys)
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${stagingDir}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    // `stagingDir` names the caller's staging LOCATION (its
+    // filesystem/volume); commitStaged suffixes it per call
+    val root = new Path(dataDir)
+    val hfs = fsOf(spark, dataDir)
     // staging must live OUTSIDE the table tree entirely (qualified-path
     // prefix test, not bare equality): a staging dir under the root is
     // non-underscore, so its in-progress part files would list as live
     // data — tripping coverage for concurrent readers mid-publish
     locally {
       val rootQ = root.makeQualified(hfs.getUri, hfs.getWorkingDirectory).toString
-      val stgQ = new org.apache.hadoop.fs.Path(stagingDir)
+      val stgQ = new Path(stagingDir)
         .makeQualified(hfs.getUri, hfs.getWorkingDirectory).toString
       require(stgQ != rootQ && !stgQ.startsWith(rootQ + "/"),
         s"staging dir must be outside the target table: $stagingDir is " +
           s"at or under $dataDir")
     }
-    if (hfs.exists(root)) requireFlatTable(hfs, root, "publishVia")
+    if (hfs.exists(root)) requireFlatTable(spark, dataDir, "publishVia")
     // optimistic token: `df` is typically a read-modify-write of the
     // current snapshot (compaction), so a rival commit between this
     // point and the locked publish would be silently overwritten —
@@ -1085,37 +887,15 @@ object FileManifest {
     // AFTER the caller's resolution and publish stale content right
     // over it (lost update with a passing version check).
     val plannedV = expectedVersion.getOrElse(currentVersion(hfs, dataDir))
-    try {
-    labeled(spark, s"graft: $opName stage") {
-      df.write.parquet(stg.toString) // may read dataDir: still untouched
-    }
-    beforeCommitHook()
-    CommitLock.withLock(hfs,
-      new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-      requireUnchanged(hfs, dataDir, plannedV, stg)
-      if (!hfs.exists(root)) hfs.mkdirs(root)
-      val moved = hfs.listStatus(stg).iterator
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-        .map { s =>
-          val dst = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-          require(hfs.rename(s.getPath, dst),
-            s"publish rename failed: ${s.getPath} -> $dataDir")
-          dst.toString
-        }.toSeq
-      hfs.delete(stg, true)
+    commitStaged(spark, dataDir, plannedV, opName, 0L, stagingDir) { stg =>
+      labeled(spark, s"graft: $opName stage") {
+        df.write.parquet(stg.toString) // may read dataDir: still untouched
+      }
+    } { moved =>
       require(moved.nonEmpty, s"publish produced no data files for $dataDir")
-      val stats = statsForFiles(spark, dataDir, moved,
-        cols, bloomCols, expectedPerFile, fpp)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      writeManifest(stats, tmp, moved.size.toLong)
-      swapVersioned(hfs, dataDir, tmp, opName)
-      spark.catalog.refreshByPath(dataDir)
+      statsForFiles(spark, dataDir, moved, cols, bloomCols,
+        expectedPerFile, fpp)
     }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
   }
 
   /** Incremental manifest refresh: stat ONLY files not yet manifested
@@ -1129,301 +909,109 @@ object FileManifest {
   def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val root = new Path(dataDir)
     val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // MULTI-WRITER: refreshes SERIALIZE on an advisory lock — two
     // concurrent writeThrough calls would otherwise interleave part
-    // files in one tmp dir and race the delete+rename swap. Each locked
+    // files in one tmp dir and race for the same version. Each locked
     // refresh re-LISTS the live tree, so the last refresh to run covers
     // every rival's appended files (and every append is followed by its
     // own refresh, so the final manifest always covers the final tree —
     // MultiWriterSpec races two writeThrough threads and pins coverage).
     // The data appends themselves need no lock: Spark part-file names
     // carry job-unique UUIDs.
-    CommitLock.withLock(hfs, new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
+    CommitLock.withLock(hfs, new Path(root, "_manifest.lock")) {
       refreshLocked(spark, dataDir, root, hfs, cols, bloomCols, expectedPerFile, fpp)
     }
   }
 
-  /** All readable versions under `dataDir`, ascending — retained history
-    * plus the current manifest's stamped version.
-    *
-    * History and current are probed as a SNAPSHOT: a rival swap landing
-    * between the two listings used to either (a) crash `versionOf` on
-    * the vanished `_manifest` (the [[isVanishedDir]] local-FS shape),
-    * or (b) silently DROP the mid version — history listed before the
-    * rename added v_N, current already stamped v_N+1 — which a CDC
-    * consumer would see as one merged hop with the wrong op
-    * attribution (an intervening reorg's file churn misread as data
-    * change). Both interleavings are detected — current must be newest
-    * history + 1 whenever history is non-empty (rebuilds clear
-    * history; vacuum keeps a contiguous suffix) — and retried with
-    * both listings refreshed. Retries are bounded and SHORT (two, ≤45
-    * ms total — the rename window is microseconds) because the gap
-    * shape can also be legitimate: a from-scratch [[build]] over a
-    * table that kept older history dirs stamps current+1 without
-    * renaming, and such a table must converge to today's as-observed
-    * answer on every call instead of spinning or paying a long backoff
-    * per poll.
+  /** All readable versions under `dataDir`, ascending — from one
+    * listing of `_versions`; the last is the current version.
     */
   def versions(spark: SparkSession, dataDir: String): Seq[Long] =
-    versionsSnapshot(spark, dataDir)._1
+    versionsOf(spark, dataDir).all
 
-  /** [[versions]] plus the history-dir statuses from the SAME root
-    * listing the versions came from — CDC callers ([[changesBetween]],
-    * [[history]]) thread the map into [[opsOfVersions]] so one poll
-    * pays ONE root enumeration.
-    */
-  private def versionsSnapshot(spark: SparkSession, dataDir: String)
-      : (Seq[Long], Map[Long, org.apache.hadoop.fs.FileStatus]) = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    var attempt = 0
-    var last: (Seq[Long], Map[Long, org.apache.hadoop.fs.FileStatus]) =
-      (Seq.empty, Map.empty)
-    while (attempt <= 2) {
-      // probe CURRENT first, history second — the same order
-      // [[currentVersion]] uses, and load-bearing for a table taking its
-      // FIRST surgery (no history dirs yet): with history listed first,
-      // a poll could list an empty history just before rename#1 and find
-      // `_manifest` absent inside the rename#1→#2 window, and the
-      // "no history + no current" arm would declare a LIVE table empty
-      // with no retry. Current-first closes it: a None current means
-      // rename#1 already ran, so the history listing that FOLLOWS
-      // necessarily sees the just-renamed v1 dir and takes the retry arm.
-      val curV: Option[Long] =
-        try { if (hfs.exists(cur)) Some(versionOf(hfs, cur)) else None }
-        catch { case t: java.io.IOException if isVanishedDir(t) => None }
-      val histD =
-        try historyDirs(hfs, root)
-        catch {
-          case t: java.io.IOException if isVanishedDir(t) =>
-            Map.empty[Long, org.apache.hadoop.fs.FileStatus]
-        }
-      val hist = histD.keysIterator.toSeq.sorted
-      last = ((hist ++ curV).distinct.sorted, histD)
-      val consistent = curV match {
-        case Some(v) => hist.isEmpty || v == hist.max + 1
-        case None => hist.isEmpty // hist-but-no-current = mid-swap window
-      }
-      if (consistent) return last
-      attempt += 1
-      if (attempt <= 2) Thread.sleep(15L * attempt)
-    }
-    last // bounded: a real (build-created) gap returns as observed
-  }
-
-  /** The CURRENT manifest's stamped version, for read-side pinning. */
+  /** The CURRENT manifest's version, for read-side pinning. */
   private[sources] def currentVersionOf(spark: SparkSession,
-      dataDir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    currentVersion(root.getFileSystem(spark.sessionState.newHadoopConf()),
-      dataDir)
-  }
+      dataDir: String): Long =
+    versionsOf(spark, dataDir).current
 
-  /** The operation marker of a manifest dir (`_op_<verb>`), or
-    * "unknown" for manifests written before operation stamping.
+  /** The operation marker (`_op_<verb>`) of one version, or "unknown"
+    * when no retained version `v` carries one — the per-version
+    * fallback of [[history]].
     */
-  private def opOf(hfs: org.apache.hadoop.fs.FileSystem,
-      mdir: org.apache.hadoop.fs.Path): String =
-    hfs.listStatus(mdir).iterator.map(_.getPath.getName)
-      .collectFirst { case n if n.startsWith("_op_") => n.stripPrefix("_op_") }
-      .getOrElse("unknown")
-
-  /** The operation marker of a specific VERSION, resolved history-first
-    * like [[manifestFrameAt]] (a history dir is immutable once renamed;
-    * the current `_manifest` can be swap-renamed between the version
-    * probe and the listing — a FileNotFound there falls back to the
-    * now-history dir instead of crashing a read-only consumer). A
-    * version retained by neither dir reads as "unknown" — the safe
-    * answer for every caller (history display; the change-feed reorg
-    * skip treats unknown as NOT-reorganization, so it never skips a
-    * hop it can't prove).
-    */
-  private[sources] def opOfVersion(hfs: org.apache.hadoop.fs.FileSystem,
-      dataDir: String, v: Long): String = {
+  private[sources] def opOfVersion(hfs: FileSystem, dataDir: String,
+      v: Long): String = {
     opOfVersionCalls.incrementAndGet() // spec probe (OpBatch regression pin)
-    val h = new org.apache.hadoop.fs.Path(histPath(dataDir, v))
-    def histOp(): Option[String] =
-      try { if (hfs.exists(h)) Some(opOf(hfs, h)) else None }
-      catch { case t: java.io.IOException if isVanishedDir(t) => None }
-    histOp().getOrElse {
-      val cur = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-      try {
-        if (hfs.exists(cur) && versionOf(hfs, cur) == v) opOf(hfs, cur)
-        else histOp().getOrElse("unknown")
-      } catch {
-        // swap-renamed away mid-listing: the target is now history
-        case t: java.io.IOException if isVanishedDir(t) =>
-          histOp().getOrElse("unknown")
-      }
-    }
+    opsOfVersions(hfs, dataDir, Set(v)).getOrElse(v, "unknown")
   }
 
-  /** Per-version listing counter — a SPEC PROBE ONLY: the batched
-    * [[opsOfVersions]] exists precisely so a long-lag CDC poll never
-    * pays a listStatus per mid version; OpBatchSpec pins that
-    * changesBetween leaves this counter untouched however many commits
-    * the span covers.
+  /** Per-version resolver counter — a SPEC PROBE ONLY: OpBatchSpec pins
+    * that changesBetween resolves its span's ops in one batch and never
+    * through [[opOfVersion]], however many commits the span covers.
     */
   private[graft] val opOfVersionCalls =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Operation stamps for the `wanted` versions, resolved in BATCH: ONE
-    * root listing discovers every history dir (by literal name match —
-    * never a glob: a dataDir containing glob metacharacters like `[1]`
-    * must not pattern-match a SIBLING table's history, which would map
-    * foreign op stamps onto this table's version numbers and silently
-    * skip data-changing hops), then one listing per wanted history dir
-    * for its marker, plus one listing of the current manifest (whose
-    * `_v{N}` stamp and `_op_` marker come from the SAME listing, so the
-    * pair is consistent). Versus [[opOfVersion]]'s exists + listStatus +
-    * current-fallback per version this is ~3× fewer calls and, crucially,
-    * SCOPED: a short-lag poll on a deep-retention table pays ~3 listings
-    * (only its span's dirs), a 10³-commit-lag poll pays 10³+2 — the
-    * markers live inside the dirs, so per-dir listings are inherent; the
-    * batch removes every redundant call around them. A version a rival
-    * swap moves mid-batch simply resolves to no entry — and every
-    * consumer treats a missing entry as "unknown" = NOT-reorganization:
-    * the safe direction (a hop is never skipped on unproven evidence).
+  /** Operation stamps for the `wanted` versions: one listing per wanted
+    * version dir (the markers live inside the dirs), SCOPED to the
+    * span — a short-lag CDC poll on a deep-retention table lists only
+    * its span's dirs. A version without a dir (vacuumed) or without a
+    * marker gets no entry, and every consumer treats a missing entry as
+    * "unknown" = NOT-reorganization: the safe direction (a hop is never
+    * skipped on unproven evidence).
     */
-  private[graft] def opsOfVersions(hfs: org.apache.hadoop.fs.FileSystem,
-      dataDir: String, wanted: Set[Long],
-      histListing: Option[Map[Long, org.apache.hadoop.fs.FileStatus]] = None)
-      : Map[Long, String] = {
-    if (wanted.isEmpty) return Map.empty
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    def opIn(dir: org.apache.hadoop.fs.Path): Option[String] =
-      try hfs.listStatus(dir).iterator.map(_.getPath.getName)
-        .collectFirst { case n if n.startsWith("_op_") => n.stripPrefix("_op_") }
-      catch { case t: java.io.IOException if isVanishedDir(t) => None }
-    // reuse the caller's root enumeration when it has one (history and
-    // changesBetween just paid it inside versionsSnapshot — re-listing
-    // the root would double every CDC poll's O(files) flat-table cost)
-    val dirs: Map[Long, org.apache.hadoop.fs.FileStatus] =
-      histListing.getOrElse(
-        try historyDirs(hfs, root)
-        catch {
-          case t: java.io.IOException if isVanishedDir(t) =>
-            Map.empty[Long, org.apache.hadoop.fs.FileStatus]
-        })
-    val hist = dirs.iterator
-      .filter { case (v, st) => wanted(v) && st.isDirectory }
-      .flatMap { case (v, st) => opIn(st.getPath).map(v -> _) }
-      .toMap
-    val cur: Option[(Long, String)] =
-      try {
-        val names = hfs.listStatus(
-          new org.apache.hadoop.fs.Path(manifestPath(dataDir)))
-          .map(_.getPath.getName)
-        for {
-          v <- names.collectFirst {
-            case n if n.startsWith("_v") && n.length > 2 &&
-              n.drop(2).forall(_.isDigit) => n.drop(2).toLong
-          }
-          if wanted(v) && !hist.contains(v) // history-first, like opOfVersion
-          op <- names.collectFirst {
-            case n if n.startsWith("_op_") => n.stripPrefix("_op_") }
-        } yield (v, op)
-      } catch {
-        // swap-renamed away mid-listing: it is history now (covered or
-        // resolves "unknown" — the conservative answer either way)
-        case t: java.io.IOException if isVanishedDir(t) => None
-      }
-    hist ++ cur
-  }
+  private[graft] def opsOfVersions(hfs: FileSystem, dataDir: String,
+      wanted: Set[Long]): Map[Long, String] =
+    wanted.iterator.flatMap { v =>
+      val names =
+        try hfs.listStatus(new Path(versionDir(dataDir, v))).map(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+      names.collectFirst { case n if n.startsWith("_op_") =>
+        v -> n.stripPrefix("_op_") }
+    }.toMap
 
   /** DESCRIBE HISTORY: one row per readable version — (version, op,
     * n_files, n_rows live) — from the retained manifests alone
     * (metadata-scale, no data page). The op is the verb that PRODUCED
     * the version (build / refresh / publish / optimize / delete /
-    * dv-delete / merge / merge-dv / purge); versions written before
-    * stamping read as "unknown".
+    * dv-delete / merge / merge-dv / purge); a version without an op
+    * marker reads as "unknown".
     *
     * ONE aggregation job over every retained version, not one per
-    * version: all immutable `_manifest_v{N}` dirs go through a single
-    * multi-path read (version recovered from the dir name — the same
-    * rename that froze the dir stamped it), the mutable current
-    * `_manifest` unions in under its own version tag, and the per-dir
-    * (count, live-row sum) pairs come back in one collect. A
-    * 100-commit table's DESCRIBE HISTORY was 100 scheduled jobs + 100
-    * driver schema inferences of fixed overhead; now it is two reads
-    * and one job. Schema drift across versions (dv columns appear when
-    * the first vector lands) is bridged with mergeSchema +
-    * allowMissingColumns; a version whose manifest holds ZERO entries
-    * (delete-everything snapshot) produces no group and fills in as
-    * (0 files, 0 rows) exactly like the old per-version agg.
+    * version: all version dirs go through a single multi-path read
+    * (version recovered from the dir name) and the per-dir (count,
+    * live-row sum) pairs come back in one collect. EXPLICIT minimal
+    * schema, not mergeSchema: only n_rows and the dv del count feed the
+    * aggregate, and a mergeSchema read (a) pays a distributed
+    * footer-merge job per DESCRIBE HISTORY and (b) throws 'Failed to
+    * merge incompatible data types' the moment two versions' tracked
+    * min_/max_ columns drifted type. A version missing the dv column
+    * reads it as NULL (zero deletes); a version whose manifest holds
+    * ZERO entries (delete-everything snapshot) produces no group and
+    * fills in as (0 files, 0 rows).
     */
   def history(spark: SparkSession, dataDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // batched op resolution (one root listing + one per version); a
-    // version the batch missed (concurrent swap) falls back to the
-    // per-version resolver rather than displaying a wrong "unknown"
-    // for a version whose manifest read below succeeds
-    val rows = withSwapRetry {
-      val (vs, histD) = versionsSnapshot(spark, dataDir)
-      val ops = opsOfVersions(hfs, dataDir, vs.toSet, Some(histD))
-      val histVs = vs.filter(histD.contains)
-      val curV = vs.filterNot(histD.contains) match {
-        case Seq() => None
-        case Seq(v) => Some(v)
-        case many => Some(many.max) // defensive: current is the newest
-      }
-      def liveAgg(df: DataFrame): DataFrame = {
-        val del =
-          if (df.columns.contains(DvDelCol)) coalesce(col(DvDelCol), lit(0L))
-          else lit(0L)
-        df.groupBy(col("_v")).agg(count(lit(1)).as("nf"),
-          sum(col("n_rows") - del).as("nr"))
-      }
-      // history dirs are IMMUTABLE once renamed — one multi-path read is
-      // race-free (a concurrent vacuum reaping a dir mid-read surfaces
-      // as the same vanished-path shapes the outer retry handles).
-      // EXPLICIT minimal schema, not mergeSchema: only n_rows and the dv
-      // del count feed the aggregate, and a mergeSchema read (a) pays a
-      // distributed footer-merge job per DESCRIBE HISTORY and (b) throws
-      // 'Failed to merge incompatible data types' the moment two
-      // versions' tracked min_/max_ columns drifted type (a rebuild
-      // after a column's int→long evolution) — full-schema merge over
-      // columns the aggregate never touches. A version missing the dv
-      // column reads it as NULL, which the coalesce below already treats
-      // as zero.
-      val histSchema = StructType(Seq(
-        StructField("n_rows", LongType), StructField(DvDelCol, LongType)))
-      val histAgg: Option[DataFrame] =
-        if (histVs.isEmpty) None
-        else Some(liveAgg(
-          spark.read.schema(histSchema)
-            .parquet(histVs.map(histPath(dataDir, _)): _*)
-            .withColumn("_v", regexp_extract(
-              input_file_name(), "_manifest_v(\\d+)/[^/]*$", 1).cast("long"))))
-      // the CURRENT manifest is mutable: probe-then-read exactly like
-      // manifestFrameAt (a swap landing in the gap vanishes the dir —
-      // the outer retry re-resolves; the brand-new version it published
-      // is newer than this call's snapshot either way)
-      val curAgg: Option[DataFrame] = curV.map { v =>
-        liveAgg(manifestFrameAt(spark, dataDir, v).withColumn("_v", lit(v)))
-      }
-      val agg: Option[DataFrame] = (histAgg, curAgg) match {
-        case (Some(h), Some(c)) =>
-          Some(h.unionByName(c, allowMissingColumns = true))
-        case (h, c) => h.orElse(c) // None: no retained version at all
-      }
-      val byV = agg.map { a =>
-        labeled(spark, "graft: history agg") { a.collect() }
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      }.getOrElse(Map.empty[Long, (Long, Long)])
-      vs.map { v =>
-        // an EMPTY snapshot (delete-everything publish) has no group —
-        // 0 files, 0 live rows, same as the old per-version aggregate
-        val (nf, nr) = byV.getOrElse(v, (0L, 0L))
-        (v, ops.getOrElse(v, opOfVersion(hfs, dataDir, v)), nf, nr)
-      }
-    }
+    val hfs = fsOf(spark, dataDir)
+    val vs = listVersions(hfs, dataDir).all
+    val ops = opsOfVersions(hfs, dataDir, vs.toSet)
+    val byV: Map[Long, (Long, Long)] =
+      if (vs.isEmpty) Map.empty
+      else labeled(spark, "graft: history agg") {
+        spark.read
+          .schema(StructType(Seq(StructField("n_rows", LongType),
+            StructField(DvDelCol, LongType))))
+          .parquet(vs.map(versionDir(dataDir, _)): _*)
+          .groupBy(versionOfFile)
+          .agg(count(lit(1)),
+            sum(col("n_rows") - coalesce(col(DvDelCol), lit(0L))))
+          .collect()
+      }.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     import spark.implicits._
-    rows.toDF("version", "op", "n_files", "n_rows").orderBy("version")
+    vs.map { v =>
+      val (nf, nr) = byV.getOrElse(v, (0L, 0L))
+      (v, ops.getOrElse(v, opOfVersion(hfs, dataDir, v)), nf, nr)
+    }.toDF("version", "op", "n_files", "n_rows").orderBy("version")
   }
 
   /** Surgery guard: file rewrites land at the table ROOT, so a
@@ -1432,9 +1020,10 @@ object FileManifest {
     * one) — fail loud instead; partitioned trees compact/delete
     * per-partition directory.
     */
-  private def requireFlatTable(hfs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, verb: String): Unit = {
-    val sub = hfs.listStatus(root).filter(s => s.isDirectory && {
+  private def requireFlatTable(spark: SparkSession, dataDir: String,
+      verb: String): Unit = {
+    val root = new Path(dataDir)
+    val sub = fsOf(spark, dataDir).listStatus(root).filter(s => s.isDirectory && {
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     })
@@ -1482,43 +1071,20 @@ object FileManifest {
     // path-list read and the actual file-skip count.
     ManifestFileIndex.read(spark, dataDir, asOf = Some(version))
 
-  /** The file set of a retained `version`, resolved loud (named retained
-    * range) when the version has been vacuumed — the shared resolution
-    * step of [[readAsOf]] and [[changesBetween]].
-    */
-  private def filesOfVersion(spark: SparkSession, dataDir: String,
-      version: Long): Seq[String] =
-    // manifestFrameAt owns resolution (history-first, swap-tolerant);
-    // withSwapRetry covers the LAZY gap it can't — a rename landing
-    // between resolution and this collect — by re-resolving once, so a
-    // concurrent consumer (ChangeFeedTail polling while a writer
-    // commits) never sees a transient not-found from either window
-    withSwapRetry {
-      manifestFrameAt(spark, dataDir, version)
-        .select(ManifestFileIndex.normPath(col("file")))
-        .collect().map(_.getString(0)).sorted.toSeq
-    }
-
   /** Run a write surgery with optimistic-conflict retries — the caller
     * loop the OCC protocol assumes (Delta's retry-on-
     * ConcurrentModification): each attempt re-plans against the CURRENT
     * version, so a retry never republishes stale staging; any other
-    * failure propagates untouched. Backoff is short — the conflict
-    * window is commit-sized, not job-sized.
+    * failure propagates untouched. No backoff: a conflict means the
+    * rival has already committed, so the re-plan starts from its version.
     */
   def withConflictRetry[T](attempts: Int = 3)(body: => T): T = {
     require(attempts >= 1, s"attempts=$attempts")
-    var i = 0
-    while (true) {
-      try return body
-      catch {
-        case e: ConcurrentWriteException =>
-          i += 1
-          if (i >= attempts) throw e
-          Thread.sleep(50L << i)
-      }
+    try body
+    catch {
+      case _: ConcurrentWriteException if attempts > 1 =>
+        withConflictRetry(attempts - 1)(body)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** CHANGE DATA FEED between two retained versions — the incremental-
@@ -1553,18 +1119,15 @@ object FileManifest {
       fromV: Long, toV: Long): DataFrame = {
     require(fromV < toV,
       s"changesBetween needs fromV < toV, got $fromV >= $toV")
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val hfs = fsOf(spark, dataDir)
     // endpoint retention fails loud UP FRONT (the ChangeFeedTail
     // lag-past-retention contract) — the reorg decomposition below can
     // otherwise collapse the whole span without ever resolving an
     // endpoint manifest
-    val (retainedSeq, histD) = versionsSnapshot(spark, dataDir)
-    val retained = retainedSeq.toSet
+    val retained = listVersions(hfs, dataDir).all
     Seq(fromV, toV).foreach { v =>
-      if (!retained.contains(v)) throw new IllegalArgumentException(
-        s"requirement failed: version $v not retained under $dataDir " +
-          s"(readable: ${retained.toSeq.sorted.mkString(", ")})")
+      require(retained.contains(v), s"version $v not retained under " +
+        s"$dataDir (readable: ${retained.mkString(", ")})")
     }
     // REORGANIZATION-AWARE span decomposition (the dataChange=false
     // analog Delta stamps on OPTIMIZE commits): a hop v-1 → v whose
@@ -1576,22 +1139,20 @@ object FileManifest {
     // data I/O to learn nothing changed, instead of two full scans.
     // Soundness: a hop is skipped only when it is EXACTLY one commit
     // (v == prev+1 among retained versions) and the stamp proves
-    // reorganization; vacuumed gaps and unknown/legacy stamps stay
+    // reorganization; vacuumed gaps and unknown stamps stay
     // inside a run — a run diff between any two retained versions is
     // exact regardless of what happened between. Multiset telescoping
     // makes the composition exact: Σ_runs (state(b)−state(a)) =
     // state(toV)−state(fromV) when every skipped hop is
     // multiset-invariant.
     val runs: Seq[(Long, Long)] = {
-      val mids = retained.toSeq.filter(v => v > fromV && v <= toV).sorted
+      val mids = retained.filter(v => v > fromV && v <= toV)
       // ops for ALL mid versions from ONE span-scoped batched pass (see
-      // opsOfVersions) — a lagging consumer's span may cover thousands
-      // of commits, and exists+listStatus+fallback per mid would
-      // triple the driver round-trips before any planning, while a
-      // SHORT-lag poll must not pay for the table's whole retention
-      // depth either (the batch lists only its span's dirs). A version
-      // the batch missed reads "unknown" = not-reorganization — sound.
-      val ops = opsOfVersions(hfs, dataDir, mids.toSet, Some(histD))
+      // opsOfVersions): a SHORT-lag poll must not pay for the table's
+      // whole retention depth (the batch lists only its span's dirs). A
+      // version the batch missed reads "unknown" = not-reorganization —
+      // sound.
+      val ops = opsOfVersions(hfs, dataDir, mids.toSet)
       val out = Seq.newBuilder[(Long, Long)]
       var runStart = fromV
       var prev = fromV
@@ -1625,7 +1186,7 @@ object FileManifest {
     val runDiffs: Seq[(Long, Long, Seq[String], Seq[String],
         Set[String], Set[String])] =
       runs.map { case (a, b) =>
-        labeled(spark, s"graft: cdf diff v$a..v$b") { withSwapRetry {
+        labeled(spark, s"graft: cdf diff v$a..v$b") {
           val ma = manifestFrameAt(spark, dataDir, a)
           val mb = manifestFrameAt(spark, dataDir, b)
           val hasDvA = ma.columns.contains(DvCol)
@@ -1675,7 +1236,7 @@ object FileManifest {
               .map(_.getString(1)).toSet
             (a, b, changedFrom, changedTo, dvA, dvB)
           }
-        } }
+        }
       }
     val anyChanged = runDiffs.flatMap(d => d._3 ++ d._4)
     if (anyChanged.isEmpty) {
@@ -1685,27 +1246,11 @@ object FileManifest {
       // schema anchors on one file of an endpoint snapshot (a footer
       // read, metadata-sized); both endpoints empty has no schema to
       // derive and no changes to emit — fail loud as before.
+      // DRIVER-side probe of each endpoint's version dir — the pure-reorg
+      // span pays no Spark job for its schema anchor
+      val conf = spark.sessionState.newHadoopConf()
       val anchor = Seq(toV, fromV).iterator.flatMap { v =>
-        withSwapRetry {
-          // DRIVER-side probe of the (immutable) history dir first — the
-          // pure-reorg span pays no Spark job for its schema anchor; the
-          // version living in the mutable current manifest (or a dir
-          // vacuumed mid-read) falls back to the collect-based resolve,
-          // which is also what keeps the vacuumed-version error loud.
-          val h = new org.apache.hadoop.fs.Path(histPath(dataDir, v))
-          val conf = spark.sessionState.newHadoopConf()
-          val viaDriver =
-            try {
-              if (h.getFileSystem(conf).exists(h))
-                firstFileInManifestDir(conf, h)
-              else None
-            } catch { case _: java.io.IOException => None }
-          viaDriver.orElse {
-            manifestFrameAt(spark, dataDir, v)
-              .select(ManifestFileIndex.normPath(col("file")))
-              .limit(1).collect().headOption.map(_.getString(0))
-          }
-        }
+        firstFileInManifestDir(conf, new Path(versionDir(dataDir, v)))
       }.nextOption()
       require(anchor.nonEmpty,
         s"changesBetween: versions $fromV and $toV of $dataDir are both " +
@@ -1725,19 +1270,14 @@ object FileManifest {
     // changed files pay the position join (readSet keeps the anchored
     // empty-frame shape for the no-changes case). The dv-file set comes
     // from the SAME per-run resolution that produced the diff — one
-    // snapshot per (run, side), never a second resolve that a rival
-    // swap could land between. applyDv's dv-row resolver still
-    // re-resolves inside its own retry (history-first), so a swap
-    // landing mid-collect recovers.
+    // snapshot per (run, side).
     def readSide(fs: Seq[String], v: Long, dvFiles: Set[String]): DataFrame =
       if (fs.isEmpty) readSet(fs)
       else {
         val (withDv, plain) = fs.partition(dvFiles)
         if (withDv.isEmpty) readSet(plain)
         else {
-          val dvd = applyDv(readSet(withDv),
-            () => manifestFrameAt(spark, dataDir, v),
-            spill = Some((dataDir, v)))
+          val dvd = liveAt(readSet(withDv), dataDir, v)
           if (plain.isEmpty) dvd else readSet(plain).unionByName(dvd)
         }
       }
@@ -1841,7 +1381,7 @@ object FileManifest {
     */
   private[sources] val metaPathOf =
     udf { (s: String) =>
-      new org.apache.hadoop.fs.Path(FsListing.norm(s)).toUri.toString }
+      new Path(FsListing.norm(s)).toUri.toString }
 
   /** Anti-filter a parquet-backed frame against per-file deletion
     * vectors: tag each row with its file + row position (parquet's
@@ -1857,6 +1397,26 @@ object FileManifest {
     applyDvOn(df, mkM, col("_metadata.file_path"), col("_metadata.row_index"),
       spill)
 
+  /** `df`'s rows still live at version `v`: [[applyDv]] with v's dv
+    * rows, the spill keyed by v. PINNED to the caller's planned version:
+    * the spill is immutable once written, so an unpinned resolver racing
+    * a rival commit would materialize the RIVAL's dv rows under v's key
+    * and serve them to every later reader of v. `hasDv` false — the
+    * plan-time manifest carries no dv column, which a rival commit could
+    * only change by failing the caller's version check — skips the
+    * resolver.
+    */
+  private def liveAt(df: DataFrame, dataDir: String, v: Long,
+      hasDv: Boolean = true): DataFrame =
+    if (!hasDv) df
+    else applyDv(df, () => manifestFrameAt(df.sparkSession, dataDir, v),
+      spill = Some((dataDir, v)))
+
+  /** A manifest entry's live rows: `n_rows - n_del`. */
+  private def liveRows(m: DataFrame): Column =
+    col("n_rows") - (if (m.columns.contains(DvDelCol))
+      coalesce(col(DvDelCol), lit(0L)) else lit(0L))
+
   /** [[applyDv]] core with caller-supplied position columns — for
     * frames that already materialized `_metadata` into named columns
     * (metadata attributes don't survive a join, so a pipeline that
@@ -1864,14 +1424,8 @@ object FileManifest {
     *
     * The dv rows MATERIALIZE EAGERLY into a LocalRelation (driver-side
     * rows, metadata-sized — exactly what the broadcast would collect at
-    * execution anyway): a lazy plan over the mutable `_manifest` path
-    * would crash with FileNotFound when a rival swap renames it while
-    * the returned frame is held, and a retry could never recover
-    * because the captured relation pins the old part files. `mkM` is a
-    * RESOLVER, invoked inside the swap retry, so a swap landing between
-    * resolution and collect re-resolves (history-first) instead of
-    * re-reading the renamed-away path. Zero live DVs → the frame is
-    * returned untouched.
+    * execution anyway). `mkM` is a RESOLVER of the manifest the dv rows
+    * come from. Zero live DVs → the frame is returned untouched.
     */
   /** SIZE GATE for the dv broadcast: per-file DVs are bounded by
     * `maxDvFraction` (4 B/deleted row), but nothing bounds the NUMBER
@@ -1879,124 +1433,62 @@ object FileManifest {
     * LocalRelation collect + broadcast multi-GB driver state. Above
     * this many estimated bytes (Σ n_del × 4 + per-file overhead, one
     * column-pruned metadata agg that never reads a dv binary), the dv
-    * rows SPILL to an immutable version-keyed parquet under the table
-    * (`_dv_spill/v{N}` — underscore-prefixed: invisible to data
-    * listings/coverage) and the read joins it shuffle-side instead of
-    * broadcasting; the spill is written once per (table, version) and
-    * reused, and [[vacuum]] reaps spills of unretained versions.
-    * PER-SESSION conf (`graft.dv.broadcastMaxBytes`) — a JVM-global
-    * mutable field would race two sessions sharing the process with
-    * different needs; specs override the conf to force the fallback at
-    * toy scale.
+    * rows SPILL to an immutable parquet keyed by (incarnation, version)
+    * under the table (`_dv_spill/v{N}_<token>` — underscore-prefixed:
+    * invisible to data listings/coverage) and the read joins it
+    * shuffle-side instead of broadcasting; the spill is written once
+    * per version and reused, and [[vacuum]] reaps spills of unretained
+    * versions. PER-SESSION conf (`graft.dv.broadcastMaxBytes`) — a
+    * JVM-global mutable field would race two sessions sharing the
+    * process with different needs; specs override the conf to force
+    * the fallback at toy scale.
     */
   private[graft] val DvBroadcastMaxBytesKey = "graft.dv.broadcastMaxBytes"
   private[graft] def dvBroadcastMaxBytes(spark: SparkSession): Long =
     spark.conf.get(DvBroadcastMaxBytesKey, (64L << 20).toString).toLong
 
-  private def dvSpillDir(dataDir: String, v: Long): String =
-    s"$dataDir/_dv_spill/v$v"
+  private def dvSpillDir(dataDir: String, token: String, v: Long): String =
+    s"$dataDir/_dv_spill/v${v}_$token"
+
+  /** Version `v`'s dv spill dir under the table's current incarnation. */
+  private[graft] def dvSpillDir(spark: SparkSession, dataDir: String,
+      v: Long): String =
+    dvSpillDir(dataDir, versionsOf(spark, dataDir).token, v)
 
   /** Materialize version `v`'s dv rows to the spill parquet if not
-    * already there; idempotent and concurrency-safe (tmp + rename; the
-    * loser of a rename race verifies the winner's completion marker and
-    * reuses it). The spill is immutable once renamed — exactly the
-    * property the returned lazy plan needs that the swap-mutable
-    * `_manifest` dir can't give.
-    *
-    * Completion is proven by an EXPLICIT `_GRAFT_SPILL_OK` marker this
-    * code creates inside tmp before the rename — not by the committer's
-    * `_SUCCESS`, whose emission is a cluster conf
-    * (mapreduce.fileoutputcommitter.marksuccessfuljobs=false produces
-    * none, which would make every over-threshold DV read hard-fail
-    * here). `_SUCCESS` is still ACCEPTED when present (pre-marker spill
-    * dirs stay reusable).
+    * already there; idempotent and concurrency-safe. The rows and an
+    * explicit `_GRAFT_SPILL_OK` completion marker land in a private tmp
+    * dir that is then renamed PUT-IF-ABSENT into place, so a published
+    * spill is complete, and the loser of a race between two readers
+    * drops its tmp and reuses the winner's (identical) spill.
     */
-  private def ensureDvSpill(spark: SparkSession, dataDir: String, v: Long,
-      mkM: () => DataFrame): String = {
-    val dir = new org.apache.hadoop.fs.Path(dvSpillDir(dataDir, v))
+  private def ensureDvSpill(spark: SparkSession, dataDir: String,
+      token: String, v: Long, mkM: () => DataFrame): String = {
+    val dir = new Path(dvSpillDir(dataDir, token, v))
     val hfs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    def complete() =
-      hfs.exists(new org.apache.hadoop.fs.Path(dir, "_GRAFT_SPILL_OK")) ||
-        hfs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-    if (complete()) return dir.toString
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dataDir/_dv_spill/.tmp_v${v}_${java.util.UUID.randomUUID().toString.take(8)}")
-    withSwapRetry {
+    val done = new Path(dir, "_GRAFT_SPILL_OK")
+    if (!hfs.exists(done)) {
+      val tmp = new Path(s"$dataDir/_dv_spill/.tmp_v${v}_${uuid8()}")
       mkM().filter(col(DvCol).isNotNull)
         .select(metaPathOf(col("file")).as("__graft_dv_file"),
           col(DvCol).as("__graft_dv"))
         .write.mode("overwrite").parquet(tmp.toString)
-    }
-    // the marker lands in tmp BEFORE the rename, so the published dir is
-    // born complete — there is no window where a rival's complete() can
-    // observe the dir without its marker
-    hfs.create(new org.apache.hadoop.fs.Path(tmp, "_GRAFT_SPILL_OK"), true)
-      .close()
-    if (!hfs.rename(tmp, dir)) {
-      // dir already exists: a complete winner (reuse it), or a
-      // marker-less leftover — a pre-marker-era spill on a cluster whose
-      // committer emits no _SUCCESS, or a crashed writer's torn dir.
-      // REPAIR the latter by replacing it with our proven-complete tmp;
-      // without this, every over-threshold read would re-spill into tmp
-      // and fail here forever (nothing else ever adds a marker to an
-      // existing dir). Deleting is safe: a marker-less dir is never
-      // served (only complete() dirs are returned), and the race of two
-      // repairers resolves like the original race — one rename wins.
-      if (!complete()) {
-        // rename the torn dir ASIDE (doomed temp) rather than deleting
-        // in place: a rival repairer can publish a COMPLETE spill
-        // between the outer complete() check and here, and an in-place
-        // delete would destroy that just-published dir while it is the
-        // only complete copy — yanking files from under a reader's lazy
-        // plan for longer than the swap window. The aside-rename is
-        // atomic and our own proven-complete (equivalent) tmp is
-        // installed immediately after, so any reader-visible absence is
-        // two metadata renames wide — inside what the read path's
-        // withSwapRetry already tolerates; the doomed dir (torn, or a
-        // rival's superseded-but-equivalent spill) is then reaped from
-        // its dot-prefixed (listing-invisible) aside name.
-        val doomed = new org.apache.hadoop.fs.Path(
-          s"$dataDir/_dv_spill/.doomed_v${v}_" +
-            java.util.UUID.randomUUID().toString.take(8))
-        val aside = hfs.rename(dir, doomed)
-        hfs.rename(tmp, dir)
-        if (aside) hfs.delete(doomed, true)
-        // a rival repairer can re-create dir between our aside-rename
-        // and rename(tmp, dir) — Hadoop then nests tmp INSIDE it
-        // (returning true); remove the nesting exactly as the
-        // first-publish branch does
-        val nested = new org.apache.hadoop.fs.Path(dir, tmp.getName)
-        if (hfs.exists(nested)) hfs.delete(nested, true)
-      }
-      if (hfs.exists(tmp)) hfs.delete(tmp, true)
-      require(complete(), s"dv spill publish failed under $dir")
-    } else {
-      // Hadoop rename semantics move src INTO an existing dst DIRECTORY
-      // (returning true) instead of failing — so the loser of a
-      // concurrent-spill race doesn't take the branch above, it nests
-      // its whole tmp dir inside the winner's published spill. Results
-      // stay correct (dot-prefixed dirs are invisible to parquet
-      // listings) but the duplicate bytes would be unreachable by the
-      // vacuum reaper forever; detect the nesting and remove it.
-      val nested = new org.apache.hadoop.fs.Path(dir, tmp.getName)
-      if (hfs.exists(nested)) hfs.delete(nested, true)
-      require(complete(), s"dv spill publish incomplete under $dir")
+      hfs.create(new Path(tmp, done.getName), true).close()
+      if (!renameIfAbsent(hfs, tmp, dir)) hfs.delete(tmp, true)
+      require(hfs.exists(done), s"dv spill publish incomplete under $dir")
     }
     dir.toString
   }
 
-  /** Size-estimate memo for the gate below, keyed (table, version):
-    * the dv state of a retained version is immutable, so repeated
-    * DV-reads of one version (the dominant pattern — every split read,
-    * pruned read, and CDF side of a version runs the gate) pay the
-    * metadata agg once. A build()-reset recycling version numbers can
-    * alias a key — [[swapVersioned]] evicts the recycled entry (and
-    * the matching stale spill dir) at every publish, and a stale HIT
-    * could anyway only mis-route the threshold decision, never change
-    * results. Cap-and-clear like every planner memo here.
+  /** Size-estimate memo for the gate below, keyed (table, incarnation
+    * token, version): the dv state of a committed version never
+    * changes, so repeated DV-reads of one version (the dominant pattern —
+    * every split read, pruned read, and CDF side of a version runs the
+    * gate) pay the metadata agg once. Cap-and-clear like every planner
+    * memo here.
     */
-  private val dvEstMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+  private val dvEstMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long), java.lang.Long]()
 
   private def applyDvOn(df: DataFrame, mkM: () => DataFrame,
       fileCol: Column, idxCol: Column,
@@ -2004,9 +1496,9 @@ object FileManifest {
     val spark = df.sparkSession
     // gate FIRST, with a column-pruned metadata agg (n_del + a file
     // count — dv binaries unread), so an over-threshold dv set is never
-    // collected to the driver at all; memoized per (table, version) so
-    // the gate adds no per-read job on repeated reads of one version
-    def estOnce(): Long = withSwapRetry {
+    // collected to the driver at all; memoized per (table, incarnation,
+    // version) so the gate adds no per-read job on repeated reads
+    def estOnce(): Long = {
       val m = mkM()
       if (!m.columns.contains(DvCol)) 0L
       else {
@@ -2017,9 +1509,11 @@ object FileManifest {
         else r.getLong(0) * 4L + r.getLong(1) * 64L
       }
     }
-    val est = spill match {
-      case Some((dataDir, v)) =>
-        val key = (FsListing.norm(dataDir), v)
+    val spillAt = spill.map { case (dataDir, v) =>
+      (dataDir, versionsOf(spark, dataDir).token, v) }
+    val est = spillAt match {
+      case Some((dataDir, token, v)) =>
+        val key = (FsListing.norm(dataDir), token, v)
         val hit = dvEstMemo.get(key)
         if (hit != null) hit.longValue()
         else {
@@ -2033,28 +1527,23 @@ object FileManifest {
     if (est == 0L) return df
     graft.functions.DvContains.register(spark)
     val overCap = est > dvBroadcastMaxBytes(spark)
-    val dvSide: (DataFrame, Boolean) = spill match {
-      case Some((dataDir, v)) if overCap =>
+    val dvSide: (DataFrame, Boolean) = spillAt match {
+      case Some((dataDir, token, v)) if overCap =>
         // shuffle-side fallback: the dv table reads from the immutable
         // version-keyed spill — executor-side bytes, zero driver
         // collect — and the join builds its hash side from it
         // (shuffle_hash hint: the dv side is always the small side
         // relative to the data rows being filtered; only DV-carrying
         // files' rows reach this join at all, per the split read)
-        (spark.read.parquet(ensureDvSpill(spark, dataDir, v, mkM))
+        (spark.read.parquet(ensureDvSpill(spark, dataDir, token, v, mkM))
           .hint("shuffle_hash"), false)
       case _ =>
         // in-bounds (or no spill context): eager LocalRelation — the
-        // rows a broadcast would collect at execution anyway, pinned
-        // driver-side so no plan ever depends on the mutable
-        // `_manifest` path (see the class doc above)
-        val rows = withSwapRetry {
-          val m = mkM()
-          m.filter(col(DvCol).isNotNull)
-            .select(metaPathOf(col("file")).as("__graft_dv_file"),
-              col(DvCol).as("__graft_dv"))
-            .collect()
-        }
+        // rows a broadcast would collect at execution anyway
+        val rows = mkM().filter(col(DvCol).isNotNull)
+          .select(metaPathOf(col("file")).as("__graft_dv_file"),
+            col(DvCol).as("__graft_dv"))
+          .collect()
         (spark.createDataFrame(
           java.util.Arrays.asList(rows: _*),
           StructType(Seq(
@@ -2077,27 +1566,23 @@ object FileManifest {
     * collect (the dv file list) on DV tables; zero change otherwise.
     *
     * `pinnedV` is the version the CALLER planned `kept` from — the dv
-    * file set and the dv rows both resolve at that same version
-    * (history-first, so the reads survive a mid-flight swap). Un-pinned
+    * file set and the dv rows both resolve at that same version. Un-pinned
     * this served a MIXED snapshot: version-N kept files anti-filtered
     * by version-N+1 DVs, the isolation hole [[ManifestFileIndex.read]]'s
     * split explicitly pins v0 to prevent.
     */
   private def readKeptDv(spark: SparkSession, dataDir: String,
       kept: Seq[String], pinnedV: Long): DataFrame = {
-    def mm() = manifestFrameAt(spark, dataDir, pinnedV)
-    val dvFiles = withSwapRetry {
-      val mf = mm()
+    val mf = manifestFrameAt(spark, dataDir, pinnedV)
+    val dvFiles =
       if (!mf.columns.contains(DvCol)) Set.empty[String]
       else mf.filter(col(DvCol).isNotNull)
         .select(ManifestFileIndex.normPath(col("file")))
         .collect().map(_.getString(0)).toSet
-    }
     val (withDv, plain) = kept.partition(dvFiles)
     if (withDv.isEmpty) readKept(spark, dataDir, plain)
     else {
-      val dvd = applyDv(readKept(spark, dataDir, withDv), () => mm(),
-        spill = Some((dataDir, pinnedV)))
+      val dvd = liveAt(readKept(spark, dataDir, withDv), dataDir, pinnedV)
       if (plain.isEmpty) dvd
       else readKept(spark, dataDir, plain).unionByName(dvd)
     }
@@ -2126,16 +1611,12 @@ object FileManifest {
     * would silently RESURRECT DV-deleted rows — they fail loud instead
     * (purge first). One tiny manifest job, only on rebuild paths.
     */
-  private def hasLiveDv(spark: SparkSession, dataDir: String): Boolean = {
-    val hfs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    hfs.exists(new org.apache.hadoop.fs.Path(manifestPath(dataDir))) &&
-      withSwapRetry {
-        val m = manifestFrame(spark, dataDir)
-        m.columns.contains(DvCol) &&
-          m.filter(col(DvCol).isNotNull).limit(1).count() > 0
-      }
-  }
+  private def hasLiveDv(spark: SparkSession, dataDir: String): Boolean =
+    currentVersionOf(spark, dataDir) > 0 && {
+      val m = manifestFrame(spark, dataDir)
+      m.columns.contains(DvCol) &&
+        m.filter(col(DvCol).isNotNull).limit(1).count() > 0
+    }
 
   /** Range DELETE via DELETION VECTORS — the row-level form of
     * [[deleteRange]] (Delta's deletion vectors / Iceberg's positional
@@ -2143,7 +1624,7 @@ object FileManifest {
     * matched ROW POSITIONS deleted in a per-file DV carried by the
     * manifest. The write cost is one COLUMN-PRUNED scan of the
     * intersecting files (just `c` + the metadata position — no
-    * full-width read, NO data-file write at all) plus a manifest swap,
+    * full-width read, NO data-file write at all) plus a manifest commit,
     * so deleting a sliver from a table of GB-sized files costs
     * metadata, not I/O proportional to file width. Readers anti-filter
     * positions via [[applyDv]] on every path (current, as-of, pruned,
@@ -2165,16 +1646,14 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01, maxDvFraction: Double = 0.5): (Int, Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    requireFlatTable(root.getFileSystem(spark.sessionState.newHadoopConf()),
-      root, "deleteRangeDV")
-    val m = manifestFrame(spark, dataDir)
+    requireFlatTable(spark, dataDir, "deleteRangeDV")
+    val (m, plannedV) = currentManifest(spark, dataDir)
     require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
       s"deleteRangeDV needs tracked bounds for $c under $dataDir")
     // candidates by bounds — same soundness rule as deleteRange
     val candidate = !coalesce(
       col(s"max_$c") < lo || col(s"min_$c") > hi, lit(false))
-    deleteDvCore(spark, dataDir, m, candidate,
+    deleteDvCore(spark, dataDir, m, plannedV, candidate,
       scanCols = Seq(c),
       matchRows = _.filter(col(c) >= lo && col(c) <= hi),
       // NULL never satisfies a range predicate — NULL-c rows survive: a
@@ -2210,7 +1689,7 @@ object FileManifest {
     * On a HIVE-PARTITIONED tree (read from the manifest paths) the DV
     * marks stay metadata-only and over-threshold rewrites stage as ONE
     * dynamic-partition job into their own partition dirs, publishing
-    * under ONE manifest swap (same contract as [[optimizePartitioned]]);
+    * as ONE manifest version (same contract as [[optimizePartitioned]]);
     * erasing BY the partition column fails loud toward the
     * directory-drop path. Returns (files DV-marked, files rewritten,
     * files untouched).
@@ -2221,8 +1700,8 @@ object FileManifest {
       fpp: Double = 0.01, maxDvFraction: Double = 0.5,
       maxCollectedKeys: Int = 100000): (Int, Int, Int) = {
     val verb = "deleteKeysDV"
-    def erase(m: DataFrame, plan: KeyPlan): (Int, Int, Int) =
-      deleteDvCore(spark, dataDir, m, plan.candidate,
+    def erase(m: DataFrame, plannedV: Long, plan: KeyPlan): (Int, Int, Int) =
+      deleteDvCore(spark, dataDir, m, plannedV, plan.candidate,
         scanCols = Seq(key),
         matchRows = plan.matchRows,
         keepRows = plan.keepRows,
@@ -2230,10 +1709,10 @@ object FileManifest {
     keys match {
       case lits: LiteralKeys if lits.values.size <= maxCollectedKeys =>
         requireLiterals(verb, lits)
-        val m = manifestFrame(spark, dataDir)
+        val (m, plannedV) = currentManifest(spark, dataDir)
         requireKeyTypes(verb, key, lits.dataType,
           resolveColumnType(spark, dataDir, key, verb), dataDir)
-        erase(m, literalPlan(m, key, lits))
+        erase(m, plannedV, literalPlan(m, key, lits))
       case _ =>
         val frame = keys match {
           case KeyBatch.Frame(df) => df
@@ -2274,8 +1753,8 @@ object FileManifest {
               sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
               min("k").as("kmin"), max("k").as("kmax")).head()
             require(st.getLong(0) == 0L, nullMsg)
-            val m = manifestFrame(spark, dataDir)
-            erase(m, uncappedPlan(m, key, strKey,
+            val (m, plannedV) = currentManifest(spark, dataDir)
+            erase(m, plannedV, uncappedPlan(m, key, strKey,
               kDistinct.select(col("k").as(key)), st.get(1), st.get(2)))
           }
         } finally kDistinct.unpersist(false)
@@ -2298,7 +1777,7 @@ object FileManifest {
     * untouched files).
     */
   private def deleteDvCore(spark: SparkSession, dataDir: String,
-      m: DataFrame, candidate: Column, scanCols: Seq[String],
+      m: DataFrame, plannedV: Long, candidate: Column, scanCols: Seq[String],
       matchRows: DataFrame => DataFrame,
       keepRows: DataFrame => DataFrame, cols: Seq[String],
       bloomCols: Seq[String], expectedPerFile: Long, fpp: Double,
@@ -2307,9 +1786,6 @@ object FileManifest {
       op: String = "dv-delete"): (Int, Int, Int) = {
     require(maxDvFraction > 0 && maxDvFraction <= 1,
       s"maxDvFraction must be in (0, 1], got $maxDvFraction")
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val plannedV = currentVersion(hfs, dataDir)
     val hasDvCols = m.columns.contains(DvCol)
     // ONE metadata job for plan + tally: candidate flag evaluated in the
     // same collect that brings back per-file counts (a separate
@@ -2340,11 +1816,10 @@ object FileManifest {
     // partition-column matchPred would rewrite every file of the matched
     // dirs for nothing.
     val partCols: Seq[String] =
-      if (allMeta.isEmpty) { requireFlatTable(hfs, root, op); Nil }
+      if (allMeta.isEmpty) { requireFlatTable(spark, dataDir, op); Nil }
       else {
-        val rootQ = FsListing.norm(root.makeQualified(
-          hfs.getUri, hfs.getWorkingDirectory).toString)
-        val pc = partitionColsOf(rootQ, allMeta.map(_._1).toSeq, op)
+        val pc = partitionColsOf(rootQOf(fsOf(spark, dataDir), dataDir),
+          allMeta.map(_._1).toSeq, op)
         scanCols.find(pc.contains).foreach { c =>
           throw new IllegalArgumentException(
             s"$op column '$c' is a PARTITION column under $dataDir — " +
@@ -2373,13 +1848,8 @@ object FileManifest {
         .select(col("_metadata.file_path").as("f") +:
           col("_metadata.row_index").as("i") +:
           scanCols.map(col): _*)
-      // a dv-less plan-time manifest proves no positions to anti-filter.
-      // Resolver PINNED to plannedV: the spill cache is keyed by that
-      // version and is immutable once written — an unpinned resolver
-      // racing a rival commit would materialize the RIVAL's dv rows
-      // under this version's key (the surgery itself then fails the
-      // version check, but the poisoned spill would outlive it and
-      // serve every later pinned reader of plannedV)
+      // a dv-less plan-time manifest proves no positions to anti-filter;
+      // the resolver is pinned to plannedV, as in [[liveAt]]
       matchRows(
         if (hasDvCols)
           applyDvOn(tagged, () => manifestFrameAt(spark, dataDir, plannedV),
@@ -2428,33 +1898,20 @@ object FileManifest {
         .agg(serDv(sort_array(collect_list(col("i")))).as("__dv_new"),
           count(lit(1)).as("__nd_new"))
 
-    // staging for rewrites (survivors of rewrite files, DVs + predicate
-    // applied)
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val rwPaths = rwSet.toSeq.sorted
-      // one staged write carries BOTH publish shapes: rewrite survivors
-      // (live rows of over-threshold files) and the merge-on-read
-      // append batch — they land as one version's fresh files
-      val rewriteSurvivors =
-        if (rwPaths.isEmpty) None
-        else Some {
-          val cand = spark.read.option("basePath", dataDir)
-            .parquet(rwPaths.toIndexedSeq: _*)
-          // dv-lessness is provable from the plan-time schema (rival
-          // commits fail the version check) — skip the resolver; the
-          // resolver itself pins plannedV (spill-poisoning guard)
-          keepRows(
-            if (hasDvCols)
-              applyDv(cand, () => manifestFrameAt(spark, dataDir, plannedV),
-                spill = Some((dataDir, plannedV)))
-            else cand)
-        }
-      val staged = (rewriteSurvivors, appendDf) match {
-        case (Some(s), Some(a)) => Some(s.unionByName(a))
-        case (s, a) => s.orElse(a)
-      }
+    // one staged write carries BOTH publish shapes: rewrite survivors
+    // (live rows of over-threshold files) and the merge-on-read append
+    // batch — they land as one version's fresh files
+    val rwPaths = rwSet.toSeq.sorted
+    val rewriteSurvivors =
+      if (rwPaths.isEmpty) None
+      else Some(keepRows(liveAt(spark.read.option("basePath", dataDir)
+        .parquet(rwPaths.toIndexedSeq: _*), dataDir, plannedV, hasDvCols)))
+    val staged = (rewriteSurvivors, appendDf) match {
+      case (Some(s), Some(a)) => Some(s.unionByName(a))
+      case (s, a) => s.orElse(a)
+    }
+    commitStaged(spark, dataDir, plannedV, op, allMeta.length.toLong,
+        s"${dataDir}_stg") { stg =>
       // ONE staging job either way. Partitioned: a dynamic-partition
       // write — the basePath read above resolved the partition columns
       // as data columns, and partitionBy moves them back to directories,
@@ -2469,70 +1926,29 @@ object FileManifest {
           else df.write.parquet(stg.toString)
         }
       }
-      // fresh files get stats for `cols`/`bloomCols` only, aligned to the
-      // manifest's columns inside the lock after the move into the table:
-      // a tracked column the caller left out must fail while the files
-      // are still staged (the finally below drops them)
-      val fresh = statsColumns(cols, bloomCols).toSet
-      val untracked = m.columns.filterNot(c =>
-        c == DvCol || c == DvDelCol || fresh.contains(c))
-      require(untracked.isEmpty || !hfs.exists(stg) ||
-        FsListing.listDataFiles(hfs, stg).isEmpty,
-        s"$op: the manifest under $dataDir tracks ${untracked.mkString(", ")}" +
-          " but cols/bloomCols leave them out — the files this call writes " +
-          "would have no stats for them; pass the table's tracked columns")
-      beforeCommitHook()
-      CommitLock.withLock(hfs,
-        new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-        requireUnchanged(hfs, dataDir, plannedV, stg)
-        val moved =
-          if (staged.isEmpty) Seq.empty[String]
-          else {
-            val mv =
-              if (partCols.nonEmpty) movePartitionTree(hfs, stg, root)
-              else hfs.listStatus(stg).iterator
-                .filterNot { s =>
-                  val n = s.getPath.getName
-                  n.startsWith("_") || n.startsWith(".")
-                }
-                .map { s =>
-                  val dst = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-                  require(hfs.rename(s.getPath, dst),
-                    s"dv-delete publish rename failed: ${s.getPath} -> $dataDir")
-                  dst.toString
-                }.toSeq
-            hfs.delete(stg, true)
-            mv
-          }
-        // new manifest: carried entries (non-candidates + zero-match
-        // candidates) byte-for-byte, DV-updated entries with merged
-        // vectors, fresh stats for rewritten output
-        val mAligned = alignStats(m, targetCols)
-        val fNorm = ManifestFileIndex.normPath(col("file"))
-        val carriedOut = mAligned
-          .filter(!fNorm.isin((dvSet ++ rwSet).toSeq: _*))
-        val dvOut =
-          if (newDvs == null) null
-          else mAligned.filter(fNorm.isin(dvSet.toSeq: _*))
+      requireTracked(spark, op, dataDir, m.columns.toSeq, cols, bloomCols, stg)
+    } { moved =>
+      // new manifest: carried entries (non-candidates + zero-match
+      // candidates) byte-for-byte, DV-updated entries with merged
+      // vectors, fresh stats for rewritten output
+      val mAligned = alignStats(m, targetCols)
+      val fNorm = ManifestFileIndex.normPath(col("file"))
+      val carriedOut = mAligned
+        .filter(!fNorm.isin((dvSet ++ rwSet).toSeq: _*))
+      val withDvs =
+        if (newDvs == null) carriedOut
+        else carriedOut.unionByName(
+          mAligned.filter(fNorm.isin(dvSet.toSeq: _*))
             .join(newDvs, metaPathOf(col("file")) === col("f"), "inner")
             .withColumn(DvCol, mergeDv(col(DvCol), col("__dv_new")))
-            .withColumn(DvDelCol, coalesce(col(DvDelCol), lit(0L)) + col("__nd_new"))
+            .withColumn(DvDelCol,
+              coalesce(col(DvDelCol), lit(0L)) + col("__nd_new"))
             .drop("f", "__dv_new", "__nd_new")
-            .select(targetCols.map(col).toIndexedSeq: _*)
-        val freshOut =
-          if (moved.isEmpty) null
-          else alignStats(statsForFiles(spark, dataDir, moved, cols,
-            bloomCols, expectedPerFile, fpp), targetCols)
-        val merged = Seq(Option(carriedOut), Option(dvOut), Option(freshOut))
-          .flatten.reduce(_ unionByName _)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        writeManifest(merged, tmp, (allMeta.length + moved.size).toLong)
-        swapVersioned(hfs, dataDir, tmp, op)
-        spark.catalog.refreshByPath(dataDir)
-        (dvSet.size, rwSet.size, nCarriedBounds + zeroMatch.size)
-      }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+            .select(targetCols.map(col).toIndexedSeq: _*))
+      withFresh(spark, dataDir, withDvs, moved, cols, bloomCols,
+        expectedPerFile, fpp)
+    }
+    (dvSet.size, rwSet.size, nCarriedBounds + zeroMatch.size)
   }
 
   /** MATERIALIZE deletion vectors (Delta's `REORG TABLE ... APPLY
@@ -2546,66 +1962,29 @@ object FileManifest {
   def purgeDv(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01): Int = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    requireFlatTable(hfs, root, "purgeDv")
-    val plannedV = currentVersion(hfs, dataDir)
-    val m = manifestFrame(spark, dataDir)
+    requireFlatTable(spark, dataDir, "purgeDv")
+    val (m, plannedV) = currentManifest(spark, dataDir)
     if (!m.columns.contains(DvCol)) return 0
-    val fNorm = ManifestFileIndex.normPath(col("file"))
     // one metadata collect serves BOTH the dv file list and the entry
     // tally the sharded manifest write sizes itself by
-    val allFlags = m.select(fNorm.as("f"), col(DvCol).isNotNull.as("d"))
+    val allFlags = m.select(ManifestFileIndex.normPath(col("file")).as("f"),
+        col(DvCol).isNotNull.as("d"))
       .collect().map(r => (r.getString(0), r.getBoolean(1)))
-    val nTotal = allFlags.length
     val dvPaths = allFlags.filter(_._2).map(_._1).sorted
     val bareCols = m.columns.toSeq.filterNot(c => c == DvCol || c == DvDelCol)
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    commitStaged(spark, dataDir, plannedV, "purge",
+        (allFlags.length - dvPaths.length).toLong, s"${dataDir}_stg") { stg =>
       if (dvPaths.nonEmpty)
-        applyDv(spark.read.option("basePath", dataDir)
-          .parquet(dvPaths.toIndexedSeq: _*),
-          () => manifestFrameAt(spark, dataDir, plannedV), // spill-poison guard
-          spill = Some((dataDir, plannedV)))
+        liveAt(spark.read.option("basePath", dataDir)
+          .parquet(dvPaths.toIndexedSeq: _*), dataDir, plannedV)
           .write.parquet(stg.toString)
-      beforeCommitHook()
-      CommitLock.withLock(hfs,
-        new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-        requireUnchanged(hfs, dataDir, plannedV, stg)
-        val moved =
-          if (dvPaths.isEmpty) Seq.empty[String]
-          else {
-            val mv = hfs.listStatus(stg).iterator
-              .filterNot { s =>
-                val n = s.getPath.getName
-                n.startsWith("_") || n.startsWith(".")
-              }
-              .map { s =>
-                val dst = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-                require(hfs.rename(s.getPath, dst),
-                  s"purge publish rename failed: ${s.getPath} -> $dataDir")
-                dst.toString
-              }.toSeq
-            hfs.delete(stg, true)
-            mv
-          }
-        val carried = m.filter(col(DvCol).isNull)
-          .select(bareCols.map(col).toIndexedSeq: _*)
-        val merged =
-          if (moved.isEmpty) carried
-          else carried.unionByName(alignStats(
-            statsForFiles(spark, dataDir, moved, cols, bloomCols,
-              expectedPerFile, fpp), bareCols))
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        writeManifest(merged, tmp,
-          (nTotal - dvPaths.length + moved.size).toLong)
-        swapVersioned(hfs, dataDir, tmp, "purge")
-        spark.catalog.refreshByPath(dataDir)
-        dvPaths.length
-      }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+      requireTracked(spark, "purge", dataDir, bareCols, cols, bloomCols, stg)
+    } { moved =>
+      withFresh(spark, dataDir, m.filter(col(DvCol).isNull)
+        .select(bareCols.map(col).toIndexedSeq: _*), moved, cols, bloomCols,
+        expectedPerFile, fpp)
+    }
+    dvPaths.length
   }
 
   /** Range DELETE with FILE-LEVEL SURGERY (the Delta/Iceberg DELETE
@@ -2616,8 +1995,8 @@ object FileManifest {
     * conservatively rewritten). Untouched files are CARRIED BY
     * REFERENCE — their manifest entries, per-file stats and bloom
     * binaries ride into the new version byte-for-byte, so the cost is
-    * O(intersecting files), never a table rewrite. Publishes as an MVCC
-    * version swap: the pre-delete snapshot stays readable through
+    * O(intersecting files), never a table rewrite. Publishes as a new MVCC
+    * version: the pre-delete snapshot stays readable through
     * [[readAsOf]] until [[vacuum]]'s retention reaps it — which is when
     * the deleted bytes actually leave disk (the compliance purge point,
     * exactly Delta's VACUUM contract).
@@ -2628,14 +2007,11 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    requireFlatTable(hfs, root, "deleteRange")
+    requireFlatTable(spark, dataDir, "deleteRange")
     // optimistic token: plan + staging run OUTSIDE the lock (long Spark
     // jobs must not serialize rival readers/writers); the locked commit
     // validates the version is still the one this plan read
-    val plannedV = currentVersion(hfs, dataDir)
-    val m = manifestFrame(spark, dataDir)
+    val (m, plannedV) = currentManifest(spark, dataDir)
     require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
       s"deleteRange needs tracked bounds for $c under $dataDir")
     // a file is a rewrite candidate unless its bounds PROVE disjointness
@@ -2650,64 +2026,31 @@ object FileManifest {
         disjoint.as("d")).collect()
     }.map(r => (r.getString(0), r.getBoolean(1)))
     val candPaths = flags.filter(!_._2).map(_._1).sorted
-    val carried = m.filter(disjoint)
     val nCarried = flags.count(_._2)
     if (candPaths.isEmpty) return (0, nCarried)
-    val survivors = locally {
-      val cand = spark.read.option("basePath", dataDir)
-        .parquet(candPaths.toIndexedSeq: _*)
-      // DV'd rows must not resurrect; dv-lessness is provable from the
-      // plan-time schema (rival commits fail the version check), so the
-      // common dv-less table skips the resolver round-trip
-      if (m.columns.contains(DvCol))
-        applyDv(cand, () => manifestFrameAt(spark, dataDir, plannedV),
-          spill = Some((dataDir, plannedV))) // pinned: spill-poison guard
-      else cand
-    } // NULL-c rows SURVIVE: a NULL never satisfies the range predicate
-      // (the same rule that makes read-side bound pruning sound), but a
-      // bare !(between) evaluates to NULL for them and the filter would
-      // silently delete every NULL row in a rewritten file
+    // DV'd rows must not resurrect. NULL-c rows SURVIVE: a NULL never
+    // satisfies the range predicate (the same rule that makes read-side
+    // bound pruning sound), but a bare !(between) evaluates to NULL for
+    // them and the filter would silently delete every NULL row in a
+    // rewritten file
+    val survivors = liveAt(spark.read.option("basePath", dataDir)
+      .parquet(candPaths.toIndexedSeq: _*), dataDir, plannedV,
+      m.columns.contains(DvCol))
       .filter(col(c).isNull || !(col(c) >= lo && col(c) <= hi))
-    // WRITER-PRIVATE staging (UUID dir): two concurrent surgeries on one
-    // table must never clobber each other's in-progress staging — the
-    // fixed-name dir a rival would delete is exactly the lost-update
-    // race the version token then can't even see
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-    labeled(spark, "graft: deleteRange stage") {
-      survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
+    commitStaged(spark, dataDir, plannedV, "delete", flags.length.toLong,
+        s"${dataDir}_stg") { stg =>
+      labeled(spark, "graft: deleteRange stage") {
+        survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
+      }
+      requireTracked(spark, "delete", dataDir, m.columns.toSeq, cols,
+        bloomCols, stg)
+    } { moved =>
+      // `m.filter(disjoint)` reads the version this commit supersedes —
+      // written once, so it stays readable while the new one is written
+      withFresh(spark, dataDir, m.filter(disjoint), moved, cols,
+        bloomCols, expectedPerFile, fpp)
     }
-    beforeCommitHook()
-    CommitLock.withLock(hfs,
-      new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-      requireUnchanged(hfs, dataDir, plannedV, stg)
-      val moved = hfs.listStatus(stg).iterator
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-        .map { s =>
-          val dst = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-          require(hfs.rename(s.getPath, dst),
-            s"delete publish rename failed: ${s.getPath} -> $dataDir")
-          dst.toString
-        }.toSeq
-      hfs.delete(stg, true)
-      val merged =
-        if (moved.isEmpty) carried
-        else carried.unionByName(alignStats(
-          statsForFiles(spark, dataDir, moved, cols, bloomCols,
-            expectedPerFile, fpp), carried.columns.toIndexedSeq))
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      // `merged` reads the manifest it replaces — land beside, then swap
-      writeManifest(merged, tmp, (flags.length + moved.size).toLong)
-      swapVersioned(hfs, dataDir, tmp, "delete")
-      spark.catalog.refreshByPath(dataDir)
-      (candPaths.length, nCarried)
-    }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+    (candPaths.length, nCarried)
   }
 
   /** MERGE-ON-READ keyed upsert (Delta's DV-backed MERGE / Iceberg's
@@ -2754,53 +2097,19 @@ object FileManifest {
       maxCollectedKeys: Int = 100000): (Int, Int, Int) = {
     val keyDt = updates.schema(key).dataType
     val strKey = keyDt == StringType
-    require(FsListing.isIntegral(keyDt) || strKey,
-      s"mergeKeysDV key '$key' is $keyDt — only integral (cast-to-long " +
-        "must be value- and order-preserving) or string key columns merge")
-    // ONE exchange-free job in the common case (raw cap+2-row take, all
-    // guards driver-side) — same probe shape as [[mergeKeys]]; see its
-    // comment for why the grouped probe was two stage-jobs per commit
-    val kSel = updates
-      .select((if (strKey) col(key) else col(key).cast("long")).as("k"))
-    lazy val keyStats = kSel.groupBy("k").agg(count(lit(1)).as("c"))
-    val raw = labeled(spark, "graft: mergeKeysDV key-guard") {
-      kSel.limit(maxCollectedKeys + 2).collect()
-    }
-    require(raw.nonEmpty, "mergeKeysDV: empty update batch")
-    val nullMsgEarly =
-      s"mergeKeysDV: update batch has NULL '$key' keys — a NULL key " +
-        "matches no row and cannot MERGE; filter or fill the batch first"
-    def dupMsgEarly(k: Any) =
-      s"mergeKeysDV: update batch has multiple rows for key $key=$k — " +
-        "MERGE replaces exactly one row per matched key; dedup the " +
-        "batch (e.g. keep-last by an ordering column) before merging"
-    val keysOpt: Option[Array[org.apache.spark.sql.Row]] =
-      if (raw.length > maxCollectedKeys + 1) None
-      else {
-        raw.find(_.isNullAt(0)).foreach { _ =>
-          throw new IllegalArgumentException(nullMsgEarly) }
-        val seen = new java.util.HashSet[Any](raw.length * 2)
-        raw.foreach { r =>
-          if (!seen.add(r.get(0)))
-            throw new IllegalArgumentException(dupMsgEarly(r.get(0))) }
-        if (seen.size > maxCollectedKeys) None else Some(raw)
-      }
+    val keysOpt = mergeBatchKeys(spark, "mergeKeysDV", updates, key,
+      maxCollectedKeys)
     val bigBatch = keysOpt.isEmpty
     // the table's physical schema and layout from ONE manifest-anchored
     // file — a driver-side probe, no Spark job per commit. A merged row
     // must cover the anchor's columns plus, on a partitioned tree, the
     // directory-encoded partition columns (an update batch missing those
     // couldn't be routed to a partition dir at all)
-    val (anchorSchema, partCols) = withSwapRetry {
+    val (anchorSchema, partCols) =
       firstManifestFilePath(spark, dataDir).map { a =>
-        val root = new org.apache.hadoop.fs.Path(dataDir)
-        val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        val rootQ = FsListing.norm(root.makeQualified(
-          hfs.getUri, hfs.getWorkingDirectory).toString)
-        (spark.read.parquet(a).schema,
-          partitionColsOf(rootQ, Seq(a), "mergeKeysDV"))
+        (spark.read.parquet(a).schema, partitionColsOf(
+          rootQOf(fsOf(spark, dataDir), dataDir), Seq(a), "mergeKeysDV"))
       }.getOrElse((new StructType(), Nil))
-    }
     val anchorCols = anchorSchema.fieldNames.toSet
     // the same anchor types the table key: a batch key in the other
     // encoding would probe the bloom sidecar with the wrong hashes and
@@ -2818,22 +2127,11 @@ object FileManifest {
     // UNCAPPED partitioned batch (the GDPR/CDC sweep at 100 TB carries
     // millions of keys): guards run as AGGREGATES and the global key
     // bounds come back from the same job — ZERO driver-resident key
-    // state, mirroring mergeKeys' measured-count fallback. (The
-    // small/complete path's null+dup guards already ran driver-side on
-    // the raw take above.)
+    // state, mirroring mergeKeys' measured-count fallback
     val bigBounds: Option[(Any, Any)] =
-      if (!bigBatch) None
-      else {
-        val st = keyStats.agg(max("c").as("maxc"),
-          sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
-          min("k").as("kmin"), max("k").as("kmax")).head()
-        require(st.getLong(1) == 0L, nullMsgEarly)
-        if (st.getLong(0) > 1L)
-          throw new IllegalArgumentException(dupMsgEarly(
-            keyStats.filter(col("c") > 1).select("k").head().get(0)))
-        Some((st.get(2), st.get(3)))
-      }
-    val m = manifestFrame(spark, dataDir)
+      if (bigBatch) Some(mergeBatchBounds("mergeKeysDV", updates, key))
+      else None
+    val (m, plannedV) = currentManifest(spark, dataDir)
     // the batch appends VERBATIM on the common no-rewrite path, so the
     // unionByName schema check mergeKeys gets for free must run here
     // explicitly: a batch MISSING table columns would land rows whose
@@ -2855,9 +2153,9 @@ object FileManifest {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         kcol.count()
         (uncappedPlan(m, key, strKey, kcol, kmin, kmax), Some(kcol))
-      case None => (literalPlan(m, key, literalsOf(keysOpt.get, strKey)), None)
+      case None => (literalPlan(m, key, keysOpt.get), None)
     }
-    try deleteDvCore(spark, dataDir, m, plan.candidate,
+    try deleteDvCore(spark, dataDir, m, plannedV, plan.candidate,
       scanCols = Seq(key),
       matchRows = plan.matchRows,
       keepRows = plan.keepRows,
@@ -2887,7 +2185,7 @@ object FileManifest {
     * way.
     */
   private def resolveColumnType(spark: SparkSession, dataDir: String,
-      c: String, verb: String): DataType = withSwapRetry {
+      c: String, verb: String): DataType = {
     val mf = manifestFrame(spark, dataDir)
     mf.schema.find(_.name == s"min_$c").map(_.dataType).getOrElse {
       // driver-side single-entry probe — no Spark job per resolution
@@ -2896,11 +2194,7 @@ object FileManifest {
           s"$verb: empty manifest under $dataDir"))
       val sch = spark.read.parquet(anchor).schema
       if (!sch.fieldNames.contains(c)) {
-        val root = new org.apache.hadoop.fs.Path(dataDir)
-        val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        val rootQ = FsListing.norm(root.makeQualified(
-          hfs.getUri, hfs.getWorkingDirectory).toString)
-        val rel = relPartitionDir(rootQ, anchor)
+        val rel = relPartitionDir(rootQOf(fsOf(spark, dataDir), dataDir), anchor)
         val isPartCol = rel.nonEmpty &&
           rel.split('/').exists(_.takeWhile(_ != '=') == c)
         if (isPartCol) throw new IllegalArgumentException(
@@ -3154,6 +2448,81 @@ object FileManifest {
     if (strKey) KeyBatch.Strings(rows.toIndexedSeq.map(_.getString(0)))
     else KeyBatch.Longs(rows.toIndexedSeq.map(_.getLong(0)))
 
+  /** The batch guards of both MERGE verbs — per-key multiplicity (MERGE
+    * replaces exactly one row per key: Delta fails loud on multiple
+    * matches, and so do we — an anti-join-then-append would otherwise
+    * silently insert BOTH rows of a doubled key) and null keys (match
+    * nothing — reject) — plus the measured-size decision, all from ONE
+    * EXCHANGE-FREE job: at most cap+2 RAW key rows (executeTake
+    * short-circuits the scan, no groupBy shuffle stage — the old grouped
+    * probe was two AQE stage-jobs per commit). A complete result (≤ cap+1
+    * rows) is the whole key multiset, so every guard derives driver-side
+    * and the distinct keys come back; None means the batch is past the
+    * cap, and [[mergeBatchBounds]] guards it with an aggregate instead.
+    * Integral keys probe as cast-to-long (value- and order-preserving),
+    * string keys in their native order/encoding; any other key type
+    * (a timestamp whose cast drops micros, a double whose bounds order
+    * diverges from its long cast) could false-negative a file out of
+    * the rewrite set — the silent lost update Bloom/bounds semantics
+    * must never allow — so it fails loud.
+    */
+  private def mergeBatchKeys(spark: SparkSession, verb: String,
+      updates: DataFrame, key: String,
+      maxCollectedKeys: Int): Option[LiteralKeys] = {
+    val keyDt = updates.schema(key).dataType
+    val strKey = keyDt == StringType
+    require(FsListing.isIntegral(keyDt) || strKey,
+      s"$verb key '$key' is $keyDt — only integral (cast-to-long " +
+        "must be value- and order-preserving) or string key columns merge")
+    val raw = labeled(spark, s"graft: $verb key-guard") {
+      mergeKeyCol(updates, key).limit(maxCollectedKeys + 2).collect()
+    }
+    require(raw.nonEmpty, s"$verb: empty update batch")
+    if (raw.length > maxCollectedKeys + 1) None
+    else {
+      if (raw.exists(_.isNullAt(0)))
+        throw new IllegalArgumentException(nullKeyMsg(verb, key))
+      val seen = new java.util.HashSet[Any](raw.length * 2)
+      raw.foreach { r =>
+        if (!seen.add(r.get(0)))
+          throw new IllegalArgumentException(dupKeyMsg(verb, key, r.get(0))) }
+      if (seen.size > maxCollectedKeys) None
+      else Some(literalsOf(raw, strKey))
+    }
+  }
+
+  /** The guards of a MERGE batch past the collect cap, as ONE aggregate
+    * job that also returns the batch's global key bounds (min, max) —
+    * zero driver-resident key state however large the batch.
+    */
+  private def mergeBatchBounds(verb: String, updates: DataFrame,
+      key: String): (Any, Any) = {
+    val keyStats = mergeKeyCol(updates, key).groupBy("k")
+      .agg(count(lit(1)).as("c"))
+    val st = keyStats.agg(max("c").as("maxc"),
+      sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
+      min("k").as("kmin"), max("k").as("kmax")).head()
+    require(st.getLong(1) == 0L, nullKeyMsg(verb, key))
+    if (st.getLong(0) > 1L)
+      throw new IllegalArgumentException(dupKeyMsg(verb, key,
+        keyStats.filter(col("c") > 1).select("k").head().get(0)))
+    (st.get(2), st.get(3))
+  }
+
+  /** A MERGE batch's key column as `k`, integral keys cast to long. */
+  private def mergeKeyCol(updates: DataFrame, key: String): DataFrame =
+    updates.select((if (updates.schema(key).dataType == StringType) col(key)
+      else col(key).cast("long")).as("k"))
+
+  private def nullKeyMsg(verb: String, key: String) =
+    s"$verb: update batch has NULL '$key' keys — a NULL key " +
+      "matches no row and cannot MERGE; filter or fill the batch first"
+
+  private def dupKeyMsg(verb: String, key: String, k: Any) =
+    s"$verb: update batch has multiple rows for key $key=$k — " +
+      "MERGE replaces exactly one row per matched key; dedup the " +
+      "batch (e.g. keep-last by an ordering column) before merging"
+
   /** Catalyst's string order (UTF-8 binary) as a driver-side Ordering —
     * the sort every string key array MUST use before binary-searching
     * against manifest bounds (see [[keyCandidateStr]]).
@@ -3184,179 +2553,54 @@ object FileManifest {
       key: String, cols: Seq[String], bloomCols: Seq[String] = Nil,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01,
       maxCollectedKeys: Int = 100000): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // key-type contract is ENFORCED, not just documented: integral keys
-    // probe as cast-to-long (value- and order-preserving), STRING keys
-    // (UUIDs, document ids — the right-to-be-forgotten batch's natural
-    // shape) probe in the native string order/encoding via
-    // keyCandidateStr. Anything else (a timestamp whose cast drops
-    // micros, a double whose bounds order diverges from its long cast)
-    // could false-negative a file out of the rewrite set — the silent
-    // lost update Bloom/bounds semantics must never allow.
-    val keyDt = updates.schema(key).dataType
-    val strKey = keyDt == StringType
-    require(FsListing.isIntegral(keyDt) || strKey,
-      s"mergeKeys key '$key' is $keyDt — only integral (cast-to-long " +
-        "must be value- and order-preserving) or string key columns merge")
-    requireFlatTable(hfs, root, "mergeKeys")
-    val plannedV = currentVersion(hfs, dataDir)
-    val m = manifestFrame(spark, dataDir)
-    // Preconditions — per-key multiplicity (MERGE replaces exactly one
-    // row per key: Delta fails loud on multiple matches, and so do we —
-    // the anti-join-then-append would otherwise silently insert BOTH
-    // rows of a doubled key) and null keys (match nothing — reject) —
-    // plus the measured-size decision, all from ONE EXCHANGE-FREE job
-    // in the common case: pull at most cap+2 RAW key rows (executeTake
-    // short-circuits the scan, no groupBy shuffle stage — the old
-    // grouped probe was two AQE stage-jobs per commit); a complete
-    // result (≤ cap+1 rows) is the whole key multiset, so every guard
-    // derives driver-side. Only a genuinely huge batch pays a second,
-    // aggregate-only pass for its guards and global bounds.
-    val kSel = updates
-      .select((if (strKey) col(key) else col(key).cast("long")).as("k"))
-    val raw = labeled(spark, "graft: mergeKeys key-guard") {
-      kSel.limit(maxCollectedKeys + 2).collect()
-    }
-    require(raw.nonEmpty, "mergeKeys: empty update batch")
-    val nullMsg =
-      s"mergeKeys: update batch has NULL '$key' keys — a NULL key " +
-        "matches no row and cannot MERGE; filter or fill the batch first"
-    def dupMsg(k: Any) =
-      s"mergeKeys: update batch has multiple rows for key $key=$k — " +
-        "MERGE replaces exactly one row per matched key; dedup the " +
-        "batch (e.g. keep-last by an ordering column) before merging"
-    // complete + clean + under-cap ⇒ the distinct keys, driver-derived;
-    // None ⇒ truncated sample or over-cap — decide via the agg pass
-    val keysOpt: Option[Array[org.apache.spark.sql.Row]] =
-      if (raw.length > maxCollectedKeys + 1) None
-      else {
-        raw.find(_.isNullAt(0)).foreach { _ =>
-          throw new IllegalArgumentException(nullMsg) }
-        val seen = new java.util.HashSet[Any](raw.length * 2)
-        raw.foreach { r =>
-          if (!seen.add(r.get(0)))
-            throw new IllegalArgumentException(dupMsg(r.get(0))) }
-        if (seen.size > maxCollectedKeys) None else Some(raw)
-      }
-    // MEASURED-COUNT GUARD: the per-key probes below capture the
-    // collected key set in a closure — operationally bounded for a
-    // CDC/upsert payload, but nothing enforced it. Above the cap, fall
-    // back to bounds-only candidate selection against the batch's global
-    // key range: zero driver key state, still sound (a file disjoint
-    // from [kmin, kmax] holds no matched key), and a batch that large is
-    // dense over its range anyway, so per-key bloom precision would
-    // rescue few files while the probe cost itself turns O(files × keys).
-    val isCand: Column = keysOpt match {
+    val keys = mergeBatchKeys(spark, "mergeKeys", updates, key, maxCollectedKeys)
+    requireFlatTable(spark, dataDir, "mergeKeys")
+    val (m, plannedV) = currentManifest(spark, dataDir)
+    // a driver-held batch probes per key (bounds + bloom slices) and
+    // prunes survivors with a predicate instead of a distributed
+    // anti-join — the staged write loses its join exchanges entirely
+    // (guide §2.4; AQE was scheduling the join as two stage-jobs per
+    // commit) and `updates` is computed once (the append arm) instead
+    // of twice. MEASURED-COUNT GUARD: above the cap, candidates fall
+    // back to the batch's global key range — zero driver key state,
+    // still sound (a file disjoint from [kmin, kmax] holds no matched
+    // key), and a batch that large is dense over its range anyway, so
+    // per-key bloom precision would rescue few files while the probe
+    // cost itself turns O(files × keys) — and survivors to the exact key
+    // anti-join.
+    val plan = keys match {
+      case Some(lits) => literalPlan(m, key, lits)
       case None =>
-        val keyStats = kSel.groupBy("k").agg(count(lit(1)).as("c"))
-        val st = keyStats.agg(max("c").as("maxc"),
-          sum(when(col("k").isNull, lit(1L)).otherwise(lit(0L))).as("nulls"),
-          min("k").as("kmin"), max("k").as("kmax")).head()
-        require(st.getLong(1) == 0L, nullMsg)
-        if (st.getLong(0) > 1L)
-          throw new IllegalArgumentException(dupMsg(
-            keyStats.filter(col("c") > 1).select("k").head().get(0)))
-        // global-bounds fallback in the key's NATIVE type: the min/max
-        // came from a Spark agg and compare here as Catalyst literals —
-        // one ordering end-to-end for longs and strings alike
-        if (m.columns.contains(s"min_$key")) {
-          if (strKey)
-            coalesce(!(col(s"max_$key") < lit(st.getString(2)) ||
-              col(s"min_$key") > lit(st.getString(3))), lit(true))
-          else
-            coalesce(!(col(s"max_$key").cast("long") < st.getLong(2) ||
-              col(s"min_$key").cast("long") > st.getLong(3)), lit(true))
-        } else lit(true)
-      case Some(keyRows) =>
-        if (strKey)
-          keyCandidateStr(m, key,
-            keyRows.map(_.getString(0)).sorted(utf8Ordering))
-        else keyCandidate(m, key, keyRows.map(_.getLong(0)).sorted)
+        val (kmin, kmax) = mergeBatchBounds("mergeKeys", updates, key)
+        uncappedPlan(m, key, updates.schema(key).dataType == StringType,
+          updates.select(col(key)), kmin, kmax)
     }
     // ONE metadata job for plan + tally (same fold as deleteRange)
     val mFlags = labeled(spark, "graft: mergeKeys plan") {
       m.select(ManifestFileIndex.normPath(col("file")).as("f"),
-        isCand.as("c")).collect()
+        plan.candidate.as("c")).collect()
     }.map(r => (r.getString(0), r.getBoolean(1)))
     val candPaths = mFlags.filter(_._2).map(_._1).sorted
-    val carried = m.filter(!isCand)
     val nCarried = mFlags.count(!_._2)
+    // DV'd rows must not resurrect; NULL-keyed live rows survive (a NULL
+    // key matches no update)
     val survivors =
       if (candPaths.isEmpty) updates
-      else {
-        val cand = spark.read.option("basePath", dataDir)
-          .parquet(candPaths.toIndexedSeq: _*)
-        // DV'd rows must not resurrect — but the plan-time manifest `m`
-        // PROVES dv-lessness from its schema alone (the whole surgery
-        // is consistent at plannedV: a rival adding a DV fails the
-        // commit's version check), so the common dv-less table skips
-        // applyDv's resolver round-trip instead of re-reading the
-        // manifest only to find no dv column (measured ~0.1 s of pure
-        // per-commit driver overhead in the q171 CDC loop)
-        val live =
-          if (m.columns.contains(DvCol))
-            applyDv(cand, () => manifestFrameAt(spark, dataDir, plannedV),
-              spill = Some((dataDir, plannedV))) // pinned: spill-poison guard
-          else cand
-        // capped batch: the driver already holds the COMPLETE key set, so
-        // prune survivors with a predicate instead of a distributed
-        // anti-join — the staged write loses its join exchanges entirely
-        // (guide §2.4; AQE was scheduling the join as two stage-jobs per
-        // commit) and `updates` is computed once (the append arm) instead
-        // of twice. NULL-keyed live rows survive, exactly as the anti
-        // join kept them (a NULL key matches no update). The uncapped
-        // fallback keeps the exact semi-structure join — zero driver key
-        // state, same rule as the DV twin's uncappedPlan.
-        val pruned = keysOpt match {
-          case Some(keyRows) if strKey =>
-            val ks = keyRows.map(_.getString(0)).toIndexedSeq
-            live.filter(col(key).isNull || !col(key).isin(ks: _*))
-          case Some(keyRows) =>
-            val ks = keyRows.map(_.getLong(0)).toIndexedSeq
-            live.filter(col(key).isNull || !col(key).cast("long").isin(ks: _*))
-          case None =>
-            live.join(updates.select(col(key)), Seq(key), "left_anti")
-        }
-        pruned.unionByName(updates)
+      else plan.keepRows(liveAt(spark.read.option("basePath", dataDir)
+        .parquet(candPaths.toIndexedSeq: _*), dataDir, plannedV,
+        m.columns.contains(DvCol))).unionByName(updates)
+    commitStaged(spark, dataDir, plannedV, "merge", mFlags.length.toLong,
+        s"${dataDir}_stg") { stg =>
+      labeled(spark, "graft: mergeKeys stage") {
+        survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
       }
-    // writer-private UUID staging + locked version validation: see
-    // [[deleteRange]] — same optimistic-concurrency commit protocol
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-    labeled(spark, "graft: mergeKeys stage") {
-      survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
+      requireTracked(spark, "merge", dataDir, m.columns.toSeq, cols,
+        bloomCols, stg)
+    } { moved =>
+      withFresh(spark, dataDir, m.filter(!plan.candidate), moved, cols,
+        bloomCols, expectedPerFile, fpp)
     }
-    beforeCommitHook()
-    CommitLock.withLock(hfs,
-      new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-      requireUnchanged(hfs, dataDir, plannedV, stg)
-      val moved = hfs.listStatus(stg).iterator
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-        .map { s =>
-          val dst = new org.apache.hadoop.fs.Path(root, s.getPath.getName)
-          require(hfs.rename(s.getPath, dst),
-            s"merge publish rename failed: ${s.getPath} -> $dataDir")
-          dst.toString
-        }.toSeq
-      hfs.delete(stg, true)
-      val merged =
-        if (moved.isEmpty) carried
-        else carried.unionByName(alignStats(
-          statsForFiles(spark, dataDir, moved, cols, bloomCols,
-            expectedPerFile, fpp), carried.columns.toIndexedSeq))
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      writeManifest(merged, tmp, (mFlags.length + moved.size).toLong)
-      swapVersioned(hfs, dataDir, tmp, "merge")
-      spark.catalog.refreshByPath(dataDir)
-      (candPaths.length, nCarried)
-    }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+    (candPaths.length, nCarried)
   }
 
   /** METADATA-ONLY live row count: `Σ n_rows − Σ n_del` over the
@@ -3366,15 +2610,13 @@ object FileManifest {
     * must fail loud, not undercount).
     */
   def fastCount(spark: SparkSession, dataDir: String): Long = {
-    loadCovering(spark, dataDir) // the guard; the agg re-resolves below
-    withSwapRetry {
-      val mdf = manifestFrame(spark, dataDir)
-      val del =
-        if (mdf.columns.contains(DvDelCol)) coalesce(col(DvDelCol), lit(0L))
-        else lit(0L)
-      val r = mdf.agg(sum(col("n_rows") - del)).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0) // empty snapshot sums NULL
-    }
+    val (mdf, _, _) = requireCovering(spark, dataDir) // guard + the manifest
+    liveCount(mdf)
+  }
+
+  private def liveCount(m: DataFrame): Long = {
+    val r = m.agg(sum(liveRows(m))).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0) // empty snapshot sums NULL
   }
 
   /** OPTIMIZE (bin-packing compaction) for the MVCC table: read the
@@ -3399,22 +2641,14 @@ object FileManifest {
     // PIN the version BEFORE resolving any frame: ManifestFileIndex.read
     // collects its file set and dv rows eagerly at construction, so the
     // OCC token must be captured no later — a rival commit between the
-    // frame's resolution and a late token read would make requireUnchanged
+    // frame's resolution and a late token read would make the commit check
     // validate against the RIVAL's version and publish v0-derived content
     // over it (silently reverting the rival's delete/merge). The live
     // count, the read, and publishVia's token all pin to v0; a rival
     // commit anywhere in the window now fails loud as
     // ConcurrentWriteException (withConflictRetry replans).
-    loadCovering(spark, dataDir) // the staleness guard fastCount ran
-    val v0 = currentVersionOf(spark, dataDir)
-    val live = withSwapRetry {
-      val mdf = manifestFrameAt(spark, dataDir, v0)
-      val del =
-        if (mdf.columns.contains(DvDelCol)) coalesce(col(DvDelCol), lit(0L))
-        else lit(0L)
-      val r = mdf.agg(sum(col("n_rows") - del)).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    val (mdf, _, v0) = requireCovering(spark, dataDir) // fastCount's guard
+    val live = liveCount(mdf)
     require(live > 0, s"optimizeTable on empty table $dataDir")
     val nFiles = ((live + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     publishViaUnchecked(
@@ -3431,27 +2665,27 @@ object FileManifest {
     * skipped. Returns the moved files' destination paths.
     *
     * CRASH WINDOW: the walk renames one file at a time, so a failure
-    * mid-walk (or between the walk and the manifest swap) leaves
+    * mid-walk (or between the walk and the manifest commit) leaves
     * already-moved files under the live tree unmanifested — the
     * coverage guard then fails EVERY read loud (never silent partials)
     * until [[vacuum]] reaps the orphans, which is the documented
     * recovery path (same shape as a crashed publishVia, with a window
-    * widened by O(partition dirs)). The swap itself stays atomic: no
+    * widened by O(partition dirs)). The commit itself stays atomic: no
     * reader ever plans from a half-moved file set.
     */
-  private def movePartitionTree(hfs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dstDir: org.apache.hadoop.fs.Path): Seq[String] = {
+  private def movePartitionTree(hfs: FileSystem,
+      src: Path,
+      dstDir: Path): Seq[String] = {
     val moved = Seq.newBuilder[String]
-    def walk(s: org.apache.hadoop.fs.Path,
-        d: org.apache.hadoop.fs.Path): Unit = {
+    def walk(s: Path,
+        d: Path): Unit = {
       if (!hfs.exists(d)) hfs.mkdirs(d)
       hfs.listStatus(s).foreach { st =>
         val n = st.getPath.getName
         if (!n.startsWith("_") && !n.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath, new org.apache.hadoop.fs.Path(d, n))
+          if (st.isDirectory) walk(st.getPath, new Path(d, n))
           else {
-            val dst = new org.apache.hadoop.fs.Path(d, n)
+            val dst = new Path(d, n)
             require(hfs.rename(st.getPath, dst),
               s"partitioned publish rename failed: ${st.getPath} -> $dst")
             moved += dst.toString
@@ -3494,7 +2728,7 @@ object FileManifest {
       // caller's cleanup deleted the staging dir (bytes outside the
       // table root that no vacuum ever reaps)
       val group =
-        s"graft_stage_${java.util.UUID.randomUUID().toString.take(8)}"
+        s"graft_stage_${uuid8()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(maxC, items.size))
       val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -3599,7 +2833,7 @@ object FileManifest {
     * directory — read without basePath, so only physical columns land
     * in the files and the partition encoding stays directory-only —
     * and, crucially, ALL partitions stage first and publish under ONE
-    * manifest swap: single-version atomicity across the whole tree,
+    * manifest version: single-version atomicity across the whole tree,
     * where a per-partition loop of N optimizeTable calls would be N
     * commits with readers seeing intermediate states. DV debt retires
     * tree-wide (the post-optimize manifest carries no dv columns), the
@@ -3617,77 +2851,50 @@ object FileManifest {
       targetRowsPerFile: Long = 1L << 20,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile=$targetRowsPerFile")
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    loadCovering(spark, dataDir) // staleness guard
-    // pin BEFORE any frame resolution — same OCC discipline as
-    // optimizeTable (the eager reads below all resolve at v0, and the
-    // commit validates against v0)
-    val v0 = currentVersionOf(spark, dataDir)
-    val rootQ = FsListing.norm(root.makeQualified(
-      hfs.getUri, hfs.getWorkingDirectory).toString)
-    val (meta, hasDv) = withSwapRetry {
-      val m = manifestFrameAt(spark, dataDir, v0)
-      val del =
-        if (m.columns.contains(DvDelCol)) coalesce(col(DvDelCol), lit(0L))
-        else lit(0L)
-      (m.select(ManifestFileIndex.normPath(col("file")).as("f"),
-          (col("n_rows") - del).as("nr"))
-        .collect().map(r => (r.getString(0), r.getLong(1))),
-        m.columns.contains(DvCol))
-    }
+    // staleness guard; pins v0 BEFORE any frame resolution — same OCC
+    // discipline as optimizeTable (the eager reads below all resolve at
+    // v0, and the commit validates against v0)
+    val (m, _, v0) = requireCovering(spark, dataDir)
+    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
+    val meta = m.select(ManifestFileIndex.normPath(col("file")).as("f"),
+        liveRows(m).as("nr"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val hasDv = m.columns.contains(DvCol)
     require(meta.nonEmpty, s"optimizePartitioned on empty table $dataDir")
     val byPart = meta.groupBy(t => relPartitionDir(rootQ, t._1)).toSeq.sortBy(_._1)
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    val written = new java.util.concurrent.atomic.AtomicInteger(0)
+    commitStaged(spark, dataDir, v0, "optimize", 0L, s"${dataDir}_stg") { stg =>
       // partitions stage CONCURRENTLY (bounded pool): the I/O is O(live
       // bytes) either way, but sequential submission pays one job-
       // scheduling latency PER partition dir — linear in tree width —
       // where the pool overlaps them (ScaleSmoke's partitioned_surgery
       // tier measures the wall-time difference at 64 dirs)
-      val written = new java.util.concurrent.atomic.AtomicInteger(0)
       stageConcurrently(spark, byPart) { case (rel, files) =>
         val live = files.map(_._2).sum
         if (live > 0) {
           val n = ((live + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          val raw = spark.read.parquet(files.map(_._1).toIndexedSeq: _*)
-          val rows =
-            if (hasDv) applyDv(raw,
-              () => manifestFrameAt(spark, dataDir, v0),
-              spill = Some((dataDir, v0)))
-            else raw
-          rows.repartition(n).write.parquet(
-            if (rel.isEmpty) stg.toString else s"$stg/$rel")
+          liveAt(spark.read.parquet(files.map(_._1).toIndexedSeq: _*),
+            dataDir, v0, hasDv)
+            .repartition(n).write.parquet(
+              if (rel.isEmpty) stg.toString else s"$stg/$rel")
           written.addAndGet(n)
         }
       }
-      beforeCommitHook()
-      CommitLock.withLock(hfs,
-        new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-        requireUnchanged(hfs, dataDir, v0, stg)
-        val moved = movePartitionTree(hfs, stg, root)
-        hfs.delete(stg, true)
-        require(moved.nonEmpty,
-          s"optimizePartitioned produced no data files for $dataDir")
-        // fresh stats for the WHOLE new file set (basePath-anchored, so
-        // tracked partition columns get real bounds — that is what lets
-        // the manifest prune partitions by range later)
-        val stats = statsForFiles(spark, dataDir, moved, cols, bloomCols,
-          expectedPerFile, fpp)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        writeManifest(stats, tmp, moved.size.toLong)
-        swapVersioned(hfs, dataDir, tmp, "optimize")
-        spark.catalog.refreshByPath(dataDir)
-      }
-      written.get()
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+    } { moved =>
+      require(moved.nonEmpty,
+        s"optimizePartitioned produced no data files for $dataDir")
+      // fresh stats for the WHOLE new file set (basePath-anchored, so
+      // tracked partition columns get real bounds — that is what lets
+      // the manifest prune partitions by range later)
+      statsForFiles(spark, dataDir, moved, cols, bloomCols,
+        expectedPerFile, fpp)
+    }
+    written.get()
   }
 
   /** Range DELETE for a HIVE-PARTITIONED manifest table — the
     * partition-aware twin of [[deleteRange]], same stage-all-then-
-    * one-swap atomicity as [[optimizePartitioned]]: candidate files
+    * one-commit atomicity as [[optimizePartitioned]]: candidate files
     * (manifest bounds intersecting `[lo, hi]`) rewrite their survivors
     * INTO their own partition directories; untouched files carry by
     * reference byte-for-byte; everything publishes as ONE MVCC version.
@@ -3701,24 +2908,16 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01): (Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    loadCovering(spark, dataDir)
-    val v0 = currentVersionOf(spark, dataDir)
-    val rootQ = FsListing.norm(root.makeQualified(
-      hfs.getUri, hfs.getWorkingDirectory).toString)
-    val m = manifestFrameAt(spark, dataDir, v0)
+    val (m, _, v0) = requireCovering(spark, dataDir)
+    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
     require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
       s"deleteRangePartitioned needs tracked bounds for $c under $dataDir")
     val disjoint = coalesce(col(s"max_$c") < lo || col(s"min_$c") > hi,
       lit(false))
-    val (flags, hasDv) = withSwapRetry {
-      val mf = manifestFrameAt(spark, dataDir, v0)
-      (mf.select(ManifestFileIndex.normPath(col("file")).as("f"),
-          disjoint.as("d")).collect()
-        .map(r => (r.getString(0), r.getBoolean(1))),
-        mf.columns.contains(DvCol))
-    }
+    val flags = m.select(ManifestFileIndex.normPath(col("file")).as("f"),
+        disjoint.as("d")).collect()
+      .map(r => (r.getString(0), r.getBoolean(1)))
+    val hasDv = m.columns.contains(DvCol)
     val candPaths = flags.filter(!_._2).map(_._1).sorted
     val nCarried = flags.count(_._2)
     if (candPaths.isEmpty) return (0, nCarried)
@@ -3732,40 +2931,21 @@ object FileManifest {
         "instead of a row-level rewrite")
     val byPart = candPaths.groupBy(relPartitionDir(rootQ, _)).toSeq.sortBy(_._1)
     val keep = col(c).isNull || !(col(c) >= lo && col(c) <= hi)
-    val stg = new org.apache.hadoop.fs.Path(
-      s"${dataDir}_stg_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    commitStaged(spark, dataDir, v0, "delete", flags.length.toLong,
+        s"${dataDir}_stg") { stg =>
       // concurrent staging — see optimizePartitioned
       stageConcurrently(spark, byPart) { case (rel, files) =>
-        val raw = spark.read.parquet(files.toIndexedSeq: _*)
-        val live =
-          if (hasDv) applyDv(raw,
-            () => manifestFrameAt(spark, dataDir, v0),
-            spill = Some((dataDir, v0)))
-          else raw
-        live.filter(keep).write.parquet(
-          if (rel.isEmpty) stg.toString else s"$stg/$rel")
+        liveAt(spark.read.parquet(files.toIndexedSeq: _*), dataDir, v0, hasDv)
+          .filter(keep).write.parquet(
+            if (rel.isEmpty) stg.toString else s"$stg/$rel")
       }
-      beforeCommitHook()
-      CommitLock.withLock(hfs,
-        new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-        requireUnchanged(hfs, dataDir, v0, stg)
-        val moved = movePartitionTree(hfs, stg, root)
-        hfs.delete(stg, true)
-        val carried = m.filter(disjoint)
-        val merged =
-          if (moved.isEmpty) carried
-          else carried.unionByName(alignStats(
-            statsForFiles(spark, dataDir, moved, cols, bloomCols,
-              expectedPerFile, fpp), carried.columns.toIndexedSeq))
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        writeManifest(merged, tmp, (flags.length + moved.size).toLong)
-        swapVersioned(hfs, dataDir, tmp, "delete")
-        spark.catalog.refreshByPath(dataDir)
-        (candPaths.length, nCarried)
-      }
-    } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+      requireTracked(spark, "delete", dataDir, m.columns.toSeq, cols,
+        bloomCols, stg)
+    } { moved =>
+      withFresh(spark, dataDir, m.filter(disjoint), moved, cols, bloomCols,
+        expectedPerFile, fpp)
+    }
+    (candPaths.length, nCarried)
   }
 
   /** Manifest-aware orphan-file VACUUM (the remove-orphans verb of the
@@ -3791,64 +2971,61 @@ object FileManifest {
   def vacuum(spark: SparkSession, dataDir: String,
       graceMs: Long = 600000L, keepVersions: Int = 1): Seq[String] = {
     require(keepVersions >= 1, s"keepVersions=$keepVersions: must retain the current version")
-    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val root = new Path(dataDir)
     val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    CommitLock.withLock(hfs,
-      new org.apache.hadoop.fs.Path(root, "_manifest.lock")) {
-      require(hfs.exists(new org.apache.hadoop.fs.Path(manifestPath(dataDir))),
+    CommitLock.withLock(hfs, new Path(root, "_manifest.lock")) {
+      val vs = listVersions(hfs, dataDir)
+      require(vs.current > 0,
         s"no manifest under $dataDir — vacuum without one would reap the whole table")
       import spark.implicits._
       val cutoff = System.currentTimeMillis() - graceMs
       // a file already gone counts as reapable; a LIVE file younger than
       // graceMs is possibly in-flight (see the orphan-sweep note below)
       def pastGrace(p: String): Boolean =
-        try hfs.getFileStatus(new org.apache.hadoop.fs.Path(p))
-          .getModificationTime < cutoff
+        try hfs.getFileStatus(new Path(p)).getModificationTime < cutoff
         catch { case _: java.io.FileNotFoundException => true }
+      // the `file` column of the given versions' manifests as ONE
+      // multi-path read (explicit one-column schema: no footer inference)
+      def versionFiles(versions: Seq[Long]): DataFrame =
+        spark.read.schema(FileOnly)
+          .parquet(versions.map(versionDir(dataDir, _)): _*)
       // TIME-TRAVEL retention: the live set is the UNION of the newest
-      // `keepVersions` snapshots (current + that many minus one history
-      // manifests); history manifests beyond retention are reaped,
-      // making "version not retained" a loud resolution failure in
-      // readAsOf rather than a half-missing read. keepVersions = 1 is
-      // the classic semantics: live = current manifest only.
+      // `keepVersions` versions; older versions are reaped, making
+      // "version not retained" a loud resolution failure in readAsOf
+      // rather than a half-missing read. keepVersions = 1 is the classic
+      // semantics: live = current manifest only.
       //
-      // RESURRECTION GUARD: an expired history manifest and the data
+      // RESURRECTION GUARD: an expired version's manifest and the data
       // files ONLY IT references must leave disk TOGETHER. Reaping the
       // manifest while graceMs spares its young files would strand them
       // as unreferenced-but-live — the next refresh, no longer seeing
-      // them in any history manifest, would re-manifest them as fresh
-      // appends, and a pre-surgery file's rows (deleted ranges, stale
-      // pre-merge key values) would silently REJOIN the current version.
-      // So an expired manifest is reaped only once every file it
-      // exclusively references (not referenced by any retained version
-      // or any other still-present history manifest) is past the grace
-      // cutoff; otherwise it is SPARED this pass — still covering its
-      // young files against re-manifesting — and retried next vacuum.
-      // The per-version reference sets are collected path strings:
+      // them in any version, would re-manifest them as fresh appends,
+      // and a pre-surgery file's rows (deleted ranges, stale pre-merge
+      // key values) would silently REJOIN the current version. So an
+      // expired version is reaped only once every file it exclusively
+      // references (not referenced by any retained version or any other
+      // still-present expired version) is past the grace cutoff;
+      // otherwise it is SPARED this pass — still covering its young
+      // files against re-manifesting — and retried next vacuum. The
+      // per-version reference sets are collected path strings:
       // O(files-per-version) driver bytes, the listing-sized state any
       // FileIndex already holds, never manifest payload.
-      val hist = historyVersions(hfs, root)
-      val keptHist = hist.takeRight(keepVersions - 1)
-      val expired = hist.dropRight(keepVersions - 1)
+      val kept = vs.all.takeRight(keepVersions)
+      val expired = vs.all.dropRight(keepVersions)
       val reapedWith = Seq.newBuilder[String]
       if (expired.nonEmpty) {
-        // ONE Spark job over every version's manifest (the per-version
-        // loop was a collect per history dir — job-scheduling overhead
-        // linear in history depth); the owning version is recovered from
-        // each row's source path ("" = the current, unsuffixed manifest)
-        val byVersion: Map[String, Set[String]] =
-          spark.read.parquet(
-            (manifestPath(dataDir) +: hist.map(histPath(dataDir, _))): _*)
-            .select(
-              regexp_extract(input_file_name(), "_manifest_v(\\d+)/", 1).as("v"),
-              ManifestFileIndex.normPath(col("file")).as("f"))
-            .collect()
-            .groupBy(_.getString(0))
-            .map { case (v, rows) => v -> rows.map(_.getString(1)).toSet }
-        val retainedRefs = byVersion.getOrElse("", Set.empty) ++
-          keptHist.flatMap(v => byVersion.getOrElse(v.toString, Set.empty))
+        // ONE Spark job over every version's manifest, the owning version
+        // recovered from each row's source dir
+        val byVersion: Map[Long, Set[String]] = versionFiles(vs.all)
+          .select(versionOfFile.as("v"),
+            ManifestFileIndex.normPath(col("file")).as("f"))
+          .collect()
+          .groupBy(_.getLong(0))
+          .map { case (v, rows) => v -> rows.map(_.getString(1)).toSet }
+        val retainedRefs =
+          kept.flatMap(v => byVersion.getOrElse(v, Set.empty[String])).toSet
         val expiredRefs: Map[Long, Set[String]] =
-          expired.map(v => v -> byVersion.getOrElse(v.toString, Set.empty)).toMap
+          expired.map(v => v -> byVersion.getOrElse(v, Set.empty[String])).toMap
         // ONE-PASS reference counting, not a per-version set rebuild
         // (that was O(versions² × files-per-version) driver work on
         // exactly the deep-history tables this file optimizes elsewhere):
@@ -3877,23 +3054,19 @@ object FileManifest {
             // silently REJOINING the current version, the exact
             // resurrection this guard exists to prevent.
             exclusive.foreach { p =>
-              if (hfs.delete(new org.apache.hadoop.fs.Path(p), false))
-                reapedWith += p
+              if (hfs.delete(new Path(p), false)) reapedWith += p
             }
-            hfs.delete(new org.apache.hadoop.fs.Path(histPath(dataDir, v)), true)
+            hfs.delete(new Path(versionDir(dataDir, v)), true)
             expiredRefs(v).foreach(p => refCount(p) -= 1)
           }
         }
       }
-      // ORPHAN SWEEP: a live file no still-present manifest references —
-      // current, retained history, or an expired-but-SPARED manifest
-      // (re-list after the reaping loop so spared versions keep
-      // protecting their files) — is crashed/raced writer residue.
-      val manifested = (manifestFrame(spark, dataDir)
-          .select(ManifestFileIndex.normPath(col("file")).as("m_file")) +:
-        historyFiles(spark, dataDir, hfs, root) // re-listed: spared only
-          .map(_.select(col("h_file").as("m_file"))).toSeq)
-        .reduce(_ unionByName _)
+      // ORPHAN SWEEP: a live file no still-present version references —
+      // retained, or expired-but-SPARED (re-listed after the reaping
+      // loop so spared versions keep protecting their files) — is
+      // crashed/raced writer residue.
+      val manifested = versionFiles(listVersions(hfs, dataDir).all)
+        .select(ManifestFileIndex.normPath(col("file")).as("m_file"))
         .distinct()
       val candidates = FsListing.listDataFiles(hfs, root).toDF("live_file")
         .join(manifested, col("live_file") === col("m_file"), "left_anti")
@@ -3908,28 +3081,24 @@ object FileManifest {
       // stats are O(candidate) driver RPCs — already the doomed set,
       // never the table.
       val orphans = candidates.filter { p =>
-        try hfs.getFileStatus(new org.apache.hadoop.fs.Path(p))
-          .getModificationTime < cutoff
+        try hfs.getFileStatus(new Path(p)).getModificationTime < cutoff
         catch { case _: java.io.FileNotFoundException => false }
       }
-      orphans.foreach(p =>
-        hfs.delete(new org.apache.hadoop.fs.Path(p), false))
-      // DV-SPILL RETENTION: `_dv_spill/v{N}` parquets are version-keyed
-      // CACHES (ensureDvSpill re-creates them idempotently), so reaping
-      // follows manifest retention — spills of unretained versions and
-      // abandoned tmp dirs go once past grace; a reader mid-scan on one
-      // hits the same loud retention race the data files document
+      orphans.foreach(p => hfs.delete(new Path(p), false))
+      // DV-SPILL RETENTION: `_dv_spill` parquets are CACHES keyed by
+      // (incarnation, version) — ensureDvSpill re-creates them
+      // idempotently — so reaping follows manifest retention: every
+      // entry that is not a retained version's spill (unretained
+      // versions, another incarnation's, abandoned tmp dirs) goes once
+      // past grace; a reader mid-scan on one hits the same loud
+      // retention race the data files document
       locally {
-        val spillRoot = new org.apache.hadoop.fs.Path(s"$dataDir/_dv_spill")
+        val spillRoot = new Path(s"$dataDir/_dv_spill")
         if (hfs.exists(spillRoot)) {
-          val keep = (keptHist :+ currentVersion(hfs, dataDir)).toSet
+          val keep = kept.map(v =>
+            new Path(dvSpillDir(dataDir, vs.token, v)).getName).toSet
           hfs.listStatus(spillRoot).foreach { st =>
-            val n = st.getPath.getName
-            val unretained =
-              n.startsWith(".tmp_") || n.startsWith(".doomed_") ||
-                (n.startsWith("v") && n.drop(1).nonEmpty &&
-                  n.drop(1).forall(_.isDigit) && !keep.contains(n.drop(1).toLong))
-            if (unretained && st.getModificationTime < cutoff)
+            if (!keep(st.getPath.getName) && st.getModificationTime < cutoff)
               hfs.delete(st.getPath, true)
           }
         }
@@ -3942,16 +3111,15 @@ object FileManifest {
   }
 
   private def refreshLocked(spark: SparkSession, dataDir: String,
-      root: org.apache.hadoop.fs.Path, hfs0: org.apache.hadoop.fs.FileSystem,
+      root: Path, hfs: FileSystem,
       cols: Seq[String], bloomCols: Seq[String], expectedPerFile: Long,
       fpp: Double, versionFloor: Long = 0L): Unit = {
-    val hfs = hfs0
-    val mPath = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
+    val vs = listVersions(hfs, dataDir)
     val wantCols = statsColumns(cols, bloomCols).sorted
-    if (!hfs.exists(mPath))
+    if (vs.current == 0L)
       return buildWithBloom(spark, dataDir, cols, bloomCols, expectedPerFile,
         fpp, versionFloor)
-    val existing = readManifestDir(spark, manifestPath(dataDir))
+    val existing = readVersion(spark, dataDir, vs, vs.current)
     // dv columns are ORTHOGONAL to the tracked-column set: a refresh
     // must carry them (a rebuild re-stats raw files and would resurrect
     // DV-deleted rows — buildWithBloom's own guard fails loud on that)
@@ -3974,20 +3142,18 @@ object FileManifest {
       ManifestFileIndex.normPath(existing("file")) === col("live_file"),
       "left_semi")
     // "new" means never-manifested: a file referenced only by RETAINED
-    // HISTORY versions is a prior snapshot's member (an MVCC publish
-    // left it for as-of readers), not a fresh append — re-manifesting it
+    // OLDER versions is a prior snapshot's member (an MVCC publish left
+    // it for as-of readers), not a fresh append — re-manifesting it
     // would double-count its rows in the current version. The subtract
     // runs DRIVER-side over path strings (one column-pruned collect of
     // the existing manifest's `file` column — the same paths the driver
     // must hand to spark.read anyway — plus the memoized per-version
-    // history sets), so an append on a deep-retention table stops
-    // re-reading every history manifest per refresh.
+    // file sets), so an append on a deep-retention table stops
+    // re-reading every older manifest per refresh.
     val existingFiles = labeled(spark, "graft: refresh new-files") {
       existing.select(normFile).collect()
     }.map(_.getString(0)).toSet
-    val memoKey = FsListing.norm(root.makeQualified(
-      hfs.getUri, hfs.getWorkingDirectory).toString)
-    val histSets = historyFileSets(spark, dataDir, hfs, root, memoKey)
+    val histSets = historyFileSets(spark, dataDir, vs)
     val newFiles = live
       .filterNot(existingFiles)
       .filterNot(f => histSets.exists(_.contains(f)))
@@ -4001,10 +3167,6 @@ object FileManifest {
           cols, bloomCols, expectedPerFile, fpp)
         kept.unionByName(alignStats(fresh, kept.columns.toIndexedSeq))
       }
-    // `merged` READS the manifest it must replace, so land it beside the
-    // live one and swap by rename (write-temp-then-rename is the same
-    // commit move IdempotentFileSink uses) — no self-overwrite, and a
-    // reader holding the old frame keeps a consistent view
     // sweep torn tmp dirs from crashed predecessors BEFORE staging ours:
     // we hold the manifest lock, so no rival is mid-write under a
     // different nonce, and underscore-prefixed leftovers are invisible
@@ -4012,10 +3174,11 @@ object FileManifest {
     hfs.listStatus(root).iterator
       .filter(_.getPath.getName.startsWith("_manifest_tmp_"))
       .foreach(s => hfs.delete(s.getPath, true))
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${manifestPath(dataDir)}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+    // `merged` READS the current version's manifest — written once, so
+    // it stays readable while the next version is written beside it
+    val tmp = tmpManifest(dataDir)
     writeManifest(merged, tmp, live.size.toLong)
-    swapVersioned(hfs, dataDir, tmp, "refresh")
+    commitVersion(hfs, dataDir, tmp, "refresh", vs.current + 1)
   }
 
   /** Entries per manifest part file for [[writeManifest]]'s sharding:
@@ -4037,12 +3200,12 @@ object FileManifest {
     * (carried ∪ fresh unions) may hold fewer partitions than parts and
     * coalesce can only reduce. The part-count ceiling (1024 — publish
     * commits are rename-per-part, so an unbounded count would turn the
-    * swap into 10⁴ driver RPCs) re-binds entry growth only past
+    * manifest write into 10⁴ driver RPCs) re-binds entry growth only past
     * `1024 × ManifestEntriesPerPart ≈ 4.2M` files — a table whose
     * MANIFEST is hundreds of GB with default blooms, i.e. planning cost
     * is dominated by content long before part sizing matters again.
     */
-  private def writeManifest(df: DataFrame, tmp: org.apache.hadoop.fs.Path,
+  private def writeManifest(df: DataFrame, tmp: Path,
       approxEntries: Long): Unit = {
     val parts = math.max(1L, math.min(1024L,
       (approxEntries + ManifestEntriesPerPart - 1) / ManifestEntriesPerPart))
@@ -4051,48 +3214,6 @@ object FileManifest {
       (if (parts == 1) df.coalesce(1) else df.repartition(parts))
         .write.mode("overwrite").parquet(tmp.toString)
     }
-  }
-
-  /** VERSIONED manifest swap: the outgoing `_manifest` RENAMES to
-    * `_manifest_v{N}` instead of deleting — history costs zero extra
-    * writes (one metadata rename per refresh, manifest-sized dirs), and
-    * each retained version is a complete file-level snapshot
-    * [[readAsOf]] can plan from until [[vacuum]]'s retention reaps it.
-    * The new manifest at `tmp` is stamped `_v{N+1}` before it lands, so
-    * versions stay monotonic whatever the history retention deleted.
-    */
-  private def swapVersioned(hfs: org.apache.hadoop.fs.FileSystem,
-      dataDir: String, tmp: org.apache.hadoop.fs.Path,
-      op: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(manifestPath(dataDir))
-    // OPERATION marker (DESCRIBE HISTORY): the verb that produced this
-    // version rides as an empty `_op_<verb>` file beside the `_v{N}`
-    // stamp — zero extra I/O beyond one empty create, retired/reaped
-    // with its manifest dir
-    hfs.create(new org.apache.hadoop.fs.Path(tmp, s"_op_$op"), true).close()
-    val newV =
-      if (hfs.exists(dst)) {
-        val v = versionOf(hfs, dst)
-        hfs.create(new org.apache.hadoop.fs.Path(tmp, s"_v${v + 1}"), true).close()
-        val hist = new org.apache.hadoop.fs.Path(histPath(dataDir, v))
-        hfs.delete(hist, true) // a build() reset can reuse a version number
-        require(hfs.rename(dst, hist),
-          s"manifest history rename failed under $dataDir")
-        v + 1
-      } else {
-        hfs.create(new org.apache.hadoop.fs.Path(tmp, "_v1"), true).close()
-        1L
-      }
-    // a RECYCLED version number (build() reset) must never serve a
-    // previous incarnation's dv spill or size estimate: the spill cache
-    // and the est memo are keyed by version and assume immutability —
-    // evict both for the number being published
-    locally {
-      val sp = new org.apache.hadoop.fs.Path(dvSpillDir(dataDir, newV))
-      if (hfs.exists(sp)) hfs.delete(sp, true)
-      dvEstMemo.remove((FsListing.norm(dataDir), newV))
-    }
-    require(hfs.rename(tmp, dst), s"manifest swap rename failed under $dataDir")
   }
 
   /** Range scan planned through the manifest: read only the files whose
@@ -4117,27 +3238,23 @@ object FileManifest {
   def readPrunedMulti(spark: SparkSession, dataDir: String,
       bounds: Seq[(String, Column, Column)]): (DataFrame, Int, Int) = {
     require(bounds.nonEmpty, "readPrunedMulti with no bounds")
-    val (_, total) = loadCovering(spark, dataDir) // staleness guard
-    // PIN ONE VERSION for the kept-set collect AND the dv resolution
-    // readKeptDv performs — un-pinned, a rival swap between the two
-    // would mix snapshots (see readKeptDv)
-    val v0 = currentVersionOf(spark, dataDir)
+    // staleness guard; PINS ONE VERSION for the kept-set collect AND the
+    // dv resolution readKeptDv performs — un-pinned, a rival commit
+    // between the two would mix snapshots (see readKeptDv)
+    val (mdf, total, v0) = requireCovering(spark, dataDir)
     // bound test in Spark expression semantics (same coercions the data
     // filter gets), on the tiny manifest frame
     val keepFile = bounds.map { case (c, lo, hi) =>
       col(s"min_$c").isNull || col(s"max_$c").isNull ||
         (col(s"min_$c") <= hi && col(s"max_$c") >= lo)
     }.reduce(_ && _)
-    val kept = withSwapRetry {
-      val mdf = manifestFrameAt(spark, dataDir, v0)
-      bounds.foreach { case (c, _, _) =>
-        require(mdf.columns.contains(s"min_$c") && mdf.columns.contains(s"max_$c"),
-          s"manifest under $dataDir has no tracked bounds for '$c' — " +
-            s"rebuild with the column in cols")
-      }
-      mdf.filter(keepFile)
-        .select("file").collect().map(r => norm(r.getString(0))).toSeq
+    bounds.foreach { case (c, _, _) =>
+      require(mdf.columns.contains(s"min_$c") && mdf.columns.contains(s"max_$c"),
+        s"manifest under $dataDir has no tracked bounds for '$c' — " +
+          s"rebuild with the column in cols")
     }
+    val kept = mdf.filter(keepFile)
+      .select("file").collect().map(r => norm(r.getString(0))).toSeq
     val rowPred = bounds.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi }.reduce(_ && _)
     (readKeptDv(spark, dataDir, kept, v0).filter(rowPred),
@@ -4175,155 +3292,108 @@ object FileManifest {
         keyArr.exists(bf.mightContain)
       }
     }
-    val (_, total) = loadCovering(spark, dataDir) // staleness guard
-    // one pinned version for the bloom probe and the dv resolution
-    val v0 = currentVersionOf(spark, dataDir)
-    val kept = withSwapRetry {
-      val mdf = manifestFrameAt(spark, dataDir, v0)
-      require(mdf.columns.contains(s"bloom_$c"),
-        s"manifest under $dataDir has no bloom sidecar for '$c' — " +
-          s"buildWithBloom(..., bloomCols = Seq(\"$c\")) first")
-      mdf.filter(probe(col(s"bloom_$c")))
-        .select(ManifestFileIndex.normPath(col("file")))
-        .collect().map(_.getString(0)).toSeq
-    }
+    // staleness guard; one pinned version for the bloom probe and the
+    // dv resolution
+    val (mdf, total, v0) = requireCovering(spark, dataDir)
+    require(mdf.columns.contains(s"bloom_$c"),
+      s"manifest under $dataDir has no bloom sidecar for '$c' — " +
+        s"buildWithBloom(..., bloomCols = Seq(\"$c\")) first")
+    val kept = mdf.filter(probe(col(s"bloom_$c")))
+      .select(ManifestFileIndex.normPath(col("file")))
+      .collect().map(_.getString(0)).toSeq
     val df = readKeptDv(spark, dataDir, kept, v0)
       .filter(col(c).isin(keys.values: _*))
     (df, kept.size, total)
   }
 
-  /** Read the manifest and enforce COVERAGE via [[requireCovering]].
-    * Returns the manifest frame and its file count; manifest CONTENT
-    * (bounds, blooms) stays distributed.
-    */
-  private[sources] def loadCovering(spark: SparkSession, dataDir: String): (DataFrame, Int) =
-    requireCovering(spark, dataDir) // one manifest read serves guard + plan
 
+  /** Coverage-guard memo: `dataDir → ((incarnation, version), live-listing
+    * fingerprint, manifest row count)`. The guard's verdict is a PURE
+    * function of (manifest version, live file set) — the version
+    * changes on every commit, and a raw append/delete changes the
+    * listing fingerprint (part-file names carry job UUIDs) — so an
+    * unchanged pair can skip the probe job outright. Repeated reads of
+    * one table (the dominant pattern: every index construction guards)
+    * pay one cheap listing instead of a Spark job each.
+    */
+  private val coveringMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, ((String, Long), Long, Int)]()
+
+  /** Per-(table, incarnation token, version) memo of an older version's
+    * file-path set. A version dir is written once, so an entry can be
+    * served forever, and the token tells a delete-and-rebuild at the
+    * same path (which recycles version numbers) from the table it
+    * replaced. A stale entry (vacuum reaped the version, or a rebuild
+    * orphaned the token) is never LOOKED UP again, so it is dead weight
+    * until [[HistFilesMemoMaxPaths]] cap-and-clears. Driver cost is path
+    * STRINGS — the same O(files) state the live listing (any
+    * FileIndex's contract) already holds.
+    */
+  private val histFilesMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long), Set[String]]()
+  private[graft] val HistFilesMemoMaxPaths = 4 * 1024 * 1024
+  private val histFilesMemoPaths = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The file sets of the retained versions OLDER than the current one —
+    * prior-snapshot members that refresh must not re-manifest and
+    * coverage must not flag. Memoized per version; only versions absent
+    * from the memo pay a read (ONE multi-path spark read for all of
+    * them), so a poll loop stops re-reading the whole retention depth on
+    * every coverage probe.
+    */
+  private def historyFileSets(spark: SparkSession, dataDir: String,
+      vs: Versions): Seq[Set[String]] = {
+    def key(v: Long) = (FsListing.norm(dataDir), vs.token, v)
+    val older = vs.all.dropRight(1)
+    val hits = older.flatMap(v => Option(histFilesMemo.get(key(v))).map(v -> _)).toMap
+    val missV = older.filterNot(hits.contains)
+    val loaded: Map[Long, Set[String]] =
+      if (missV.isEmpty) Map.empty
+      else labeled(spark, "graft: coverage history load") {
+        spark.read.schema(FileOnly)
+          .parquet(missV.map(versionDir(dataDir, _)): _*)
+          .select(ManifestFileIndex.normPath(col("file")).as("f"),
+            versionOfFile.as("_v"))
+          .collect()
+      }.groupBy(_.getLong(1)).map { case (v, rs) =>
+        v -> rs.map(_.getString(0)).toSet
+      }
+    missV.foreach { v =>
+      val s = loaded.getOrElse(v, Set.empty[String])
+      if (histFilesMemoPaths.addAndGet(s.size.toLong) > HistFilesMemoMaxPaths) {
+        histFilesMemo.clear()
+        histFilesMemoPaths.set(s.size.toLong)
+      }
+      histFilesMemo.put(key(v), s)
+    }
+    older.map(v => hits.getOrElse(v, loaded.getOrElse(v, Set.empty[String])))
+  }
 
   /** Enforce COVERAGE: every live data file under the directory must be
     * manifested — a file landed after the last build would otherwise be
     * silently absent from every planned query. Fail loud; the writer
-    * owes a rebuild. Runs as a distributed anti-join: the live listing
-    * (already driver-resident by any FileIndex's contract — path
-    * strings, no manifest payload) parallelizes out and subtracts the
-    * manifest's `file` column on executors; the driver receives one
-    * count and at most one example path. Returns the manifest file
-    * count.
+    * owes a rebuild. Returns the current manifest frame, its file count
+    * and its version — one listing of `_versions` serves the guard and
+    * the caller's plan, so both see the same snapshot.
     */
-  /** Coverage-guard memo: `dataDir → (manifest version, live-listing
-    * fingerprint, manifest row count)`. The guard's verdict is a PURE
-    * function of (manifest version, live file set) — the version
-    * changes on every swap, and a raw append/delete changes the
-    * listing fingerprint (part-file names carry job UUIDs, so even a
-    * rebuild after a reset can't alias) — so an unchanged pair can
-    * skip the probe job outright. Repeated reads of one table (the
-    * dominant pattern: every index construction guards) pay one
-    * cheap listing + one marker stat instead of a Spark job each.
-    */
-  private val coveringMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
-
-  /** Per-(table, version, content-stamp) memo of a HISTORY manifest's
-    * file-path set. A `_manifest_v{N}` dir is immutable once the swap
-    * renamed it in, so an entry can be served forever — but the KEY
-    * must identify the dir's INCARNATION, not just its number: a table
-    * deleted and rebuilt at the same path recycles version numbers
-    * (the full-suite PlanAuditSpec run caught exactly this — a lane's
-    * second plan construction read the first incarnation's sets and
-    * false-tripped the staleness guard). The incarnation stamp is
-    * [[manifestDirStamp]] — first part name (job-unique UUID), length,
-    * part count — which two incarnations can never share even when a
-    * delete-and-rebuild lands in the same coarse-filesystem mtime tick
-    * with the same version number (the residual aliasing window the r20
-    * mtime stamp left open; HistMemoIncarnationSpec pins the same-tick
-    * rebuild). A stale entry (vacuum reaped the version, or a rebuild
-    * orphaned the key) is never LOOKED UP again — its stamp can't
-    * recur — so it is dead weight until [[HistFilesMemoMaxPaths]]
-    * cap-and-clears. Driver cost is path STRINGS — the same O(files)
-    * state the live listing (any FileIndex's contract) already holds.
-    */
-  private val histFilesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), Set[String]]()
-  private[graft] val HistFilesMemoMaxPaths = 4 * 1024 * 1024
-  private val histFilesMemoPaths = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Union of the retained history versions' file sets, memoized per
-    * immutable version dir; only versions absent from the memo pay a
-    * read (ONE multi-path spark read for all of them — the same shape
-    * [[historyFiles]] uses), so a poll loop stops re-reading the whole
-    * retention depth on every coverage probe.
-    */
-  private def historyFileSets(spark: SparkSession, dataDir: String,
-      hfs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, memoKey: String): Seq[Set[String]] = {
-    // (version, content stamp) pairs — one root listing for the dir set
-    // plus one listStatus per history dir for its incarnation stamp
-    // (sub-ms each against the ~50 ms spark read a memo hit avoids; see
-    // [[histFilesMemo]] for why mtime alone was not a sound stamp). A
-    // dir whose stamp is unresolvable (vacuumed mid-probe, torn listing)
-    // is treated as a miss and read uncached — never memoized wrong.
-    val hs = historyDirs(hfs, root).keysIterator.toSeq.sorted
-      .map { v =>
-        (v, manifestDirStamp(hfs,
-          new org.apache.hadoop.fs.Path(histPath(dataDir, v))))
-      }
-    val (hitV, missV) = hs.partition { case (v, st) =>
-      st.exists(s => histFilesMemo.containsKey((memoKey, v, s))) }
-    val loaded: Map[Long, Set[String]] =
-      if (missV.isEmpty) Map.empty
-      else {
-        // version recovered from the dir name — same trick as history():
-        // the rename that froze the dir stamped it. Explicit one-column
-        // schema: no footer inference, no min_/max_ drift exposure.
-        val rows = labeled(spark, "graft: coverage history load") {
-          spark.read
-            .schema(StructType(Seq(StructField("file", StringType))))
-            .parquet(missV.map(p => histPath(dataDir, p._1)): _*)
-            .select(ManifestFileIndex.normPath(col("file")).as("f"),
-              regexp_extract(input_file_name(),
-                "_manifest_v(\\d+)/[^/]*$", 1).cast("long").as("_v"))
-            .collect()
-        }
-        rows.groupBy(_.getLong(1)).map { case (v, rs) =>
-          v -> rs.map(_.getString(0)).toSet
-        }
-      }
-    missV.foreach { case (v, st) =>
-      st.foreach { stamp =>
-        val s = loaded.getOrElse(v, Set.empty[String])
-        if (histFilesMemoPaths.addAndGet(s.size.toLong) > HistFilesMemoMaxPaths) {
-          histFilesMemo.clear()
-          histFilesMemoPaths.set(s.size.toLong)
-        }
-        histFilesMemo.put((memoKey, v, stamp), s)
-      }
-    }
-    hitV.flatMap { case (v, st) =>
-      st.flatMap(s => Option(histFilesMemo.get((memoKey, v, s)))) } ++
-      // a version vacuumed between the listing and the read contributes
-      // an empty set — exactly what the multi-path read would have shown
-      missV.map { case (v, _) => loaded.getOrElse(v, Set.empty[String]) }
-  }
-
   private[sources] def requireCovering(spark: SparkSession,
-      dataDir: String): (DataFrame, Int) = {
-    val mdf = manifestFrame(spark, dataDir)
-
+      dataDir: String): (DataFrame, Int, Long) = {
+    val root = new Path(dataDir)
+    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val vs = listVersions(hfs, dataDir)
+    val mdf = readVersion(spark, dataDir, vs, vs.current)
     // RECURSIVE data-file listing (build() reads through
     // spark.read.parquet, which descends into partition subdirs) with
     // metadata excluded and paths canonicalized — shared with the
     // ledger's delta selection, one definition of "data file": FsListing
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val live = FsListing.listDataFiles(hfs, root)
     val fp = (live.size.toLong << 32) |
       (scala.util.hashing.MurmurHash3.orderedHash(live).toLong & 0xffffffffL)
-    val v = currentVersion(hfs, dataDir)
-    val memoKey = FsListing.norm(root.makeQualified(
-      hfs.getUri, hfs.getWorkingDirectory).toString)
+    val at = (vs.token, vs.current)
+    val memoKey = rootQOf(hfs, dataDir)
     val hit = coveringMemo.get(memoKey)
-    if (hit != null && hit._1 == v && hit._2 == fp)
-      return (mdf, hit._3)
+    if (hit != null && hit._1 == at && hit._2 == fp)
+      return (mdf, hit._3, vs.current)
     // coverage = every live file is CURRENT data or a retained prior
     // snapshot's member (an MVCC publish leaves old files on disk for
     // as-of readers until vacuum retention) — only a file NO retained
@@ -4331,24 +3401,17 @@ object FileManifest {
     // over path strings (the state this guard already holds: the live
     // listing): one column-pruned collect of the current manifest's
     // `file` column — blooms/bounds never leave executors — plus the
-    // per-immutable-version history sets from [[historyFileSets]]'s
-    // memo. Versus the old distributed anti-join probe this drops the
-    // per-read history re-read (O(retention depth) work on EVERY index
-    // construction) and the extra join/union job — a CDC poll's
+    // per-version sets from [[historyFileSets]]'s memo, so a CDC poll's
     // coverage check is one tiny job, then set membership.
     val curFiles = labeled(spark, "graft: coverage probe") {
-      withSwapRetry {
-        manifestFrame(spark, dataDir)
-          .select(ManifestFileIndex.normPath(col("file")))
-          .collect()
-      }
+      mdf.select(ManifestFileIndex.normPath(col("file"))).collect()
     }.map(_.getString(0))
     val total = curFiles.length
     require(total > 0, s"empty manifest under $dataDir — build() first")
     val known = curFiles.toSet
     val missing0 = live.filterNot(known)
     if (missing0.nonEmpty) {
-      val histSets = historyFileSets(spark, dataDir, hfs, root, memoKey)
+      val histSets = historyFileSets(spark, dataDir, vs)
       val unknown = missing0.filterNot(f => histSets.exists(_.contains(f)))
       if (unknown.nonEmpty)
         throw new IllegalArgumentException(
@@ -4359,8 +3422,8 @@ object FileManifest {
     // only PASSING verdicts memoize (a failure must re-probe and re-throw);
     // cap-and-clear bounds a long-lived session over many tables
     if (coveringMemo.size >= 256) coveringMemo.clear()
-    coveringMemo.put(memoKey, (v, fp, total))
-    (mdf, total)
+    coveringMemo.put(memoKey, (at, fp, total))
+    (mdf, total, vs.current)
   }
 
   /** See [[FsListing.norm]] — manifest `file` entries come from

@@ -38,7 +38,7 @@ private[graft] object FsListing {
     // (~4s to list a 1000-file table, paid at EVERY index construction).
     // Plain FileStatus listing is two orders cheaper, and nothing here
     // needs locations. Hidden (underscore/dot) subtrees are skipped at
-    // the DIRECTORY level too, so a 10k-file _manifest history never
+    // the DIRECTORY level too, so a 10k-file table's `_versions` never
     // even lists.
     def walk(dir: Path): Unit =
       fs.listStatus(dir).foreach { st =>

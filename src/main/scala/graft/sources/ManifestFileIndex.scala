@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit, udf, when}
 
 /** TRANSPARENT manifest skipping: a custom [[org.apache.spark.sql
-  * .execution.datasources.FileIndex]] that consults the `_manifest`
+  * .execution.datasources.FileIndex]] that consults the table's manifest
   * per-file bounds DURING file listing — the integration point table
   * formats use (Delta's TahoeFileIndex, Iceberg's scan planning), so
   * callers write a PLAIN `df.filter(range)` and the scan opens only
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.{col, lit, udf, when}
   * AQE) because it happens below the plan.
   *
   * DISTRIBUTED planning: the keep/drop decision runs as a Spark job
-  * over the `_manifest` table itself (bounds conjuncts and bloom
+  * over the manifest table itself (bounds conjuncts and bloom
   * probes evaluated as expressions on executors — the same move
   * Delta/Iceberg make when they scan their metadata with Spark jobs),
   * and ONLY the surviving file paths come back to the driver. Driver
@@ -72,8 +72,7 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
     * `readPrunedMulti` evaluates them in Spark expression semantics if
     * the explicit form is needed).
     */
-  private val manifestSchema =
-    FileManifest.withSwapRetry(planningFrame.schema)
+  private val manifestSchema = planningFrame.schema
   private val trackedNumeric: Set[String] =
     manifestSchema.fieldNames.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
       .filter(c => manifestSchema.fieldNames.contains(s"max_$c"))
@@ -134,11 +133,9 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
   // collected once here — O(files-of-version) driver path strings, the
   // listing-sized state this FileIndex already holds.
   private[sources] val asOfFiles: Option[IndexedSeq[String]] = asOf.map { v =>
-    val vf = FileManifest.withSwapRetry {
-      planningFrame.filter(dvPred)
-        .select(ManifestFileIndex.normPath(col("file")))
-        .collect().map(_.getString(0)).sorted.toIndexedSeq
-    }
+    val vf = planningFrame.filter(dvPred)
+      .select(ManifestFileIndex.normPath(col("file")))
+      .collect().map(_.getString(0)).sorted.toIndexedSeq
     val live = allFiles().iterator
       .map(f => FsListing.norm(f.getPath.toString)).toSet
     val gone = vf.filterNot(live)
@@ -240,7 +237,7 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
   private[sources] def pinnedDvSide: Option[Boolean] = dvSide
 
 
-  /** The distributed keep/drop job: one filter over the `_manifest`
+  /** The distributed keep/drop job: one filter over the manifest
     * parquet, predicates on executors, only surviving path strings
     * collected.
     */
@@ -331,14 +328,9 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
       bounds && bloom
     }.reduceOption(_ && _).getOrElse(lit(true))
 
-    // planningFrame resolved INSIDE the retry: a manifest swap landing
-    // between resolution and the collect re-resolves against the renamed
-    // (immutable) history dir instead of crashing the listing
-    val kept = FileManifest.withSwapRetry {
-      planningFrame.filter(keep && keepStr && dvPred)
-        .select(ManifestFileIndex.normPath(col("file")))
-        .collect().map(_.getString(0)).toSet
-    }
+    val kept = planningFrame.filter(keep && keepStr && dvPred)
+      .select(ManifestFileIndex.normPath(col("file")))
+      .collect().map(_.getString(0)).toSet
     lastListingDriverBytes = kept.iterator.map(_.length.toLong * 2).sum
     if (keptCache.size >= KeptCacheMax) keptCache.clear()
     keptCache.put(sig, kept)
@@ -485,7 +477,7 @@ object ManifestFileIndex {
     udf { (s: String) => FsListing.norm(s) }
 
   /** The manifest-backed read: a plain DataFrame whose scans consult the
-    * `_manifest` transparently for every pushed range/equality filter.
+    * manifest transparently for every pushed range/equality filter.
     * Hive-partitioned trees compose: predicates on partition columns
     * prune whole directories (Catalyst partition pruning over the
     * inferred partition spec), predicates on tracked data columns prune
@@ -529,8 +521,7 @@ object ManifestFileIndex {
       case None => FileManifest.manifestFrame(spark, dataDir)
       case Some(v) => FileManifest.manifestFrameAt(spark, dataDir, v)
     }
-    val hasDv = FileManifest.withSwapRetry(
-      mf0.schema.fieldNames.contains("dv"))
+    val hasDv = mf0.schema.fieldNames.contains("dv")
     // one footer, not a full-directory inference sweep; partition
     // columns never appear in footers, so this stays the DATA schema
     // and the inferred partitionSchema rides separately. An as-of read
@@ -565,17 +556,12 @@ object ManifestFileIndex {
     } else {
       // the split plans TWO listings plus the dv-row collect — pin all
       // three to ONE explicit version (the current one when none was
-      // asked for): un-pinned, a rival swap landing between the sides'
+      // asked for): un-pinned, a rival commit landing between the sides'
       // resolutions could serve a MIXED snapshot (plain side vN, dv
       // side vN+1), the silent isolation hole MVCC exists to prevent.
       // A current read still runs the coverage guard (version pinning
-      // must not skip staleness detection); the pinned version resolves
-      // history-first, so the read survives the swap that would
-      // otherwise have raced it. The dv rows themselves materialize
-      // eagerly inside applyDv — no plan ever depends on the mutable
-      // `_manifest` path.
-      if (asOf.isEmpty) FileManifest.requireCovering(spark, dataDir)
-      val v0 = asOf.getOrElse(FileManifest.currentVersionOf(spark, dataDir))
+      // must not skip staleness detection).
+      val v0 = asOf.getOrElse(FileManifest.requireCovering(spark, dataDir)._3)
       val plainIdx = new ManifestFileIndex(spark, dataDir, Some(v0), Some(false))
       val dvIdx = new ManifestFileIndex(spark, dataDir, Some(v0), Some(true))
       val ds = dataSchemaOver(plainIdx, Some(dvIdx))

@@ -11,7 +11,7 @@ import graft.sources.{FileManifest, ManifestFileIndex}
 /** PRUNED time travel (q172): an as-of read plans through the retained
   * version's own manifest, so a filtered historical read gets the SAME
   * bounds/bloom file skipping a current-version read gets — the
-  * retained `_manifest_v{N}` carries identical per-file stats, and the
+  * retained `_versions/<N>` carries identical per-file stats, and the
   * "audit yesterday's slice" query must not open the whole snapshot.
   * Pins: result-equality with the raw path-list read, the actual
   * file-skip count on a range-laid-out version, bloom point-lookup
@@ -92,9 +92,9 @@ class AsOfPrunedSpec extends AnyFunSuite with SparkSpec {
     // delete one v1-exclusive data file BEHIND the manifest's back (the
     // external-deletion / crash-window case liveness must catch)
     val hfs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val v1Files = spark.read.parquet(s"$dir/_manifest_v1")
+    val v1Files = spark.read.parquet(ManifestDir(dir, 1L))
       .select("file").collect().map(_.getString(0))
-    val v2Files = spark.read.parquet(s"$dir/_manifest")
+    val v2Files = spark.read.parquet(ManifestDir(spark, dir))
       .select("file").collect().map(_.getString(0)).toSet
     val exclusive = v1Files.filterNot(v2Files).head
     assert(hfs.delete(new Path(new java.net.URI(exclusive).getPath), false))

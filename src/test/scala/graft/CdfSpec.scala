@@ -192,7 +192,7 @@ class CdfSpec extends AnyFunSuite with SparkSpec {
     // part-file name: inputFiles and manifest entries differ in URI
     // encoding, and a frame's inputFiles over a directory would list
     // everything — the v1 manifest is the exact membership)
-    val v1Names = spark.read.parquet(s"$dir/_manifest_v1")
+    val v1Names = spark.read.parquet(ManifestDir(dir, 1L))
       .select("file").collect().map(_.getString(0).split('/').last).toSet
     val spanNames = span.inputFiles.map(_.split('/').last).toSet
     assert(spanNames.intersect(v1Names).isEmpty,

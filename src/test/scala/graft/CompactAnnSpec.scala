@@ -37,7 +37,7 @@ class CompactAnnSpec extends AnyFunSuite with SparkSpec {
     val served = indexOf(existing).unionByName(indexOf(delta))
       .join(tombstones, Seq("n_id"), "left_anti")
 
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact"
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact_mvcc"
     val compacted = Similarity.compactIndex(served, dir)
 
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -62,7 +62,7 @@ class CompactAnnSpec extends AnyFunSuite with SparkSpec {
       "a delta row is missing from the compacted base")
 
     // manifest bounds on cell exist and bracket the data per file
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     assert(m.columns.contains("min_cell") && m.columns.contains("max_cell"))
     val badBounds = m.filter(col("min_cell") > col("max_cell")).count()
     assert(badBounds === 0L)
@@ -81,8 +81,8 @@ class CompactAnnSpec extends AnyFunSuite with SparkSpec {
     // one file (nothing to prune), so the layout claim is pinned with
     // the explicit numFiles knob a production compactor would size by
     // target file bytes
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact"
-    val mPath = new org.apache.hadoop.fs.Path(s"$dir/_manifest")
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact_mvcc"
+    val mPath = new org.apache.hadoop.fs.Path(ManifestDir(spark, dir))
     val hfs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     assume(hfs.exists(mPath), "compacted dir not present — run the suite in order")
     val dir2 = s"$dir.pinned"
@@ -113,8 +113,8 @@ class CompactAnnSpec extends AnyFunSuite with SparkSpec {
     // (adjudicated medium in round-14 advice); compactIndex now stages to
     // a sibling dir and swaps by rename, so the self-referential rewrite
     // must succeed and preserve the exact row-set.
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact"
-    val mPath = new org.apache.hadoop.fs.Path(s"$dir/_manifest")
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_io/spec/ann_compact_mvcc"
+    val mPath = new org.apache.hadoop.fs.Path(ManifestDir(spark, dir))
     val hfs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     assume(hfs.exists(mPath), "compacted dir not present — run the suite in order")
     val preVersions = graft.sources.FileManifest.versions(spark, dir)

@@ -24,7 +24,7 @@ class DeleteRangeSpec extends AnyFunSuite with SparkSpec {
     val df = spark.range(4000L).select(col("id").as("k"), (col("id") % 7).as("v"))
     FileManifest.writeThrough(df.repartitionByRange(4, col("k")), dir,
       Seq("k"), bloomCols = Seq("k"), mode = "overwrite")
-    val before = spark.read.parquet(s"$dir/_manifest")
+    val before = spark.read.parquet(ManifestDir(spark, dir))
       .select(col("file"), col("n_rows"), col("min_k"), col("max_k"),
         md5(col("bloom_k")).as("bh"))
       .collect().map(r => r.getString(0) ->
@@ -37,7 +37,7 @@ class DeleteRangeSpec extends AnyFunSuite with SparkSpec {
     assert(rewritten === 1, s"expected 1 intersecting file, rewrote $rewritten")
     assert(carried === 3)
 
-    val after = spark.read.parquet(s"$dir/_manifest")
+    val after = spark.read.parquet(ManifestDir(spark, dir))
       .select(col("file"), col("n_rows"), col("min_k"), col("max_k"),
         md5(col("bloom_k")).as("bh"))
       .collect().map(r => r.getString(0) ->

@@ -80,7 +80,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     // THE point of DVs: the data files are untouched
     assert(dataFiles(dir) === filesBefore)
 
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     assert(m.columns.contains("dv") && m.columns.contains("n_del"))
     val dvRow = m.filter(col("dv").isNotNull).collect()
     assert(dvRow.length === 1)
@@ -119,7 +119,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     val (d2, r2, _) = FileManifest.deleteRangeDV(
       spark, dir, "k", lit(15L), lit(24L), Seq("k"))
     assert((d2, r2) === (1, 0))
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     val dvRow = m.filter(col("dv").isNotNull).collect()
     assert(dvRow.length === 1)
     assert(dvRow.head.getAs[Long]("n_del") === 15L) // 10 + 10 - 5 overlap
@@ -150,7 +150,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     // current MANIFEST is what drops it — exactly one original file
     // (the DV'd one) remains a member, plus the rewritten survivor
     assert(dataFiles(dir).size === filesBefore.size + 1)
-    val members = spark.read.parquet(s"$dir/_manifest")
+    val members = spark.read.parquet(ManifestDir(spark, dir))
       .select("file").collect()
       .map(r => new Path(r.getString(0)).getName).toSet
     assert(members.size === 2)
@@ -159,7 +159,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     assert(cur.count() === 2000L - 851L)
     assert(cur.filter(col("k").between(200L, 1050L)).count() === 0L)
     // the rewritten file's manifest entry has no DV; the DV'd one does
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     assert(m.filter(col("dv").isNotNull).count() === 1L)
   }
 
@@ -184,7 +184,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     val v3 = FileManifest.versions(spark, dir).last
     assert(FileManifest.changesBetween(spark, dir, v2, v3).count() === 0L)
     // manifest is back to the fast path: no dv columns at all
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     assert(!m.columns.contains("dv") && !m.columns.contains("n_del"))
     assert(ManifestFileIndex.read(spark, dir).count() === 950L)
     // pre-purge versions still read correctly
@@ -308,7 +308,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     val written = FileManifest.optimizeTable(spark, dir, Seq("k"),
       targetRowsPerFile = 4000L)
     assert(written === 2, s"expected 2 right-sized files, wrote $written")
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
     assert(m.count() === 2L) // 16 small files + 1 DV → 2 files
     assert(!m.columns.contains("dv")) // DV debt retired with the rewrite
     val cur = ManifestFileIndex.read(spark, dir)
@@ -333,7 +333,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     val held = ManifestFileIndex.read(spark, dir)
     FileManifest.deleteRangeDV(spark, dir, "k", lit(100L), lit(109L), Seq("k"))
     // the held frame answers at ITS version (pre-second-delete), not the
-    // new one, and never crashes on the renamed-away `_manifest`
+    // new one
     assert(held.count() === 1990L)
     assert(ManifestFileIndex.read(spark, dir).count() === 1980L)
   }

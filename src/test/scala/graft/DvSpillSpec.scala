@@ -9,7 +9,7 @@ import graft.sources.{FileManifest, ManifestFileIndex}
 /** Size gate on the deletion-vector broadcast: per-file DVs are bounded
   * by maxDvFraction, but the NUMBER of DV-carrying files is not — above
   * the estimated-bytes threshold the dv rows must spill to the
-  * version-keyed `_dv_spill/v{N}` parquet and join shuffle-side
+  * version-keyed `_dv_spill` parquet and join shuffle-side
   * (executor bytes, zero driver collect) instead of materializing a
   * driver LocalRelation; results identical either way, spills reused
   * across reads of one version and reaped with manifest retention.
@@ -53,12 +53,12 @@ class DvSpillSpec extends AnyFunSuite with SparkSpec {
         === expect, "spill path must return identical rows")
       val v = FileManifest.versions(spark, dir).max
       val hfs = hfsOf(dir)
-      assert(hfs.exists(new Path(s"$dir/_dv_spill/v$v/_GRAFT_SPILL_OK")),
+      assert(hfs.exists(new Path(ManifestDir.dvSpill(spark, dir, v), "_GRAFT_SPILL_OK")),
         "spill parquet must be published under _dv_spill/v{N}")
-      val mtime = hfs.getFileStatus(new Path(s"$dir/_dv_spill/v$v")).getModificationTime
+      val mtime = hfs.getFileStatus(new Path(ManifestDir.dvSpill(spark, dir, v))).getModificationTime
       // second read REUSES the spill (no rewrite)
       ManifestFileIndex.read(spark, dir).count()
-      assert(hfs.getFileStatus(new Path(s"$dir/_dv_spill/v$v"))
+      assert(hfs.getFileStatus(new Path(ManifestDir.dvSpill(spark, dir, v)))
         .getModificationTime === mtime, "spill must be written once per version")
       // the spill is invisible to data listings: coverage stays green
       // (this read IS the guard) and surgery still sees a flat table
@@ -78,7 +78,7 @@ class DvSpillSpec extends AnyFunSuite with SparkSpec {
     // marks positions 0..9 of a LIVE file — if ever served, ten
     // arbitrary rows vanish silently
     val hfs = hfsOf(dir)
-    val victim = spark.read.parquet(s"$dir/_manifest")
+    val victim = spark.read.parquet(ManifestDir(spark, dir))
       .select("file").collect().map(_.getString(0)).min
     val metaPath = new Path(victim.replace("%3D", "=")).toUri.toString
     spark.createDataFrame(Seq(
@@ -110,13 +110,13 @@ class DvSpillSpec extends AnyFunSuite with SparkSpec {
       FileManifest.deleteKeysDV(spark, dir, "k", Seq(7L), Seq("k")) // v3
       ManifestFileIndex.read(spark, dir).count() // spills v3
       val hfs = hfsOf(dir)
-      assert(hfs.exists(new Path(s"$dir/_dv_spill/v2")))
-      assert(hfs.exists(new Path(s"$dir/_dv_spill/v3")))
+      assert(hfs.exists(new Path(ManifestDir.dvSpill(spark, dir, 2L))))
+      assert(hfs.exists(new Path(ManifestDir.dvSpill(spark, dir, 3L))))
       Thread.sleep(50) // grace cutoff is mtime-based; spills are fresh
       FileManifest.vacuum(spark, dir, graceMs = 0L, keepVersions = 1)
-      assert(!hfs.exists(new Path(s"$dir/_dv_spill/v2")),
+      assert(!hfs.exists(new Path(ManifestDir.dvSpill(spark, dir, 2L))),
         "unretained version's spill must be reaped")
-      assert(hfs.exists(new Path(s"$dir/_dv_spill/v3")),
+      assert(hfs.exists(new Path(ManifestDir.dvSpill(spark, dir, 3L))),
         "current version's spill must survive")
     } finally spark.conf.unset(FileManifest.DvBroadcastMaxBytesKey)
   }

@@ -227,7 +227,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
       .transform { d =>
         FileManifest.writeThrough(d, dir, Seq("ts"), Seq("ts")); d
       }
-    val before = spark.read.parquet(s"$dir/_manifest")
+    val before = spark.read.parquet(ManifestDir(spark, dir))
       .collect().map(r => r.getString(r.fieldIndex("file")) ->
         r.getAs[Array[Byte]](r.fieldIndex("bloom_ts")).toSeq).toMap
     assert(before.size == 2)
@@ -238,7 +238,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     FileManifest.writeThrough(
       (200 until 300).map(i => (i.toLong, s"b$i")).toDF("ts", "payload")
         .coalesce(1), dir, Seq("ts"), Seq("ts"))
-    val after = spark.read.parquet(s"$dir/_manifest")
+    val after = spark.read.parquet(ManifestDir(spark, dir))
       .collect().map(r => r.getString(r.fieldIndex("file")) ->
         r.getAs[Array[Byte]](r.fieldIndex("bloom_ts")).toSeq).toMap
     assert(after.size == 3)
@@ -254,7 +254,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     // tracked-column drift falls back to a full rebuild rather than a
     // torn half-schema manifest
     FileManifest.refresh(spark, dir, Seq("ts"), Nil)
-    val rebuilt = spark.read.parquet(s"$dir/_manifest")
+    val rebuilt = spark.read.parquet(ManifestDir(spark, dir))
     assert(!rebuilt.columns.contains("bloom_ts") && rebuilt.count() == 3)
   }
 

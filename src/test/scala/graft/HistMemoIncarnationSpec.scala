@@ -9,12 +9,12 @@ import graft.sources.FileManifest
 /** The history-file-set memo must key on a dir's INCARNATION, not its
   * version number or mtime: a table deleted and rebuilt at the same
   * path recycles version numbers, and on a coarse-mtime filesystem the
-  * rebuild can land `_manifest_v1` in the SAME timestamp tick — the r20
+  * rebuild can land version 1's dir in the SAME timestamp tick — the r20
   * mtime stamp then served incarnation 1's file sets to incarnation 2's
-  * coverage probe, false-tripping the staleness guard. The content
-  * stamp (first part name/length) can't alias: part names carry
-  * job-unique UUIDs. This spec forces the same-tick rebuild explicitly
-  * via setTimes.
+  * coverage probe, false-tripping the staleness guard. The table's
+  * incarnation token (the `_table_<uuid>` marker each rebuild creates
+  * afresh) can't alias. This spec forces the same-tick rebuild
+  * explicitly via setTimes.
   */
 class HistMemoIncarnationSpec extends AnyFunSuite with SparkSpec {
 
@@ -38,7 +38,7 @@ class HistMemoIncarnationSpec extends AnyFunSuite with SparkSpec {
     // populate the memo for incarnation 1 (coverage probe must resolve
     // the leftover v1 files through the history sets)
     assert(FileManifest.fastCount(spark, dir) === 4000L - (4000L / 4 + 1))
-    val v1dir = new Path(s"$dir/_manifest_v1")
+    val v1dir = new Path(ManifestDir(dir, 1L))
     val tick = hfs.getFileStatus(v1dir).getModificationTime
 
     // incarnation 2: same path, same version numbers, DIFFERENT content

@@ -201,7 +201,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
     (0 until 1000).foreach(i => bf.putLong(1000000L + i))
     val os = new java.io.ByteArrayOutputStream(); bf.writeTo(os)
     val bloomBytes = os.toByteArray
-    val mPath = s"$dir/_manifest"
+    val mPath = ManifestDir(spark, dir)
     val realCols = spark.read.parquet(mPath).columns.toSeq
     spark.range(10000).select(
         concat(lit("file:/graft_fake/f_"), col("id"), lit(".parquet")).as("file"),

@@ -27,7 +27,7 @@ class MergeKeysSpec extends AnyFunSuite with SparkSpec {
     val df = spark.range(4000L).select(col("id").as("k"), (col("id") % 7).as("v"))
     FileManifest.writeThrough(df.repartitionByRange(4, col("k")), dir,
       Seq("k"), mode = "overwrite") // bounds only, NO bloom: deterministic pruning
-    val before = spark.read.parquet(s"$dir/_manifest")
+    val before = spark.read.parquet(ManifestDir(spark, dir))
       .select(col("file"), col("n_rows"), col("min_k"), col("max_k"))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -38,7 +38,7 @@ class MergeKeysSpec extends AnyFunSuite with SparkSpec {
       spark, dir, updates, "k", Seq("k"))
     assert(rewritten === 1, s"bounds pruning should isolate one file, got $rewritten")
     assert(carried === 3)
-    val after = spark.read.parquet(s"$dir/_manifest")
+    val after = spark.read.parquet(ManifestDir(spark, dir))
       .select(col("file"), col("n_rows"), col("min_k"), col("max_k"))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -37,7 +37,7 @@ class PartitionedKeyedSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def manifestFiles(dir: String): Seq[String] =
-    spark.read.parquet(s"$dir/_manifest")
+    spark.read.parquet(ManifestDir(spark, dir))
       .select("file").collect().map(_.getString(0).replace("%3D", "="))
       .toSeq
 

@@ -49,7 +49,7 @@ class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
     assert(after === before, "optimize must be lossless")
     // every new file lives INSIDE its partition dir; none at the root,
     // and the partition column never leaks into file data
-    val m = spark.read.parquet(s"$dir/_manifest")
+    val m = spark.read.parquet(ManifestDir(spark, dir))
       .select("file").collect().map(_.getString(0).replace("%3D", "="))
     assert(m.length === 3)
     assert(m.forall(_.contains("/part=p")), s"files must land in partition dirs: ${m.toSeq}")

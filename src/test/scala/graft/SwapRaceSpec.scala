@@ -1,29 +1,23 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Reader-side manifest-swap tolerance across FILESYSTEM EXCEPTION
-  * FLAVORS — the race the judge's full-suite run caught in round 19:
-  * `swapVersioned` makes `_manifest` briefly absent (rename
-  * `_manifest`→`_manifest_v{N}`, then tmp→`_manifest`), and a lock-free
-  * reader listing it in that window gets `FileNotFoundException` on
-  * HDFS-shaped filesystems but a BARE `IOException("Invalid directory
-  * or I/O error occurred for dir: …")` from RawLocalFileSystem when the
-  * dir vanishes between its internal exists check and `File.list()`.
-  * Every tolerance site used to match only the FNFE shape, so local/NFS
-  * consumers carried a small per-commit crash window. Pins:
-  * (1) [[FileManifest.isVanishedDir]] recognizes both flavors — bare
-  * and wrapped as a cause — and nothing else; (2) a REAL absence (no
-  * manifest, no history) still fails fast with zero backoff; (3) a
-  * writer death between the two renames (half-swap: history present,
-  * `_manifest` absent) resolves to the newest history version — the
-  * last state that was ever current — instead of crashing or answering
-  * 0; (4) a STRESS loop driving the exact two-rename swap sequence at
-  * metadata speed (hundreds of swaps/sec — far denser window coverage
-  * than real commits) under concurrent version/head pollers: no
-  * exception of any flavor escapes, and every observed head is
-  * monotonic.
+/** Lock-free readers against WRITE-ONCE table versions — the race a
+  * full-suite run caught in round 19 came from a two-rename
+  * manifest swap that left the table briefly without a current
+  * manifest. Each commit now publishes `_versions/<N>` with one
+  * put-if-absent rename and never touches it again, so one listing of
+  * `_versions` names only complete versions. Pins: (1) a REAL absence
+  * (no version at all) answers at once; (2) a writer that died after
+  * staging its manifest, before the commit rename, leaves the table at
+  * N — the leftover tmp is ignored; (3) a STRESS loop publishing
+  * versions through the commit path at metadata speed (hundreds per
+  * second — far denser than real commits) under concurrent
+  * version/head pollers: no exception of any flavor escapes, and every
+  * observed head is monotonic; (4) a commit onto a version a rival
+  * already published fails loud, nests nothing, and leaves the table
+  * readable.
   */
 class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
 
@@ -45,26 +39,6 @@ class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
       dir, Seq("k"), bloomCols = Seq("k"), mode = "overwrite")
   }
 
-  test("isVanishedDir matches both not-found flavors, bare and wrapped — nothing else") {
-    val localShape = new java.io.IOException(
-      "Invalid directory or I/O error occurred for dir: /t/x/_manifest")
-    assert(FileManifest.isVanishedDir(new java.io.FileNotFoundException("x")))
-    assert(FileManifest.isVanishedDir(localShape))
-    assert(FileManifest.isVanishedDir(
-      new RuntimeException("task failed", localShape)),
-      "Spark wraps task failures — the cause chain must be walked")
-    assert(FileManifest.isVanishedDir(new RuntimeException("outer",
-      new java.io.FileNotFoundException("inner"))))
-    // Hadoop FileUtil.list's misdiagnosis: list() nulled mid-swap, the
-    // exists() re-probe saw the freshly renamed-in dir → "Permission
-    // denied" on a dir nobody chmod'ed
-    assert(FileManifest.isVanishedDir(new java.nio.file.AccessDeniedException(
-      "/t/x/_manifest", null, "Permission denied")))
-    assert(!FileManifest.isVanishedDir(new java.io.IOException("disk full")),
-      "a non-rename IOException must propagate, never be retried as a swap")
-    assert(!FileManifest.isVanishedDir(new RuntimeException("boom")))
-  }
-
   test("real absence fails fast: nonexistent table pays zero backoff") {
     val dir = freshDir("absent") // never created
     spark.range(1).count() // session + FileSystem init outside the timer
@@ -73,31 +47,34 @@ class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
     assert(FileManifest.currentVersionOf(spark, dir) === 0L)
     assert(FileManifest.versions(spark, dir).isEmpty)
     val ms = (System.nanoTime() - t0) / 1000000L
-    // the swap backoffs are >=600ms (currentVersion) / >=45ms (versions);
-    // an absent table must take neither — it has no history machinery
+    // one failed listing of `_versions` answers: no probe of an absent
+    // table may wait on anything
     assert(ms < 400L, s"absence probe paid a swap backoff (${ms}ms)")
   }
 
-  test("half-swap (writer died between renames) resolves to newest history, not 0 or a crash") {
+  test("writer died before commit rename: current stays at N") {
     import spark.implicits._
-    val dir = freshDir("halfswap")
+    val dir = freshDir("deadwriter")
     seed(dir, 50L)
     FileManifest.mergeKeys(spark, dir, Seq((1L, 99L)).toDF("k", "g"),
-      "k", Seq("k"), bloomCols = Seq("k")) // -> v2, history holds v1
+      "k", Seq("k"), bloomCols = Seq("k")) // -> v2
     val hfs = hfsOf(dir)
-    // first half of swapVersioned, by hand: current v2 renamed to
-    // history, the incoming tmp never arrives (writer death)
-    assert(hfs.rename(new Path(s"$dir/_manifest"), new Path(s"$dir/_manifest_v2")))
-    assert(FileManifest.currentVersionOf(spark, dir) === 2L,
-      "the superseded manifest is the last state that was ever current")
-    assert(FileManifest.versions(spark, dir) === Seq(1L, 2L))
-    // repair (what a restarted writer's next commit amounts to): the
-    // probe must return to the fast path
-    assert(hfs.rename(new Path(s"$dir/_manifest_v2"), new Path(s"$dir/_manifest")))
+    // a writer that staged its manifest for v3 and died before the
+    // commit rename: the staged dir is all it leaves
+    FileUtil.copy(hfs, new Path(FileManifest.versionDir(dir, 2L)), hfs,
+      new Path(s"$dir/_manifest_tmp_dead"), false,
+      spark.sessionState.newHadoopConf())
     val t0 = System.nanoTime()
-    assert(FileManifest.currentVersionOf(spark, dir) === 2L)
+    assert(FileManifest.currentVersionOf(spark, dir) === 2L,
+      "a staged, uncommitted manifest is not a version")
+    assert(FileManifest.versions(spark, dir) === Seq(1L, 2L))
     assert((System.nanoTime() - t0) / 1000000L < 400L,
-      "a healthy table must not pay the half-swap backoff")
+      "a healthy table must not pay a backoff")
+    assert(ManifestFileIndex.read(spark, dir).count() === 50L)
+    // the next commit lands at v3 beside the leftover
+    FileManifest.mergeKeys(spark, dir, Seq((2L, 98L)).toDF("k", "g"),
+      "k", Seq("k"), bloomCols = Seq("k"))
+    assert(FileManifest.versions(spark, dir) === Seq(1L, 2L, 3L))
   }
 
   test("stress: metadata-speed swap churn under concurrent pollers — no crash, monotonic heads") {
@@ -119,10 +96,8 @@ class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
       try while (!stop.get()) {
         val vs = FileManifest.versions(spark, dir)
         assert(vs.nonEmpty, "versions went empty under churn")
-        // versions() bounds its consistency retries (a build-created gap
-        // must not spin), so under CONTINUOUS swap churn it may return
-        // the hist-only answer — at most ONE behind the true head. Any
-        // deeper regression is a real bug.
+        // each probe is one listing of `_versions` — a snapshot that can
+        // only trail the true head, never undo an observed commit
         assert(vs.max >= seenHead - 1,
           s"head regressed: saw $seenHead, now ${vs.max}")
         seenHead = math.max(seenHead, vs.max)
@@ -137,19 +112,14 @@ class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
       poller(() =>
         FileManifest.opsOfVersions(hfs, dir, Set(2L, lastV / 2, lastV))))
     threads.foreach(_.start())
-    // the EXACT swapVersioned rename sequence, driven at raw-metadata
-    // speed: copy current manifest to a tmp sibling, bump its _v marker,
-    // rename current into history, rename tmp into place. Hundreds of
-    // swaps per second — each one opens the vanished-dir window the
-    // pollers must survive.
+    // the commit path, driven at raw-metadata speed: copy the current
+    // version to a tmp sibling and publish it put-if-absent as the next
+    // version. Hundreds of commits per second under the pollers.
     for (v <- 3L to lastV) {
       val tmp = new Path(s"$dir/_manifest_tmp_swaprace")
-      val cur = new Path(s"$dir/_manifest")
-      org.apache.hadoop.fs.FileUtil.copy(hfs, cur, hfs, tmp, false, conf)
-      hfs.delete(new Path(tmp, s"_v${v - 1}"), false)
-      hfs.create(new Path(tmp, s"_v$v"), true).close()
-      assert(hfs.rename(cur, new Path(s"$dir/_manifest_v${v - 1}")))
-      assert(hfs.rename(tmp, cur))
+      FileUtil.copy(hfs, new Path(FileManifest.versionDir(dir, v - 1)), hfs,
+        tmp, false, conf)
+      FileManifest.commitVersion(hfs, dir, tmp, "merge", v)
     }
     Thread.sleep(100) // let the pollers observe the settled head
     stop.set(true)
@@ -158,5 +128,40 @@ class SwapRaceSpec extends AnyFunSuite with graft.SparkSpec {
     if (failure.get() != null) throw failure.get()
     assert(FileManifest.currentVersionOf(spark, dir) === lastV)
     assert(FileManifest.versions(spark, dir) === (1L to lastV))
+  }
+
+  test("a commit onto an existing version fails loud and nests nothing") {
+    import spark.implicits._
+    val dir = freshDir("putifabsent")
+    seed(dir, 50L)
+    FileManifest.mergeKeys(spark, dir, Seq((1L, 99L)).toDF("k", "g"),
+      "k", Seq("k"), bloomCols = Seq("k")) // -> v2
+    val hfs = hfsOf(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val n = FileManifest.currentVersionOf(spark, dir)
+    def staged(name: String, from: Long): Path = {
+      val tmp = new Path(s"$dir/_manifest_tmp_$name")
+      FileUtil.copy(hfs, new Path(FileManifest.versionDir(dir, from)), hfs,
+        tmp, false, conf)
+      tmp
+    }
+    // a rival past a stale-broken lock already published N+1 — N's
+    // manifest again, so the table's rows stay N's
+    FileManifest.commitVersion(hfs, dir, staged("rival", n), "merge", n + 1)
+    // this writer staged v1's manifest for N+1 and commits second
+    val mine = staged("mine", 1L)
+    val e = intercept[ConcurrentWriteException] {
+      FileManifest.commitVersion(hfs, dir, mine, "merge", n + 1)
+    }
+    assert(e.getMessage.contains(s"version ${n + 1}"), e.getMessage)
+    assert(!hfs.exists(new Path(FileManifest.versionDir(dir, n + 1),
+      mine.getName)), "the losing manifest nested inside the winner's")
+    assert(!hfs.exists(mine), "the losing manifest was left behind")
+    assert(FileManifest.versions(spark, dir) === Seq(1L, n, n + 1))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "g").as[(Long, Long)].collect().toSet
+    assert(rows(ManifestFileIndex.read(spark, dir)) ===
+      rows(FileManifest.readAsOf(spark, dir, n)),
+      "the table must read as it stood at N")
   }
 }

@@ -53,7 +53,7 @@ class VacuumReaderRaceSpec extends AnyFunSuite with SparkSpec {
     // against re-manifesting — and nothing deleted
     val reaped = FileManifest.vacuum(spark, dir, graceMs = 600000L, keepVersions = 1)
     assert(reaped.isEmpty, s"grace-window vacuum deleted: $reaped")
-    assert(hfs.exists(new Path(s"$dir/_manifest_v1")),
+    assert(hfs.exists(new Path(ManifestDir(dir, 1L))),
       "v1 manifest reaped while graceMs spares its data files — " +
         "the resurrection window the guard exists to close")
 
@@ -68,7 +68,7 @@ class VacuumReaderRaceSpec extends AnyFunSuite with SparkSpec {
     // together; deleted rows stay deleted through yet another append
     val reaped2 = FileManifest.vacuum(spark, dir, graceMs = 0L, keepVersions = 1)
     assert(reaped2.nonEmpty, "expired v1 snapshot should now be reapable")
-    assert(!hfs.exists(new Path(s"$dir/_manifest_v1")))
+    assert(!hfs.exists(new Path(ManifestDir(dir, 1L))))
     FileManifest.writeThrough(Seq(2000L).toDF("k"), dir, Seq("k"))
     assert(keysOf(dir) === (((1L to 9L) ++ (21L to 100L)) ++ Seq(1000L, 2000L)).sorted)
   }

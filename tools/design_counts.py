@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
-"""Print the three design counts the ROADMAP tracks:
+"""Print the three design counts the ROADMAP tracks, plus the size of
+FileManifest.scala itself:
 
-  src_main_lines        lines in the Scala sources under src/main
+  src_main_lines        lines in the Scala sources under src/main and,
+                        in brackets, the code lines among them (neither
+                        blank nor comment)
+  filemanifest_lines    lines of FileManifest.scala, code lines bracketed
   filemanifest_defs     public defs on the FileManifest object (an
                         overload counts once per def) and, in brackets,
                         the distinct public verb names
@@ -38,12 +42,22 @@ def is_comment(line):
     return s.startswith("//") or s.startswith("*") or s.startswith("/*")
 
 
+def line_counts(path):
+    """(all lines, code lines) of one source file."""
+    with open(path, encoding="utf-8") as f:
+        lines = f.readlines()
+    code = sum(1 for line in lines if line.strip() and not is_comment(line))
+    return len(lines), code
+
+
 def main():
     src_main = os.path.join(ROOT, "src", "main")
-    main_lines = 0
+    main_lines = main_code = 0
     for p in scala_files(src_main):
-        with open(p, encoding="utf-8") as f:
-            main_lines += sum(1 for _ in f)
+        n, c = line_counts(p)
+        main_lines += n
+        main_code += c
+    fm_lines, fm_code = line_counts(MANIFEST)
 
     with open(MANIFEST, encoding="utf-8") as f:
         names = [m.group(1) for m in map(PUBLIC_DEF.match, f) if m]
@@ -57,7 +71,8 @@ def main():
                          if BUILDER.search(line) and not is_comment(line))
         sites[part] = n
 
-    print(f"src_main_lines {main_lines}")
+    print(f"src_main_lines {main_lines} (code {main_code})")
+    print(f"filemanifest_lines {fm_lines} (code {fm_code})")
     print(f"filemanifest_defs {len(names)} ({len(set(names))} distinct names)")
     print(f"sparksession_sites {sites['main'] + sites['test']} "
           f"(src/main {sites['main']}, src/test {sites['test']})")
