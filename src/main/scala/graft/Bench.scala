@@ -73,22 +73,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.FastLocalFileSystem.install(
-      // fork-free local FS (r21): without libhadoop, every Hadoop-API
-      // file create forks a chmod child (~4.5 ms vs 13 µs of real I/O);
-      // the write-heavy MVCC/streaming lanes paid it hundreds of times
-      // per run — see FastLocalFileSystem's doc for the measurements
-      SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // build-time, not runtime: parquet schema inference (which decides
-      // whether a TIMESTAMP(NANOS) events.ts is legal at all) only sees
-      // builder/SparkConf-backed values — see Tables.normalizeEventTs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
     SchemaDiff.report(spark, sfDir) // stderr-only: stdout tail is json-parsed
     // absorb JVM/codegen/session warmup so per-query timings are honest;
     // the parquet read also pays the one-time scan machinery init that

@@ -72,13 +72,9 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName(s"graft-${cfg.command}-${cfg.whale}")
-      .getOrCreate()
+    // SPARK_MASTER: the cluster to submit to, a deployment address
+    val spark = Session(s"graft-${cfg.command}-${cfg.whale}", callSite =
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     try println(run(cfg, new JdkHttp(), spark))
     finally spark.stop()
   }

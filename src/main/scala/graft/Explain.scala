@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for the named queries (or all)
   * — the plan-audit loop (pushdown, broadcast, codegen spans, shuffles).
   * Usage: runMain graft.Explain <sfDir> [name ...]
@@ -11,14 +9,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-explain")
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB wall-clock profile of one registry query — where a
   * multi-commit lane's seconds actually go (Spark jobs vs driver-side
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * topmost "interesting" frame, so a gap spent in catalyst analysis,
   * parquet footer reads, FS listings or codegen shows up by name.
   * Usage: runMain graft.JProf <name> [reps]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all cores).
   */
 object JProf {
   private val SampleMs = 20L
@@ -52,21 +51,7 @@ object JProf {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    // dev-only A/B seam, same as QTime: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-jprof")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     case class J(id: Int, desc: String, start: Long, var end: Long)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.WhalePipeline
@@ -17,13 +16,7 @@ import graft.pipeline.WhalePipeline
   */
 object PipelineBench {
   def main(args: Array[String]): Unit = {
-    val spark = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-pipeline-bench")
     import spark.implicits._
 
     val total = 5222

@@ -1,21 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
-    val builder = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    // dev-only A/B seam: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays confs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-qtime")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)

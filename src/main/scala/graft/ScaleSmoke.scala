@@ -9,13 +9,7 @@ object ScaleSmoke {
       SpillSmoke.main(args.filterNot(_ == "spill"))
       return
     }
-    val spark = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-scale-smoke")
     val base = "/root/testdata/sf0.1"
     val out = "/tmp/sf1ish"
     // `win100` arg → only the 100x window-family tier below (the brief's

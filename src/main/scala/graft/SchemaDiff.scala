@@ -87,11 +87,7 @@ object SchemaDiff {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-schema-diff")
     if (args.contains("--dump")) dump(spark, sfDir) else report(spark, sfDir)
     spark.stop()
   }

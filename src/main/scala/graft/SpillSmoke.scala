@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *  1. run each query on a NORMAL session and fingerprint its output
   *     (row count + order-independent sum of row hashes);
   *  2. restart Spark with `spark.memory.fraction=0.02` and 8 shuffle
-  *     partitions — ~150 MB of execution+storage shared by 32 threads,
-  *     a ~5 MB per-task budget that 10×-replica shuffle state cannot
-  *     fit;
+  *     partitions — ~150 MB of execution+storage shared by one task
+  *     thread per core (~5 MB per task on 32 cores), a budget that
+  *     10×-replica shuffle state cannot fit;
   *  3. re-run, assert fingerprint equality, and report per-query
   *     memory/disk spill bytes from a task-metrics listener — naming
   *     which operators actually exercised their spill path.
@@ -65,24 +65,18 @@ object SpillSmoke {
     def reset(): Unit = { mem.set(0); disk.set(0) }
   }
 
-  private def session(constrained: Boolean): SparkSession = {
-    val b = SparkSession.builder().master("local[32]")
-      .appName(if (constrained) "graft-spill-constrained" else "graft-spill-normal")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    (if (constrained)
-      b.config("spark.memory.fraction", "0.02")
-        // storage gets almost nothing so execution pressure is real and
-        // localCheckpoint blocks overflow to disk instead of stealing
-        // the execution pool
-        .config("spark.memory.storageFraction", "0.1")
-        // FEWER, FATTER partitions: 8 reducers over the 10x replicas put
-        // ~4x more state in each task than the normal session's 32, so
-        // sort/agg/join buffers genuinely overflow their ~5 MB slice
-        .config("spark.sql.shuffle.partitions", "8")
-     else b.config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-  }
+  private def session(constrained: Boolean): SparkSession =
+    if (!constrained) Session("graft-spill-normal")
+    else Session("graft-spill-constrained", callSite = Map(
+      "spark.memory.fraction" -> "0.02",
+      // storage gets almost nothing so execution pressure is real and
+      // localCheckpoint blocks overflow to disk instead of stealing
+      // the execution pool
+      "spark.memory.storageFraction" -> "0.1",
+      // FEWER, FATTER partitions: 8 reducers over the 10x replicas put
+      // more state in each task than the normal session's one per core,
+      // so sort/agg/join buffers genuinely overflow their ~5 MB slice
+      "spark.sql.shuffle.partitions" -> "8"))
 
   def main(args: Array[String]): Unit = run(
     args.headOption.filterNot(_ == "spill").getOrElse("/tmp/sf1ish"))
@@ -93,7 +87,6 @@ object SpillSmoke {
 
     // pass 1: reference fingerprints under the normal memory budget
     val normal = session(constrained = false)
-    normal.sparkContext.setLogLevel("ERROR")
     val base = Queries.map { q =>
       val t0 = System.nanoTime()
       val fp = fingerprint(SparkEntry.queries(q)(normal, dir))
@@ -106,7 +99,6 @@ object SpillSmoke {
     // the context's MemoryManager is built, so this MUST be a fresh
     // SparkContext, not a runtime conf set
     val tight = session(constrained = true)
-    tight.sparkContext.setLogLevel("ERROR")
     val listener = new SpillListener
     tight.sparkContext.addSparkListener(listener)
     var allMatch = true

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,7 @@ object Verify {
     // the handful of queries a change touched without a full re-dump
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.FastLocalFileSystem.install(
-      SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // set once before the submitter pool starts: Tables.events/StreamOps
-      // also set it per-read, but a conf mutation racing another query's
-      // analysis is a latent hazard — pin it here so those are no-ops
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
     // round-start drift gate: the driver regenerates testdata between
     // rounds and has changed physical types silently — print the diff
     // BEFORE any query so a downstream failure is attributable

@@ -103,8 +103,8 @@ object SetKernels {
       "sorted_intersect_count",
       exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
 
-  /** `sorted_intersect_count(a, b)` — requires [[register]] (or
-    * [[graft.GraftExtensions]]) to have run on the analyzing session.
+  /** `sorted_intersect_count(a, b)` — requires [[register]] to have run
+    * on the analyzing session.
     */
   def intersectCount(a: Column, b: Column): Column =
     call_function("sorted_intersect_count", a, b)

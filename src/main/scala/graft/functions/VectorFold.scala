@@ -295,8 +295,8 @@ object VectorFold {
       "pq_argmin", exprs => PqArgmin(exprs(0), exprs(1)), "built-in")
   }
 
-  /** `fold_dot(a, b)` — requires [[register]] (or [[graft.GraftExtensions]])
-    * to have run on the session that analyzes the plan.
+  /** `fold_dot(a, b)` — requires [[register]] to have run on the session
+    * that analyzes the plan.
     */
   def dot(a: Column, b: Column): Column = call_function("fold_dot", a, b)
 

@@ -104,9 +104,7 @@ object Geo {
       "built-in")
   }
 
-  /** `st_contains(xs, ys, x, y)` — requires [[register]] (or the
-    * [[GraftExtensions]] session extension) to have run.
-    */
+  /** `st_contains(xs, ys, x, y)` — requires [[register]] to have run. */
   def stContains(xs: Column, ys: Column, x: Column, y: Column): Column =
     call_function("st_contains", xs, ys, x, y)
 

@@ -3,7 +3,7 @@ package graft.sources
 import java.net.URI
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** [[RawLocalFileSystem]] with the PROCESS FORK removed from every file
@@ -84,29 +84,41 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
   */
 class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem)
 
+/** The raw FileContext side of the fork-free local FS, the counterpart
+  * of Hadoop's stock `RawLocalFs` (whose constructors are not public):
+  * the AbstractFileSystem API delegated to [[FastRawLocalFileSystem]].
+  */
+class FastRawLocalFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new FastRawLocalFileSystem, conf, "file", false) {
+  // as RawLocalFs: every name the local filesystem takes is valid
+  override def isValidName(src: String): Boolean = true
+}
+
 /** FileContext/AbstractFileSystem binding for the fork-free local FS —
   * `fs.AbstractFileSystem.file.impl`. Spark structured streaming's
-  * metadata logs (offsets/commits, the per-micro-batch WAL) resolve the
-  * local scheme through FileContext, which has its own impl registry;
-  * without this binding every micro-batch's log writes keep forking.
-  * Delegates to the RAW fast FS, mirroring how Hadoop's stock `LocalFs`
-  * reaches RawLocalFileSystem underneath its checksum layer — no
-  * FileContext consumer in Spark casts to the checksummed type.
+  * metadata logs (offsets/commits, the per-micro-batch WAL) and
+  * FileManifest's put-if-absent version rename resolve the local scheme
+  * through FileContext, which has its own impl registry; without this
+  * binding every micro-batch's log writes keep forking. The stock shape
+  * of `LocalFs` over `RawLocalFs`: the CRC sidecar layer over the raw
+  * fast FS, so checksums are written and verified exactly as stock, and
+  * the only change is that permission application stops forking.
   */
 class FastLocalFs(uri: URI, conf: Configuration)
-  extends DelegateToFileSystem(uri, new FastRawLocalFileSystem, conf, "file", false)
+  extends ChecksumFs(new FastRawLocalFs(uri, conf))
 
 object FastLocalFileSystem {
   /** The two session confs that install the fork-free local filesystem.
-    * Harness `main`s apply them; on deployments where `file:` is not the
-    * table store they are inert (the classes only ever serve file: URIs).
+    * [[graft.Session]] applies them to every session it builds; on
+    * deployments where `file:` is not the table store they are inert
+    * (the classes only ever serve file: URIs).
     */
   val sparkConfs: Seq[(String, String)] = Seq(
     "spark.hadoop.fs.file.impl" -> classOf[FastLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[FastLocalFs].getName)
 
-  /** Apply [[sparkConfs]] to a session builder — the one-liner every
-    * harness `main` calls right before `getOrCreate()`.
+  /** Apply [[sparkConfs]] to a session builder not built by
+    * [[graft.Session]] (the benchmark's, which adds its own paths).
     */
   def install(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =

@@ -316,6 +316,7 @@ object FileManifest {
           s"table $dataDir moved v$plannedV -> v$cur while this surgery " +
             "was planned/staged — a rival writer committed; re-run the " +
             "surgery against the current version")
+        if (plannedV == 0) requireNoStrayFiles(hfs, dataDir)
         val moved =
           if (hfs.exists(stg)) movePartitionTree(hfs, stg, root) else Nil
         val tmp = tmpManifest(dataDir)
@@ -332,6 +333,21 @@ object FileManifest {
         moved
       }
     } finally { if (hfs.exists(stg)) hfs.delete(stg, true) }
+  }
+
+  /** A table's first commit covers only the files it moves in, so data
+    * files already under the root (a table left in a layout this code
+    * cannot read, or a plain parquet write) would sit outside every
+    * version and fail each later read's stale guard: refuse before
+    * moving anything. `build`/`writeThrough` index what is on disk by
+    * design and do not come through here.
+    */
+  private def requireNoStrayFiles(hfs: FileSystem, dataDir: String): Unit = {
+    val stray = FsListing.listDataFiles(hfs, new Path(dataDir))
+    if (stray.nonEmpty) throw new IllegalStateException(
+      s"$dataDir has no table version but holds ${stray.size} data " +
+        s"file(s), e.g. ${stray.take(3).mkString(", ")}; rebuild it with " +
+        "writeThrough(..., mode = \"overwrite\") or delete the dir")
   }
 
   /** A surgery's fresh files get stats for `cols`/`bloomCols` only; when

@@ -87,4 +87,35 @@ class CommitGuardSpec extends AnyFunSuite with SparkSpec {
     assert(state(dir) === before)
     assert(!stagingLeft(dir), "staging dir left behind")
   }
+
+  test("a first commit onto a dir that already holds data files is refused") {
+    import spark.implicits._
+    val dir = freshDir("stray")
+    // a plain parquet write: data files that no table version references
+    Seq((1L, 2L, Seq(3L, 4L))).toDF("n_id", "cell", "pcode")
+      .write.parquet(dir)
+    def tree(): Seq[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator.asScala.map(_.toString).toVector.sorted
+      } finally s.close()
+    }
+    val before = tree()
+    val publish = intercept[IllegalStateException] {
+      FileManifest.publishVia(spark.range(10L).select(col("id").as("k")),
+        s"${dir}_pubstg", dir, Seq("k"))
+    }
+    // in place: the compaction reads the very files it would leave behind
+    val compact = intercept[IllegalStateException] {
+      graft.sim.Similarity.compactIndex(spark.read.parquet(dir), dir)
+    }
+    Seq(publish, compact).foreach { e =>
+      assert(e.getMessage.contains("has no table version but holds 1 data file"))
+      assert(e.getMessage.contains("mode = \"overwrite\""))
+    }
+    assert(tree() === before, "the refused commits left files behind")
+    assert(!tree().exists(_.contains("_versions")))
+    assert(!stagingLeft(dir), "staging dir left behind")
+  }
 }

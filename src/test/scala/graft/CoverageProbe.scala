@@ -15,12 +15,8 @@ import graft.sim.Similarity
 object CoverageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    // 8 cores: RecallAtScaleSpec's bounds cite runs at this count
+    val s = Session("graft-coverage-probe", cpus = 8)
 
     val e = Tables.embeddings(s, sfDir)
     val n = e.count()

@@ -15,7 +15,7 @@ import graft.sources.{FastLocalFileSystem, FastLocalFs}
   * same nine POSIX bits the parent's (process-forking) chmod path
   * applies, for every permission the engine's writers ever pass.
   * Anything less would silently change what lands on disk the moment
-  * the harness installs `fs.file.impl`.
+  * a session installs `fs.file.impl`.
   */
 class FastLocalFsSpec extends AnyFunSuite {
 
@@ -93,5 +93,40 @@ class FastLocalFsSpec extends AnyFunSuite {
     val out = fc.create(f, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE))
     out.write(42); out.close()
     assert(fc.getFileStatus(f).getLen === 1)
+  }
+
+  test("FileContext binding checksums like stock LocalFs: .crc sidecar, corruption detected") {
+    val root = s"${sys.props("java.io.tmpdir")}/graft_io/spec/fastfs_crc"
+    val payload = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
+    // the same write and read through the fast binding and through
+    // Hadoop's stock LocalFs (the default file: binding)
+    def roundTrip(impl: Option[String], tag: String): (Boolean, Boolean) = {
+      val conf = new Configuration()
+      impl.foreach(conf.set("fs.AbstractFileSystem.file.impl", _))
+      val fc = FileContext.getFileContext(new java.net.URI("file:///"), conf)
+      val dir = new Path(s"$root/$tag")
+      fc.delete(dir, true)
+      fc.mkdir(dir, FsPermission.getDirDefault, true)
+      val f = new Path(dir, "data.bin")
+      val out = fc.create(f, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE))
+      out.write(payload); out.close()
+      val crc = Files.exists(Paths.get(s"$root/$tag/.data.bin.crc"))
+      // flip one byte in the data file, behind the filesystem's back
+      val raw = Paths.get(s"$root/$tag/data.bin")
+      val bytes = Files.readAllBytes(raw)
+      bytes(100) = (bytes(100) ^ 0xFF).toByte
+      Files.write(raw, bytes)
+      // open(f, bufferSize): ChecksumFs verifies on that path (FilterFs's
+      // open(f) reads the raw file, in stock LocalFs as well)
+      val in = fc.open(f, 4096)
+      val detected =
+        try { in.readFully(new Array[Byte](payload.length)); false }
+        catch { case _: org.apache.hadoop.fs.ChecksumException => true }
+        finally in.close()
+      (crc, detected)
+    }
+    val stock = roundTrip(None, "stock")
+    assert(stock === ((true, true)), "stock LocalFs no longer checksums — the reference moved")
+    assert(roundTrip(Some(classOf[FastLocalFs].getName), "fast") === stock)
   }
 }

@@ -3,20 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all suites (getOrCreate — one JVM-wide
-  * session, so suites don't pay repeated startup).
+  * session, so suites don't pay repeated startup). Four cores whatever
+  * the host has, so spec plans and job counts do not move with it.
   */
 trait SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the suite runnable against a TIMESTAMP(NANOS) testdata round
-      // (schema inference only honors build-time values — Tables.scala)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session("graft-spec", cpus = 4)
 }

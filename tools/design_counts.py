@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Print the three design counts the ROADMAP tracks, plus the size of
-FileManifest.scala itself:
+FileManifest.scala itself and the environment variables the engine reads:
 
   src_main_lines        lines in the Scala sources under src/main and,
                         in brackets, the code lines among them (neither
@@ -12,6 +12,9 @@ FileManifest.scala itself:
   sparksession_sites    code lines that build a SparkSession by hand
                         (`SparkSession.builder`), under src/main and
                         src/test; comment lines are skipped
+  env_knobs             distinct environment variables the code under
+                        src/main reads (`sys.env...("KEY")` or
+                        `System.getenv("KEY")`), then their names
 
 Usage (from the repository root, or pass the root):
     python3 tools/design_counts.py [repo_root]
@@ -28,6 +31,8 @@ MANIFEST = os.path.join(ROOT, "src", "main", "scala", "graft", "sources",
 # private[...] members carry the modifier before `def`
 PUBLIC_DEF = re.compile(r"^  def\s+([A-Za-z_][A-Za-z0-9_]*)")
 BUILDER = re.compile(r"SparkSession\s*\.\s*builder")
+ENV_READ = re.compile(
+    r'(?:sys\.env(?:\.\w+)?|System\.getenv)\s*\(\s*"([^"]+)"')
 
 
 def scala_files(top):
@@ -62,6 +67,13 @@ def main():
     with open(MANIFEST, encoding="utf-8") as f:
         names = [m.group(1) for m in map(PUBLIC_DEF.match, f) if m]
 
+    knobs = set()
+    for p in scala_files(src_main):
+        with open(p, encoding="utf-8") as f:
+            for line in f:
+                if not is_comment(line):
+                    knobs.update(ENV_READ.findall(line))
+
     sites = {}
     for part in ("main", "test"):
         n = 0
@@ -76,6 +88,7 @@ def main():
     print(f"filemanifest_defs {len(names)} ({len(set(names))} distinct names)")
     print(f"sparksession_sites {sites['main'] + sites['test']} "
           f"(src/main {sites['main']}, src/test {sites['test']})")
+    print(f"env_knobs {len(knobs)} ({', '.join(sorted(knobs))})")
 
 
 if __name__ == "__main__":
