@@ -722,7 +722,7 @@ object ScaleSmoke {
   }
 
   /** PARTITIONED-SURGERY staging scaling: constant total rows across a
-    * growing partition-dir count, optimizePartitioned timed with the
+    * growing partition-dir count, optimizeTable on the tree timed with the
     * staging pool at 1 (the old sequential loop) vs the default 8. The
     * I/O is identical; the delta is pure job-scheduling latency — the
     * quantity that grows linearly with tree width when staging is
@@ -748,7 +748,7 @@ object ScaleSmoke {
         spark.conf.set(FileManifest.MaxConcurrentStagingKey, conc.toString)
         try {
           val t0 = System.nanoTime()
-          val w = FileManifest.optimizePartitioned(spark, dir, Seq("k"),
+          val w = FileManifest.optimizeTable(spark, dir, Seq("k"),
             targetRowsPerFile = rows / p)
           val dt = (System.nanoTime() - t0) / 1e9
           println(f"partsurg_optimize parts=$p%-4d conc=$conc%-2d files=$w%-5d $dt%7.2f s")
@@ -759,7 +759,7 @@ object ScaleSmoke {
 
   /** MANIFEST CEILING at 10⁴ files with bloom sidecars — the publish
     * cost question the coalesce(1)-era write left unmeasured: time the
-    * initial buildWithBloom (stats job + manifest write), then a keyed
+    * initial bloom-tracked build (stats job + manifest write), then a keyed
     * MERGE commit (whose manifest rewrite carries every entry byte-for-
     * byte through the sharded write), then a planned read. Prints the
     * manifest part count and total bytes so the sharding is observable.

@@ -87,9 +87,9 @@ object Tables {
     * full sort of document text, 2.1 s → 6.9 s. Hash-by-key exchanges
     * without sorting.
     *
-    * Call-site audit (r9, A/B via the `GRAFT_NO_SPREAD` knob below;
-    * QTime medians at sf0.1 single-file tables and at a 10x directory
-    * with 9 scan splits, spread ON vs OFF):
+    * Call-site audit (r9, the reason each call site exists; QTime
+    * medians at sf0.1 single-file tables and at a 10x directory with 9
+    * scan splits, spread ON vs OFF):
     *   - events (q19 validate):     1.37/1.68 at 1x, 1.87/2.34 at 10x —
     *     spread wins ~20% at both scales; KEPT (ValidationQueries).
     *   - embeddings (q30 cosine):   1.38/0.80 at 1x, 1.61/1.84 at 10x —
@@ -107,8 +107,7 @@ object Tables {
     */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (sys.env.contains("GRAFT_NO_SPREAD")) df // A/B audit knob (QTime)
-    else if (estimatedScanSplits(df).forall(_ < cores)) df.repartition(cores, key)
+    if (estimatedScanSplits(df).forall(_ < cores)) df.repartition(cores, key)
     else df
   }
 

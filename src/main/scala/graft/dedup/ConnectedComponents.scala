@@ -157,18 +157,13 @@ object ConnectedComponents {
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       while (!done && round < maxRounds) {
-        val t0 = System.nanoTime()
         val sym = cur.unionByName(cur.select(col("v").as("u"), col("u").as("v")))
         // LAZY checkpoint: the stats below are the materializing action,
         // so each round schedules one job instead of an eager-checkpoint
         // job plus a stats job (same total work, half the job-submission
         // round-trips — which is what a busy 1000-executor driver queues on)
         val next = smallStar(largeStar(sym)).localCheckpoint(false)
-        val t1 = System.nanoTime()
         val st = stats(next)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"CCROUND $round%d edges=${st.n}%d star=${(t1 - t0) / 1e9}%.2f " +
-            f"stats=${(System.nanoTime() - t1) / 1e9}%.2f forest=${st.starForest}")
         done = st.starForest || st.digest == prev.digest
         prev = st
         cur = next

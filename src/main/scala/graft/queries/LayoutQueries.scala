@@ -1829,7 +1829,9 @@ object LayoutQueries {
 
     // q184 is PARTITION-AWARE surgery: a hive-partitioned manifest
     // table takes a cross-partition range DELETE and a tree-wide
-    // OPTIMIZE, each as ONE atomic manifest commit (rewrites land
+    // OPTIMIZE through the verbs a flat table takes (deleteRange and
+    // optimizeTable read the layout from the manifest paths), each as
+    // ONE atomic manifest commit (rewrites land
     // inside their partition dirs; the partition column never flattens
     // into file data; a per-partition loop would be N commits with
     // readers seeing intermediate states — PartitionedSurgerySpec pins
@@ -1864,9 +1866,9 @@ object LayoutQueries {
       val b = o.agg(min("o_orderkey"), max("o_orderkey")).head()
       val (mn, mx) = (b.getLong(0), b.getLong(1))
       val (lo, hi) = (mn + (mx - mn) / 10, mn + 2 * ((mx - mn) / 10))
-      graft.sources.FileManifest.deleteRangePartitioned(
+      graft.sources.FileManifest.deleteRange(
         s, dir, "o_orderkey", lit(lo), lit(hi), Seq("o_orderkey"))
-      graft.sources.FileManifest.optimizePartitioned(
+      graft.sources.FileManifest.optimizeTable(
         s, dir, Seq("o_orderkey"), targetRowsPerFile = 1L << 20)
       graft.sources.ManifestFileIndex.read(s, dir)
         .groupBy(col("p").cast("long").as("p"))

@@ -426,7 +426,7 @@ object SourceQueries {
     // An id probe over a HASH-distributed tree: every file's [min,max]
     // spans ~the whole key range, so q115's bounds keep all 16 files —
     // but each event_id lives in exactly ONE file, and the per-file
-    // Bloom sidecar (FileManifest.buildWithBloom) answers "definitely
+    // Bloom sidecar (FileManifest.build with bloomCols) answers "definitely
     // not here" for the rest from one tiny manifest read. Kept files ≈
     // |keys| + fpp·files instead of all of them; the exact IN filter
     // absorbs false positives, so the result — and the oracle — is the
@@ -443,7 +443,7 @@ object SourceQueries {
         .select("event_id", "event_type", "user_id", "value")
         .repartition(16, col("event_id"))
         .write.mode("overwrite").parquet(dir)
-      FileManifest.buildWithBloom(s, dir, Seq("event_id"), Seq("event_id"))
+      FileManifest.build(s, dir, Seq("event_id"), Seq("event_id"))
       val (df, _, _) = FileManifest.readPointLookup(s, dir, "event_id",
         Seq(1L, 4097L, 9973L, 20011L))
       df.select(col("event_id"), col("event_type"), col("user_id"),

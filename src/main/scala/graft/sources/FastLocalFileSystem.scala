@@ -3,11 +3,12 @@ package graft.sources
 import java.net.URI
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** [[RawLocalFileSystem]] with the PROCESS FORK removed from every file
-  * create / mkdir / chmod.
+  * create / mkdir / chmod, and from the link-status probe of a path that
+  * is not a symbolic link.
   *
   * Why this exists (measured, round 21): when `libhadoop.so` is absent —
   * every vanilla `local[*]` deployment, CI box and this sandbox —
@@ -69,6 +70,19 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
         super.setPermission(p, permission)
     }
   }
+
+  /** The parent runs `readlink` as a child process for EVERY path here
+    * (its `libhadoop`-less fallback), and FileContext's rename asks
+    * about the source, the target and the target's parent — about three
+    * forks per put-if-absent version rename. For a path that is not a
+    * symbolic link the parent returns `getFileStatus(f)`, a missing
+    * path included (FileNotFoundException); a real link keeps the
+    * parent's answer.
+    */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath))
+      super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 /** The `fs.file.impl` binding: the stock CHECKSUMMED [[LocalFileSystem]]
@@ -79,8 +93,8 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
   * `file:` filesystem to LocalFileSystem, so a raw-typed replacement
   * crashes streaming state checkpoints with a ClassCastException
   * (measured on q103 before this shape). CRC sidecar behavior is
-  * exactly stock; the only change is that permission application stops
-  * forking.
+  * exactly stock; the only change is that permission application and
+  * link-status probes stop forking.
   */
 class FastLocalFileSystem extends LocalFileSystem(new FastRawLocalFileSystem)
 
@@ -101,11 +115,17 @@ class FastRawLocalFs(uri: URI, conf: Configuration)
   * through FileContext, which has its own impl registry; without this
   * binding every micro-batch's log writes keep forking. The stock shape
   * of `LocalFs` over `RawLocalFs`: the CRC sidecar layer over the raw
-  * fast FS, so checksums are written and verified exactly as stock, and
-  * the only change is that permission application stops forking.
+  * fast FS, so checksums are written and verified as stock — and also
+  * on `open(f)`, where stock LocalFs skips them.
   */
 class FastLocalFs(uri: URI, conf: Configuration)
-  extends ChecksumFs(new FastRawLocalFs(uri, conf))
+    extends ChecksumFs(new FastRawLocalFs(uri, conf)) {
+  // ChecksumFs verifies only in open(f, bufferSize); FilterFs's open(f) —
+  // what `FileContext.open(f)` and Spark's checkpoint file manager call —
+  // would read the raw file unchecked
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object FastLocalFileSystem {
   /** The two session confs that install the fork-free local filesystem.

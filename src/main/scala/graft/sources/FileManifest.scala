@@ -382,28 +382,33 @@ object FileManifest {
       cols, bloomCols, expectedPerFile, fpp), carried.columns.toIndexedSeq))
 
   /** One pass over the directory: per-file row count + min/max of each
-    * tracked column, committed as the table's next version.
+    * tracked column, committed as the table's next version — plus a
+    * per-file BLOOM FILTER sidecar over each of `bloomCols` (integral or
+    * string key columns), the skipping layer min/max bounds can't
+    * provide: a POINT lookup on a high-cardinality key that is
+    * uncorrelated with file layout (an id probe over an arrival-ordered
+    * tree) intersects every file's [min,max], but a per-file Bloom
+    * answers "definitely not here" for all but the files actually
+    * holding the key (+ the fpp's false positives). Delta's bloom-filter
+    * index / Iceberg puffin blobs are the same idea; here the serialized
+    * filter (Spark's `util.sketch.BloomFilter`, `expectedPerFile`/`fpp`-
+    * sized) rides as a binary column in the one manifest parquet. No
+    * false negatives ever — Bloom semantics — so pruning stays SOUND; a
+    * false positive only costs one extra file read under the exact row
+    * filter.
     */
-  def build(spark: SparkSession, dataDir: String, cols: Seq[String]): Unit =
-    buildWithBloom(spark, dataDir, cols, Nil)
+  def build(spark: SparkSession, dataDir: String, cols: Seq[String],
+      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
+      fpp: Double = 0.01): Unit =
+    rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp, 0L)
 
-  /** [[build]] plus a per-file BLOOM FILTER sidecar over each of
-    * `bloomCols` (long-typed key columns) — the skipping layer min/max
-    * bounds can't provide: a POINT lookup on a high-cardinality key that
-    * is uncorrelated with file layout (an id probe over an
-    * arrival-ordered tree) intersects every file's [min,max], but a
-    * per-file Bloom answers "definitely not here" for all but the
-    * files actually holding the key (+ the fpp's false positives).
-    * Delta's bloom-filter index / Iceberg puffin blobs are the same
-    * idea; here the serialized filter (Spark's `util.sketch.BloomFilter`,
-    * `expectedPerFile`/`fpp`-sized) rides as a binary column in the one
-    * manifest parquet. No false negatives ever — Bloom semantics —
-    * so pruning stays SOUND; a false positive only costs one extra file
-    * read under the exact row filter.
+  /** [[build]], numbered past `versionFloor` too: writeThrough's
+    * overwrite clears the old versions with the tree and passes the
+    * outgoing version here.
     */
-  def buildWithBloom(spark: SparkSession, dataDir: String, cols: Seq[String],
-      bloomCols: Seq[String], expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01, versionFloor: Long = 0L): Unit = {
+  private def rebuild(spark: SparkSession, dataDir: String,
+      cols: Seq[String], bloomCols: Seq[String], expectedPerFile: Long,
+      fpp: Double, versionFloor: Long): Unit = {
     val root = new Path(dataDir)
     val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // a from-scratch rebuild re-stats the RAW files: live deletion
@@ -700,7 +705,7 @@ object FileManifest {
     } finally reader.close()
   }
 
-  /** The one per-file stats aggregation both [[buildWithBloom]] and the
+  /** The one per-file stats aggregation both [[build]] and the
     * incremental [[refresh]] use — including the bloom-key type guard,
     * so the two paths can never drift: INTEGRAL key columns only (the
     * sidecar stores `cast(long)` and the probe compares Catalyst
@@ -854,26 +859,12 @@ object FileManifest {
     // DATA-CHANGING publish with one of those names would silently drop
     // its changes from every CDC span — reserve the reorg verbs for the
     // internal operators that actually guarantee invariance
-    // (optimizeTable/optimizePartitioned/purgeDv).
+    // (optimizeTable/purgeDv).
     require(!ReorgOps.contains(opName),
       s"publishVia opName '$opName' is reserved: it asserts the commit " +
         "is multiset-invariant to the change feed (changesBetween skips " +
-        "such hops); use optimizeTable/optimizePartitioned/purgeDv for " +
-        "reorganizations, or any other opName for data changes")
-    publishViaUnchecked(df, stagingDir, dataDir, cols, bloomCols,
-      expectedPerFile, fpp, opName, expectedVersion)
-  }
-
-  /** [[publishVia]] minus the reorg-opName guard — for the INTERNAL
-    * reorganization verbs whose output is multiset-equal to their input
-    * by construction.
-    */
-  private[sources] def publishViaUnchecked(df: DataFrame,
-      stagingDir: String, dataDir: String,
-      cols: Seq[String], bloomCols: Seq[String] = Nil,
-      expectedPerFile: Long = 65536L, fpp: Double = 0.01,
-      opName: String = "publish",
-      expectedVersion: Option[Long] = None): Unit = {
+        "such hops); use optimizeTable/purgeDv for reorganizations, or " +
+        "any other opName for data changes")
     val spark = df.sparkSession
     // `stagingDir` names the caller's staging LOCATION (its
     // filesystem/volume); commitStaged suffixes it per call
@@ -896,8 +887,8 @@ object FileManifest {
     // current snapshot (compaction), so a rival commit between this
     // point and the locked publish would be silently overwritten —
     // validate under the lock, fail loud on movement. A caller whose
-    // `df` EAGERLY pinned an earlier version (optimizeTable's
-    // ManifestFileIndex.read collects its file set + dv rows at frame
+    // `df` EAGERLY pinned an earlier version (`ManifestFileIndex.read`
+    // with `asOf` collects its file set + dv rows at frame
     // construction) passes that version as `expectedVersion` — reading
     // the token here would otherwise observe a rival commit landing
     // AFTER the caller's resolution and publish stale content right
@@ -920,7 +911,7 @@ object FileManifest {
     * live (partition overwrites), carry every other entry byte-for-byte
     * (per-file stats and blooms never change once a file is immutable).
     * A manifest whose tracked-column set differs from `cols`/`bloomCols`
-    * (or none at all) falls back to a full [[buildWithBloom]].
+    * (or none at all) falls back to a full [[build]].
     */
   def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
@@ -1030,11 +1021,11 @@ object FileManifest {
     }.toDF("version", "op", "n_files", "n_rows").orderBy("version")
   }
 
-  /** Surgery guard: file rewrites land at the table ROOT, so a
+  /** Surgery guard of the flat-only writers (publishVia, mergeKeys,
+    * purgeDv): their file rewrites land at the table ROOT, so a
     * hive-partitioned tree would silently migrate its partition column
     * into file data (and double it against the directory-inferred
-    * one) — fail loud instead; partitioned trees compact/delete
-    * per-partition directory.
+    * one) — fail loud instead, toward the verbs that read the layout.
     */
   private def requireFlatTable(spark: SparkSession, dataDir: String,
       verb: String): Unit = {
@@ -1047,8 +1038,9 @@ object FileManifest {
       s"$verb requires a FLAT table: $root has partition subdirs (e.g. " +
         s"${if (sub.nonEmpty) sub.head.getPath.getName else ""}) — a root-level " +
         "rewrite would flatten the partition column into file data; use " +
-        "optimizePartitioned/deleteRangePartitioned (partition-aware, one " +
-        s"atomic commit) or run the $verb per partition directory")
+        "optimizeTable/deleteRange or the DV verbs (they keep each file " +
+        s"in its partition dir, one atomic commit) or run the $verb per " +
+        "partition directory")
   }
 
   /** TIME TRAVEL: plan the table as it stood at `version`. Every
@@ -1623,7 +1615,7 @@ object FileManifest {
     }.toIndexedSeq: _*)
 
   /** Does the CURRENT manifest carry any live deletion vector? The
-    * rebuild guard: [[build]]/[[buildWithBloom]] re-stat raw files and
+    * rebuild guard: [[build]] re-stats raw files and
     * would silently RESURRECT DV-deleted rows — they fail loud instead
     * (purge first). One tiny manifest job, only on rebuild paths.
     */
@@ -1654,7 +1646,10 @@ object FileManifest {
     * an unbounded DV defeats the metadata-sized story) — both shapes
     * can land in one call, atomically in one version. DVs merge across
     * calls (union of positions); a second delete of an already-dead row
-    * is idempotent. MVCC/OCC protocol identical to [[deleteRange]].
+    * is idempotent. MVCC/OCC protocol identical to [[deleteRange]]. The
+    * table's layout comes from the manifest paths ([[deleteDvCore]]), so
+    * a hive-partitioned tree takes the same call; a partition-column `c`
+    * fails loud toward the directory-drop path, as in [[deleteRange]].
     *
     * Returns (files DV-marked, files rewritten, files untouched).
     */
@@ -1662,7 +1657,6 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01, maxDvFraction: Double = 0.5): (Int, Int, Int) = {
-    requireFlatTable(spark, dataDir, "deleteRangeDV")
     val (m, plannedV) = currentManifest(spark, dataDir)
     require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
       s"deleteRangeDV needs tracked bounds for $c under $dataDir")
@@ -1705,7 +1699,7 @@ object FileManifest {
     * On a HIVE-PARTITIONED tree (read from the manifest paths) the DV
     * marks stay metadata-only and over-threshold rewrites stage as ONE
     * dynamic-partition job into their own partition dirs, publishing
-    * as ONE manifest version (same contract as [[optimizePartitioned]]);
+    * as ONE manifest version (same contract as [[optimizeTable]]);
     * erasing BY the partition column fails loud toward the
     * directory-drop path. Returns (files DV-marked, files rewritten,
     * files untouched).
@@ -1789,8 +1783,10 @@ object FileManifest {
     * usual OCC protocol. matchRows/keepRows MUST be exact complements
     * over non-null match columns (an approximate matcher would mark
     * wrong positions dead); both may be invoked more than once, each
-    * time on a fresh scan. Returns (dv files, rewritten files,
-    * untouched files).
+    * time on a fresh scan. Flat or hive-partitioned comes from the
+    * manifest paths it collects for the plan; on a tree the rewrites
+    * stage into their own partition dirs and `scanCols` must be
+    * physical. Returns (dv files, rewritten files, untouched files).
     */
   private def deleteDvCore(spark: SparkSession, dataDir: String,
       m: DataFrame, plannedV: Long, candidate: Column, scanCols: Seq[String],
@@ -1828,7 +1824,7 @@ object FileManifest {
     // shows no layout, so only then the root listing decides: a tree
     // must not take root-level files. The key/scan columns must be
     // PHYSICAL: erasing BY the partition column is a directory drop, not
-    // a row surgery (same guard as deleteRangePartitioned), and a
+    // a row surgery (same guard as deleteRange), and a
     // partition-column matchPred would rewrite every file of the matched
     // dirs for nothing.
     val partCols: Seq[String] =
@@ -2011,11 +2007,17 @@ object FileManifest {
     * conservatively rewritten). Untouched files are CARRIED BY
     * REFERENCE — their manifest entries, per-file stats and bloom
     * binaries ride into the new version byte-for-byte, so the cost is
-    * O(intersecting files), never a table rewrite. Publishes as a new MVCC
-    * version: the pre-delete snapshot stays readable through
-    * [[readAsOf]] until [[vacuum]]'s retention reaps it — which is when
-    * the deleted bytes actually leave disk (the compliance purge point,
-    * exactly Delta's VACUUM contract).
+    * O(intersecting files), never a table rewrite. Each candidate's
+    * survivors rewrite INTO its own partition directory (a flat table is
+    * the one "" partition), every partition stages first, and all of it
+    * publishes as ONE MVCC version: the pre-delete snapshot stays
+    * readable through [[readAsOf]] until [[vacuum]]'s retention reaps
+    * it — which is when the deleted bytes actually leave disk (the
+    * compliance purge point, exactly Delta's VACUUM contract). On a
+    * hive-partitioned tree `c` must be a PHYSICAL file column: deleting
+    * by the partition column is a directory drop (remove the matching
+    * `col=value` dirs and refresh), and fails loud here rather than
+    * rewrite every file of the matched dirs to zero rows.
     *
     * Returns (files rewritten, files carried).
     */
@@ -2023,7 +2025,6 @@ object FileManifest {
       lo: Column, hi: Column, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
       fpp: Double = 0.01): (Int, Int) = {
-    requireFlatTable(spark, dataDir, "deleteRange")
     // optimistic token: plan + staging run OUTSIDE the lock (long Spark
     // jobs must not serialize rival readers/writers); the locked commit
     // validates the version is still the one this plan read
@@ -2044,19 +2045,34 @@ object FileManifest {
     val candPaths = flags.filter(!_._2).map(_._1).sorted
     val nCarried = flags.count(_._2)
     if (candPaths.isEmpty) return (0, nCarried)
+    // the layout (hive `k=v` dir levels) from the paths just collected,
+    // as [[deleteDvCore]] reads it: the predicate column must live in
+    // the file bytes, or the survivor filter below would read it from
+    // the DIRECTORY
+    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
+    require(!partitionColsOf(rootQ, flags.map(_._1).toSeq, "deleteRange")
+        .contains(c),
+      s"deleteRange column '$c' is a PARTITION column under $dataDir — " +
+        "drop the matching partition directories and refresh instead of " +
+        "a row-level rewrite")
+    val byPart = candPaths.groupBy(relPartitionDir(rootQ, _)).toSeq.sortBy(_._1)
+    val hasDv = m.columns.contains(DvCol)
     // DV'd rows must not resurrect. NULL-c rows SURVIVE: a NULL never
     // satisfies the range predicate (the same rule that makes read-side
     // bound pruning sound), but a bare !(between) evaluates to NULL for
     // them and the filter would silently delete every NULL row in a
     // rewritten file
-    val survivors = liveAt(spark.read.option("basePath", dataDir)
-      .parquet(candPaths.toIndexedSeq: _*), dataDir, plannedV,
-      m.columns.contains(DvCol))
-      .filter(col(c).isNull || !(col(c) >= lo && col(c) <= hi))
+    val keep = col(c).isNull || !(col(c) >= lo && col(c) <= hi)
     commitStaged(spark, dataDir, plannedV, "delete", flags.length.toLong,
         s"${dataDir}_stg") { stg =>
-      labeled(spark, "graft: deleteRange stage") {
-        survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
+      stageConcurrently(spark, byPart) { case (rel, files) =>
+        labeled(spark, "graft: deleteRange stage") {
+          // reads the CURRENT files: untouched
+          liveAt(spark.read.parquet(files.toIndexedSeq: _*), dataDir,
+            plannedV, hasDv)
+            .filter(keep).write.parquet(
+              if (rel.isEmpty) stg.toString else s"$stg/$rel")
+        }
       }
       requireTracked(spark, "delete", dataDir, m.columns.toSeq, cols,
         bloomCols, stg)
@@ -2635,44 +2651,67 @@ object FileManifest {
     if (r.isNullAt(0)) 0L else r.getLong(0) // empty snapshot sums NULL
   }
 
-  /** OPTIMIZE (bin-packing compaction) for the MVCC table: read the
-    * CURRENT live rows (deletion vectors applied), rewrite them as
-    * `ceil(liveRows / targetRowsPerFile)` right-sized files, and
-    * publish as one MVCC version — small-file debt and DV debt retire
-    * together (the post-optimize manifest carries no dv columns), the
-    * pre-optimize snapshot stays readable until vacuum retention, and
-    * the change feed across the optimize nets to ZERO rows (physical
-    * reorganization is invisible to CDC consumers — the q165/q176
-    * contract). For clustering-preserving compaction of a sort layout
-    * use [[Staging.compactSorted]]; this verb is the generic
-    * OPTIMIZE shape. FLAT TABLES ONLY: the rewrite lands root-level
-    * files, so a hive-partitioned tree would migrate its partition
-    * column into file data — compact such trees per-partition instead.
+  /** OPTIMIZE (bin-packing compaction) for the MVCC table: each
+    * partition directory's CURRENT live rows (deletion vectors applied)
+    * rewrite into `ceil(live / targetRowsPerFile)` right-sized files
+    * INSIDE that directory — read without basePath, so only physical
+    * columns land in the files and a hive tree's partition encoding
+    * stays directory-only; a flat table is the one "" partition. ALL
+    * partitions stage first and publish under ONE manifest version, so
+    * readers never see a half-compacted tree. Small-file debt and DV
+    * debt retire together (the post-optimize manifest carries no dv
+    * columns), the pre-optimize snapshot stays readable until vacuum
+    * retention, and the change feed across the optimize nets to ZERO
+    * rows (physical reorganization is invisible to CDC consumers — the
+    * q165/q176/q180 contract). Partitions stage CONCURRENTLY under a
+    * bounded pool (`graft.surgery.maxConcurrentStaging`, see
+    * [[stageConcurrently]]): the job count is O(partition dirs), but
+    * their scheduling latency overlaps instead of summing. For
+    * clustering-preserving compaction of a sort layout use
+    * [[Staging.compactSorted]]; this verb is the generic OPTIMIZE shape.
     * Returns the number of files written.
     */
   def optimizeTable(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, targetRowsPerFile: Long = 1L << 20,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile=$targetRowsPerFile")
-    // PIN the version BEFORE resolving any frame: ManifestFileIndex.read
-    // collects its file set and dv rows eagerly at construction, so the
-    // OCC token must be captured no later — a rival commit between the
-    // frame's resolution and a late token read would make the commit check
-    // validate against the RIVAL's version and publish v0-derived content
-    // over it (silently reverting the rival's delete/merge). The live
-    // count, the read, and publishVia's token all pin to v0; a rival
-    // commit anywhere in the window now fails loud as
-    // ConcurrentWriteException (withConflictRetry replans).
-    val (mdf, _, v0) = requireCovering(spark, dataDir) // fastCount's guard
-    val live = liveCount(mdf)
-    require(live > 0, s"optimizeTable on empty table $dataDir")
-    val nFiles = ((live + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    publishViaUnchecked(
-      ManifestFileIndex.read(spark, dataDir, asOf = Some(v0))
-        .repartition(nFiles),
-      s"${dataDir}_optstg", dataDir, cols, bloomCols, expectedPerFile, fpp,
-      opName = "optimize", expectedVersion = Some(v0))
-    nFiles
+    // staleness guard; PINS v0 before any frame resolves: the per-file
+    // live counts, the staged reads and their dv resolution all read v0,
+    // and the commit validates against v0, so a rival commit anywhere in
+    // the window fails loud as ConcurrentWriteException
+    // (withConflictRetry replans) instead of being reverted
+    val (m, _, v0) = requireCovering(spark, dataDir)
+    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
+    val meta = labeled(spark, "graft: optimize plan") {
+      m.select(ManifestFileIndex.normPath(col("file")).as("f"),
+        liveRows(m).as("nr")).collect()
+    }.map(r => (r.getString(0), r.getLong(1)))
+    require(meta.map(_._2).sum > 0, s"optimizeTable on empty table $dataDir")
+    val hasDv = m.columns.contains(DvCol)
+    val byPart = meta.groupBy(t => relPartitionDir(rootQ, t._1)).toSeq.sortBy(_._1)
+    val written = new java.util.concurrent.atomic.AtomicInteger(0)
+    commitStaged(spark, dataDir, v0, "optimize", 0L, s"${dataDir}_stg") { stg =>
+      stageConcurrently(spark, byPart) { case (rel, files) =>
+        val live = files.map(_._2).sum
+        if (live > 0) {
+          val n = ((live + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+          labeled(spark, "graft: optimize stage") {
+            liveAt(spark.read.parquet(files.map(_._1).toIndexedSeq: _*),
+              dataDir, v0, hasDv)
+              .repartition(n).write.parquet(
+                if (rel.isEmpty) stg.toString else s"$stg/$rel")
+          }
+          written.addAndGet(n)
+        }
+      }
+    } { moved =>
+      // fresh stats for the WHOLE new file set (basePath-anchored, so
+      // tracked partition columns get real bounds — that is what lets
+      // the manifest prune partitions by range later)
+      statsForFiles(spark, dataDir, moved, cols, bloomCols,
+        expectedPerFile, fpp)
+    }
+    written.get()
   }
 
   /** The staged→live move for partition-aware surgeries: every data
@@ -2713,8 +2752,8 @@ object FileManifest {
     moved.result()
   }
 
-  /** Bounded-concurrency submitter for per-partition STAGING jobs (the
-    * partition-aware surgeries): each partition's staged write is its
+  /** Bounded-concurrency submitter for per-partition STAGING jobs
+    * ([[optimizeTable]], [[deleteRange]]): each partition's staged write is its
     * own Spark job — at 10⁴ partitions a sequential loop pays 10⁴ job-
     * scheduling latencies for work the cluster could overlap, turning a
     * minutes-long I/O into tens of minutes of pure scheduling. Spark's
@@ -2839,129 +2878,6 @@ object FileManifest {
           s"${files.head} vs $f")
     }
     first
-  }
-
-  /** OPTIMIZE for a HIVE-PARTITIONED manifest table — the partition-
-    * aware twin of [[optimizeTable]] (which guards itself FLAT-only,
-    * since a root-level rewrite would flatten the partition column into
-    * file data). Each partition directory's live rows (DVs applied)
-    * rewrite into `ceil(live / targetRowsPerFile)` files INSIDE that
-    * directory — read without basePath, so only physical columns land
-    * in the files and the partition encoding stays directory-only —
-    * and, crucially, ALL partitions stage first and publish under ONE
-    * manifest version: single-version atomicity across the whole tree,
-    * where a per-partition loop of N optimizeTable calls would be N
-    * commits with readers seeing intermediate states. DV debt retires
-    * tree-wide (the post-optimize manifest carries no dv columns), the
-    * pre-optimize snapshot stays readable until vacuum retention, and
-    * the change feed across it nets to zero — same contract as the
-    * flat verb, q180. Partitions stage CONCURRENTLY under a bounded
-    * pool (`graft.surgery.maxConcurrentStaging`, default 8 — see
-    * [[stageConcurrently]]): the job count is still O(partition dirs)
-    * but the per-job scheduling latency overlaps instead of summing.
-    * Works on flat tables too (one "" partition ≡ optimizeTable).
-    * Returns the number of files written.
-    */
-  def optimizePartitioned(spark: SparkSession, dataDir: String,
-      cols: Seq[String], bloomCols: Seq[String] = Nil,
-      targetRowsPerFile: Long = 1L << 20,
-      expectedPerFile: Long = 65536L, fpp: Double = 0.01): Int = {
-    require(targetRowsPerFile > 0, s"targetRowsPerFile=$targetRowsPerFile")
-    // staleness guard; pins v0 BEFORE any frame resolution — same OCC
-    // discipline as optimizeTable (the eager reads below all resolve at
-    // v0, and the commit validates against v0)
-    val (m, _, v0) = requireCovering(spark, dataDir)
-    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
-    val meta = m.select(ManifestFileIndex.normPath(col("file")).as("f"),
-        liveRows(m).as("nr"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val hasDv = m.columns.contains(DvCol)
-    require(meta.nonEmpty, s"optimizePartitioned on empty table $dataDir")
-    val byPart = meta.groupBy(t => relPartitionDir(rootQ, t._1)).toSeq.sortBy(_._1)
-    val written = new java.util.concurrent.atomic.AtomicInteger(0)
-    commitStaged(spark, dataDir, v0, "optimize", 0L, s"${dataDir}_stg") { stg =>
-      // partitions stage CONCURRENTLY (bounded pool): the I/O is O(live
-      // bytes) either way, but sequential submission pays one job-
-      // scheduling latency PER partition dir — linear in tree width —
-      // where the pool overlaps them (ScaleSmoke's partitioned_surgery
-      // tier measures the wall-time difference at 64 dirs)
-      stageConcurrently(spark, byPart) { case (rel, files) =>
-        val live = files.map(_._2).sum
-        if (live > 0) {
-          val n = ((live + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          liveAt(spark.read.parquet(files.map(_._1).toIndexedSeq: _*),
-            dataDir, v0, hasDv)
-            .repartition(n).write.parquet(
-              if (rel.isEmpty) stg.toString else s"$stg/$rel")
-          written.addAndGet(n)
-        }
-      }
-    } { moved =>
-      require(moved.nonEmpty,
-        s"optimizePartitioned produced no data files for $dataDir")
-      // fresh stats for the WHOLE new file set (basePath-anchored, so
-      // tracked partition columns get real bounds — that is what lets
-      // the manifest prune partitions by range later)
-      statsForFiles(spark, dataDir, moved, cols, bloomCols,
-        expectedPerFile, fpp)
-    }
-    written.get()
-  }
-
-  /** Range DELETE for a HIVE-PARTITIONED manifest table — the
-    * partition-aware twin of [[deleteRange]], same stage-all-then-
-    * one-commit atomicity as [[optimizePartitioned]]: candidate files
-    * (manifest bounds intersecting `[lo, hi]`) rewrite their survivors
-    * INTO their own partition directories; untouched files carry by
-    * reference byte-for-byte; everything publishes as ONE MVCC version.
-    * `c` must be a PHYSICAL file column — deleting by the partition
-    * column itself is a directory-level operation (drop the matching
-    * `col=value` dirs and refresh), and silently treating it as a row
-    * filter would rewrite every file to delete whole partitions. Fails
-    * loud in that case. Returns (files rewritten, files carried).
-    */
-  def deleteRangePartitioned(spark: SparkSession, dataDir: String, c: String,
-      lo: Column, hi: Column, cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01): (Int, Int) = {
-    val (m, _, v0) = requireCovering(spark, dataDir)
-    val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
-    require(m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c"),
-      s"deleteRangePartitioned needs tracked bounds for $c under $dataDir")
-    val disjoint = coalesce(col(s"max_$c") < lo || col(s"min_$c") > hi,
-      lit(false))
-    val flags = m.select(ManifestFileIndex.normPath(col("file")).as("f"),
-        disjoint.as("d")).collect()
-      .map(r => (r.getString(0), r.getBoolean(1)))
-    val hasDv = m.columns.contains(DvCol)
-    val candPaths = flags.filter(!_._2).map(_._1).sorted
-    val nCarried = flags.count(_._2)
-    if (candPaths.isEmpty) return (0, nCarried)
-    // partition-column guard: the predicate column must live in the
-    // file bytes, or the survivor filter below would read it from the
-    // DIRECTORY and rewrite files only to re-encode whole-partition
-    // deletes the cheap dir-drop path should handle
-    require(physicalFields(spark, candPaths.head).contains(c),
-      s"deleteRangePartitioned column '$c' is a PARTITION column under " +
-        s"$dataDir — drop the matching partition directories and refresh " +
-        "instead of a row-level rewrite")
-    val byPart = candPaths.groupBy(relPartitionDir(rootQ, _)).toSeq.sortBy(_._1)
-    val keep = col(c).isNull || !(col(c) >= lo && col(c) <= hi)
-    commitStaged(spark, dataDir, v0, "delete", flags.length.toLong,
-        s"${dataDir}_stg") { stg =>
-      // concurrent staging — see optimizePartitioned
-      stageConcurrently(spark, byPart) { case (rel, files) =>
-        liveAt(spark.read.parquet(files.toIndexedSeq: _*), dataDir, v0, hasDv)
-          .filter(keep).write.parquet(
-            if (rel.isEmpty) stg.toString else s"$stg/$rel")
-      }
-      requireTracked(spark, "delete", dataDir, m.columns.toSeq, cols,
-        bloomCols, stg)
-    } { moved =>
-      withFresh(spark, dataDir, m.filter(disjoint), moved, cols, bloomCols,
-        expectedPerFile, fpp)
-    }
-    (candPaths.length, nCarried)
   }
 
   /** Manifest-aware orphan-file VACUUM (the remove-orphans verb of the
@@ -3133,17 +3049,17 @@ object FileManifest {
     val vs = listVersions(hfs, dataDir)
     val wantCols = statsColumns(cols, bloomCols).sorted
     if (vs.current == 0L)
-      return buildWithBloom(spark, dataDir, cols, bloomCols, expectedPerFile,
-        fpp, versionFloor)
+      return rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp,
+        versionFloor)
     val existing = readVersion(spark, dataDir, vs, vs.current)
     // dv columns are ORTHOGONAL to the tracked-column set: a refresh
     // must carry them (a rebuild re-stats raw files and would resurrect
-    // DV-deleted rows — buildWithBloom's own guard fails loud on that)
+    // DV-deleted rows — build's own guard fails loud on that)
     val existingCore =
       existing.columns.filterNot(c => c == DvCol || c == DvDelCol)
     if (existingCore.sorted.toSeq != wantCols)
-      return buildWithBloom(spark, dataDir, cols, bloomCols, expectedPerFile,
-        fpp, versionFloor)
+      return rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp,
+        versionFloor)
 
     val live = FsListing.listDataFiles(hfs, root)
     // carried entries stay DISTRIBUTED: a broadcast semi-join against
@@ -3313,7 +3229,7 @@ object FileManifest {
     val (mdf, total, v0) = requireCovering(spark, dataDir)
     require(mdf.columns.contains(s"bloom_$c"),
       s"manifest under $dataDir has no bloom sidecar for '$c' — " +
-        s"buildWithBloom(..., bloomCols = Seq(\"$c\")) first")
+        s"build(..., bloomCols = Seq(\"$c\")) first")
     val kept = mdf.filter(probe(col(s"bloom_$c")))
       .select(ManifestFileIndex.normPath(col("file")))
       .collect().map(_.getString(0)).toSeq

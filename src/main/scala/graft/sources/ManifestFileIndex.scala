@@ -89,7 +89,7 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
       .filter(c => manifestSchema.fieldNames.contains(s"max_$c"))
       .filter(c => manifestSchema(s"min_$c").dataType ==
         org.apache.spark.sql.types.StringType).toSet
-  // bloom sidecars (buildWithBloom): an EQUALITY conjunct on a
+  // bloom sidecars (build with bloomCols): an EQUALITY conjunct on a
   // bloom-tracked column additionally prunes by MEMBERSHIP — the
   // point-lookup layer min/max bounds can't provide (a
   // hash-distributed key intersects every file's range), composed
@@ -187,7 +187,7 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
     // bloom probes are sound only for INTEGRAL-typed attributes: the
     // sidecar stores cast-to-long keys, and a non-integral equality
     // literal (timestamp micros vs stored seconds, fractional double)
-    // could false-negative — the buildWithBloom guard enforces this at
+    // could false-negative — build's bloom-column guard enforces this at
     // build time, and this read-side check keeps even an off-contract
     // legacy sidecar from pruning unsoundly.
     val integralAttrs = dataFilters.flatMap(_.collect {

@@ -61,8 +61,8 @@ class CommitGuardSpec extends AnyFunSuite with SparkSpec {
       ("deleteRange", flat, () => FileManifest.deleteRange(spark, flat, "k",
         lit(100L), lit(120L), Seq("k"))),
       ("purgeDv", flat, () => FileManifest.purgeDv(spark, flat, Seq("k"))),
-      ("deleteRangePartitioned", tree, () =>
-        FileManifest.deleteRangePartitioned(spark, tree, "k", lit(100L),
+      ("deleteRange on a tree", tree, () =>
+        FileManifest.deleteRange(spark, tree, "k", lit(100L),
           lit(120L), Seq("k"))))
     calls.foreach { case (verb, dir, call) =>
       val before = state(dir)

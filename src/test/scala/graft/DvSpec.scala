@@ -382,17 +382,34 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     assert(h.map(_._2).toSeq === Seq("build", "dv-delete", "purge", "optimize"))
     assert(h.map(_._3).toSeq === Seq(2000L, 1990L, 1990L, 1990L))
 
-    // a hive-partitioned tree must fail LOUD on any root-level surgery
+    // a hive-partitioned tree fails LOUD on the flat-only surgeries
+    // (their rewrites land at the root) ...
     val pdir = freshDir("dv_part_guard")
     df.withColumn("p", col("k") % 2).write.partitionBy("p").parquet(pdir)
     FileManifest.build(spark, pdir, Seq("k"))
     val e = intercept[IllegalArgumentException] {
-      FileManifest.deleteRange(spark, pdir, "k", lit(0L), lit(10L), Seq("k"))
+      FileManifest.mergeKeys(spark, pdir, Seq((3L, 3L, 1L)).toDF("k", "v", "p"),
+        "k", Seq("k"))
     }
     assert(e.getMessage.contains("FLAT"))
-    intercept[IllegalArgumentException] {
-      FileManifest.deleteRangeDV(spark, pdir, "k", lit(0L), lit(10L), Seq("k"))
-    }
+    // ... while the range deletes read the layout from the manifest: one
+    // version each, rewrites inside their partition dirs, rows equal to
+    // the filtered full scan
+    def rows(): Seq[(Long, Long)] = ManifestFileIndex.read(spark, pdir)
+      .select(col("k"), col("p").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val full = rows()
+    val v0 = FileManifest.versions(spark, pdir).max
+    FileManifest.deleteRange(spark, pdir, "k", lit(100L), lit(110L), Seq("k"))
+    assert(FileManifest.versions(spark, pdir).max === v0 + 1)
+    FileManifest.deleteRangeDV(spark, pdir, "k", lit(200L), lit(1200L),
+      Seq("k"))
+    assert(FileManifest.versions(spark, pdir).max === v0 + 2)
+    assert(spark.read.parquet(ManifestDir(spark, pdir)).select("file")
+      .collect().map(_.getString(0).replace("%3D", "="))
+      .forall(f => f.contains("/p=0/") || f.contains("/p=1/")))
+    assert(rows() === full.filterNot { case (k, _) =>
+      (k >= 100L && k <= 110L) || (k >= 200L && k <= 1200L) })
     // a keyed DV verb reads the layout from the manifest and takes the
     // partitioned path on this tree: key 1 moves from p=1 to p=0
     FileManifest.mergeKeysDV(spark, pdir, Seq((1L, 1L, 0L)).toDF("k", "v", "p"),
@@ -401,7 +418,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
       .select(col("v"), col("p").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(moved.toSeq === Seq((1L, 0L)))
-    assert(ManifestFileIndex.read(spark, pdir).count() === 2000L)
+    assert(ManifestFileIndex.read(spark, pdir).count() === 2000L - 11L - 1001L)
   }
 
   // ---- interop with the other surgeries --------------------------------------

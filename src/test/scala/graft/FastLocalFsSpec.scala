@@ -13,7 +13,8 @@ import graft.sources.{FastLocalFileSystem, FastLocalFs}
 /** The fork-free local filesystem must be BEHAVIORALLY IDENTICAL to
   * RawLocalFileSystem where it overrides it: setPermission applies the
   * same nine POSIX bits the parent's (process-forking) chmod path
-  * applies, for every permission the engine's writers ever pass.
+  * applies, for every permission the engine's writers ever pass, and
+  * getFileLinkStatus answers as the parent's (readlink-forking) probe.
   * Anything less would silently change what lands on disk the moment
   * a session installs `fs.file.impl`.
   */
@@ -100,7 +101,7 @@ class FastLocalFsSpec extends AnyFunSuite {
     val payload = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
     // the same write and read through the fast binding and through
     // Hadoop's stock LocalFs (the default file: binding)
-    def roundTrip(impl: Option[String], tag: String): (Boolean, Boolean) = {
+    def roundTrip(impl: Option[String], tag: String): (Boolean, Boolean, Boolean) = {
       val conf = new Configuration()
       impl.foreach(conf.set("fs.AbstractFileSystem.file.impl", _))
       val fc = FileContext.getFileContext(new java.net.URI("file:///"), conf)
@@ -116,17 +117,62 @@ class FastLocalFsSpec extends AnyFunSuite {
       val bytes = Files.readAllBytes(raw)
       bytes(100) = (bytes(100) ^ 0xFF).toByte
       Files.write(raw, bytes)
-      // open(f, bufferSize): ChecksumFs verifies on that path (FilterFs's
-      // open(f) reads the raw file, in stock LocalFs as well)
-      val in = fc.open(f, 4096)
-      val detected =
+      def detected(in: org.apache.hadoop.fs.FSDataInputStream): Boolean =
         try { in.readFully(new Array[Byte](payload.length)); false }
         catch { case _: org.apache.hadoop.fs.ChecksumException => true }
         finally in.close()
-      (crc, detected)
+      // open(f, bufferSize) verifies in stock ChecksumFs; open(f) — what
+      // Spark's checkpoint file manager calls — reads the raw file there
+      (crc, detected(fc.open(f, 4096)), detected(fc.open(f)))
     }
     val stock = roundTrip(None, "stock")
-    assert(stock === ((true, true)), "stock LocalFs no longer checksums — the reference moved")
-    assert(roundTrip(Some(classOf[FastLocalFs].getName), "fast") === stock)
+    assert((stock._1, stock._2) === ((true, true)),
+      "stock LocalFs no longer checksums — the reference moved")
+    assert(roundTrip(Some(classOf[FastLocalFs].getName), "fast") === ((true, true, true)))
+  }
+
+  test("getFileLinkStatus: parity with RawLocalFileSystem for file, dir, symlink, missing path") {
+    val root = Paths.get(s"${sys.props("java.io.tmpdir")}/graft_io/spec/fastfs_link")
+    val fast = newFs().getRawFileSystem
+    val raw = new RawLocalFileSystem
+    raw.initialize(new java.net.URI("file:///"), new Configuration())
+    fast.delete(new Path(root.toString), true)
+    Files.createDirectories(root.resolve("dir"))
+    Files.write(root.resolve("file"), Array[Byte](1, 2, 3))
+    Files.createSymbolicLink(root.resolve("link"), root.resolve("file"))
+    Seq("file", "dir", "link").foreach { n =>
+      val p = new Path(root.resolve(n).toString)
+      val (a, b) = (fast.getFileLinkStatus(p), raw.getFileLinkStatus(p))
+      assert((a.getPath, a.isFile, a.isDirectory, a.isSymlink, a.getLen,
+          a.getModificationTime) ===
+        ((b.getPath, b.isFile, b.isDirectory, b.isSymlink, b.getLen,
+          b.getModificationTime)), n)
+      if (b.isSymlink) assert(a.getSymlink === b.getSymlink)
+    }
+    assert(fast.getFileLinkStatus(new Path(root.resolve("link").toString)).isSymlink)
+    val missing = new Path(root.resolve("nope").toString)
+    intercept[java.io.FileNotFoundException](raw.getFileLinkStatus(missing))
+    intercept[java.io.FileNotFoundException](fast.getFileLinkStatus(missing))
+  }
+
+  test("FileContext rename without overwrite still refuses an existing version dir") {
+    val conf = new Configuration()
+    conf.set("fs.AbstractFileSystem.file.impl", classOf[FastLocalFs].getName)
+    val fc = FileContext.getFileContext(new java.net.URI("file:///"), conf)
+    val root = new Path(s"${sys.props("java.io.tmpdir")}/graft_io/spec/fastfs_rename")
+    fc.delete(root, true)
+    val (src, dst) = (new Path(root, "tmp"), new Path(root, "_versions/3"))
+    fc.mkdir(src, FsPermission.getDirDefault, true)
+    fc.mkdir(dst, FsPermission.getDirDefault, true)
+    fc.create(new Path(dst, "part-0"),
+      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE)).close()
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+    }
+    assert(fc.util.exists(src) && !fc.util.exists(new Path(dst, "tmp")))
+    // onto a free number it goes through
+    val free = new Path(root, "_versions/4")
+    fc.rename(src, free, org.apache.hadoop.fs.Options.Rename.NONE)
+    assert(fc.util.exists(free) && !fc.util.exists(src))
   }
 }

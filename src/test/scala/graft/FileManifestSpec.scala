@@ -99,7 +99,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     val ids = (0L until 1600L)
     ids.map(i => (i, s"p$i")).toDF("id", "payload")
       .repartition(16, col("id")).write.mode("append").parquet(dir)
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"),
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"),
       expectedPerFile = 1024, fpp = 0.01)
 
     val keys = Seq(7L, 555L, 1201L, 9999L) // 9999 absent everywhere
@@ -135,13 +135,13 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
       FileManifest.readPointLookup(spark, dir, "id", Seq(1L))
     }
     assert(e1.getMessage.contains("bloom sidecar"))
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"))
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"))
     Seq((2L, "late")).toDF("id", "payload").coalesce(1).write.mode("append").parquet(dir)
     val e2 = intercept[IllegalArgumentException] {
       FileManifest.readPointLookup(spark, dir, "id", Seq(2L))
     }
     assert(e2.getMessage.contains("stale"))
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"))
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"))
     val (df, kept, total) = FileManifest.readPointLookup(spark, dir, "id", Seq(2L))
     assert(total == 2 && kept >= 1 &&
       df.select("payload").collect().map(_.getString(0)).toSeq == Seq("late"))
@@ -153,7 +153,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     val ids = (0 until 1600).map(i => (f"doc_$i%06d", i.toLong))
     ids.toDF("doc_id", "v").repartition(16, col("doc_id"))
       .write.mode("append").parquet(dir)
-    FileManifest.buildWithBloom(spark, dir, Seq("doc_id"), Seq("doc_id"),
+    FileManifest.build(spark, dir, Seq("doc_id"), Seq("doc_id"),
       expectedPerFile = 1024, fpp = 0.01)
     // the long probe on a string-built sidecar would hash different bytes
     // than the build side stored — a silent false-negative machine. It
@@ -176,7 +176,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     // and the mirror-image misuse fails loud too
     val dirL = java.nio.file.Files.createTempDirectory("graft_manifest_strbloom2").toString
     Seq((1L, "a")).toDF("id", "p").coalesce(1).write.mode("append").parquet(dirL)
-    FileManifest.buildWithBloom(spark, dirL, Seq("id"), Seq("id"))
+    FileManifest.build(spark, dirL, Seq("id"), Seq("id"))
     val e2 = intercept[IllegalArgumentException] {
       FileManifest.readPointLookup(spark, dirL, "id", Seq("1"))
     }
@@ -211,7 +211,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
       .coalesce(1).write.mode("append").parquet(dir)
     Seq((null.asInstanceOf[java.lang.Long], "n")).toDF("id", "payload")
       .coalesce(1).write.mode("append").parquet(dir)
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"))
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"))
     val (df, kept, total) = FileManifest.readPointLookup(spark, dir, "id", Seq(5L))
     // NULL never equals a point probe, so skipping the all-NULL file is exact
     assert(total == 2 && kept == 1)

@@ -84,7 +84,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
     // so bounds alone keep all 16 — the sidecar must do the pruning
     (0L until 1600L).map(i => (i, s"p$i")).toDF("id", "payload")
       .repartition(16, col("id")).write.mode("append").parquet(dir)
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"),
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"),
       expectedPerFile = 1024, fpp = 0.01)
     val idx = new ManifestFileIndex(spark, dir)
     val id = AttributeReference("id", LongType)()
@@ -126,7 +126,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
       (0 until 100).map(i => (f"$p$i%03d", p)).toDF("id", "grp")
         .coalesce(1).write.mode("append").parquet(dir)
     }
-    FileManifest.buildWithBloom(spark, dir, Seq("id"), Seq("id"))
+    FileManifest.build(spark, dir, Seq("id"), Seq("id"))
     val idx = new ManifestFileIndex(spark, dir)
     val id = AttributeReference("id", org.apache.spark.sql.types.StringType)()
     def kept(f: org.apache.spark.sql.catalyst.expressions.Expression): Int =
@@ -187,7 +187,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
       (0 until 100).map(i => (f * 100L + i, s"v${f}_$i"))
         .toDF("ts", "payload").coalesce(1).write.mode("append").parquet(dir)
     }
-    FileManifest.buildWithBloom(spark, dir, Seq("ts"), Seq("ts"),
+    FileManifest.build(spark, dir, Seq("ts"), Seq("ts"),
       expectedPerFile = 1024, fpp = 0.01)
 
     // inflate the manifest to 10_008 entries: 10k synthetic files whose
@@ -258,7 +258,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
     Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L))
       .toDF("ts", "v").coalesce(1).write.mode("append").parquet(dir)
     val e = intercept[IllegalArgumentException] {
-      FileManifest.buildWithBloom(spark, dir, Seq("v"), Seq("ts"))
+      FileManifest.build(spark, dir, Seq("v"), Seq("ts"))
     }
     assert(e.getMessage.contains("integral"))
   }

@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{FileManifest, ManifestFileIndex}
 
-/** Partition-aware surgery (optimizePartitioned / deleteRangePartitioned):
-  * rewrites land INSIDE each partition directory (no partition-column
-  * flattening), all partitions publish under ONE manifest swap (single
-  * version, not N per-partition commits), untouched files carry by
-  * reference, and the flat-only verbs' guard names these twins.
+/** Surgery on a hive-partitioned tree (optimizeTable / deleteRange read
+  * the layout from the manifest paths): rewrites land INSIDE each
+  * partition directory (no partition-column flattening), all partitions
+  * publish under ONE manifest version (not N per-partition commits), and
+  * untouched files carry by reference.
   */
 class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
 
@@ -31,14 +31,14 @@ class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
       partitionCols = Seq("part"), mode = "overwrite")
   }
 
-  test("optimizePartitioned: one commit, files inside partition dirs, content lossless") {
+  test("optimizeTable on a tree: one commit, files inside partition dirs, content lossless") {
     val dir = freshDir("opt")
     build(dir)
     val before = ManifestFileIndex.read(spark, dir)
       .select("k", "part").collect().map(r => (r.getLong(0), r.getString(1)))
       .sorted.toSeq
     val v1 = FileManifest.versions(spark, dir).max
-    val written = FileManifest.optimizePartitioned(
+    val written = FileManifest.optimizeTable(
       spark, dir, Seq("k"), targetRowsPerFile = 200L)
     assert(written === 3, s"200 live rows per partition at target 200: $written")
     // exactly ONE new version for the whole tree
@@ -61,12 +61,12 @@ class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
     assert(feed.inputFiles.isEmpty && feed.count() === 0L)
   }
 
-  test("deleteRangePartitioned: survivors rewrite in place, carried files ride, one commit") {
+  test("deleteRange on a tree: survivors rewrite in place, carried files ride, one commit") {
     val dir = freshDir("del")
     build(dir)
     val v1 = FileManifest.versions(spark, dir).max
     // [1, 150] hits the lower file of each partition; upper files carry
-    val (rewritten, carried) = FileManifest.deleteRangePartitioned(
+    val (rewritten, carried) = FileManifest.deleteRange(
       spark, dir, "k", lit(1L), lit(150L), Seq("k"))
     assert(rewritten + carried === 6)
     assert(carried >= 3, s"upper-range files must carry by reference: ($rewritten, $carried)")
@@ -85,15 +85,44 @@ class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
     val dir = freshDir("guard")
     build(dir)
     val e = intercept[IllegalArgumentException] {
-      FileManifest.deleteRangePartitioned(
+      FileManifest.deleteRange(
         spark, dir, "part", lit("p0"), lit("p1"), Seq("part"))
     }
     assert(e.getMessage.contains("bounds") || e.getMessage.contains("PARTITION"),
       e.getMessage)
-    // and the flat-only verb's guard names the partitioned twins
-    val g = intercept[IllegalArgumentException] {
-      FileManifest.optimizeTable(spark, dir, Seq("k"))
+    // with the partition column tracked, the guard itself fires: it
+    // reads the layout from the manifest paths
+    FileManifest.refresh(spark, dir, Seq("k", "part"))
+    val before = keysByPart(dir)
+    val p = intercept[IllegalArgumentException] {
+      FileManifest.deleteRange(
+        spark, dir, "part", lit("p0"), lit("p1"), Seq("k", "part"))
     }
-    assert(g.getMessage.contains("optimizePartitioned"), g.getMessage)
+    assert(p.getMessage.contains("PARTITION"), p.getMessage)
+    assert(keysByPart(dir) === before)
+    // a row predicate on the same tree goes through: one version, files
+    // inside their partition dirs, rows equal to the filtered full scan
+    val v = FileManifest.versions(spark, dir).max
+    FileManifest.deleteRange(spark, dir, "k", lit(100L), lit(399L),
+      Seq("k", "part"))
+    assert(FileManifest.versions(spark, dir).max === v + 1)
+    val want = before.filterNot(t => t._1 >= 100L && t._1 <= 399L)
+    assert(manifestFiles(dir).forall(_.contains("/part=p")))
+    assert(keysByPart(dir) === want)
+    // and optimizeTable, once refused on a tree, compacts it the same way
+    FileManifest.optimizeTable(spark, dir, Seq("k", "part"))
+    assert(FileManifest.versions(spark, dir).max === v + 2)
+    val files = manifestFiles(dir)
+    assert(files.length === 3 && files.forall(_.contains("/part=p")), files)
+    assert(keysByPart(dir) === want)
   }
+
+  private def keysByPart(dir: String): Seq[(Long, String)] =
+    ManifestFileIndex.read(spark, dir)
+      .select("k", "part").collect().map(r => (r.getLong(0), r.getString(1)))
+      .sorted.toSeq
+
+  private def manifestFiles(dir: String): Seq[String] =
+    spark.read.parquet(ManifestDir(spark, dir))
+      .select("file").collect().map(_.getString(0).replace("%3D", "=")).toSeq
 }

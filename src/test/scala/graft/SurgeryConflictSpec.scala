@@ -169,7 +169,7 @@ class SurgeryConflictSpec extends AnyFunSuite with SparkSpec {
     val dir = freshDir("pinned")
     FileManifest.writeThrough(
       (1L to 50L).toDF("k").repartition(2), dir, Seq("k"), mode = "overwrite")
-    // the optimizeTable shape: the frame EAGERLY pins v1's file set at
+    // a read-modify-write whose frame EAGERLY pins v1's file set at
     // construction; a rival then commits BEFORE publishVia would read
     // its default token. Un-pinned, requireUnchanged would validate
     // against the rival's version, pass, and publish v1-derived content
@@ -185,5 +185,30 @@ class SurgeryConflictSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("v1"))
     assert(keysOf(dir) === ((1L to 50L) :+ 1000L).sorted,
       "the rival's committed append must survive")
+  }
+
+  test("optimizeTable aborts loud when a rival commits between staging and publish") {
+    import spark.implicits._
+    val dir = freshDir("opt")
+    FileManifest.writeThrough(
+      (1L to 80L).toDF("k").repartitionByRange(4, col("k")),
+      dir, Seq("k"), mode = "overwrite")
+    FileManifest.deleteKeysDV(spark, dir, "k", Seq(7L), Seq("k"))
+    try {
+      oneShot {
+        FileManifest.deleteRange(spark, dir, "k", lit(70L), lit(80L), Seq("k"))
+      }
+      val v = FileManifest.versions(spark, dir).max
+      val e = intercept[ConcurrentWriteException] {
+        FileManifest.optimizeTable(spark, dir, Seq("k"))
+      }
+      assert(e.getMessage.contains(dir))
+      // the rival's delete is the only new version; no optimize landed
+      assert(FileManifest.versions(spark, dir).max === v + 1)
+      assert(FileManifest.history(spark, dir).collect().map(_.getString(1))
+        .toSeq === Seq("build", "dv-delete", "delete"))
+      assert(keysOf(dir) === (1L to 69L).filterNot(_ == 7L))
+      assertNoStagingResidue(dir)
+    } finally FileManifest.beforeCommitHook = () => ()
   }
 }

@@ -7,8 +7,10 @@ FileManifest.scala itself and the environment variables the engine reads:
                         blank nor comment)
   filemanifest_lines    lines of FileManifest.scala, code lines bracketed
   filemanifest_defs     public defs on the FileManifest object (an
-                        overload counts once per def) and, in brackets,
-                        the distinct public verb names
+                        overload counts once per def), in brackets the
+                        number of distinct public verb names, then the
+                        names themselves, so two runs show which verbs
+                        went, not only how many
   sparksession_sites    code lines that build a SparkSession by hand
                         (`SparkSession.builder`), under src/main and
                         src/test; comment lines are skipped
@@ -85,7 +87,8 @@ def main():
 
     print(f"src_main_lines {main_lines} (code {main_code})")
     print(f"filemanifest_lines {fm_lines} (code {fm_code})")
-    print(f"filemanifest_defs {len(names)} ({len(set(names))} distinct names)")
+    print(f"filemanifest_defs {len(names)} ({len(set(names))} distinct names) "
+          f"{', '.join(sorted(set(names)))}")
     print(f"sparksession_sites {sites['main'] + sites['test']} "
           f"(src/main {sites['main']}, src/test {sites['test']})")
     print(f"env_knobs {len(knobs)} ({', '.join(sorted(knobs))})")
