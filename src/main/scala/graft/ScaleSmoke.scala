@@ -510,7 +510,7 @@ object ScaleSmoke {
     * n_id shift (cells unchanged — a growing corpus under a fixed cell
     * count, the steady-state shape), then time the full served →
     * compacted rewrite including the ~1/7 tombstone anti-join and the
-    * manifest refresh. Expected ~linear in index rows (the range
+    * manifest commit. Expected ~linear in index rows (the range
     * shuffle is the whole job) with second-scale constants; the smoke
     * exists to catch any accidental corpus-sized dependency creeping
     * into the rewrite.
@@ -798,7 +798,7 @@ object ScaleSmoke {
     val mergeDt = (System.nanoTime() - t0) / 1e9
     val (parts1, bytes1) = manifestShape()
     println(f"manifest10k merge files=$n%-6d rewritten=$rw carried=$car parts=$parts1%-3d mbytes=${bytes1 / (1 << 20)}%-5d $mergeDt%8.2f s")
-    // planned read: coverage guard + bounds pruning over the sharded
+    // planned read: snapshot resolve + bounds pruning over the sharded
     // manifest — the read-side cost of the same ceiling
     t0 = System.nanoTime()
     val (pruned, kept, total) = FileManifest.readPruned(spark, dir, "k",

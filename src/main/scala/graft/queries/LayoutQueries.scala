@@ -464,12 +464,12 @@ object LayoutQueries {
     // ---- incremental write-through lifecycle ------------------------------
     // The operational loop a staging table actually lives: initial land
     // + manifest in one writeThrough (overwrite), a later APPEND whose
-    // refresh stats only the new files (carried entries byte-identical —
+    // commit stats only the new files (carried entries byte-identical —
     // FileManifestSpec pins that), then a transparent range read over
-    // the combined tree with zero manual rebuilds and no stale-guard
-    // trip. The gate pins the combined result against the from-source
-    // oracle — an append the manifest lost, a carried entry gone wrong,
-    // or over-pruning across the batch boundary all fail.
+    // the combined tree with zero manual rebuilds. The gate pins the
+    // combined result against the from-source oracle — an append the
+    // manifest lost, a carried entry gone wrong, or over-pruning across
+    // the batch boundary all fail.
     QueryDef.sql(
       "q136_manifest_writethrough",
       s"""WITH b AS (SELECT min(epoch_ns(ts)) AS mn, max(epoch_ns(ts)) AS mx
@@ -508,7 +508,7 @@ object LayoutQueries {
     // of: manifest READERS are immune, but a naive directory read
     // double-counts the orphans and the bytes leak forever. The gate
     // stages a write-through table, plants a rival's crashed append (two
-    // files landed, no refresh), measures the naive pre-vacuum listing
+    // files landed, no version names them), measures the naive pre-vacuum listing
     // view (inflated — n_pre counts base + orphans), vacuums under the
     // writer lock, and pins THREE things at once: the post-vacuum naive
     // read equals the manifest content exactly (orphans gone), the
@@ -555,8 +555,8 @@ object LayoutQueries {
 
     // ---- versioned manifests: time-travel reads ---------------------------
     // The table-format lifecycle's last missing verb (write-through /
-    // skip / compact / vacuum / TIME TRAVEL): every manifest refresh
-    // commits a new version dir `_versions/<N>` and leaves the older
+    // skip / compact / vacuum / TIME TRAVEL): every manifest commit
+    // writes a new version dir `_versions/<N>` and leaves the older
     // ones as they were — each a complete file-level snapshot, written
     // once — and `readAsOf(v)` plans the table exactly as it stood at
     // version v
@@ -589,7 +589,7 @@ object LayoutQueries {
       }
       val o = Tables.orders(s, d).select("o_orderkey")
       // v1: initial land (overwrite resets scratch history between runs);
-      // v2, v3: appends — each writeThrough refresh retires a snapshot
+      // v2, v3: appends — each writeThrough commit retires a snapshot
       graft.sources.FileManifest.writeThrough(
         o.filter(col("o_orderkey") % 7 === 0).repartition(2),
         dir, Seq("o_orderkey"), mode = "overwrite")
@@ -1511,7 +1511,7 @@ object LayoutQueries {
     // manifest table), and a declared-target read through the manifest
     // index null-fills the column for pre-evolution files — the
     // tracked-column manifest is orthogonal to data-schema width, so
-    // refresh carries old entries and stats only the new files. The
+    // the append carries old entries and stats only the new files. The
     // as-of read of v1 anchors its inferred schema on a file OF THAT
     // VERSION (the index's version-anchored inference — a
     // directory-first-footer inference would leak the evolved column
@@ -1634,7 +1634,7 @@ object LayoutQueries {
     // dir — zero extra I/O), and `history()` reads the audit trail
     // back from retained manifests alone: (version, op, live rows) with
     // no data page touched. The gate drives one table through five
-    // different verbs — build, refresh (append), copy-on-write delete,
+    // different verbs — build, append, copy-on-write delete,
     // DV delete, merge-on-read — and pins the full trail, live counts
     // included (n_rows − n_del metadata arithmetic), against the
     // from-source oracle.
@@ -1654,7 +1654,7 @@ object LayoutQueries {
         |ins AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 4999 = 0)
         |SELECT CAST(1 AS BIGINT) AS version, 'build' AS op,
         |  CAST((SELECT COUNT(*) FROM s0) AS BIGINT) AS n_rows
-        |UNION ALL SELECT CAST(2 AS BIGINT), 'refresh',
+        |UNION ALL SELECT CAST(2 AS BIGINT), 'append',
         |  CAST((SELECT COUNT(*) FROM v2) AS BIGINT)
         |UNION ALL SELECT CAST(3 AS BIGINT), 'delete',
         |  CAST((SELECT COUNT(*) FROM v3) AS BIGINT)

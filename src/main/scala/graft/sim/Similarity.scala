@@ -919,20 +919,19 @@ object Similarity {
     // compaction is the maintenance point where table formats hook
     // snapshot expiration (Delta OPTIMIZE→VACUUM, Iceberg
     // expire_snapshots) — without it, every publish adds a history
-    // manifest that all later refresh/coverage passes must union, so an
-    // often-compacted index degrades without bound. Amortized: vacuum
-    // only once history depth exceeds 4× the retention target (a pure
-    // directory listing — zero Spark jobs on the no-op path), so a
-    // compaction burst pays no cleanup inline while depth stays bounded
-    // at threshold + burst width. keepVersions=2 keeps the
-    // pre-compaction snapshot readable for in-flight as-of readers; the
-    // grace window additionally spares anything younger than the
-    // default retention.
+    // manifest and leaves its files on disk, so an often-compacted index
+    // degrades without bound. Amortized: vacuum only once history depth
+    // exceeds 4× the retention target (a pure directory listing — zero
+    // Spark jobs on the no-op path), so a compaction burst pays no
+    // cleanup inline while depth stays bounded at threshold + burst
+    // width. keepVersions=2 keeps the pre-compaction snapshot readable
+    // for in-flight as-of readers; the grace window additionally spares
+    // anything younger than the default retention.
     // graceMs is sized to THIS table's write discipline, not the global
-    // default: vacuum's 10-min grace exists to spare unlocked
-    // append→refresh windows, but every write to an index dir goes
-    // through locked publishVia/writeThrough — there is no unlocked
-    // window. Under the default, a compaction burst's expired manifests
+    // default: vacuum's 10-min grace exists to spare writers outside
+    // the lock protocol, but every write to an index dir goes through
+    // locked publishVia/writeThrough — there is no unlocked window.
+    // Under the default, a compaction burst's expired manifests
     // all have sub-10-min-old exclusive files, so the resurrection
     // guard spares every one: depth grows past the threshold unbounded
     // and each further compaction pays vacuum's full all-manifest read

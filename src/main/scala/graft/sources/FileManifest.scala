@@ -30,11 +30,15 @@ import org.apache.spark.sql.types._
   * full-scan equivalence and the actual file-skip count; q115
   * hash-gates a range query through the manifest path.
   *
-  * Staleness: the manifest is rebuilt by the writer that lands files
-  * ([[build]] after a batch of appends — the `IncrementalLedger` commit
-  * point is the natural hook). `readPruned` fails LOUD when a live data
-  * file is missing from the manifest (files landed since the last
-  * build) rather than returning silently-partial results.
+  * Membership: the current version IS the table (Delta's contract —
+  * the log alone defines it). Every writer stages its files outside the
+  * table and commits them with the version that names them
+  * ([[commitStaged]]), so no read lists the data tree. A file written
+  * into the tree by anything else — a raw `df.write.parquet(dataDir)`,
+  * or a crashed writer's moved files — is invisible to every reader
+  * until [[vacuum]] reaps it or [[build]] adopts it; those two verbs
+  * (and a table's first commit, which refuses stray files) are the only
+  * ones that list the tree.
   */
 object FileManifest {
 
@@ -100,6 +104,14 @@ object FileManifest {
     */
   private val FileOnly = StructType(Seq(StructField("file", StringType)))
 
+  /** The `file` column of the given versions' manifests as ONE
+    * multi-path read (explicit one-column schema: no footer inference).
+    */
+  private def versionFiles(spark: SparkSession, dataDir: String,
+      versions: Seq[Long]): DataFrame =
+    spark.read.schema(FileOnly)
+      .parquet(versions.map(versionDir(dataDir, _)): _*)
+
   private def fsOf(spark: SparkSession, dataDir: String): FileSystem =
     new Path(dataDir).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -143,9 +155,11 @@ object FileManifest {
     spark.read.schema(sch).parquet(path)
   }
 
-  /** The current manifest and its version, from one listing — a
-    * surgery plans from the frame and validates the version at commit,
-    * so the two must be the same snapshot.
+  /** The current snapshot: the manifest and its version, from one
+    * listing of `_versions` and no other I/O — every read and surgery
+    * plans from it. A surgery plans from the frame and validates the
+    * version at commit, and a read resolves its deletion vectors at the
+    * version, so the two must be the same snapshot.
     */
   private def currentManifest(spark: SparkSession,
       dataDir: String): (DataFrame, Long) = {
@@ -178,7 +192,7 @@ object FileManifest {
     * fall through to the next. Returns the [[FsListing.norm]] canonical
     * form, exactly like the normPath-projected collect it replaces.
     */
-  private def firstManifestFilePath(spark: SparkSession,
+  private[sources] def firstManifestFilePath(spark: SparkSession,
       dataDir: String): Option[String] =
     firstFileInManifestDir(spark.sessionState.newHadoopConf(),
       new Path(versionDir(dataDir, versionsOf(spark, dataDir).current)))
@@ -236,8 +250,8 @@ object FileManifest {
   private def currentVersion(hfs: FileSystem, dataDir: String): Long =
     listVersions(hfs, dataDir).current
 
-  /** TEST SEAM: invoked once per write-surgery call (deleteRange /
-    * mergeKeys / publishVia) after staging completes and right before
+  /** TEST SEAM: invoked once per staged commit (every writer verb but
+    * build) after staging completes and right before
     * the commit lock is taken — specs inject a rival committer here to
     * pin the optimistic-concurrency conflict path deterministically.
     * No-op in production; mutated only by single-threaded specs.
@@ -284,26 +298,38 @@ object FileManifest {
       true
     } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
 
-  /** Every staged surgery's commit. `stage` writes the surgery's new
-    * data files under a WRITER-PRIVATE staging dir `<stgBase>_<uuid>`
-    * (two concurrent surgeries must never clobber each other's
-    * in-progress staging) outside the table, while the table is
-    * untouched. Then, under the commit lock, it checks that the table is
-    * still at `plannedV`: a rival commit in between means the staged
-    * output came from a stale snapshot, and publishing it would silently
-    * discard the rival's work, so it fails loud and the caller re-plans
-    * (Delta's conflict-and-retry protocol). Then it moves the staged
-    * data files into the table (partition dirs kept), writes
-    * `manifestOf(moved)` and commits it as version plannedV + 1. If the
-    * manifest or its commit fails, the moved files are deleted again —
-    * no version references them — and the table stays as it was at
-    * plannedV. The staging dir is gone on every exit. Returns the moved
-    * files.
+  /** Every writer's commit but [[build]]'s. `stage` writes the new data
+    * files under a WRITER-PRIVATE staging dir `<stgBase>_<uuid>` (two
+    * concurrent writers must never clobber each other's in-progress
+    * staging) outside the table, while the table is untouched. Then,
+    * under the commit lock, it resolves the version this commit follows:
+    *  - a surgery passes the `plannedV` it planned from, and the table
+    *    must still be there. A rival commit in between means the staged
+    *    output came from a stale snapshot, and publishing it would
+    *    silently discard the rival's work, so it fails loud and the
+    *    caller re-plans (Delta's conflict-and-retry protocol);
+    *  - a blind write (`None`: an append or an overwrite) read no
+    *    snapshot, so no rival conflicts with it; it follows whatever
+    *    version is current.
+    * `replace` first clears the table (all but the lock), so the commit
+    * replaces it; otherwise a table's first commit refuses stray data
+    * files. `manifestOf(base)` runs next, still before any file moves,
+    * so it may refuse the commit; it returns the builder of the new
+    * manifest. Then the staged data files move into the table
+    * (partition dirs kept), and the manifest built from them is
+    * committed as version base + 1, so version numbers stay monotonic
+    * across a replace too. The moved files are exactly the new manifest
+    * entries: no listing rediscovers them. If the manifest or its
+    * commit fails, the moved files are deleted again — no version
+    * references them. The staging dir is gone on every exit. Returns
+    * the moved files. `carriedEntries` (entries taken over from the
+    * base, for sizing the manifest write) is evaluated under the lock.
     */
   private def commitStaged(spark: SparkSession, dataDir: String,
-      plannedV: Long, op: String, carriedEntries: Long, stgBase: String)(
+      plannedV: Option[Long], op: String, carriedEntries: => Long,
+      stgBase: String, replace: Boolean = false)(
       stage: Path => Unit)(
-      manifestOf: Seq[String] => DataFrame): Seq[String] = {
+      manifestOf: Long => Seq[String] => DataFrame): Seq[String] = {
     val root = new Path(dataDir)
     val hfs = fsOf(spark, dataDir)
     val stg = new Path(s"${stgBase}_${uuid8()}")
@@ -312,17 +338,24 @@ object FileManifest {
       beforeCommitHook()
       CommitLock.withLock(hfs, new Path(root, "_manifest.lock")) {
         val cur = currentVersion(hfs, dataDir)
-        if (cur != plannedV) throw new ConcurrentWriteException(
-          s"table $dataDir moved v$plannedV -> v$cur while this surgery " +
-            "was planned/staged — a rival writer committed; re-run the " +
-            "surgery against the current version")
-        if (plannedV == 0) requireNoStrayFiles(hfs, dataDir)
+        plannedV.filter(_ != cur).foreach { v =>
+          throw new ConcurrentWriteException(
+            s"table $dataDir moved v$v -> v$cur while this surgery " +
+              "was planned/staged — a rival writer committed; re-run the " +
+              "surgery against the current version")
+        }
+        if (replace)
+          hfs.listStatus(root).iterator
+            .filterNot(_.getPath.getName == "_manifest.lock")
+            .foreach(s => hfs.delete(s.getPath, true))
+        else if (cur == 0) requireNoStrayFiles(hfs, dataDir)
+        val manifestFrom = manifestOf(cur)
         val moved =
           if (hfs.exists(stg)) movePartitionTree(hfs, stg, root) else Nil
         val tmp = tmpManifest(dataDir)
         try {
-          writeManifest(manifestOf(moved), tmp, carriedEntries + moved.size)
-          commitVersion(hfs, dataDir, tmp, op, plannedV + 1)
+          writeManifest(manifestFrom(moved), tmp, carriedEntries + moved.size)
+          commitVersion(hfs, dataDir, tmp, op, cur + 1)
         } catch {
           case t: Throwable =>
             moved.foreach(p => hfs.delete(new Path(p), false))
@@ -338,16 +371,17 @@ object FileManifest {
   /** A table's first commit covers only the files it moves in, so data
     * files already under the root (a table left in a layout this code
     * cannot read, or a plain parquet write) would sit outside every
-    * version and fail each later read's stale guard: refuse before
-    * moving anything. `build`/`writeThrough` index what is on disk by
-    * design and do not come through here.
+    * version, invisible to every reader: refuse before moving anything.
+    * [[build]] is the one verb that adopts files already on disk; a
+    * replacing commit clears them instead.
     */
   private def requireNoStrayFiles(hfs: FileSystem, dataDir: String): Unit = {
     val stray = FsListing.listDataFiles(hfs, new Path(dataDir))
     if (stray.nonEmpty) throw new IllegalStateException(
       s"$dataDir has no table version but holds ${stray.size} data " +
-        s"file(s), e.g. ${stray.take(3).mkString(", ")}; rebuild it with " +
-        "writeThrough(..., mode = \"overwrite\") or delete the dir")
+        s"file(s), e.g. ${stray.take(3).mkString(", ")}; adopt them with " +
+        "build(...), replace them with writeThrough(..., mode = " +
+        "\"overwrite\") or delete the dir")
   }
 
   /** A surgery's fresh files get stats for `cols`/`bloomCols` only; when
@@ -396,28 +430,43 @@ object FileManifest {
     * false negatives ever — Bloom semantics — so pruning stays SOUND; a
     * false positive only costs one extra file read under the exact row
     * filter.
+    *
+    * `build` is the one verb that ADOPTS files already on disk (Delta's
+    * CONVERT TO DELTA): it lists the tree and indexes every data file
+    * in it, raw writes included. That is also why it refuses what it
+    * cannot re-stat soundly: live deletion vectors, and files an older
+    * retained version references but the current one dropped — a
+    * copy-on-write surgery's rewritten originals, left for as-of readers
+    * until [[vacuum]] reaps them.
     */
   def build(spark: SparkSession, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01): Unit =
-    rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp, 0L)
-
-  /** [[build]], numbered past `versionFloor` too: writeThrough's
-    * overwrite clears the old versions with the tree and passes the
-    * outgoing version here.
-    */
-  private def rebuild(spark: SparkSession, dataDir: String,
-      cols: Seq[String], bloomCols: Seq[String], expectedPerFile: Long,
-      fpp: Double, versionFloor: Long): Unit = {
+      fpp: Double = 0.01): Unit = {
     val root = new Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // a from-scratch rebuild re-stats the RAW files: live deletion
+    val hfs = fsOf(spark, dataDir)
+    // a from-scratch build re-stats the RAW files: live deletion
     // vectors would be dropped and every DV-deleted row silently
     // RESURRECTED — the failure mode the DV stack must never allow
     require(!hasLiveDv(spark, dataDir),
       s"table $dataDir carries live deletion vectors — a manifest " +
         "rebuild would resurrect DV-deleted rows; purgeDv(...) first")
+    val vs = listVersions(hfs, dataDir)
     val paths = FsListing.listDataFiles(hfs, root)
+    // the same resurrection through the files a surgery rewrote: one
+    // multi-path `file` read of every version, as vacuum's
+    if (vs.all.size > 1) {
+      val (cur, older) = versionFiles(spark, dataDir, vs.all)
+        .select(versionOfFile, ManifestFileIndex.normPath(col("file")))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+        .partition(_._1 == vs.current)
+      val dropped = older.map(_._2).toSet -- cur.map(_._2)
+      val stale = paths.filter(dropped)
+      if (stale.nonEmpty) throw new IllegalStateException(
+        s"$dataDir holds ${stale.size} file(s) an older version references " +
+          s"but v${vs.current} dropped (e.g. ${stale.head}); re-statting " +
+          "them would bring back rows a surgery removed — vacuum(...) " +
+          "them first")
+    }
     val stats =
       if (paths.isEmpty) // surface the same empty-dir failure a scan would
         fileStats(spark.read.parquet(dataDir), cols, bloomCols,
@@ -426,15 +475,11 @@ object FileManifest {
         expectedPerFile, fpp)
     val tmp = tmpManifest(dataDir)
     writeManifest(stats, tmp, math.max(1, paths.size).toLong)
-    // the version token stays MONOTONIC across a rebuild: the next
-    // number, never a reused one — and versionFloor carries it across a
-    // rebuild that destroyed the previous versions (writeThrough
-    // overwrite records the version before clearing the tree). A reused
-    // number would let a surgery planned at it false-pass its commit
-    // check and publish stale staging over the rebuild (the OCC ABA
-    // hole).
-    commitVersion(hfs, dataDir, tmp, "build",
-      math.max(currentVersion(hfs, dataDir), versionFloor) + 1)
+    // the next number after the listing's version, never a reused one
+    // (a reused number would let a surgery planned at it false-pass its
+    // commit check — the OCC ABA hole); a rival that committed since
+    // makes the put-if-absent fail loud
+    commitVersion(hfs, dataDir, tmp, "build", vs.current + 1)
   }
 
   /** Spark types whose parquet footer statistics are BOTH trustworthy
@@ -458,7 +503,7 @@ object FileManifest {
     * PARQUET FOOTER row-group statistics — metadata-sized reads instead
     * of re-scanning every data page the writer just finished writing.
     * This removes the avoidable half of a publish's read amplification:
-    * [[publishVia]]/[[refresh]] used to land files and then re-READ
+    * [[publishVia]]/[[writeThrough]] used to land files and then re-READ
     * them wholesale just to re-derive bounds parquet had already
     * persisted per column chunk (Iceberg/Delta commit the same way —
     * per-file stats come off the write tasks' footers, never a second
@@ -511,7 +556,7 @@ object FileManifest {
         it.map { p =>
           // scheme-QUALIFY before storing: callers hand over bare
           // "/tmp/..." rename targets, but manifest entries must compare
-          // against the qualified ("file:/...") live listing
+          // against qualified ("file:/...") paths
           val p0 = new Path(p)
           val tfs = p0.getFileSystem(conf)
           val qualified = p0.makeQualified(tfs.getUri, tfs.getWorkingDirectory)
@@ -660,14 +705,15 @@ object FileManifest {
       // a ZERO-ROW part file produces no group (input_file_name never
       // fires) but IS live data — an all-rows-deleted rewrite lands one
       // schema-preserving empty file, and without an explicit
-      // n_rows=0/null-stats entry the coverage guard bricks every later
-      // read as "stale". The footer path emits these naturally; complete
-      // the scan path to match. Null bounds/blooms keep the file on
-      // every probe — sound, and the exact row filter reads nothing.
+      // n_rows=0/null-stats entry the version would not name it, and an
+      // all-deleted table would lose its schema anchor. The footer path
+      // emits these naturally; complete the scan path to match. Null
+      // bounds/blooms keep the file on every probe — sound, and the
+      // exact row filter reads nothing.
       val schema = mat.schema
       // scheme-QUALIFY like the footer path: callers hand bare "/tmp/..."
       // rename targets, but these entries must join against
-      // input_file_name's qualified form and the qualified live listing
+      // input_file_name's qualified form
       val conf = spark.sessionState.newHadoopConf()
       def qualified(p: String): String = {
         val pp = new Path(p)
@@ -705,9 +751,9 @@ object FileManifest {
     } finally reader.close()
   }
 
-  /** The one per-file stats aggregation both [[build]] and the
-    * incremental [[refresh]] use — including the bloom-key type guard,
-    * so the two paths can never drift: INTEGRAL key columns only (the
+  /** The one per-file stats aggregation every writer's fresh entries
+    * come from — including the bloom-key type guard, so no two writers
+    * can drift: INTEGRAL key columns only (the
     * sidecar stores `cast(long)` and the probe compares Catalyst
     * literal values — a timestamp's cast yields SECONDS while equality
     * literals carry MICROS, so a non-integral bloomCol would prune with
@@ -779,59 +825,90 @@ object FileManifest {
   private final class StringBloomAgg(expected: Long, fpp: Double)
       extends BloomAggBase[String](expected, fpp, _ putString _)
 
-  /** Write-through sink: land `df` under `dataDir` AND refresh the
-    * manifest (+ bloom sidecars) in the same call — the writer-owns-
-    * the-manifest discipline table formats enforce (data and metadata
-    * commit together), so readers never hit the stale-manifest guard
-    * after a routine append. The refresh is INCREMENTAL via [[refresh]]:
-    * an append stats only the files it just landed.
-    */
-  /** MULTI-WRITER: the whole write-through (append + refresh) runs
-    * under the manifest [[CommitLock]] — concurrent Spark jobs writing
-    * one directory race each other's `_temporary/0` staging (the
-    * default FileOutputCommitter keys staging by an appID-local job id,
-    * not a global one), so the data append itself must serialize with
-    * rival writeThrough calls, not just the manifest commit. Each locked
-    * refresh re-lists the live tree, so whichever writer commits last
-    * leaves a manifest covering every rival's files — MultiWriterSpec
-    * races two writers and pins coverage + readability.
+  /** Write-through sink: land `df` (hive-partitioned by
+    * `partitionCols`, if any) and its manifest entries (+ bloom
+    * sidecars) as ONE new version — the writer-owns-the-manifest
+    * discipline table formats enforce. `df` stages outside the table and
+    * commits through [[commitStaged]] like every surgery, so the entries
+    * are exactly the moved files: an append stats only what it wrote and
+    * carries every other entry byte-for-byte, and no listing of the tree
+    * rediscovers anything.
+    *
+    * - `append` is BLIND (Delta's blind append): it read no snapshot, so
+    *   it never conflicts — it follows whatever version is current at
+    *   its commit, and racing appenders all land (MultiWriterSpec). Its
+    *   `cols`/`bloomCols` must be the table's tracked columns (changing
+    *   them is [[build]]'s job), checked before any file moves. Onto a
+    *   dir with no version, it is the table's first commit, which refuses
+    *   stray data files.
+    * - `overwrite` replaces whatever the dir holds: under the lock it
+    *   clears the tree (sparing the lock file — Spark's Overwrite mode
+    *   would delete a held lock) and commits the outgoing version + 1
+    *   with only the new entries, so version numbers stay monotonic and
+    *   a surgery planned before it fails its commit check. `df` is
+    *   written before the clear, so it may read `dataDir` itself.
     */
   def writeThrough(df: DataFrame, dataDir: String, cols: Seq[String],
       bloomCols: Seq[String] = Nil, mode: String = "append",
       partitionCols: Seq[String] = Nil,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01): Unit = {
-    val root = new Path(dataDir)
-    val hfs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    CommitLock.withLock(hfs,
-      new Path(root, "_manifest.lock")) {
-      // overwrite must NOT go through Spark's Overwrite mode: that
-      // recursively deletes the root — including the _manifest.lock
-      // file THIS writer is holding — so a rival would re-create the
-      // lock and enter the critical section mid-overwrite (and this
-      // writer's unlock would then delete the rival's live lock,
-      // cascading the violation). Clear the tree manually, sparing the
-      // lock, and land the data as an append into the emptied root.
-      // the version token must stay MONOTONIC across the reset: record
-      // the outgoing version before the clear and floor the rebuild one
-      // past it, or a surgery planned pre-overwrite would see the same
-      // version again at commit and publish stale staging (OCC ABA)
-      val prevV =
-        if (mode == "overwrite") currentVersion(hfs, dataDir) else 0L
-      val effMode =
-        if (mode == "overwrite") {
-          if (hfs.exists(root))
-            hfs.listStatus(root).iterator
-              .filterNot(_.getPath.getName == "_manifest.lock")
-              .foreach(s => hfs.delete(s.getPath, true))
-          "append"
-        } else mode
-      val w = df.write.mode(effMode)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(dataDir)
-      refreshLocked(df.sparkSession, dataDir, root, hfs, cols, bloomCols,
-        expectedPerFile, fpp, versionFloor = prevV)
+    require(mode == "append" || mode == "overwrite",
+      s"writeThrough mode '$mode': append or overwrite")
+    val spark = df.sparkSession
+    val overwrite = mode == "overwrite"
+    // the stamp only: whether the append carries a base is decided at
+    // the commit, where a rival may have created or replaced the table
+    val op =
+      if (overwrite || versionsOf(spark, dataDir).current == 0) "build"
+      else "append"
+    commitStaged(spark, dataDir, None, op,
+        if (overwrite) 0L
+        else entriesAt(spark, dataDir, currentVersionOf(spark, dataDir)),
+        s"${dataDir}_stg", replace = overwrite) { stg =>
+      labeled(spark, "graft: writeThrough stage") {
+        val w = df.write
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(stg.toString)
+      }
+    } { base =>
+      if (overwrite || base == 0) { moved =>
+        require(moved.nonEmpty, s"writeThrough produced no data files for $dataDir")
+        statsForFiles(spark, dataDir, moved, cols, bloomCols,
+          expectedPerFile, fpp)
+      } else {
+        val carried = manifestFrameAt(spark, dataDir, base)
+        val tracked = carried.columns
+          .filterNot(c => c == DvCol || c == DvDelCol).sorted.toSeq
+        val given = statsColumns(cols, bloomCols).sorted
+        require(tracked == given,
+          s"writeThrough: the manifest under $dataDir tracks " +
+            s"${tracked.mkString(", ")} but cols/bloomCols give " +
+            s"${given.mkString(", ")}; append with the table's tracked " +
+            "columns, or build(...) to change them")
+        moved => withFresh(spark, dataDir, carried, moved, cols, bloomCols,
+          expectedPerFile, fpp)
+      }
     }
   }
+
+  /** Entries of version `v`'s manifest (0 for none), from its parts'
+    * parquet footers — driver-side, no Spark job: the size an append's
+    * sharded manifest write plans for.
+    */
+  private def entriesAt(spark: SparkSession, dataDir: String, v: Long): Long =
+    if (v == 0L) 0L
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val md = new Path(versionDir(dataDir, v))
+      md.getFileSystem(conf).listStatus(md).iterator.filter { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".") && st.getLen > 0
+      }.map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
 
   /** MVCC publish — replace the table's CURRENT version with `df`
     * without touching prior versions' bytes (index compaction rewriting
@@ -872,8 +949,8 @@ object FileManifest {
     val hfs = fsOf(spark, dataDir)
     // staging must live OUTSIDE the table tree entirely (qualified-path
     // prefix test, not bare equality): a staging dir under the root is
-    // non-underscore, so its in-progress part files would list as live
-    // data — tripping coverage for concurrent readers mid-publish
+    // non-underscore, so its in-progress part files would look like
+    // table files to build and to vacuum, which would reap them
     locally {
       val rootQ = root.makeQualified(hfs.getUri, hfs.getWorkingDirectory).toString
       val stgQ = new Path(stagingDir)
@@ -894,41 +971,14 @@ object FileManifest {
     // AFTER the caller's resolution and publish stale content right
     // over it (lost update with a passing version check).
     val plannedV = expectedVersion.getOrElse(currentVersion(hfs, dataDir))
-    commitStaged(spark, dataDir, plannedV, opName, 0L, stagingDir) { stg =>
+    commitStaged(spark, dataDir, Some(plannedV), opName, 0L, stagingDir) { stg =>
       labeled(spark, s"graft: $opName stage") {
         df.write.parquet(stg.toString) // may read dataDir: still untouched
       }
-    } { moved =>
+    } { _ => moved =>
       require(moved.nonEmpty, s"publish produced no data files for $dataDir")
       statsForFiles(spark, dataDir, moved, cols, bloomCols,
         expectedPerFile, fpp)
-    }
-  }
-
-  /** Incremental manifest refresh: stat ONLY files not yet manifested
-    * (delta-sized work — at 100 TB a daily append must never re-scan
-    * the whole table for metadata), drop entries for files no longer
-    * live (partition overwrites), carry every other entry byte-for-byte
-    * (per-file stats and blooms never change once a file is immutable).
-    * A manifest whose tracked-column set differs from `cols`/`bloomCols`
-    * (or none at all) falls back to a full [[build]].
-    */
-  def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
-      bloomCols: Seq[String] = Nil, expectedPerFile: Long = 65536L,
-      fpp: Double = 0.01): Unit = {
-    val root = new Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // MULTI-WRITER: refreshes SERIALIZE on an advisory lock — two
-    // concurrent writeThrough calls would otherwise interleave part
-    // files in one tmp dir and race for the same version. Each locked
-    // refresh re-LISTS the live tree, so the last refresh to run covers
-    // every rival's appended files (and every append is followed by its
-    // own refresh, so the final manifest always covers the final tree —
-    // MultiWriterSpec races two writeThrough threads and pins coverage).
-    // The data appends themselves need no lock: Spark part-file names
-    // carry job-unique UUIDs.
-    CommitLock.withLock(hfs, new Path(root, "_manifest.lock")) {
-      refreshLocked(spark, dataDir, root, hfs, cols, bloomCols, expectedPerFile, fpp)
     }
   }
 
@@ -981,7 +1031,7 @@ object FileManifest {
   /** DESCRIBE HISTORY: one row per readable version — (version, op,
     * n_files, n_rows live) — from the retained manifests alone
     * (metadata-scale, no data page). The op is the verb that PRODUCED
-    * the version (build / refresh / publish / optimize / delete /
+    * the version (build / append / publish / optimize / delete /
     * dv-delete / merge / merge-dv / purge); a version without an op
     * marker reads as "unknown".
     *
@@ -1044,8 +1094,8 @@ object FileManifest {
   }
 
   /** TIME TRAVEL: plan the table as it stood at `version`. Every
-    * versioned manifest is a complete snapshot of the file set live at
-    * its refresh, so an as-of read is just "read exactly those paths" —
+    * versioned manifest is a complete snapshot of the table's file set
+    * at its commit, so an as-of read is just "read exactly those paths" —
     * append-only file immutability (parquet files never rewrite in
     * place) makes the old bytes still correct. Validity window: a
     * version is readable until [[vacuum]]'s `keepVersions` retention
@@ -1078,22 +1128,6 @@ object FileManifest {
     // snapshot. AsOfPrunedSpec pins result-equality with the raw
     // path-list read and the actual file-skip count.
     ManifestFileIndex.read(spark, dataDir, asOf = Some(version))
-
-  /** Run a write surgery with optimistic-conflict retries — the caller
-    * loop the OCC protocol assumes (Delta's retry-on-
-    * ConcurrentModification): each attempt re-plans against the CURRENT
-    * version, so a retry never republishes stale staging; any other
-    * failure propagates untouched. No backoff: a conflict means the
-    * rival has already committed, so the re-plan starts from its version.
-    */
-  def withConflictRetry[T](attempts: Int = 3)(body: => T): T = {
-    require(attempts >= 1, s"attempts=$attempts")
-    try body
-    catch {
-      case _: ConcurrentWriteException if attempts > 1 =>
-        withConflictRetry(attempts - 1)(body)
-    }
-  }
 
   /** CHANGE DATA FEED between two retained versions — the incremental-
     * consumer verb beside append/compact/delete/merge/time-travel/
@@ -1249,7 +1283,7 @@ object FileManifest {
     val anyChanged = runDiffs.flatMap(d => d._3 ++ d._4)
     if (anyChanged.isEmpty) {
       // nothing changed anywhere in the span (pure-reorg span, or
-      // refresh no-ops): return an EMPTY LOCAL frame — no file scan in
+      // appends of nothing): return an EMPTY LOCAL frame — no file scan in
       // the plan at all (the zero-data-I/O guarantee CdfSpec pins). The
       // schema anchors on one file of an endpoint snapshot (a footer
       // read, metadata-sized); both endpoints empty has no schema to
@@ -1443,7 +1477,7 @@ object FileManifest {
     * column-pruned metadata agg that never reads a dv binary), the dv
     * rows SPILL to an immutable parquet keyed by (incarnation, version)
     * under the table (`_dv_spill/v{N}_<token>` — underscore-prefixed:
-    * invisible to data listings/coverage) and the read joins it
+    * invisible to data listings) and the read joins it
     * shuffle-side instead of broadcasting; the spill is written once
     * per version and reused, and [[vacuum]] reaps spills of unretained
     * versions. PER-SESSION conf (`graft.dv.broadcastMaxBytes`) — a
@@ -1835,7 +1869,7 @@ object FileManifest {
         scanCols.find(pc.contains).foreach { c =>
           throw new IllegalArgumentException(
             s"$op column '$c' is a PARTITION column under $dataDir — " +
-              "drop the matching partition directories and refresh " +
+              "drop the matching partition directories and build " +
               "instead of a row-level surgery")
         }
         pc
@@ -1922,7 +1956,7 @@ object FileManifest {
       case (Some(s), Some(a)) => Some(s.unionByName(a))
       case (s, a) => s.orElse(a)
     }
-    commitStaged(spark, dataDir, plannedV, op, allMeta.length.toLong,
+    commitStaged(spark, dataDir, Some(plannedV), op, allMeta.length.toLong,
         s"${dataDir}_stg") { stg =>
       // ONE staging job either way. Partitioned: a dynamic-partition
       // write — the basePath read above resolved the partition columns
@@ -1939,7 +1973,7 @@ object FileManifest {
         }
       }
       requireTracked(spark, op, dataDir, m.columns.toSeq, cols, bloomCols, stg)
-    } { moved =>
+    } { _ => moved =>
       // new manifest: carried entries (non-candidates + zero-match
       // candidates) byte-for-byte, DV-updated entries with merged
       // vectors, fresh stats for rewritten output
@@ -1984,14 +2018,14 @@ object FileManifest {
       .collect().map(r => (r.getString(0), r.getBoolean(1)))
     val dvPaths = allFlags.filter(_._2).map(_._1).sorted
     val bareCols = m.columns.toSeq.filterNot(c => c == DvCol || c == DvDelCol)
-    commitStaged(spark, dataDir, plannedV, "purge",
+    commitStaged(spark, dataDir, Some(plannedV), "purge",
         (allFlags.length - dvPaths.length).toLong, s"${dataDir}_stg") { stg =>
       if (dvPaths.nonEmpty)
         liveAt(spark.read.option("basePath", dataDir)
           .parquet(dvPaths.toIndexedSeq: _*), dataDir, plannedV)
           .write.parquet(stg.toString)
       requireTracked(spark, "purge", dataDir, bareCols, cols, bloomCols, stg)
-    } { moved =>
+    } { _ => moved =>
       withFresh(spark, dataDir, m.filter(col(DvCol).isNull)
         .select(bareCols.map(col).toIndexedSeq: _*), moved, cols, bloomCols,
         expectedPerFile, fpp)
@@ -2016,7 +2050,7 @@ object FileManifest {
     * compliance purge point, exactly Delta's VACUUM contract). On a
     * hive-partitioned tree `c` must be a PHYSICAL file column: deleting
     * by the partition column is a directory drop (remove the matching
-    * `col=value` dirs and refresh), and fails loud here rather than
+    * `col=value` dirs and build), and fails loud here rather than
     * rewrite every file of the matched dirs to zero rows.
     *
     * Returns (files rewritten, files carried).
@@ -2053,7 +2087,7 @@ object FileManifest {
     require(!partitionColsOf(rootQ, flags.map(_._1).toSeq, "deleteRange")
         .contains(c),
       s"deleteRange column '$c' is a PARTITION column under $dataDir — " +
-        "drop the matching partition directories and refresh instead of " +
+        "drop the matching partition directories and build instead of " +
         "a row-level rewrite")
     val byPart = candPaths.groupBy(relPartitionDir(rootQ, _)).toSeq.sortBy(_._1)
     val hasDv = m.columns.contains(DvCol)
@@ -2063,7 +2097,7 @@ object FileManifest {
     // them and the filter would silently delete every NULL row in a
     // rewritten file
     val keep = col(c).isNull || !(col(c) >= lo && col(c) <= hi)
-    commitStaged(spark, dataDir, plannedV, "delete", flags.length.toLong,
+    commitStaged(spark, dataDir, Some(plannedV), "delete", flags.length.toLong,
         s"${dataDir}_stg") { stg =>
       stageConcurrently(spark, byPart) { case (rel, files) =>
         labeled(spark, "graft: deleteRange stage") {
@@ -2076,7 +2110,7 @@ object FileManifest {
       }
       requireTracked(spark, "delete", dataDir, m.columns.toSeq, cols,
         bloomCols, stg)
-    } { moved =>
+    } { _ => moved =>
       // `m.filter(disjoint)` reads the version this commit supersedes —
       // written once, so it stays readable while the new one is written
       withFresh(spark, dataDir, m.filter(disjoint), moved, cols,
@@ -2231,7 +2265,7 @@ object FileManifest {
           rel.split('/').exists(_.takeWhile(_ != '=') == c)
         if (isPartCol) throw new IllegalArgumentException(
           s"$verb column '$c' is a PARTITION column under $dataDir — " +
-            "drop the matching partition directories and refresh " +
+            "drop the matching partition directories and build " +
             "instead of a row-level surgery")
         throw new IllegalArgumentException(
           s"requirement failed: $verb column '$c' not in table schema " +
@@ -2621,14 +2655,14 @@ object FileManifest {
       else plan.keepRows(liveAt(spark.read.option("basePath", dataDir)
         .parquet(candPaths.toIndexedSeq: _*), dataDir, plannedV,
         m.columns.contains(DvCol))).unionByName(updates)
-    commitStaged(spark, dataDir, plannedV, "merge", mFlags.length.toLong,
+    commitStaged(spark, dataDir, Some(plannedV), "merge", mFlags.length.toLong,
         s"${dataDir}_stg") { stg =>
       labeled(spark, "graft: mergeKeys stage") {
         survivors.write.parquet(stg.toString) // reads the CURRENT files: untouched
       }
       requireTracked(spark, "merge", dataDir, m.columns.toSeq, cols,
         bloomCols, stg)
-    } { moved =>
+    } { _ => moved =>
       withFresh(spark, dataDir, m.filter(!plan.candidate), moved, cols,
         bloomCols, expectedPerFile, fpp)
     }
@@ -2637,18 +2671,14 @@ object FileManifest {
 
   /** METADATA-ONLY live row count: `Σ n_rows − Σ n_del` over the
     * manifest — the Delta/Iceberg "answer COUNT(*) from the snapshot
-    * stats" move, no data page touched however large the table. Runs
-    * the same coverage guard as any planned read (a stale manifest
-    * must fail loud, not undercount).
+    * stats" move, no data page touched however large the table: one
+    * aggregation job over the current version's manifest.
     */
   def fastCount(spark: SparkSession, dataDir: String): Long = {
-    val (mdf, _, _) = requireCovering(spark, dataDir) // guard + the manifest
-    liveCount(mdf)
-  }
-
-  private def liveCount(m: DataFrame): Long = {
-    val r = m.agg(sum(liveRows(m))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0) // empty snapshot sums NULL
+    val m = currentManifest(spark, dataDir)._1
+    val r = m.agg(count(lit(1)), sum(liveRows(m))).head()
+    requireEntries(dataDir, r.getLong(0))
+    r.getLong(1)
   }
 
   /** OPTIMIZE (bin-packing compaction) for the MVCC table: each
@@ -2675,12 +2705,12 @@ object FileManifest {
       bloomCols: Seq[String] = Nil, targetRowsPerFile: Long = 1L << 20,
       expectedPerFile: Long = 65536L, fpp: Double = 0.01): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile=$targetRowsPerFile")
-    // staleness guard; PINS v0 before any frame resolves: the per-file
-    // live counts, the staged reads and their dv resolution all read v0,
-    // and the commit validates against v0, so a rival commit anywhere in
-    // the window fails loud as ConcurrentWriteException
-    // (withConflictRetry replans) instead of being reverted
-    val (m, _, v0) = requireCovering(spark, dataDir)
+    // PINS v0 before any frame resolves: the per-file live counts, the
+    // staged reads and their dv resolution all read v0, and the commit
+    // validates against v0, so a rival commit anywhere in the window
+    // fails loud as ConcurrentWriteException (the caller re-plans)
+    // instead of being reverted
+    val (m, v0) = currentManifest(spark, dataDir)
     val rootQ = rootQOf(fsOf(spark, dataDir), dataDir)
     val meta = labeled(spark, "graft: optimize plan") {
       m.select(ManifestFileIndex.normPath(col("file")).as("f"),
@@ -2690,7 +2720,7 @@ object FileManifest {
     val hasDv = m.columns.contains(DvCol)
     val byPart = meta.groupBy(t => relPartitionDir(rootQ, t._1)).toSeq.sortBy(_._1)
     val written = new java.util.concurrent.atomic.AtomicInteger(0)
-    commitStaged(spark, dataDir, v0, "optimize", 0L, s"${dataDir}_stg") { stg =>
+    commitStaged(spark, dataDir, Some(v0), "optimize", 0L, s"${dataDir}_stg") { stg =>
       stageConcurrently(spark, byPart) { case (rel, files) =>
         val live = files.map(_._2).sum
         if (live > 0) {
@@ -2704,7 +2734,7 @@ object FileManifest {
           written.addAndGet(n)
         }
       }
-    } { moved =>
+    } { _ => moved =>
       // fresh stats for the WHOLE new file set (basePath-anchored, so
       // tracked partition columns get real bounds — that is what lets
       // the manifest prune partitions by range later)
@@ -2721,12 +2751,11 @@ object FileManifest {
     *
     * CRASH WINDOW: the walk renames one file at a time, so a failure
     * mid-walk (or between the walk and the manifest commit) leaves
-    * already-moved files under the live tree unmanifested — the
-    * coverage guard then fails EVERY read loud (never silent partials)
-    * until [[vacuum]] reaps the orphans, which is the documented
-    * recovery path (same shape as a crashed publishVia, with a window
-    * widened by O(partition dirs)). The commit itself stays atomic: no
-    * reader ever plans from a half-moved file set.
+    * already-moved files under the live tree that no version names.
+    * Readers never see them — membership is the version log — and
+    * [[vacuum]] reaps them as orphans once past its grace window. The
+    * commit itself stays atomic: no reader ever plans from a half-moved
+    * file set.
     */
   private def movePartitionTree(hfs: FileSystem,
       src: Path,
@@ -2882,17 +2911,18 @@ object FileManifest {
 
   /** Manifest-aware orphan-file VACUUM (the remove-orphans verb of the
     * table-format lifecycle, beside write-through / compact / time
-    * travel): delete every data file under `dataDir` the live manifest
-    * does not reference — the residue of crashed or raced writers whose
-    * append landed but whose refresh never committed. Manifest readers
-    * ([[ManifestFileIndex]]) never see orphans, but a naive directory
-    * read double-counts them and they leak storage forever.
+    * travel): delete every data file under `dataDir` no retained version
+    * references — a raw `df.write.parquet(dataDir)`, or a crashed
+    * writer's moved files whose version never committed. Manifest
+    * readers ([[ManifestFileIndex]]) never see orphans, but a naive
+    * directory read double-counts them and they leak storage forever.
+    * It also sweeps the `_manifest_tmp_*` dirs crashed committers left.
     *
-    * Safety contract: runs under the SAME advisory lock as
-    * writeThrough/refresh, so an in-flight rival's freshly-landed (not
-    * yet manifested) files can never be reaped mid-commit — by the time
-    * the lock is held, every committed writer's refresh has run. Refuses
-    * to operate without a manifest (everything would be "orphan").
+    * Safety contract: runs under the SAME advisory lock every committer
+    * holds while it moves files in and commits their version, so an
+    * in-flight rival's moved-but-uncommitted files can never be reaped
+    * mid-commit. Refuses to operate without a manifest (everything would
+    * be "orphan").
     *
     * Scale contract: the orphan decision is a distributed anti-join of
     * the live listing against the manifest's path column; only the
@@ -2916,11 +2946,6 @@ object FileManifest {
       def pastGrace(p: String): Boolean =
         try hfs.getFileStatus(new Path(p)).getModificationTime < cutoff
         catch { case _: java.io.FileNotFoundException => true }
-      // the `file` column of the given versions' manifests as ONE
-      // multi-path read (explicit one-column schema: no footer inference)
-      def versionFiles(versions: Seq[Long]): DataFrame =
-        spark.read.schema(FileOnly)
-          .parquet(versions.map(versionDir(dataDir, _)): _*)
       // TIME-TRAVEL retention: the live set is the UNION of the newest
       // `keepVersions` versions; older versions are reaped, making
       // "version not retained" a loud resolution failure in readAsOf
@@ -2930,8 +2955,8 @@ object FileManifest {
       // RESURRECTION GUARD: an expired version's manifest and the data
       // files ONLY IT references must leave disk TOGETHER. Reaping the
       // manifest while graceMs spares its young files would strand them
-      // as unreferenced-but-live — the next refresh, no longer seeing
-      // them in any version, would re-manifest them as fresh appends,
+      // as unreferenced-but-live — the next build, no longer seeing
+      // them in any version, would re-manifest them as fresh files,
       // and a pre-surgery file's rows (deleted ranges, stale pre-merge
       // key values) would silently REJOIN the current version. So an
       // expired version is reaped only once every file it exclusively
@@ -2948,7 +2973,7 @@ object FileManifest {
       if (expired.nonEmpty) {
         // ONE Spark job over every version's manifest, the owning version
         // recovered from each row's source dir
-        val byVersion: Map[Long, Set[String]] = versionFiles(vs.all)
+        val byVersion: Map[Long, Set[String]] = versionFiles(spark, dataDir, vs.all)
           .select(versionOfFile.as("v"),
             ManifestFileIndex.normPath(col("file")).as("f"))
           .collect()
@@ -2982,7 +3007,7 @@ object FileManifest {
             // documented, and the next vacuum reaps the manifest (a
             // missing file counts as pastGrace). The other order strands
             // past-grace files unreferenced-but-live, and the next
-            // refresh would re-manifest them — deleted/stale rows
+            // build would re-manifest them — deleted/stale rows
             // silently REJOINING the current version, the exact
             // resurrection this guard exists to prevent.
             exclusive.foreach { p =>
@@ -2997,26 +3022,31 @@ object FileManifest {
       // retained, or expired-but-SPARED (re-listed after the reaping
       // loop so spared versions keep protecting their files) — is
       // crashed/raced writer residue.
-      val manifested = versionFiles(listVersions(hfs, dataDir).all)
+      val manifested = versionFiles(spark, dataDir, listVersions(hfs, dataDir).all)
         .select(ManifestFileIndex.normPath(col("file")).as("m_file"))
         .distinct()
       val candidates = FsListing.listDataFiles(hfs, root).toDF("live_file")
         .join(manifested, col("live_file") === col("m_file"), "left_anti")
         .collect().map(_.getString(0)).sorted.toSeq
-      // retention threshold: the lock only serializes against
-      // writeThrough users; refresh()'s contract blesses UNLOCKED data
-      // appends followed by a locked refresh, and a vacuum landing in
-      // that gap would see the append as orphaned and destroy committed
-      // rows. A file younger than `graceMs` is treated as possibly
-      // in-flight and spared (the standard remove-orphans retention;
-      // size graceMs above the longest append→refresh latency). The
-      // stats are O(candidate) driver RPCs — already the doomed set,
-      // never the table.
+      // retention threshold: the lock covers every committer's
+      // move-and-commit, but not a writer outside this protocol, nor one
+      // whose lock was stale-broken mid-commit. A file younger than
+      // `graceMs` is treated as possibly in-flight and spared (the
+      // standard remove-orphans retention; size graceMs above the
+      // longest commit). The stats are O(candidate) driver RPCs —
+      // already the doomed set, never the table.
       val orphans = candidates.filter { p =>
         try hfs.getFileStatus(new Path(p)).getModificationTime < cutoff
         catch { case _: java.io.FileNotFoundException => false }
       }
       orphans.foreach(p => hfs.delete(new Path(p), false))
+      // TORN MANIFESTS: a committer that crashed between writing its
+      // manifest and publishing it leaves a `_manifest_tmp_*` dir no
+      // reader sees; past grace, no live committer still owns it
+      hfs.listStatus(root).iterator
+        .filter(st => st.getPath.getName.startsWith("_manifest_tmp_") &&
+          st.getModificationTime < cutoff)
+        .foreach(st => hfs.delete(st.getPath, true))
       // DV-SPILL RETENTION: `_dv_spill` parquets are CACHES keyed by
       // (incarnation, version) — ensureDvSpill re-creates them
       // idempotently — so reaping follows manifest retention: every
@@ -3040,77 +3070,6 @@ object FileManifest {
       spark.catalog.refreshByPath(dataDir)
       (orphans ++ reapedWith.result()).sorted
     }
-  }
-
-  private def refreshLocked(spark: SparkSession, dataDir: String,
-      root: Path, hfs: FileSystem,
-      cols: Seq[String], bloomCols: Seq[String], expectedPerFile: Long,
-      fpp: Double, versionFloor: Long = 0L): Unit = {
-    val vs = listVersions(hfs, dataDir)
-    val wantCols = statsColumns(cols, bloomCols).sorted
-    if (vs.current == 0L)
-      return rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp,
-        versionFloor)
-    val existing = readVersion(spark, dataDir, vs, vs.current)
-    // dv columns are ORTHOGONAL to the tracked-column set: a refresh
-    // must carry them (a rebuild re-stats raw files and would resurrect
-    // DV-deleted rows — build's own guard fails loud on that)
-    val existingCore =
-      existing.columns.filterNot(c => c == DvCol || c == DvDelCol)
-    if (existingCore.sorted.toSeq != wantCols)
-      return rebuild(spark, dataDir, cols, bloomCols, expectedPerFile, fpp,
-        versionFloor)
-
-    val live = FsListing.listDataFiles(hfs, root)
-    // carried entries stay DISTRIBUTED: a broadcast semi-join against
-    // the (path-strings-only) live listing keeps every still-live
-    // entry — bounds and bloom binaries never visit the driver. The
-    // only rows collected are the NEW paths (anti-join the other way),
-    // which is exactly the delta the driver must hand to spark.read.
-    import spark.implicits._
-    val liveDf = broadcast(live.toDF("live_file"))
-    val normFile = ManifestFileIndex.normPath(col("file")).as("m_file")
-    val kept = existing.join(liveDf,
-      ManifestFileIndex.normPath(existing("file")) === col("live_file"),
-      "left_semi")
-    // "new" means never-manifested: a file referenced only by RETAINED
-    // OLDER versions is a prior snapshot's member (an MVCC publish left
-    // it for as-of readers), not a fresh append — re-manifesting it
-    // would double-count its rows in the current version. The subtract
-    // runs DRIVER-side over path strings (one column-pruned collect of
-    // the existing manifest's `file` column — the same paths the driver
-    // must hand to spark.read anyway — plus the memoized per-version
-    // file sets), so an append on a deep-retention table stops
-    // re-reading every older manifest per refresh.
-    val existingFiles = labeled(spark, "graft: refresh new-files") {
-      existing.select(normFile).collect()
-    }.map(_.getString(0)).toSet
-    val histSets = historyFileSets(spark, dataDir, vs)
-    val newFiles = live
-      .filterNot(existingFiles)
-      .filterNot(f => histSets.exists(_.contains(f)))
-      .sorted
-    val merged =
-      if (newFiles.isEmpty) kept
-      else {
-        // basePath keeps partition columns resolvable when the tree is
-        // hive-partitioned and a partition column is tracked
-        val fresh = statsForFiles(spark, dataDir, newFiles.toSeq,
-          cols, bloomCols, expectedPerFile, fpp)
-        kept.unionByName(alignStats(fresh, kept.columns.toIndexedSeq))
-      }
-    // sweep torn tmp dirs from crashed predecessors BEFORE staging ours:
-    // we hold the manifest lock, so no rival is mid-write under a
-    // different nonce, and underscore-prefixed leftovers are invisible
-    // to readers but would otherwise accumulate forever
-    hfs.listStatus(root).iterator
-      .filter(_.getPath.getName.startsWith("_manifest_tmp_"))
-      .foreach(s => hfs.delete(s.getPath, true))
-    // `merged` READS the current version's manifest — written once, so
-    // it stays readable while the next version is written beside it
-    val tmp = tmpManifest(dataDir)
-    writeManifest(merged, tmp, live.size.toLong)
-    commitVersion(hfs, dataDir, tmp, "refresh", vs.current + 1)
   }
 
   /** Entries per manifest part file for [[writeManifest]]'s sharding:
@@ -3170,10 +3129,10 @@ object FileManifest {
   def readPrunedMulti(spark: SparkSession, dataDir: String,
       bounds: Seq[(String, Column, Column)]): (DataFrame, Int, Int) = {
     require(bounds.nonEmpty, "readPrunedMulti with no bounds")
-    // staleness guard; PINS ONE VERSION for the kept-set collect AND the
-    // dv resolution readKeptDv performs — un-pinned, a rival commit
-    // between the two would mix snapshots (see readKeptDv)
-    val (mdf, total, v0) = requireCovering(spark, dataDir)
+    // PINS ONE VERSION for the kept-set collect AND the dv resolution
+    // readKeptDv performs — un-pinned, a rival commit between the two
+    // would mix snapshots (see readKeptDv)
+    val (mdf, v0) = currentManifest(spark, dataDir)
     // bound test in Spark expression semantics (same coercions the data
     // filter gets), on the tiny manifest frame
     val keepFile = bounds.map { case (c, lo, hi) =>
@@ -3185,13 +3144,29 @@ object FileManifest {
         s"manifest under $dataDir has no tracked bounds for '$c' — " +
           s"rebuild with the column in cols")
     }
-    val kept = mdf.filter(keepFile)
-      .select("file").collect().map(r => norm(r.getString(0))).toSeq
+    val (kept, total) = keptOf(spark, dataDir, mdf, keepFile, col("file"))
     val rowPred = bounds.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi }.reduce(_ && _)
     (readKeptDv(spark, dataDir, kept, v0).filter(rowPred),
       kept.size, total)
   }
+
+  /** The manifest entries `keep` selects, and the entry count, from ONE
+    * job: every entry collects its `file` (NULL when dropped), so the
+    * total needs no second pass over the manifest.
+    */
+  private def keptOf(spark: SparkSession, dataDir: String, mdf: DataFrame,
+      keep: Column, file: Column): (Seq[String], Int) = {
+    val rows = labeled(spark, "graft: kept files") {
+      mdf.select(when(keep, file)).collect()
+    }
+    requireEntries(dataDir, rows.length.toLong)
+    (rows.iterator.filterNot(_.isNullAt(0)).map(r => norm(r.getString(0))).toSeq,
+      rows.length)
+  }
+
+  private def requireEntries(dataDir: String, n: Long): Unit =
+    require(n > 0, s"empty manifest under $dataDir — build() first")
 
   /** POINT lookup planned through the Bloom sidecar: open only the files
     * whose filter might contain at least one probe key (a missing/null
@@ -3224,155 +3199,38 @@ object FileManifest {
         keyArr.exists(bf.mightContain)
       }
     }
-    // staleness guard; one pinned version for the bloom probe and the
-    // dv resolution
-    val (mdf, total, v0) = requireCovering(spark, dataDir)
+    // one pinned version for the bloom probe and the dv resolution
+    val (mdf, v0) = currentManifest(spark, dataDir)
     require(mdf.columns.contains(s"bloom_$c"),
       s"manifest under $dataDir has no bloom sidecar for '$c' — " +
         s"build(..., bloomCols = Seq(\"$c\")) first")
-    val kept = mdf.filter(probe(col(s"bloom_$c")))
-      .select(ManifestFileIndex.normPath(col("file")))
-      .collect().map(_.getString(0)).toSeq
+    val (kept, total) = keptOf(spark, dataDir, mdf, probe(col(s"bloom_$c")),
+      ManifestFileIndex.normPath(col("file")))
     val df = readKeptDv(spark, dataDir, kept, v0)
       .filter(col(c).isin(keys.values: _*))
     (df, kept.size, total)
   }
 
 
-  /** Coverage-guard memo: `dataDir → ((incarnation, version), live-listing
-    * fingerprint, manifest row count)`. The guard's verdict is a PURE
-    * function of (manifest version, live file set) — the version
-    * changes on every commit, and a raw append/delete changes the
-    * listing fingerprint (part-file names carry job UUIDs) — so an
-    * unchanged pair can skip the probe job outright. Repeated reads of
-    * one table (the dominant pattern: every index construction guards)
-    * pay one cheap listing instead of a Spark job each.
-    */
-  private val coveringMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, ((String, Long), Long, Int)]()
-
-  /** Per-(table, incarnation token, version) memo of an older version's
-    * file-path set. A version dir is written once, so an entry can be
-    * served forever, and the token tells a delete-and-rebuild at the
-    * same path (which recycles version numbers) from the table it
-    * replaced. A stale entry (vacuum reaped the version, or a rebuild
-    * orphaned the token) is never LOOKED UP again, so it is dead weight
-    * until [[HistFilesMemoMaxPaths]] cap-and-clears. Driver cost is path
-    * STRINGS — the same O(files) state the live listing (any
-    * FileIndex's contract) already holds.
-    */
-  private val histFilesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Set[String]]()
-  private[graft] val HistFilesMemoMaxPaths = 4 * 1024 * 1024
-  private val histFilesMemoPaths = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The file sets of the retained versions OLDER than the current one —
-    * prior-snapshot members that refresh must not re-manifest and
-    * coverage must not flag. Memoized per version; only versions absent
-    * from the memo pay a read (ONE multi-path spark read for all of
-    * them), so a poll loop stops re-reading the whole retention depth on
-    * every coverage probe.
-    */
-  private def historyFileSets(spark: SparkSession, dataDir: String,
-      vs: Versions): Seq[Set[String]] = {
-    def key(v: Long) = (FsListing.norm(dataDir), vs.token, v)
-    val older = vs.all.dropRight(1)
-    val hits = older.flatMap(v => Option(histFilesMemo.get(key(v))).map(v -> _)).toMap
-    val missV = older.filterNot(hits.contains)
-    val loaded: Map[Long, Set[String]] =
-      if (missV.isEmpty) Map.empty
-      else labeled(spark, "graft: coverage history load") {
-        spark.read.schema(FileOnly)
-          .parquet(missV.map(versionDir(dataDir, _)): _*)
-          .select(ManifestFileIndex.normPath(col("file")).as("f"),
-            versionOfFile.as("_v"))
-          .collect()
-      }.groupBy(_.getLong(1)).map { case (v, rs) =>
-        v -> rs.map(_.getString(0)).toSet
-      }
-    missV.foreach { v =>
-      val s = loaded.getOrElse(v, Set.empty[String])
-      if (histFilesMemoPaths.addAndGet(s.size.toLong) > HistFilesMemoMaxPaths) {
-        histFilesMemo.clear()
-        histFilesMemoPaths.set(s.size.toLong)
-      }
-      histFilesMemo.put(key(v), s)
-    }
-    older.map(v => hits.getOrElse(v, loaded.getOrElse(v, Set.empty[String])))
-  }
-
-  /** Enforce COVERAGE: every live data file under the directory must be
-    * manifested — a file landed after the last build would otherwise be
-    * silently absent from every planned query. Fail loud; the writer
-    * owes a rebuild. Returns the current manifest frame, its file count
-    * and its version — one listing of `_versions` serves the guard and
-    * the caller's plan, so both see the same snapshot.
-    */
-  private[sources] def requireCovering(spark: SparkSession,
-      dataDir: String): (DataFrame, Int, Long) = {
-    val root = new Path(dataDir)
-    val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val vs = listVersions(hfs, dataDir)
-    val mdf = readVersion(spark, dataDir, vs, vs.current)
-    // RECURSIVE data-file listing (build() reads through
-    // spark.read.parquet, which descends into partition subdirs) with
-    // metadata excluded and paths canonicalized — shared with the
-    // ledger's delta selection, one definition of "data file": FsListing
-    val live = FsListing.listDataFiles(hfs, root)
-    val fp = (live.size.toLong << 32) |
-      (scala.util.hashing.MurmurHash3.orderedHash(live).toLong & 0xffffffffL)
-    val at = (vs.token, vs.current)
-    val memoKey = rootQOf(hfs, dataDir)
-    val hit = coveringMemo.get(memoKey)
-    if (hit != null && hit._1 == at && hit._2 == fp)
-      return (mdf, hit._3, vs.current)
-    // coverage = every live file is CURRENT data or a retained prior
-    // snapshot's member (an MVCC publish leaves old files on disk for
-    // as-of readers until vacuum retention) — only a file NO retained
-    // version knows is a staleness trip. The verdict runs DRIVER-side
-    // over path strings (the state this guard already holds: the live
-    // listing): one column-pruned collect of the current manifest's
-    // `file` column — blooms/bounds never leave executors — plus the
-    // per-version sets from [[historyFileSets]]'s memo, so a CDC poll's
-    // coverage check is one tiny job, then set membership.
-    val curFiles = labeled(spark, "graft: coverage probe") {
-      mdf.select(ManifestFileIndex.normPath(col("file"))).collect()
-    }.map(_.getString(0))
-    val total = curFiles.length
-    require(total > 0, s"empty manifest under $dataDir — build() first")
-    val known = curFiles.toSet
-    val missing0 = live.filterNot(known)
-    if (missing0.nonEmpty) {
-      val histSets = historyFileSets(spark, dataDir, vs)
-      val unknown = missing0.filterNot(f => histSets.exists(_.contains(f)))
-      if (unknown.nonEmpty)
-        throw new IllegalArgumentException(
-          s"requirement failed: manifest under $dataDir is stale: " +
-            s"${unknown.size} unmanifested files (e.g. ${unknown.head}) — " +
-            "rebuild")
-    }
-    // only PASSING verdicts memoize (a failure must re-probe and re-throw);
-    // cap-and-clear bounds a long-lived session over many tables
-    if (coveringMemo.size >= 256) coveringMemo.clear()
-    coveringMemo.put(memoKey, (at, fp, total))
-    (mdf, total, vs.current)
-  }
-
   /** See [[FsListing.norm]] — manifest `file` entries come from
-    * `input_file_name()` (percent-encoded URIs) and must both compare
-    * against the listing and feed `spark.read` in decoded form.
+    * `input_file_name()` (percent-encoded URIs) and must feed
+    * `spark.read` in decoded form.
     */
   private def norm(s: String): String = FsListing.norm(s)
 
   /** Scan exactly `kept`. basePath pins schema parity with the unpruned
     * read: without it, a leaf-file read under hive-style partition dirs
     * drops the partition columns, so the pruned frame's schema would
-    * diverge from the full scan (and from the kept-empty branch).
+    * diverge from the full scan (and from the kept-empty branch, which
+    * anchors its schema on one manifest member — a read of the root
+    * would list the tree and could anchor on a file no version names).
     */
   private def readKept(spark: SparkSession, dataDir: String,
       kept: Seq[String]): DataFrame =
     if (kept.isEmpty)
-      spark.read.parquet(dataDir).filter(lit(false)) // schema-stable empty
+      spark.read.option("basePath", dataDir)
+        .parquet(firstManifestFilePath(spark, dataDir).getOrElse(dataDir))
+        .filter(lit(false)) // schema-stable empty
     else spark.read.option("basePath", dataDir).parquet(kept: _*)
 }
 

@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The ONE definition of "the data files under a staging root" — shared
-  * by [[FileManifest]]'s coverage guard and [[IncrementalLedger]]'s
-  * delta selection, which must agree on it (a divergence silently
+  * by [[FileManifest]]'s tree-listing verbs (build, vacuum, a first
+  * commit's stray-file check) and [[IncrementalLedger]]'s delta
+  * selection, which must agree on it (a divergence silently
   * reclassifies files between "metadata" and "unconsumed input").
   */
 private[graft] object FsListing {

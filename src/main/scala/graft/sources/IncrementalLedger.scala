@@ -192,8 +192,8 @@ object IncrementalLedger {
     }
 
     // data files only, listed RECURSIVELY with metadata excluded and
-    // paths canonicalized — FsListing, the SAME definition the manifest
-    // coverage guard uses. Canonical (decoded) form is also what
+    // paths canonicalized — FsListing, the SAME definition the manifest's
+    // build and vacuum use. Canonical (decoded) form is also what
     // spark.read needs: it treats path strings literally, so a
     // percent-encoded %20 from a URI-keyed listing would be read as a
     // literal "%20" directory and wedge the ledger on any input tree

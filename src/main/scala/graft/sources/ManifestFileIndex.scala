@@ -39,11 +39,11 @@ import org.apache.spark.sql.functions.{col, lit, udf, when}
   * Catalyst string ordering end to end) — anything else contributes
   * nothing; strict bounds are relaxed to inclusive
   * (conservative); NULL-valued rows can never satisfy a range
-  * conjunct, so bound-based skipping loses no row. Kept-set membership
-  * is exact because the construction-time coverage guard (which fails
-  * LOUD on a stale manifest) verifies every file of this index's
-  * frozen listing is manifested — a file landed later is absent from
-  * the frozen listing itself, so it can never be wrongly dropped.
+  * conjunct, so bound-based skipping loses no row. Membership is the
+  * planned version's file set alone: the listing is intersected with
+  * it, so a file in the tree that no version names (a raw write, a
+  * crashed writer's moved files) is never read, and a member missing
+  * from the listing fails the read loud instead of thinning it.
   */
 class ManifestFileIndex(spark: SparkSession, dataDir: String,
     asOf: Option[Long] = None, dvSide: Option[Boolean] = None)
@@ -118,39 +118,35 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
       else lit(true)
   }
 
-  // coverage guard at CONSTRUCTION (fail loud on a stale manifest),
-  // run as a distributed anti-join — manifest file names stay on
-  // executors; the live listing is already driver-resident by
-  // InMemoryFileIndex's own contract, so it adds no new driver state.
-  //
-  // An AS-OF index needs the INVERSE check: the historical snapshot is
-  // complete by construction (its manifest froze the file set), so
-  // current-table staleness is irrelevant — but every file the version
-  // references must still be on disk. A vacuumed member would otherwise
-  // be dropped by the listing intersection SILENTLY — partial results,
-  // the one failure mode the time-travel contract forbids (the raw
-  // path-list read at least failed loud mid-scan). The file set is
-  // collected once here — O(files-of-version) driver path strings, the
-  // listing-sized state this FileIndex already holds.
+  /** Every `members` path must be in the listing: [[listFiles]]
+    * intersects the listing with the kept set, so a member vacuumed
+    * mid-retention or deleted outside the table would otherwise be
+    * dropped SILENTLY — partial results, the one failure mode a
+    * snapshot read must never have. Checked against [[allFiles]], the
+    * whole listing, never a partition-pruned one, so directory pruning
+    * cannot false-trip it.
+    */
+  private def requireOnDisk(members: Iterable[String], what: String): Unit = {
+    val live = allFiles().iterator
+      .map(f => FsListing.norm(f.getPath.toString)).toSet
+    val gone = members.filterNot(live)
+    require(gone.isEmpty,
+      s"$what of $dataDir references ${gone.size} file(s) no longer " +
+        s"on disk (e.g. ${gone.head}) — vacuumed mid-retention or " +
+        "externally deleted; the read would be silently partial")
+  }
+
+  // an AS-OF index collects its version's file set once, here —
+  // O(files-of-version) driver path strings, the listing-sized state
+  // this FileIndex already holds — and checks it at construction; a
+  // current index checks each kept set in listFiles, where it is
+  // collected anyway
   private[sources] val asOfFiles: Option[IndexedSeq[String]] = asOf.map { v =>
     val vf = planningFrame.filter(dvPred)
       .select(ManifestFileIndex.normPath(col("file")))
       .collect().map(_.getString(0)).sorted.toIndexedSeq
-    val live = allFiles().iterator
-      .map(f => FsListing.norm(f.getPath.toString)).toSet
-    val gone = vf.filterNot(live)
-    require(gone.isEmpty,
-      s"version $v of $dataDir references ${gone.size} file(s) no longer " +
-        s"on disk (e.g. ${gone.head}) — vacuumed mid-retention or " +
-        "externally deleted; an as-of read would be silently partial")
+    requireOnDisk(vf, s"version $v")
     vf
-  }
-  locally {
-    // the guard is a GLOBAL property (every live file manifested) — in
-    // a dv-split read the Some(false) index runs it once; the paired
-    // Some(true) index over the same manifest would only repeat it
-    if (asOf.isEmpty && dvSide != Some(true))
-      FileManifest.requireCovering(spark, dataDir)
   }
 
   /** Observability for the scale contract: bytes of path text the last
@@ -209,6 +205,7 @@ class ManifestFileIndex(spark: SparkSession, dataDir: String,
     // With no pushed ranges the kept set is the full membership list
     // (same driver bytes any FileIndex already holds for its listing).
     val kept = keptFiles(ranges, strRanges, integralAttrs, stringAttrs)
+    if (asOf.isEmpty) requireOnDisk(kept, "the current version")
     base.map { pd =>
       PartitionDirectory(pd.values, pd.files.filter { f =>
         kept.contains(FsListing.norm(f.getPath.toString))
@@ -485,7 +482,7 @@ object ManifestFileIndex {
     * `listFiles`.
     *
     * Schema contract: with `schema = None` the data schema comes from
-    * ONE footer (the index just listed everything; manifest dirs are
+    * ONE footer, of a member of the planned version (manifest dirs are
     * single-writer uniform). A schema-EVOLVED directory MUST pass the
     * declared target schema explicitly — first-footer inference would
     * silently drop columns absent from that one file (evolved staging
@@ -536,9 +533,10 @@ object ManifestFileIndex {
             s"version ${asOf.getOrElse('?')} of $dataDir is an empty snapshot")
           all.head
         case None =>
-          idx.allFiles().headOption.getOrElse(
+          // a manifest member, never the listing's first file: that may
+          // be one no version names
+          FileManifest.firstManifestFilePath(spark, dataDir).getOrElse(
             throw new IllegalArgumentException(s"no data files under $dataDir"))
-            .getPath.toString
       }
       spark.read.parquet(first).schema
     }
@@ -559,9 +557,7 @@ object ManifestFileIndex {
       // asked for): un-pinned, a rival commit landing between the sides'
       // resolutions could serve a MIXED snapshot (plain side vN, dv
       // side vN+1), the silent isolation hole MVCC exists to prevent.
-      // A current read still runs the coverage guard (version pinning
-      // must not skip staleness detection).
-      val v0 = asOf.getOrElse(FileManifest.requireCovering(spark, dataDir)._3)
+      val v0 = asOf.getOrElse(FileManifest.currentVersionOf(spark, dataDir))
       val plainIdx = new ManifestFileIndex(spark, dataDir, Some(v0), Some(false))
       val dvIdx = new ManifestFileIndex(spark, dataDir, Some(v0), Some(true))
       val ds = dataSchemaOver(plainIdx, Some(dvIdx))

@@ -197,7 +197,7 @@ class ChangeFeedTailSpec extends AnyFunSuite with SparkSpec {
     val batches = 6
     val writer = new Thread(() => {
       (1 to batches).foreach { i =>
-        FileManifest.withConflictRetry() {
+        ConflictRetry.withConflictRetry() {
           FileManifest.mergeKeys(spark, table,
             Seq((i * 37L, 90L + i), (1000L + i, 90L + i)).toDF("k", "g"),
             "k", Seq("k"), bloomCols = Seq("k"))

@@ -90,8 +90,8 @@ class DeleteRangeSpec extends AnyFunSuite with SparkSpec {
     val hfs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (hfs.exists(p)) hfs.delete(p, true)
     // bloom tracking forces the data-scan stats path: its groupBy emits
-    // no entry for a zero-row rewrite output, and without the explicit
-    // n_rows=0 completion the coverage guard bricks every later read
+    // no entry for a zero-row rewrite output; the explicit n_rows=0
+    // completion keeps that file in the version, so reads stay whole
     FileManifest.writeThrough(
       spark.range(100L).select(col("id").as("k"))
         .repartitionByRange(2, col("k")),

@@ -438,7 +438,7 @@ class DvSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e.getMessage.contains("purgeDv"))
 
-    // append-through refresh carries the DV
+    // a writeThrough append carries the DV
     FileManifest.writeThrough(
       spark.range(3000L, 3100L).select(col("id").as("k"), (col("id") % 5).as("v")),
       dir, Seq("k"), bloomCols = Seq("k"))

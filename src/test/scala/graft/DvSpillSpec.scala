@@ -60,8 +60,8 @@ class DvSpillSpec extends AnyFunSuite with SparkSpec {
       ManifestFileIndex.read(spark, dir).count()
       assert(hfs.getFileStatus(new Path(ManifestDir.dvSpill(spark, dir, v)))
         .getModificationTime === mtime, "spill must be written once per version")
-      // the spill is invisible to data listings: coverage stays green
-      // (this read IS the guard) and surgery still sees a flat table
+      // the spill is invisible to data listings: surgery still sees a
+      // flat table
       FileManifest.deleteKeysDV(spark, dir, "k", Seq(9L), Seq("k"))
     } finally spark.conf.unset(FileManifest.DvBroadcastMaxBytesKey)
   }

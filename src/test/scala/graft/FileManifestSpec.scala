@@ -7,7 +7,9 @@ import graft.sources.FileManifest
 
 /** Pins the file-level min/max manifest: range reads skip every file
   * whose bounds can't intersect, never lose a qualifying row, keep
-  * unknown-bounds files, and fail loud on a stale manifest.
+  * unknown-bounds files, and read only what the current version names —
+  * a raw write into the tree stays invisible until `build` adopts it or
+  * `vacuum` reaps it.
   */
 class FileManifestSpec extends AnyFunSuite with SparkSpec {
 
@@ -54,18 +56,18 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     assert(df.select("payload").collect().map(_.getString(0)).toSeq == Seq("a"))
   }
 
-  test("staleness guard sees files inside partition subdirectories") {
+  test("raw writes in partition subdirs: invisible, build adopts, vacuum reaps") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_part").toString
     Seq((1L, "a")).toDF("ts", "p").write.partitionBy("p").mode("append").parquet(dir)
     FileManifest.build(spark, dir, Seq("ts"))
-    // a file lands in a NEW partition subdir after the build — a
-    // top-level listing would never see it and the guard would pass
+    // a file lands in a NEW partition subdir after the build, outside
+    // the version log: no read sees it
     Seq((9L, "b")).toDF("ts", "p").write.partitionBy("p").mode("append").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
+    val (raw, _, rawTotal) =
       FileManifest.readPruned(spark, dir, "ts", lit(0L), lit(100L))
-    }
-    assert(e.getMessage.contains("stale"))
+    assert(rawTotal == 1 && raw.select("ts").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // build lists the tree, partition subdirs included, and adopts it
     FileManifest.build(spark, dir, Seq("ts"))
     val (df, kept, total) = FileManifest.readPruned(spark, dir, "ts",
       lit(5L), lit(100L))
@@ -74,6 +76,11 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     // the leaf-file pruned read (basePath), so group-bys on it resolve
     assert(df.columns.toSet == spark.read.parquet(dir).columns.toSet)
     assert(df.select("p").collect().map(_.getString(0)).toSeq == Seq("b"))
+    // vacuum reaps a raw write in a partition subdir no version names
+    Seq((7L, "c")).toDF("ts", "p").write.partitionBy("p").mode("append").parquet(dir)
+    val reaped = FileManifest.vacuum(spark, dir, graceMs = 0L)
+    assert(reaped.size == 1 && reaped.head.contains("/p=c/"), s"reaped $reaped")
+    assert(FileManifest.fastCount(spark, dir) == 2L)
   }
 
   test("data dirs with URI-special characters (spaces) stay readable") {
@@ -125,7 +132,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("bloom point lookup shares the staleness guard and requires the sidecar") {
+  test("bloom point lookup reads only the version's files and requires the sidecar") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_bloom2").toString
     Seq((1L, "a")).toDF("id", "payload").coalesce(1).write.mode("append").parquet(dir)
@@ -136,11 +143,11 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e1.getMessage.contains("bloom sidecar"))
     FileManifest.build(spark, dir, Seq("id"), Seq("id"))
+    // a raw append no version names is invisible to the probe
     Seq((2L, "late")).toDF("id", "payload").coalesce(1).write.mode("append").parquet(dir)
-    val e2 = intercept[IllegalArgumentException] {
-      FileManifest.readPointLookup(spark, dir, "id", Seq(2L))
-    }
-    assert(e2.getMessage.contains("stale"))
+    val (none, _, total0) = FileManifest.readPointLookup(spark, dir, "id", Seq(2L))
+    assert(total0 == 1 && none.count() == 0)
+    // build adopts it
     FileManifest.build(spark, dir, Seq("id"), Seq("id"))
     val (df, kept, total) = FileManifest.readPointLookup(spark, dir, "id", Seq(2L))
     assert(total == 2 && kept >= 1 &&
@@ -232,7 +239,7 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
         r.getAs[Array[Byte]](r.fieldIndex("bloom_ts")).toSeq).toMap
     assert(before.size == 2)
 
-    // append: one new file — the refresh must carry the old entries
+    // append: one new file — the commit must carry the old entries
     // BYTE-IDENTICALLY (immutable files are never re-statted) and the
     // transparent index must read through with zero manual rebuilds
     FileManifest.writeThrough(
@@ -246,19 +253,26 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
       assert(after(f) == bloom, s"carried entry for $f was re-statted or altered")
     }
 
-    // no stale-guard trip, range pruning live over all three files
+    // range pruning live over all three files
     val (df, keptN, total) = FileManifest.readPruned(spark, dir, "ts",
       lit(250L), lit(260L))
     assert(total == 3 && keptN == 1)
     assert(df.count() == 11)
-    // tracked-column drift falls back to a full rebuild rather than a
-    // torn half-schema manifest
-    FileManifest.refresh(spark, dir, Seq("ts"), Nil)
+    // an append with different tracked columns is refused loud (no
+    // half-schema manifest, no silent rebuild); build changes them
+    val v = FileManifest.versions(spark, dir).max
+    val e = intercept[IllegalArgumentException] {
+      FileManifest.writeThrough(Seq((300L, "c")).toDF("ts", "payload"),
+        dir, Seq("ts"), Nil)
+    }
+    assert(e.getMessage.contains("tracks"), e.getMessage)
+    assert(FileManifest.versions(spark, dir).max == v)
+    FileManifest.build(spark, dir, Seq("ts"), Nil)
     val rebuilt = spark.read.parquet(ManifestDir(spark, dir))
     assert(!rebuilt.columns.contains("bloom_ts") && rebuilt.count() == 3)
   }
 
-  test("a stale manifest fails loud instead of silently dropping new files") {
+  test("a raw append is invisible until build adopts it; vacuum reaps one") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_stale").toString
     Seq((1L, "a")).toDF("ts", "payload")
@@ -266,23 +280,27 @@ class FileManifestSpec extends AnyFunSuite with SparkSpec {
     FileManifest.build(spark, dir, Seq("ts"))
     Seq((2L, "late")).toDF("ts", "payload")
       .coalesce(1).write.mode("append").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      FileManifest.readPruned(spark, dir, "ts", lit(0L), lit(10L))
-    }
-    assert(e.getMessage.contains("stale"))
-    // rebuild heals it
+    val (raw, _, rawTotal) = FileManifest.readPruned(spark, dir, "ts",
+      lit(0L), lit(10L))
+    assert(rawTotal == 1 && raw.count() == 1)
+    assert(FileManifest.fastCount(spark, dir) == 1L)
+    // build adopts the files already on disk
     FileManifest.build(spark, dir, Seq("ts"))
     val (df, kept, total) = FileManifest.readPruned(spark, dir, "ts",
       lit(0L), lit(10L))
     assert(total == 2 && kept == 2 && df.count() == 2)
+    // vacuum reaps a raw append instead, and only it
+    Seq((3L, "later")).toDF("ts", "payload")
+      .coalesce(1).write.mode("append").parquet(dir)
+    assert(FileManifest.vacuum(spark, dir, graceMs = 0L).size == 1)
+    assert(spark.read.parquet(dir).count() == 2)
   }
 
   test("manifest read of an absent table fails immediately, no swap backoff") {
-    // the PATH_NOT_FOUND retry exists only to bridge the refresh swap's
-    // rename gap — it must trigger solely when the dir carries manifest
-    // machinery (lock / history / tmp). A genuinely absent or
-    // unmanifested dir fails on the first attempt: the full backoff is
-    // ~1.2s, so an under-1s failure proves no retry loop ran.
+    // versions are written once, so a read never waits out a rename
+    // gap: a genuinely absent or unmanifested dir fails on the first
+    // attempt (an old swap-era backoff took ~1.2s, so an under-1s
+    // failure proves no retry loop ran).
     val t0 = System.nanoTime()
     intercept[org.apache.spark.sql.AnalysisException] {
       FileManifest.readPruned(spark,

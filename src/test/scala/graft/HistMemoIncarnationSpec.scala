@@ -6,15 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.FileManifest
 
-/** The history-file-set memo must key on a dir's INCARNATION, not its
-  * version number or mtime: a table deleted and rebuilt at the same
-  * path recycles version numbers, and on a coarse-mtime filesystem the
-  * rebuild can land version 1's dir in the SAME timestamp tick — the r20
-  * mtime stamp then served incarnation 1's file sets to incarnation 2's
-  * coverage probe, false-tripping the staleness guard. The table's
-  * incarnation token (the `_table_<uuid>` marker each rebuild creates
-  * afresh) can't alias. This spec forces the same-tick rebuild
-  * explicitly via setTimes.
+/** Per-version memos must key on a dir's INCARNATION, not its version
+  * number or mtime: a table deleted and rebuilt at the same path
+  * recycles version numbers, and on a coarse-mtime filesystem the
+  * rebuild can land version 1's dir in the SAME timestamp tick — an
+  * mtime stamp once served incarnation 1's per-version state to
+  * incarnation 2's reads. The table's incarnation token (the
+  * `_table_<uuid>` marker each rebuild creates afresh) can't alias.
+  * This spec forces the same-tick rebuild explicitly via setTimes and
+  * pins that the live count follows the new incarnation, with the old
+  * version's files still on disk beside the new ones.
   */
 class HistMemoIncarnationSpec extends AnyFunSuite with SparkSpec {
 
@@ -28,15 +29,13 @@ class HistMemoIncarnationSpec extends AnyFunSuite with SparkSpec {
       val df = spark.range(rows).select(col("id").as("k"))
       FileManifest.writeThrough(df.repartitionByRange(files, col("k")), dir,
         Seq("k"), mode = "overwrite")
-      // v2: CoW delete leaves v1's files on disk as history members —
-      // exactly the state whose coverage probe consults the memo
+      // v2: CoW delete leaves v1's files on disk as history members
       FileManifest.deleteRange(spark, dir, "k", lit(0L), lit(rows / 4),
         Seq("k"))
     }
 
     build(4000L, 4)
-    // populate the memo for incarnation 1 (coverage probe must resolve
-    // the leftover v1 files through the history sets)
+    // populate the per-version memos for incarnation 1
     assert(FileManifest.fastCount(spark, dir) === 4000L - (4000L / 4 + 1))
     val v1dir = new Path(ManifestDir(dir, 1L))
     val tick = hfs.getFileStatus(v1dir).getModificationTime
@@ -48,9 +47,8 @@ class HistMemoIncarnationSpec extends AnyFunSuite with SparkSpec {
     hfs.setTimes(v1dir, tick, -1)
     assert(hfs.getFileStatus(v1dir).getModificationTime === tick)
 
-    // a memo keyed only (table, version, mtime) now serves incarnation
-    // 1's sets: incarnation 2's v1 leftovers look unmanifested and the
-    // coverage guard false-trips. The content stamp must resolve them.
+    // a memo keyed only (table, version, mtime) would now serve
+    // incarnation 1's state to incarnation 2
     assert(FileManifest.fastCount(spark, dir) === 6000L - (6000L / 4 + 1))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{FileManifest, IncrementalLedger, Staging}
+import graft.sources.{FileManifest, IncrementalLedger, ManifestFileIndex, Staging}
 import graft.validate.TableConstraints
 import graft.validate.TableConstraints.{RowCondition, UniqueKey}
 
@@ -17,8 +17,9 @@ import graft.validate.TableConstraints.{RowCondition, UniqueKey}
   *   into running stats → the batch is PUBLISHED partitioned → a
   *   MANIFEST makes the published tree range-skippable → the DATA
   *   CONTRACT audits the publish → a bad partition is found, fixed by
-  *   PARTITION BACKFILL, re-audited clean → the manifest's staleness
-  *   guard forces a rebuild before the next range read.
+  *   PARTITION BACKFILL, re-audited clean → the backfill rewrote
+  *   files outside the version log, so a manifest read fails loud on
+  *   the members it deleted until `build` adopts the backfilled tree.
   */
 class IngestLifecycleSpec extends AnyFunSuite with SparkSpec {
 
@@ -75,11 +76,15 @@ class IngestLifecycleSpec extends AnyFunSuite with SparkSpec {
     val healed = audit()
     assert(healed.values.forall(_ == 0L), s"post-backfill audit: $healed")
 
-    // ---- the backfill made the manifest stale: guard fires, rebuild ---
+    // ---- the backfill replaced manifested files outside the log: its
+    // new files are invisible, and the members it deleted fail a
+    // manifest read loud (never a silently thinner table); build adopts
+    // the backfilled tree ---
+    spark.catalog.refreshByPath(published)
     val e = intercept[IllegalArgumentException] {
-      FileManifest.readPruned(spark, published, "id", lit(2L), lit(4L))
+      ManifestFileIndex.read(spark, published).count()
     }
-    assert(e.getMessage.contains("stale"))
+    assert(e.getMessage.contains("no longer on disk"), e.getMessage)
     FileManifest.build(spark, published, Seq("id"))
     val (slice, kept, total) = FileManifest.readPruned(
       spark, published, "id", lit(2L), lit(4L))

@@ -263,7 +263,7 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("integral"))
   }
 
-  test("unknown bounds are never pruned; stale manifest fails at construction") {
+  test("unknown bounds are never pruned; a raw write stays out of the index") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_mfi_null").toString
     Seq((1L, "a")).toDF("ts", "payload").coalesce(1).write.mode("append").parquet(dir)
@@ -277,10 +277,17 @@ class ManifestFileIndexSpec extends AnyFunSuite with SparkSpec {
     // rows with NULL ts still never satisfy the row filter
     assert(ManifestFileIndex.read(spark, dir).filter(col("ts") === 1L).count() == 1)
 
+    // a file no version names: the index lists it but never reads it
     Seq((9L, "late")).toDF("ts", "payload").coalesce(1).write.mode("append").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      new ManifestFileIndex(spark, dir)
-    }
-    assert(e.getMessage.contains("stale"))
+    spark.catalog.refreshByPath(dir)
+    val raw = new ManifestFileIndex(spark, dir)
+    assert(raw.allFiles().length == 3)
+    assert(raw.listFiles(Nil, Nil).map(_.files.size).sum == 2)
+    assert(ManifestFileIndex.read(spark, dir).count() == 2)
+    // vacuum reaps it; build would have adopted it
+    assert(FileManifest.vacuum(spark, dir, graceMs = 0L).size == 1)
+    spark.catalog.refreshByPath(dir)
+    FileManifest.build(spark, dir, Seq("ts"))
+    assert(ManifestFileIndex.read(spark, dir).count() == 2)
   }
 }

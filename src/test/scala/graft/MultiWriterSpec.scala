@@ -12,7 +12,7 @@ import graft.sources.{CommitLock, FileManifest, IncrementalLedger}
 /** Contended-writer safety: two threads racing commits on ONE root must
   * leave no torn state — exactly one winner per idempotent batch,
   * serialized ledger runs with exactly-once input consumption, and a
-  * manifest that covers every rival's appends. Plus the CommitLock
+  * version log that names every rival's appends. Plus the CommitLock
   * primitive itself: mutual exclusion and stale-lock breaking.
   */
 class MultiWriterSpec extends AnyFunSuite with SparkSpec {
@@ -33,6 +33,18 @@ class MultiWriterSpec extends AnyFunSuite with SparkSpec {
     futures.foreach(_.get(300, TimeUnit.SECONDS))
     pool.shutdown()
     if (!errs.isEmpty) throw errs.peek()
+  }
+
+  /** The current version names exactly the tree's data files: nothing
+    * landed outside the log, nothing it names is missing.
+    */
+  private def assertVersionIsTree(dir: String): Unit = {
+    val named = spark.read.parquet(ManifestDir(spark, dir)).select("file")
+      .collect().map(r => graft.sources.FsListing.norm(r.getString(0))).toSet
+    val tree = graft.sources.FsListing.listDataFiles(
+      new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
+      new Path(dir)).toSet
+    assert(named === tree, "current version and data tree disagree")
   }
 
   test("CommitLock: mutual exclusion under contention; stale locks break") {
@@ -172,8 +184,9 @@ class MultiWriterSpec extends AnyFunSuite with SparkSpec {
       dir, Seq("ts"))
     race(() => write(0L), () => write(1000L))
 
-    // the coverage guard passing IS the assertion that no append was
-    // left unmanifested; then the pruned read must see both writers
+    // blind appends never conflict: both land, and the current version
+    // names every file in the tree
+    assertVersionIsTree(dir)
     val (df, kept, total) = FileManifest.readPruned(
       spark, dir, "ts", lit(0L), lit(2000L))
     assert(df.count() == 200L, "a rival's rows went missing")
@@ -197,7 +210,7 @@ class MultiWriterSpec extends AnyFunSuite with SparkSpec {
     race(
       () => FileManifest.writeThrough(df(1000L).coalesce(1), dir, Seq("ts")),
       // graceMs=0: this spec PLANTS the orphan and relies on the lock
-      // tier alone (writeThrough holds it through append+refresh)
+      // tier alone (writeThrough holds it through move+commit)
       () => FileManifest.vacuum(spark, dir, graceMs = 0L).foreach(reaped.add))
     spark.catalog.refreshByPath(dir)
 
@@ -214,7 +227,7 @@ class MultiWriterSpec extends AnyFunSuite with SparkSpec {
   test("writeThrough overwrite races an appender: lock survives, no torn tree") {
     // Spark's Overwrite mode recursively deletes the root INCLUDING a
     // held _manifest.lock — writeThrough must clear the tree manually so
-    // the rival stays excluded for the whole overwrite+refresh section.
+    // the rival stays excluded for the whole clear+move+commit section.
     // Legal serializations: overwrite→append = {O, A}; append→overwrite
     // = {O}. Anything else (seed surviving an overwrite, a partial
     // appender wipe, a manifest not covering the final tree) is the bug.
@@ -228,7 +241,7 @@ class MultiWriterSpec extends AnyFunSuite with SparkSpec {
       () => FileManifest.writeThrough(df(2000L).coalesce(1), dir, Seq("ts")))
     spark.catalog.refreshByPath(dir)
 
-    // readPruned's coverage guard passing pins manifest ⊇ final tree
+    assertVersionIsTree(dir)
     val (all, _, _) = FileManifest.readPruned(spark, dir, "ts", lit(0L), lit(3000L))
     val got = all.agg(sum(col("ts")).cast("long")).head().getLong(0)
     val o = (1000L until 1100L).sum

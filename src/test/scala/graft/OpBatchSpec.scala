@@ -39,7 +39,7 @@ class OpBatchSpec extends AnyFunSuite with SparkSpec {
       dir, Seq("k"), bloomCols = Seq("k"), mode = "overwrite") // v1
     // a long mixed chain BEFORE the consumer's next poll: merges (data),
     // periodic OPTIMIZE (reorg), one DV erase (data) and its purge (reorg)
-    var expectedOps = Map(1L -> "build") // fresh dir: refresh → full build
+    var expectedOps = Map(1L -> "build") // an overwrite commits a build
     (2L to 29L).foreach { i =>
       if (i % 5 == 0) {
         FileManifest.optimizeTable(spark, dir, Seq("k"),

@@ -92,7 +92,7 @@ class PartitionedSurgerySpec extends AnyFunSuite with SparkSpec {
       e.getMessage)
     // with the partition column tracked, the guard itself fires: it
     // reads the layout from the manifest paths
-    FileManifest.refresh(spark, dir, Seq("k", "part"))
+    FileManifest.build(spark, dir, Seq("k", "part"))
     val before = keysByPart(dir)
     val p = intercept[IllegalArgumentException] {
       FileManifest.deleteRange(

@@ -137,7 +137,7 @@ class SurgeryConflictSpec extends AnyFunSuite with SparkSpec {
       }
       // first attempt conflicts on the rival's commit; the retry re-plans
       // against the post-delete version and must land BOTH effects
-      FileManifest.withConflictRetry() {
+      ConflictRetry.withConflictRetry() {
         FileManifest.mergeKeys(spark, dir, Seq(500L).toDF("k"), "k", Seq("k"))
       }
       assert(keysOf(dir) === ((1L to 49L) :+ 500L).sorted)

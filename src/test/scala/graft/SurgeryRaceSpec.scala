@@ -28,7 +28,7 @@ class SurgeryRaceSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
-  /** Retry-forever loop counting real conflicts — withConflictRetry's
+  /** Retry-forever loop counting real conflicts — [[ConflictRetry]]'s
     * protocol with observation (and no attempt cap, so the assertion is
     * about CORRECTNESS under the race, not about winning within k
     * tries).

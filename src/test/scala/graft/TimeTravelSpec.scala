@@ -10,8 +10,8 @@ import graft.sources.FileManifest
   * as-of reads across later appends, monotonic version numbering across
   * the marker rename chain, retention semantics (vacuum reaps history
   * manifests beyond keepVersions and expired reads fail LOUD at
-  * resolution), and the coverage invariant staying intact with history
-  * dirs present.
+  * resolution), and current reads staying whole with history dirs
+  * present.
   */
 class TimeTravelSpec extends AnyFunSuite with SparkSpec {
 
@@ -39,7 +39,7 @@ class TimeTravelSpec extends AnyFunSuite with SparkSpec {
     assert(ks(3) === Seq(1L, 2L, 3L, 10L, 20L, 100L))
     // current read (manifest index path) agrees with as-of(latest)
     assert(spark.read.parquet(dir).count() === 6L)
-    // coverage guard still passes with history dirs present
+    // a current read with history files on disk reads only the current version
     graft.sources.ManifestFileIndex.read(spark, dir)
       .filter(col("k") >= 10L)
       .collect()
@@ -77,7 +77,7 @@ class TimeTravelSpec extends AnyFunSuite with SparkSpec {
     val dir = freshDir("orph")
     FileManifest.writeThrough(Seq(1L, 2L).toDF("k"), dir, Seq("k"), mode = "overwrite")
     FileManifest.writeThrough(Seq(3L).toDF("k"), dir, Seq("k"))
-    // a crashed rival: data landed, refresh never ran
+    // a crashed rival: data landed, no version names it
     Seq(99L).toDF("k").write.mode("append").parquet(dir)
     val orphans = FileManifest.vacuum(spark, dir, graceMs = 0L, keepVersions = 2)
     assert(orphans.length === 1, s"expected exactly the planted orphan: $orphans")

@@ -11,12 +11,13 @@ import graft.sources.FileManifest
   * RESURRECTION GUARD (the delete-undelete bug): vacuum must reap an
   * expired history manifest and the data files only it references
   * TOGETHER. Reaping the manifest while graceMs spares its young files
-  * used to strand them unreferenced-but-live; the next refresh — no
-  * longer seeing them in any history manifest — re-manifested them as
-  * fresh appends, and the pre-delete file's rows (INCLUDING the deleted
-  * range) silently rejoined the table. The exact advisor sequence:
-  * deleteRange → vacuum(keepVersions=1, graceMs > file age) →
-  * writeThrough append → deleted rows must stay deleted.
+  * used to strand them unreferenced-but-live; the next commit that
+  * listed the tree (an append did, then; `build` does) — no longer
+  * seeing them in any history manifest — re-manifested them as fresh
+  * files, and the pre-delete file's rows (INCLUDING the deleted range)
+  * silently rejoined the table. The exact sequence: deleteRange →
+  * vacuum(keepVersions=1, graceMs > file age) → writeThrough append →
+  * deleted rows must stay deleted.
   *
   * RETENTION/READ RACE: an as-of read pins file PATHS at resolution; a
   * vacuum that reaps the version mid-read makes the scan fail LOUD with
@@ -57,9 +58,9 @@ class VacuumReaderRaceSpec extends AnyFunSuite with SparkSpec {
       "v1 manifest reaped while graceMs spares its data files — " +
         "the resurrection window the guard exists to close")
 
-    // the advisor's resurrection trigger: an append-refresh after the
-    // vacuum — with the manifest stranded-file bug, refresh re-manifested
-    // the pre-delete files here and rows 10..20 rejoined the table
+    // the resurrection trigger: an append after the vacuum — when
+    // appends listed the tree, the stranded-file bug re-manifested the
+    // pre-delete files here and rows 10..20 rejoined the table
     FileManifest.writeThrough(Seq(1000L).toDF("k"), dir, Seq("k"))
     assert(keysOf(dir) === (((1L to 9L) ++ (21L to 100L)) :+ 1000L).sorted,
       "deleted rows resurrected after vacuum + append")

@@ -17,6 +17,9 @@ FileManifest.scala itself and the environment variables the engine reads:
   env_knobs             distinct environment variables the code under
                         src/main reads (`sys.env...("KEY")` or
                         `System.getenv("KEY")`), then their names
+  tree_listing_sites    calls of `FsListing.listDataFiles` (the recursive
+                        data-tree listing) under src/main, then each
+                        site as `File.scala:enclosingDef`
 
 Usage (from the repository root, or pass the root):
     python3 tools/design_counts.py [repo_root]
@@ -35,6 +38,8 @@ PUBLIC_DEF = re.compile(r"^  def\s+([A-Za-z_][A-Za-z0-9_]*)")
 BUILDER = re.compile(r"SparkSession\s*\.\s*builder")
 ENV_READ = re.compile(
     r'(?:sys\.env(?:\.\w+)?|System\.getenv)\s*\(\s*"([^"]+)"')
+LISTING_CALL = re.compile(r"FsListing\s*\.\s*listDataFiles\s*\(")
+DEF = re.compile(r"^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+)?def\s+(\w+)")
 
 
 def scala_files(top):
@@ -55,6 +60,25 @@ def line_counts(path):
         lines = f.readlines()
     code = sum(1 for line in lines if line.strip() and not is_comment(line))
     return len(lines), code
+
+
+def listing_sites(src_main):
+    """`File.scala:def` of each FsListing.listDataFiles call: the def it
+    sits in is the nearest preceding def indented less than the call."""
+    out = []
+    for p in scala_files(src_main):
+        with open(p, encoding="utf-8") as f:
+            lines = f.readlines()
+        defs = []  # (indent, name) of every def seen so far
+        for line in lines:
+            m = DEF.match(line)
+            if m:
+                defs.append((len(m.group(1)), m.group(2)))
+            if LISTING_CALL.search(line) and not is_comment(line):
+                indent = len(line) - len(line.lstrip())
+                owner = next((n for i, n in reversed(defs) if i < indent), "?")
+                out.append(f"{os.path.basename(p)}:{owner}")
+    return out
 
 
 def main():
@@ -92,6 +116,8 @@ def main():
     print(f"sparksession_sites {sites['main'] + sites['test']} "
           f"(src/main {sites['main']}, src/test {sites['test']})")
     print(f"env_knobs {len(knobs)} ({', '.join(sorted(knobs))})")
+    sites_l = listing_sites(src_main)
+    print(f"tree_listing_sites {len(sites_l)} ({', '.join(sites_l)})")
 
 
 if __name__ == "__main__":
